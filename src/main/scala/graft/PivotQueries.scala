@@ -614,20 +614,14 @@ object PivotQueries {
       |  count(CASE WHEN l_linestatus='F' THEN 1 END) AS "F_c"
       |FROM lineitem GROUP BY l_returnflag""".stripMargin
 
-  // -- S1 + S2: the reference's shipped example pipeline, end to end ----
-  // File(csv) source -> Pivot -> File(avro) sink, driven by the EXACT
-  // example JSON from the reference repo; the checked artifact is the
-  // avro SINK read back (so container framing, schema, and null cells
-  // all sit on the verified path), and the oracle replays the whole
-  // pivot from the inlined sample rows. This upgrades the last two
-  // spec-only SURVEY §2 rows (S1 csv source, S2 avro sink) to a
-  // CORRECTNESS-gated query.
-  // lazy: a missing reference checkout must fail pipeline_example only,
-  // not object init for every pivot query
-  private lazy val examplePipelineJson = new String(
-    java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-      "/root/reference/examples/" +
-        "pivot_file_source_sink_example-cdap-data-pipeline.json")))
+  // -- S1 + S2: the reference's example pipeline, end to end ----------
+  // File(csv) source -> Pivot -> File(avro) sink, driven by the
+  // reference-format example JSON checked in as a classpath resource
+  // (PipelineRunner.Example); the checked artifact is the avro SINK read
+  // back (so container framing, schema, and null cells all sit on the
+  // verified path), and the oracle replays the whole pivot from the
+  // inlined sample rows. This upgrades the last two spec-only SURVEY §2
+  // rows (S1 csv source, S2 avro sink) to a CORRECTNESS-gated query.
 
   // per-JVM scratch (AvroSink deletes-then-writes, so one path is
   // re-run-idempotent within a session and isolated across sessions —
@@ -638,14 +632,15 @@ object PivotQueries {
     .getAbsolutePath
 
   private def qPipelineExample(s: SparkSession, dir: String): DataFrame = {
-    graft.sources.PipelineRunner.run(s, examplePipelineJson, Map(
-      "inputFile" -> "/root/reference/examples/sample_data.csv",
+    val example = graft.sources.PipelineRunner.Example
+    graft.sources.PipelineRunner.run(s, example.json, Map(
+      "inputFile" -> example.writeSampleCsv(exampleOutDir),
       "outputDirectory" -> s"$exampleOutDir/pivoted"))
     graft.sources.AvroSource.read(s, s"$exampleOutDir/pivoted")
   }
 
   private val oPipelineExample = {
-    // examples/sample_data.csv, inlined so the oracle needs no file
+    // graft/examples/sample_data.csv, inlined so the oracle needs no file
     val rows = Seq(
       ("Q1", "Shoes", "Nike", 50), ("Q1", "Shirts", "Nike", 20),
       ("Q1", "Socks", "Reebok", 40), ("Q1", "Shirts", "Reebok", 60),

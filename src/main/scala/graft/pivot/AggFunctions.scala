@@ -4,15 +4,19 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Conditional ("cell") aggregate expressions for the pivot operator.
+/** Cell aggregate expressions for the pivot operator.
   *
-  * The pivot is planned as ONE hash aggregate: for each (product cell,
-  * aggregate) pair we emit `fn(when(cellCond, field))`, so the whole
-  * cross-tab is a single shuffle with map-side partial aggregation and
-  * whole-stage codegen — the same algorithmic shape as the reference's
-  * `BatchReducibleAggregator` (reference:
-  * src/main/java/io/cdap/plugin/aggregator/Pivot.java:59,147-196) but
-  * vectorized and spillable.
+  * [[cellExpr]] builds `fn` over the rows that satisfy a condition:
+  * `fn(when(cond, field))`, with each function's null handling. The batch
+  * pivot ([[PivotOps.pivot]]) calls it with a true condition: its first
+  * phase groups by (pivot rows, pivot keys), so each aggregate runs once
+  * per group as a plain aggregate, and [[emptyCell]] supplies the value
+  * of cells no row reached after the by-index fold. Hosts that aggregate
+  * every cell in one pass (rollup, streaming and windowed pivots, via
+  * [[PivotOps.cellColumns]]) call it with the cell's membership
+  * predicate. Both plans keep the reference's map-side-combinable shape,
+  * a `BatchReducibleAggregator` (reference:
+  * src/main/java/io/cdap/plugin/aggregator/Pivot.java:59,147-196).
   *
   * Each builder encodes the reference's exact null/empty-cell/output-type
   * semantics, documented per function below (reference files under
@@ -186,6 +190,23 @@ object AggFunctions {
       case PivotFunction.SumOfSquares =>
         val cf = cell(cond, f).cast(DoubleType)
         coalesce(sum(cf * cf), lit(0.0))
+    }
+  }
+
+  /** The value [[cellExpr]] gives a cell that no row of the group
+    * reaches, when it is not null; `dt` is the cell's type. No function
+    * with such a value yields null for a reached cell, so filling nulls
+    * with it is exact. */
+  def emptyCell(fn: PivotFunction, dt: DataType): Option[Column] = {
+    import PivotFunction._
+    fn match {
+      case Count | CountDistinct | CountNulls | SumOfSquares => Some(lit(0).cast(dt))
+      case LongestString | Concat | ConcatDistinct => Some(lit(""))
+      case CorrectedSumOfSquares => Some(lit(Double.NaN))
+      case CollectList | CollectSet => Some(array().cast(dt))
+      case LogicalAnd => Some(lit(true))
+      case LogicalOr => Some(lit(false))
+      case Sum | Avg | Min | Max | First | Last | Stddev | Variance | ShortestString => None
     }
   }
 }

@@ -1,8 +1,10 @@
 package graft.pivot
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftShim}
+import org.apache.spark.sql.catalyst.expressions.aggregate.PivotFirst
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.functions.FirstByIndex
 
 /** Result of a pivot: the cross-tab, plus (for
   * `on-error=send-to-error-port`) the groups routed to the error port
@@ -13,13 +15,15 @@ final case class PivotResult(main: DataFrame, errors: DataFrame)
 
 /** The pivot (grouped cross-tab) operator.
   *
-  * Spark-first plan (see AggFunctions): one `groupBy(pivotRows).agg(...)`
-  * with a conditional aggregate per (cell x aggregate) — a single shuffle,
-  * map-side combined, whole-stage-codegen'd. No pivot-value discovery job
-  * is ever run because values are declared in the spec (the same design
-  * point as the reference, PivotConfig.java:198-264). Off-list tracking for
-  * the error modes piggybacks on the same aggregate, so error handling adds
-  * no extra pass over the data.
+  * Spark-first plan: two aggregations. The first applies each aggregate
+  * once per (pivot row, pivot key) group, as plain map-side-combined
+  * aggregates (whole-stage codegen where Spark has it for the function);
+  * the second folds those groups into cells by index. So per-row work and plan size
+  * do not grow with the number of declared values. No pivot-value
+  * discovery job is ever run because values are declared in the spec
+  * (the same design point as the reference, PivotConfig.java:198-264).
+  * Off-list tracking for the error modes rides the second aggregation,
+  * so error handling adds no extra pass over the data.
   */
 object PivotOps {
 
@@ -31,9 +35,13 @@ object PivotOps {
 
   /** The (cell × aggregate) conditional-aggregate expressions of a pivot
     * spec — aggregates outer, products inner, matching the reference's
-    * output schema (Pivot.java:283-297). Exposed so other aggregation
-    * shapes can host the same cross-tab semantics (e.g. a watermarked
-    * streaming window pivot, [[graft.streaming.StreamingOps.pivotStream]]).
+    * output schema (Pivot.java:283-297) — for hosts that aggregate every
+    * cell in one pass: [[pivotRollup]] (a subtotal row merges several
+    * (row, key) groups per cell, so it cannot fold by index), a
+    * watermarked streaming window pivot
+    * ([[graft.streaming.StreamingOps.pivotStream]]) and the windowed
+    * batch twin. The batch [[pivot]] uses the two-phase plan instead.
+    * Plan size grows with the cell count here.
     *
     * Cell membership is a conjunction of per-column equality predicates,
     * NOT a compare of the '_'-joined key: the reference routes per-column
@@ -41,8 +49,6 @@ object PivotOps {
     * happens to contain '_' (e.g. c1="a_b" with declared c2 value "b_c")
     * must join NO cell rather than collide into one. */
   def cellColumns(spec: PivotSpec, schema: StructType): Seq[Column] = {
-    val fieldType: Map[String, DataType] =
-      schema.fields.map(f => f.name -> f.dataType).toMap
     val colNames = spec.pivotColumns.map(_._1)
     def cellCond(tuple: Seq[String]): Column =
       colNames.zip(tuple)
@@ -51,12 +57,13 @@ object PivotOps {
     for {
       a <- spec.aggregates
       tuple <- spec.cellTuples
-    } yield {
-      val dt = if (a.field == "*") NullType else fieldType(a.field)
-      AggFunctions.cellExpr(a.function, a.field, dt, cellCond(tuple))
-        .as(spec.outputName(tuple.mkString("_"), a))
-    }
+    } yield cellAgg(a, schema, cellCond(tuple)).as(spec.outputName(tuple.mkString("_"), a))
   }
+
+  /** Aggregate `a` over the rows that satisfy `cond`. */
+  private def cellAgg(a: AggregateSpec, schema: StructType, cond: Column): Column =
+    AggFunctions.cellExpr(a.function, a.field,
+      if (a.field == "*") NullType else schema(a.field).dataType, cond)
 
   /** Field-lineage description of a pivot — the same operation name and
     * description string the reference registers as a
@@ -83,8 +90,9 @@ object PivotOps {
     (name, description, inputFields, outputFields)
   }
 
-  /** Validate + pivot. Throws IllegalArgumentException listing all spec
-    * errors (the reference accumulates in a FailureCollector then throws,
+  /** Validate + pivot, as two aggregations (see the object doc). Throws
+    * IllegalArgumentException listing all spec errors (the reference
+    * accumulates in a FailureCollector then throws,
     * PivotConfig.java:134-187). */
   def pivot(df: DataFrame, spec: PivotSpec): PivotResult =
     pivotImpl(df, spec, maxPivotColumns = 2)
@@ -107,36 +115,109 @@ object PivotOps {
       case Right(_) => ()
     }
 
-    val cellCols = cellColumns(spec, df.schema)
-
     // observability parity with the reference's recordLineage (O8)
     org.slf4j.LoggerFactory.getLogger(getClass).info(lineage(spec)._2)
-
-    // Off-list ledger per pivot column (Pivot.java:330-353: a record with
-    // any undeclared value joins no cell; its value is recorded per-column).
-    // A record is off-list at its FIRST off-list column only (the reference
-    // returns early), which we reproduce with a prefix-conjunction.
-    val missingName = spec.pivotColumns.map { case (c, _) => s"__missing_$c" }
-    val missingCols: Seq[Column] = spec.pivotColumns.zipWithIndex.map {
-      case ((c, values), i) =>
-        val onList = keyStr(c).isin(values.map(lit): _*)
-        val priorOnList = spec.pivotColumns.take(i)
-          .map { case (pc, pvs) => keyStr(pc).isin(pvs.map(lit): _*) }
-          .foldLeft(lit(true))(_ && _)
-        collect_set(when(priorOnList && !onList, keyStr(c)))
-          .as(s"__missing_$c")
-    }
-
-    val trackErrors = spec.onError != OnError.Skip
-    val aggCols = if (trackErrors) cellCols ++ missingCols else cellCols
 
     val pre = spec.numPartitions match {
       case Some(n) => df.repartition(n, spec.pivotRows.map(col): _*)
       case None    => df
     }
-    val grouped = pre
-      .groupBy(spec.pivotRows.map(col): _*)
-      .agg(aggCols.head, aggCols.tail: _*)
+    finish(twoPhase(pre, spec), spec)
+  }
+
+  private def missingName(c: String): String = s"__missing_$c"
+
+  /** The cross-tab as two aggregations, so per-row work does not grow
+    * with the number of cells.
+    *
+    * Phase 1 groups by (pivot rows, stringified pivot keys) and applies
+    * each aggregate once, as a plain aggregate ([[AggFunctions.cellExpr]]
+    * with a true condition). Off-list keys keep their own groups.
+    *
+    * Phase 2 groups by the pivot rows and folds the phase-1 rows into
+    * cells by declared-tuple index, one array-valued aggregate per
+    * pivot aggregate: Spark's `PivotFirst` (the by-index aggregate that
+    * `groupBy.pivot` plans) for fixed-width values, [[FirstByIndex]] for
+    * the rest. Each cell receives at most one phase-1 row, so the fold
+    * only places values. The off-list ledger per pivot column is a
+    * `collect_set` over the phase-1 keys; a record is off-list at its
+    * FIRST off-list column only (the reference returns early,
+    * Pivot.java:330-353).
+    *
+    * Cells no row reached are then given their function's empty-cell
+    * value. The output has the one-phase plan's columns, names, types
+    * and nullability: pivot rows, cells (aggregates outer, products
+    * inner), then the `__missing_<column>` ledgers unless skip-error. */
+  private def twoPhase(df: DataFrame, spec: PivotSpec): DataFrame = {
+    val rows = spec.pivotRows.map(col)
+    val keys = spec.pivotColumns.indices.map(i => s"__pivot_key_$i")
+    val positions = keys.map(_ + "_pos")
+    val vals = spec.aggregates.indices.map(j => s"__pivot_val_$j")
+    val cellIndex = "__pivot_cell"
+
+    val cellAggs = spec.aggregates.zip(vals).map { case (a, v) =>
+      cellAgg(a, df.schema, lit(true)).as(v)
+    }
+    val keyCols = spec.pivotColumns.zip(keys).map { case ((c, _), k) => keyStr(c).as(k) }
+    val phase1 = df.groupBy(rows ++ keyCols: _*).agg(cellAggs.head, cellAggs.tail: _*)
+
+    // Position of each key in its declared list (-1 off-list), then the
+    // row-major cell index over the columns — the order of cellTuples;
+    // null when any key is off-list.
+    val strides = spec.pivotColumns.map(_._2.size).scanRight(1)(_ * _).tail
+    val onList = positions.map(p => col(p) >= 0)
+    val indexed = phase1
+      .select(phase1.columns.toSeq.map(col) ++
+        spec.pivotColumns.zip(keys).zip(positions).map { case (((_, values), k), p) =>
+          (array_position(typedLit(values), col(k)) - 1).cast(IntegerType).as(p)
+        }: _*)
+      .withColumn(cellIndex, when(onList.reduce(_ && _),
+        positions.zip(strides).map { case (p, s) => col(p) * s }.reduce(_ + _)))
+
+    // The by-index aggregates take resolved attributes: PivotFirst fixes
+    // its buffer layout from the value type when it is constructed.
+    val attr = indexed.queryExecution.analyzed.output.map(a => a.name -> a).toMap
+    val nCells = spec.cellTuples.size
+    val folds = vals.map { v =>
+      val value = attr(v)
+      val fold =
+        if (PivotFirst.supportsDataType(value.dataType))
+          PivotFirst(attr(cellIndex), value, 0 until nCells)
+        else FirstByIndex(attr(cellIndex), value, nCells)
+      GraftShim.column(fold.toAggregateExpression()).as(v)
+    }
+    val ledgerNames =
+      if (spec.onError == OnError.Skip) Nil
+      else spec.pivotColumns.map { case (c, _) => missingName(c) }
+    val ledger = ledgerNames.zip(keys).zipWithIndex.map { case ((m, k), i) =>
+      val priorOnList = onList.take(i).foldLeft(lit(true))(_ && _)
+      collect_set(when(priorOnList && !onList(i), col(k))).as(m)
+    }
+    val aggs = folds ++ ledger
+    val folded = indexed.groupBy(rows: _*).agg(aggs.head, aggs.tail: _*)
+
+    val cells = for {
+      (a, v) <- spec.aggregates.zip(vals)
+      (product, i) <- spec.columnsProduct.zipWithIndex
+    } yield {
+      val x = col(v).getItem(i)
+      val filled = AggFunctions.emptyCell(a.function, attr(v).dataType) match {
+        case None => x
+        // keep the one-phase nullability: CASE stays nullable, coalesce
+        // with a literal is not
+        case Some(e) if attr(v).nullable => when(x.isNull, e).otherwise(x)
+        case Some(e) => coalesce(x, e)
+      }
+      filled.as(spec.outputName(product, a))
+    }
+    folded.select(rows ++ cells ++ ledgerNames.map(col): _*)
+  }
+
+  /** Default fill and error routing over the grouped cross-tab: pivot
+    * rows, cells, and (unless skip-error) one `__missing_<column>`
+    * off-list ledger per pivot column. */
+  private[graft] def finish(grouped: DataFrame, spec: PivotSpec): PivotResult = {
+    val missingNames = spec.pivotColumns.map { case (c, _) => missingName(c) }
 
     // defaultValue: a single string converted per column type, applied to
     // every null aggregate cell (Pivot.java:229-236 builder.convertAndSet).
@@ -163,13 +244,13 @@ object PivotOps {
     }
 
     def hasMissing: Column =
-      missingName.map(n => size(col(n)) > 0).reduce(_ || _)
+      missingNames.map(n => size(col(n)) > 0).reduce(_ || _)
 
     def errMessage: Column = {
       // "For columns name: c following models are missing v1 ,v2 ;..."
       // (Pivot.java:367-377 formatting). Missing values are sorted for
       // determinism (the reference iterates a HashSet — nondeterministic).
-      val parts = spec.pivotColumns.zip(missingName).map { case ((c, _), m) =>
+      val parts = spec.pivotColumns.zip(missingNames).map { case ((c, _), m) =>
         when(size(col(m)) > 0,
           concat(lit(s"For columns name: $c following models are missing "),
             array_join(sort_array(col(m)), " ,")))
@@ -181,7 +262,7 @@ object PivotOps {
       case OnError.Skip =>
         PivotResult(filled, emptyErrors(filled, spec))
       case OnError.SendToErrorPort =>
-        val main = filled.filter(!hasMissing).drop(missingName: _*)
+        val main = filled.filter(!hasMissing).drop(missingNames: _*)
         val errors = filled.filter(hasMissing)
           .withColumn("__error", errMessage)
           .select((spec.pivotRows.map(col) :+ col("__error")): _*)
@@ -195,7 +276,7 @@ object PivotOps {
           .filter(when(hasMissing,
             raise_error(concat(lit("Failing pipeline due to error : "), errMessage)).isNotNull
           ).otherwise(lit(true)))
-          .drop(missingName: _*)
+          .drop(missingNames: _*)
         PivotResult(guarded, emptyErrors(filled, spec))
     }
   }

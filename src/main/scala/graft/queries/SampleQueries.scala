@@ -515,7 +515,7 @@ private[graft] object SampleQueries {
 
   /** Star-schema enrichment feeding the pivot: customer joined to its
     * (small) nation/region dims with explicit broadcast — the fact side
-    * never shuffles for the join, and the pivot's single shuffle is the
+    * never shuffles for the join, and the pivot's two shuffles are the
     * only data movement. The composition pattern every reference pipeline
     * uses (source → enrich → pivot → sink), on Spark primitives. */
   private[graft] def qJoinPivot(s: SparkSession, dir: String): DataFrame = {
@@ -956,8 +956,9 @@ private[graft] object SampleQueries {
 
 
   /** Windowed PIVOT, batch twin of StreamingOps.pivotStream: daily
-    * cross-tab of event counts/values by event type per user — the same
-    * cell expressions as the batch pivot, hosted under a time window
+    * cross-tab of event counts/values by event type per user — the
+    * one-pass cell expressions (PivotOps.cellColumns) that the streaming
+    * pivot hosts, under a time window
     * (the backfill path of the kappa setup; the streaming path is
     * spec-checked against the batch pivot in StreamingSpec). */
   private[graft] def qEventsPivotWindow(s: SparkSession, dir: String): DataFrame = {

@@ -125,7 +125,7 @@ object AvroSink {
     fs.delete(outPath, true)
     fs.mkdirs(outPath)
     val fieldCount = df.schema.length
-    val written = df.rdd.mapPartitionsWithIndex { (pid, rows) =>
+    val counts = df.rdd.mapPartitionsWithIndex { (pid, rows) =>
       val conf = new Configuration(false)
       conf.readFields(new DataInputStream(new ByteArrayInputStream(confBytes)))
       val schema = new Schema.Parser().parse(schemaJson)
@@ -164,7 +164,16 @@ object AvroSink {
         pfs.delete(tmp, false)
       }
       Iterator.single(n)
-    }.sum()
+    }.collect()
+    if (counts.isEmpty) {
+      // no partitions, so no part file: commit one empty file so the
+      // schema survives, as Spark's own file sinks do
+      val writer = new DataFileWriter[GenericRecord](
+        new GenericDatumWriter[GenericRecord](avroSchema))
+      writer.create(avroSchema, fs.create(new Path(outPath, "part-00000.avro"), true))
+      writer.close()
+    }
+    val written = counts.sum
     // Spark-convention completion marker
     fs.create(new Path(outPath, "_SUCCESS"), true).close()
     org.slf4j.LoggerFactory.getLogger(getClass)

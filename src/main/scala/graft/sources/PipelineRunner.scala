@@ -10,8 +10,9 @@ import scala.jdk.CollectionConverters._
 /** Executes the reference's example pipeline shape — File source → Pivot →
   * File sink — from its JSON config (reference:
   * examples/pivot_file_source_sink_example-cdap-data-pipeline.json).
-  * A user of the reference can point this runner at that exact file and
-  * get the same pipeline on Spark.
+  * A user of the reference can point this runner at a pipeline file of
+  * that format and get the same pipeline on Spark; [[Example]] is such a
+  * file.
   *
   * Supported subset: `File` batchsource (csv/parquet/json/orc + declared
   * Avro-style schema, delimiter, skipHeader), the `Pivot`
@@ -122,15 +123,43 @@ object PipelineRunner {
 
   /** Write the sink stage. `avro` goes through [[AvroSink]] (real Avro
     * container files via avro-core — no spark-avro datasource in this
-    * build). */
+    * build). At most 32 files: coalesce never raises the partition
+    * count, so no partition count is read first (reading it would run
+    * the plan's shuffle stages once more, and an empty result has 0). */
   def writeSink(df: DataFrame, s: SinkStage): Unit = {
-    val coalesced = df.coalesce(math.min(df.rdd.getNumPartitions, 32))
+    val coalesced = df.coalesce(32)
     s.format match {
       case "avro" => AvroSink.write(coalesced, s.path)
       case "csv" => coalesced.write.mode("overwrite").option("header", true).csv(s.path)
       case "json" => coalesced.write.mode("overwrite").json(s.path)
       case "orc" => coalesced.write.mode("overwrite").orc(s.path)
       case _ => coalesced.write.mode("overwrite").parquet(s.path)
+    }
+  }
+
+  /** A reference-format example pipeline, checked in under
+    * `graft/examples/` on the classpath: csv source (`${inputFile}`,
+    * declared schema, header skipped) → pivot of `Product` by
+    * `Quarter=Q1..Q4` × `Brand=Nike,Reebok,Addidas` with `Sum:sum(Sales)`
+    * → avro sink (`${outputDirectory}`), plus its 18-row sample input. */
+  object Example {
+    private def resource(name: String): Array[Byte] = {
+      val in = getClass.getResourceAsStream(s"/graft/examples/$name")
+      require(in != null, s"missing graft/examples/$name resource")
+      try in.readAllBytes() finally in.close()
+    }
+
+    lazy val json: String = new String(
+      resource("pivot_file_source_sink_example-cdap-data-pipeline.json"),
+      java.nio.charset.StandardCharsets.UTF_8)
+
+    /** Writes the sample input to `dir/sample_data.csv` and returns that
+      * path: the source stage reads files, not classpath entries. */
+    def writeSampleCsv(dir: String): String = {
+      val path = java.nio.file.Paths.get(dir, "sample_data.csv")
+      java.nio.file.Files.createDirectories(path.getParent)
+      java.nio.file.Files.write(path, resource("sample_data.csv"))
+      path.toString
     }
   }
 

@@ -117,10 +117,11 @@ object StreamingOps {
         expr("greatest(0L, __n + __noise)").as("n_released"): _*)
   }
 
-  /** The pivot operator on a live stream: the same (cell × aggregate)
-    * conditional-aggregate expressions as the batch
-    * [[graft.pivot.PivotOps.pivot]], hosted in a watermarked tumbling-
-    * window aggregation — one cross-tab row per (window, pivot-row key)
+  /** The pivot operator on a live stream: the batch pivot's cell
+    * semantics as one-pass (cell × aggregate) conditional aggregates
+    * ([[graft.pivot.PivotOps.cellColumns]] — a streaming aggregation
+    * cannot chain the batch pivot's two phases), hosted in a watermarked
+    * tumbling-window aggregation — one cross-tab row per (window, pivot-row key)
     * emitted when the watermark closes the window. State is bounded by
     * the watermark exactly like [[windowedCounts]]; off-list values feed
     * no cell (skip-error semantics — error routing needs the whole group,

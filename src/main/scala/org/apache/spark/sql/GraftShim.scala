@@ -17,6 +17,11 @@ package org.apache.spark.sql
   */
 object GraftShim {
 
+  /** A Column over a catalyst expression — for aggregates Spark has no
+    * `functions` entry for (`PivotFirst`, graft's own aggregates). */
+  def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
+    org.apache.spark.sql.classic.ExpressionUtils.column(e)
+
   /** Materialize `df` as an UNRELIABLE (executor-local) checkpoint and
     * return the re-wrapped DataFrame plus its row count, in ONE job.
     * Mirrors `Dataset.checkpoint(eager=true, reliableCheckpoint=false)`:

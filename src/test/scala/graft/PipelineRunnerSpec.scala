@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.graft.BusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
@@ -9,14 +11,28 @@ import graft.sources.PipelineRunner
 
 import scala.jdk.CollectionConverters._
 
-/** Runs the reference's shipped example pipeline JSON end-to-end
-  * (examples/pivot_file_source_sink_example-cdap-data-pipeline.json with
-  * examples/sample_data.csv) through the Spark runner — config-level
-  * compatibility: a reference user's pipeline file works verbatim. */
+/** Runs the reference-format example pipeline JSON (a fixture checked
+  * in as `graft/examples/pivot_file_source_sink_example-cdap-data-pipeline.json`
+  * with `graft/examples/sample_data.csv`) end-to-end through the Spark
+  * runner — config-level compatibility: a pipeline file in the
+  * reference's format works as written. */
 class PipelineRunnerSpec extends SparkSpec {
 
-  private val exampleJson = new String(Files.readAllBytes(Paths.get(
-    "/root/reference/examples/pivot_file_source_sink_example-cdap-data-pipeline.json")))
+  private val example = PipelineRunner.Example
+
+  /** Input records read by the tasks of the jobs `body` runs. */
+  private def recordsRead(body: => Unit): Long = {
+    val read = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => read.addAndGet(m.inputMetrics.recordsRead))
+    }
+    BusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; BusDrain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    read.get
+  }
 
   test("avro-style schema converts to StructType with nullable unions") {
     val st = PipelineRunner.avroSchemaToStruct(
@@ -28,10 +44,10 @@ class PipelineRunnerSpec extends SparkSpec {
       StructField("b", IntegerType, nullable = true))))
   }
 
-  test("reference example pipeline runs verbatim: csv -> pivot -> sink") {
+  test("reference-format example pipeline runs: csv -> pivot -> sink") {
     val outDir = Files.createTempDirectory("pipeline_out").toString
-    val result = PipelineRunner.run(spark, exampleJson, Map(
-      "inputFile" -> "/root/reference/examples/sample_data.csv",
+    val result = PipelineRunner.run(spark, example.json, Map(
+      "inputFile" -> example.writeSampleCsv(outDir),
       "outputDirectory" -> s"$outDir/pivoted"))
 
     // Quarter(Q1..Q4) x Brand(Nike,Reebok,Addidas) cells, alias "Sum"
@@ -58,6 +74,40 @@ class PipelineRunnerSpec extends SparkSpec {
     assert(written.count() == 3)
     assertRowsMatch(written.select("Product", "Q1_Nike_Sum", "Q1_Reebok_Sum"),
       Seq(Row("Shoes", 50, 50), Row("Shirts", 20, 60), Row("Socks", null, 40)))
+  }
+
+  test("the source is scanned once per written output") {
+    val outDir = Files.createTempDirectory("pipeline_scans").toString
+    val input = example.writeSampleCsv(outDir)
+    val sampleRows = 18L
+    def run(json: String): Long = recordsRead(PipelineRunner.run(spark, json,
+      Map("inputFile" -> input, "outputDirectory" -> s"$outDir/pivoted")))
+    assert(run(example.json) == sampleRows)
+    // send-to-error-port writes the main sink and an `_errors` sink
+    val withErrors = example.json.replace("\"skip-error\"", "\"send-to-error-port\"")
+    assert(withErrors != example.json)
+    assert(run(withErrors) == 2 * sampleRows)
+    assert(Files.exists(Paths.get(s"$outDir/pivoted_errors/_SUCCESS")))
+  }
+
+  test("an empty result commits an empty sink") {
+    val outDir = Files.createTempDirectory("pipeline_empty").toString
+    val header = Paths.get(outDir, "header_only.csv")
+    Files.write(header, "Quarter,Product,Brand,Sales\n".getBytes("UTF-8"))
+    val result = PipelineRunner.run(spark, example.json, Map(
+      "inputFile" -> header.toString, "outputDirectory" -> s"$outDir/pivoted"))
+    assert(result.main.isEmpty)
+    assert(Files.exists(Paths.get(s"$outDir/pivoted/_SUCCESS")))
+    assert(graft.sources.AvroSource.read(spark, s"$outDir/pivoted").count() == 0)
+
+    // a frame with no partitions at all, through each sink format
+    val none = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      StructType(Seq(StructField("k", StringType))))
+    assert(none.rdd.getNumPartitions == 0)
+    for (format <- Seq("avro", "parquet", "csv")) {
+      PipelineRunner.writeSink(none, PipelineRunner.SinkStage(s"$outDir/none_$format", format))
+      assert(Files.exists(Paths.get(s"$outDir/none_$format/_SUCCESS")), format)
+    }
   }
 
   test("avro sink/source round-trip preserves values, nulls and logical types") {
