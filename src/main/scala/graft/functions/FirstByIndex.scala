@@ -10,13 +10,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
   * slot `i` holds the first non-null value seen at index `i`, null if
   * none. Rows whose index is null or outside `[0, size)` are ignored.
   *
-  * The by-index fold of the pivot's second phase for cells Spark's
-  * `PivotFirst` cannot hold: `PivotFirst` keeps its slots in a
-  * fixed-width mutable buffer, so it takes only numeric and boolean
-  * values, while this buffer is an object array and takes any type
-  * (strings, arrays, structs, dates). Values are copied on update, since
-  * the input row's buffers are reused. The slot array is serialized only
-  * at partial-aggregation boundaries, as one UnsafeArrayData.
+  * The by-index fold of the pivot's second phase, for every cell type.
+  * Unlike Spark's `PivotFirst`, which keeps its slots in a fixed-width
+  * mutable buffer and so takes only numeric and boolean values, the
+  * buffer is an object array and takes any type (strings, arrays,
+  * structs, dates). Values are copied on update, since the input row's
+  * buffers are reused. The slot array is serialized only at
+  * partial-aggregation boundaries, as one UnsafeArrayData.
   */
 case class FirstByIndex(index: Expression, value: Expression, size: Int,
                         mutableAggBufferOffset: Int = 0,

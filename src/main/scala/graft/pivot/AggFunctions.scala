@@ -8,11 +8,12 @@ import org.apache.spark.sql.types._
   *
   * [[cellExpr]] builds `fn` over the rows that satisfy a condition:
   * `fn(when(cond, field))`, with each function's null handling. The batch
-  * pivot ([[PivotOps.pivot]]) calls it with a true condition: its first
-  * phase groups by (pivot rows, pivot keys), so each aggregate runs once
-  * per group as a plain aggregate, and [[emptyCell]] supplies the value
-  * of cells no row reached after the by-index fold. Hosts that aggregate
-  * every cell in one pass (rollup, streaming and windowed pivots, via
+  * pivot's two-phase plan ([[PivotOps.twoPhase]]) calls it with a true
+  * condition: its first phase groups by (pivot rows, pivot keys), so each
+  * aggregate runs once per group as a plain aggregate, and [[emptyCell]]
+  * supplies the value of cells no row reached after the by-index fold.
+  * Plans that aggregate every cell in one pass (small skip-error batch
+  * pivots, rollup, streaming and windowed pivots, via
   * [[PivotOps.cellColumns]]) call it with the cell's membership
   * predicate. Both plans keep the reference's map-side-combinable shape,
   * a `BatchReducibleAggregator` (reference:

@@ -1,7 +1,7 @@
 package graft.pivot
 
 import org.apache.spark.sql.{Column, DataFrame, GraftShim}
-import org.apache.spark.sql.catalyst.expressions.aggregate.PivotFirst
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.FirstByIndex
@@ -15,15 +15,22 @@ final case class PivotResult(main: DataFrame, errors: DataFrame)
 
 /** The pivot (grouped cross-tab) operator.
   *
-  * Spark-first plan: two aggregations. The first applies each aggregate
-  * once per (pivot row, pivot key) group, as plain map-side-combined
-  * aggregates (whole-stage codegen where Spark has it for the function);
-  * the second folds those groups into cells by index. So per-row work and plan size
-  * do not grow with the number of declared values. No pivot-value
-  * discovery job is ever run because values are declared in the spec
-  * (the same design point as the reference, PivotConfig.java:198-264).
-  * Off-list tracking for the error modes rides the second aggregation,
-  * so error handling adds no extra pass over the data.
+  * Spark-first plan, chosen from the declared spec ([[foldsCells]]):
+  *   - Two aggregations (the default). The first applies each aggregate
+  *     once per (pivot row, pivot key) group, as plain map-side-combined
+  *     aggregates (whole-stage codegen where Spark has it for the
+  *     function); the second folds those groups into cells by index and
+  *     carries the off-list ledger of the error modes. Per-row work, and
+  *     the expression count of every aggregate operator, do not grow with
+  *     the number of declared values.
+  *   - One aggregation, for small skip-error pivots: one `groupBy(pivot
+  *     rows)` hosting every (cell × aggregate) of [[cellColumns]]. With
+  *     few cells and no ledger it stays whole-stage codegen'd, and it
+  *     saves the second shuffle stage.
+  * No pivot-value discovery job is ever run because values are declared
+  * in the spec (the same design point as the reference,
+  * PivotConfig.java:198-264), and error handling adds no extra pass over
+  * the data.
   */
 object PivotOps {
 
@@ -40,8 +47,8 @@ object PivotOps {
     * (row, key) groups per cell, so it cannot fold by index), a
     * watermarked streaming window pivot
     * ([[graft.streaming.StreamingOps.pivotStream]]) and the windowed
-    * batch twin. The batch [[pivot]] uses the two-phase plan instead.
-    * Plan size grows with the cell count here.
+    * batch twin, and the batch [[pivot]] when [[foldsCells]] is false.
+    * The aggregate's expression count grows with the cell count here.
     *
     * Cell membership is a conjunction of per-column equality predicates,
     * NOT a compare of the '_'-joined key: the reference routes per-column
@@ -90,7 +97,7 @@ object PivotOps {
     (name, description, inputFields, outputFields)
   }
 
-  /** Validate + pivot, as two aggregations (see the object doc). Throws
+  /** Validate + pivot, planned as the object doc describes. Throws
     * IllegalArgumentException listing all spec errors (the reference
     * accumulates in a FailureCollector then throws,
     * PivotConfig.java:134-187). */
@@ -122,8 +129,28 @@ object PivotOps {
       case Some(n) => df.repartition(n, spec.pivotRows.map(col): _*)
       case None    => df
     }
-    finish(twoPhase(pre, spec), spec)
+    val grouped =
+      if (foldsCells(spec)) twoPhase(pre, spec)
+      else {
+        val cells = cellColumns(spec, pre.schema)
+        pre.groupBy(spec.pivotRows.map(col): _*).agg(cells.head, cells.tail: _*)
+      }
+    finish(grouped, spec)
   }
+
+  /** Widest (cells × aggregates) skip-error pivot planned as one
+    * aggregation. Up to about this width the one-phase aggregate stays
+    * whole-stage codegen'd and beats the fold's second shuffle stage;
+    * beyond it, the two-phase plan wins and the gap grows with the cell
+    * count. */
+  private[graft] val onePhaseMaxCells = 32
+
+  /** Whether [[pivot]] plans the two-phase fold. The error modes always
+    * fold: their off-list ledger is a `collect_set`, which takes a
+    * one-phase aggregate out of whole-stage codegen at any width. */
+  private[graft] def foldsCells(spec: PivotSpec): Boolean =
+    spec.onError != OnError.Skip ||
+      spec.cellTuples.size * spec.aggregates.size > onePhaseMaxCells
 
   private def missingName(c: String): String = s"__missing_$c"
 
@@ -135,10 +162,8 @@ object PivotOps {
     * with a true condition). Off-list keys keep their own groups.
     *
     * Phase 2 groups by the pivot rows and folds the phase-1 rows into
-    * cells by declared-tuple index, one array-valued aggregate per
-    * pivot aggregate: Spark's `PivotFirst` (the by-index aggregate that
-    * `groupBy.pivot` plans) for fixed-width values, [[FirstByIndex]] for
-    * the rest. Each cell receives at most one phase-1 row, so the fold
+    * cells by declared-tuple index, one [[FirstByIndex]] per pivot
+    * aggregate. Each cell receives at most one phase-1 row, so the fold
     * only places values. The off-list ledger per pivot column is a
     * `collect_set` over the phase-1 keys; a record is off-list at its
     * FIRST off-list column only (the reference returns early,
@@ -148,7 +173,7 @@ object PivotOps {
     * value. The output has the one-phase plan's columns, names, types
     * and nullability: pivot rows, cells (aggregates outer, products
     * inner), then the `__missing_<column>` ledgers unless skip-error. */
-  private def twoPhase(df: DataFrame, spec: PivotSpec): DataFrame = {
+  private[graft] def twoPhase(df: DataFrame, spec: PivotSpec): DataFrame = {
     val rows = spec.pivotRows.map(col)
     val keys = spec.pivotColumns.indices.map(i => s"__pivot_key_$i")
     val positions = keys.map(_ + "_pos")
@@ -174,16 +199,9 @@ object PivotOps {
       .withColumn(cellIndex, when(onList.reduce(_ && _),
         positions.zip(strides).map { case (p, s) => col(p) * s }.reduce(_ + _)))
 
-    // The by-index aggregates take resolved attributes: PivotFirst fixes
-    // its buffer layout from the value type when it is constructed.
-    val attr = indexed.queryExecution.analyzed.output.map(a => a.name -> a).toMap
     val nCells = spec.cellTuples.size
     val folds = vals.map { v =>
-      val value = attr(v)
-      val fold =
-        if (PivotFirst.supportsDataType(value.dataType))
-          PivotFirst(attr(cellIndex), value, 0 until nCells)
-        else FirstByIndex(attr(cellIndex), value, nCells)
+      val fold = FirstByIndex(UnresolvedAttribute.quoted(cellIndex), UnresolvedAttribute.quoted(v), nCells)
       GraftShim.column(fold.toAggregateExpression()).as(v)
     }
     val ledgerNames =
@@ -201,11 +219,12 @@ object PivotOps {
       (product, i) <- spec.columnsProduct.zipWithIndex
     } yield {
       val x = col(v).getItem(i)
-      val filled = AggFunctions.emptyCell(a.function, attr(v).dataType) match {
+      val value = phase1.schema(v)
+      val filled = AggFunctions.emptyCell(a.function, value.dataType) match {
         case None => x
         // keep the one-phase nullability: CASE stays nullable, coalesce
         // with a literal is not
-        case Some(e) if attr(v).nullable => when(x.isNull, e).otherwise(x)
+        case Some(e) if value.nullable => when(x.isNull, e).otherwise(x)
         case Some(e) => coalesce(x, e)
       }
       filled.as(spec.outputName(product, a))

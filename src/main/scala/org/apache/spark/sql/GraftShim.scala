@@ -18,7 +18,7 @@ package org.apache.spark.sql
 object GraftShim {
 
   /** A Column over a catalyst expression — for aggregates Spark has no
-    * `functions` entry for (`PivotFirst`, graft's own aggregates). */
+    * `functions` entry for (graft's own aggregates). */
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
 

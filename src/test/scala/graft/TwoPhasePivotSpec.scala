@@ -10,11 +10,12 @@ import org.apache.spark.sql.types._
 import graft.pivot.{OnError, PivotOps, PivotResult, PivotSpec}
 
 /** The batch pivot's two-phase plan (aggregate per (row key, pivot key),
-  * then fold cells by index) against the one-phase plan it replaced: one
+  * then fold cells by index) against the one-phase plan: one
   * `groupBy(pivotRows)` hosting [[PivotOps.cellColumns]] plus the
   * per-record off-list ledger, finished by the same default fill and
-  * error routing. Results, schemas (nullability included) and error
-  * ports must be identical. Inputs with order-sensitive functions sit in
+  * error routing. Both the plan [[PivotOps.pivot]] chooses and the
+  * two-phase plan forced on every spec must give identical results,
+  * schemas (nullability included) and error ports. Inputs with order-sensitive functions sit in
   * one partition, so first/last and floating-point sums see the same
   * order in both plans. */
 class TwoPhasePivotSpec extends SparkSpec {
@@ -36,6 +37,13 @@ class TwoPhasePivotSpec extends SparkSpec {
     PivotOps.finish(pre.groupBy(rows: _*).agg(aggs.head, aggs.tail: _*), spec)
   }
 
+  /** The two-phase plan, forced whatever [[PivotOps.foldsCells]] says. */
+  private def twoPhase(df: DataFrame, spec: PivotSpec): PivotResult = {
+    val rows = spec.pivotRows.map(col)
+    val pre = spec.numPartitions.fold(df)(n => df.repartition(n, rows: _*))
+    PivotOps.finish(PivotOps.twoPhase(pre, spec), spec)
+  }
+
   private def canon(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
 
   private def assertSame(got: DataFrame, want: DataFrame): Unit = {
@@ -44,10 +52,12 @@ class TwoPhasePivotSpec extends SparkSpec {
   }
 
   private def assertEquivalent(df: DataFrame, spec: PivotSpec, wide: Boolean = false): Unit = {
-    val got = if (wide) PivotOps.pivotWide(df, spec) else PivotOps.pivot(df, spec)
+    val chosen = if (wide) PivotOps.pivotWide(df, spec) else PivotOps.pivot(df, spec)
     val want = onePhase(df, spec)
-    assertSame(got.main, want.main)
-    assertSame(got.errors, want.errors)
+    for (got <- Seq(chosen, twoPhase(df, spec))) {
+      assertSame(got.main, want.main)
+      assertSame(got.errors, want.errors)
+    }
   }
 
   private def parse(rows: String, cols: String, aggs: String, default: Option[String] = None,
@@ -127,7 +137,8 @@ class TwoPhasePivotSpec extends SparkSpec {
     assertRowsMatch(filled.filter(col("g") === "c"), Seq(Row("c", 1L, 0L, true, true, "off", "", 1, 7)))
 
     val failing = parse("g", "p=x,y,null;q=u,v", "si: sum(i)", onError = Some("fail-pipeline"))
-    for (run <- Seq(() => PivotOps.pivot(data, failing).main, () => onePhase(data, failing).main)) {
+    for (run <- Seq(() => PivotOps.pivot(data, failing).main, () => twoPhase(data, failing).main,
+                    () => onePhase(data, failing).main)) {
       val e = intercept[RuntimeException](run().collect())
       assert(e.getMessage.contains(
         "Failing pipeline due to error : For columns name: p following models are missing z"))
@@ -205,15 +216,38 @@ class TwoPhasePivotSpec extends SparkSpec {
     planNodes(df).collect { case a: BaseAggregateExec => a.aggregateExpressions.size }.max
   }
 
-  test("plan shape: no aggregate operator grows with the number of declared values") {
+  private def declared(values: Int, mode: String): PivotSpec =
+    parse("rk", s"pk=${(0 until values).mkString(",")}", "s: sum(v), c: count(v), m: max(v)",
+      onError = Some(mode))
+
+  test("plan shape: no two-phase aggregate operator grows with the number of declared values") {
     val df = wideInput(6000, 40, 200)
-    val widths = Seq(2, 200).map { values =>
-      val spec = parse("rk", s"pk=${(0 until values).mkString(",")}",
-        "s: sum(v), c: count(v), m: max(v)", onError = Some("send-to-error-port"))
-      val w = widestAggregate(PivotOps.pivot(df, spec).main)
-      assert(w <= spec.aggregates.size + spec.pivotColumns.size, s"$values values: $w")
-      w
+    for (mode <- Seq("skip-error", "send-to-error-port")) {
+      val widths = Seq(2, 200).map { values =>
+        val spec = declared(values, mode)
+        val w = widestAggregate(twoPhase(df, spec).main)
+        assert(w <= spec.aggregates.size + spec.pivotColumns.size, s"$mode, $values values: $w")
+        w
+      }
+      assert(widths.distinct.size == 1, s"$mode: $widths")
     }
-    assert(widths.distinct.size == 1, widths)
+  }
+
+  test("plan choice: one aggregation only for skip-error pivots of at most 32 cell aggregates") {
+    val df = wideInput(6000, 40, 200)
+    def aggregateOperators(r: PivotResult): Int = {
+      r.main.collect()
+      planNodes(r.main).count(_.isInstanceOf[BaseAggregateExec])
+    }
+    // 3 aggregates: 10 values are 30 cell aggregates, 11 values are 33
+    for ((values, mode, folds) <- Seq((2, "skip-error", false), (10, "skip-error", false),
+                                      (11, "skip-error", true), (200, "skip-error", true),
+                                      (2, "send-to-error-port", true), (2, "fail-pipeline", true))) {
+      val spec = declared(values, mode)
+      assert(PivotOps.foldsCells(spec) == folds, s"$mode, $values values")
+      // partial and final aggregate per aggregation
+      assert(aggregateOperators(PivotOps.pivot(df.filter(col("pk") < values), spec)) ==
+        (if (folds) 4 else 2), s"$mode, $values values")
+    }
   }
 }
