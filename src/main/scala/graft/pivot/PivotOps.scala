@@ -46,7 +46,7 @@ object PivotOps {
     * cell in one pass: [[pivotRollup]] (a subtotal row merges several
     * (row, key) groups per cell, so it cannot fold by index), a
     * watermarked streaming window pivot
-    * ([[graft.streaming.StreamingOps.pivotStream]]) and the windowed
+    * ([[graft.streaming.StreamingOps.pivotStream]]), the windowed
     * batch twin, and the batch [[pivot]] when [[foldsCells]] is false.
     * The aggregate's expression count grows with the cell count here.
     *
