@@ -10,20 +10,15 @@ import org.apache.spark.sql.SparkSession
   * MEDIAN; `value` is the sum of medians. A contamination spike must now
   * hit the same query in a majority of reps to move the reported number.
   * `queries_min` (per-query minimum) is also emitted — min-of-reps is the
-  * best available estimate of the uncontended floor. */
+  * best available estimate of the uncontended floor. A query that throws
+  * in any rep is listed under `failed` ("<ExceptionClass>: <message>")
+  * and left out of `value`, `total_min` and the per-query maps. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup: JIT/codegen/scan-path compilation so the first timed
     // query isn't charged JVM startup cost. Each table is count()ed once —
@@ -45,11 +40,16 @@ object Bench {
     // toRdd executes the EXACT physical plan of the query as written
     // (every column materialized, like the parquet sink Verify uses)
     // and counts rows without collecting them to the driver.
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    //
+    // A failure is not a timing: it comes back as "<ExceptionClass>:
+    // <message>" and the query is reported under "failed" instead.
+    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+        : Either[String, Double] = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).queryExecution.toRdd.count() }
-      catch { case _: Throwable => () }
-      (System.nanoTime() - t0) / 1e9
+      try {
+        fn(spark, sfDir).queryExecution.toRdd.count()
+        Right((System.nanoTime() - t0) / 1e9)
+      } catch { case e: Throwable => Left(s"${e.getClass.getName}: ${e.getMessage}") }
     }
     // rep-major order (full suite, then the next rep of the full suite):
     // a transient co-resident JVM then contaminates one rep of many
@@ -61,24 +61,31 @@ object Bench {
       .filter(_.nonEmpty)
     val names = SparkEntry.queries.keys.toSeq
       .filter(n => only.forall(_.contains(n)))
-    val samples: Map[String, Seq[Double]] = {
+    val samples: Map[String, Seq[Either[String, Double]]] = {
       val runs = (1 to reps).map { _ =>
         names.map(n => n -> timeOnce(SparkEntry.queries(n))).toMap
       }
       names.map(n => n -> runs.map(_(n))).toMap
     }
+    // a query that failed in any rep is left out of value and total_min
+    val failed = names.flatMap(n => samples(n).collectFirst { case Left(e) => n -> e })
+    val timed = names.filterNot(failed.map(_._1).toSet).map(n =>
+      n -> samples(n).collect { case Right(t) => t })
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
     }
-    val med = names.map(n => n -> median(samples(n)))
-    val mins = names.map(n => n -> samples(n).min)
+    val med = timed.map { case (n, ts) => n -> median(ts) }
+    val mins = timed.map { case (n, ts) => n -> ts.min }
     def fmt(kv: Seq[(String, Double)]): String =
       kv.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val failedJson = failed
+      .map { case (k, e) => "\"" + k + "\":" + Verify.jsonString(e) }
+      .mkString("{", ",", "}")
     val total = med.map(_._2).sum
     val totalMin = mins.map(_._2).sum
     val perQ = if (med.nonEmpty) total / med.size else 0.0
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${med.size},"sec_per_query":$perQ,"reps":$reps,"cpus":"$cpus","total_min":$totalMin,"queries":${fmt(med)},"queries_min":${fmt(mins)},"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${med.size},"sec_per_query":$perQ,"reps":$reps,"cpus":"$cpus","total_min":$totalMin,"queries":${fmt(med)},"queries_min":${fmt(mins)},"failed":$failedJson,"sf":"$sfDir"}"""
     // Persist the FULL per-query JSON to files: the driver's log capture
     // keeps only the last ~2000 chars of stdout, so the ~14 KB full line
     // can never survive in BENCH_r{N}.json (r09/r10 both arrived with
@@ -103,6 +110,9 @@ object Bench {
       // only when the run matches the bench contract's main core count
       // (SPARK_GRAFT_BENCH_MAIN_CPUS, default 32 = the driver's main
       // bench; the low-core scaling pass no longer rewrites it).
+      //
+      // Failed queries are absent from `med`, so a run with any failure
+      // writes neither artifact.
       if (only.isEmpty && med.size == SparkEntry.queries.size) {
         java.nio.file.Files.write(
           java.nio.file.Paths.get(s"BENCH_full_c$cpus.json"), bytes)
@@ -119,7 +129,7 @@ object Bench {
     // the slowest-15 per-query medians — the part of the regression signal
     // that matters most — and a pointer to the full artifact.
     val slow = med.sortBy(-_._2).take(15)
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${med.size},"sec_per_query":$perQ,"reps":$reps,"total_min":$totalMin,"queries":${fmt(slow)},"queries_full":"BENCH_full.json","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${med.size},"sec_per_query":$perQ,"reps":$reps,"total_min":$totalMin,"queries":${fmt(slow)},"failed":$failedJson,"queries_full":"BENCH_full.json","sf":"$sfDir"}""")
     spark.stop()
   }
 }

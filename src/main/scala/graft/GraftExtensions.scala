@@ -6,11 +6,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType}
 import graft.functions.{BloomMightContain, CharClassProfile, CosineSimilarity, DeflateSize, DotProduct, GopherStats, HashedShingles, KllSketchAgg, LshSignatures, MinHashOph, MinHashSig, PqLookupSum, RpProjectExpr, SimHash64, StopProfile}
 
-/** Session extensions registering graft's native (codegen) functions.
-  * Enable with `.config("spark.sql.extensions", "graft.GraftExtensions")`
-  * (works with spark-submit too). Operators that use these functions fall
-  * back to built-in higher-order-function equivalents when the extension
-  * is absent, so the library stays usable on an unconfigured session.
+/** Session extensions registering SQL names for graft's native (codegen)
+  * expressions, so SQL and `call_function` can reach them. Enable with
+  * `.config("spark.sql.extensions", "graft.GraftExtensions")` (works with
+  * spark-submit too). Operators never look these names up: they build
+  * the expression classes directly, so they plan the same on any
+  * session, configured or not.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -1,22 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: dump the formatted physical plan of each headline query
   * (`sbt "runMain graft.Plans [sfDir]"`). Source material for the plan
   * audit in PLANS.md. */
 object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder(8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val interesting = Seq(

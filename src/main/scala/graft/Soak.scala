@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-tooling main for SCALED soaks of operators whose oracle QUERY
@@ -30,14 +29,9 @@ object Soak {
     // changing the partition count — distinguishes "too many shuffle
     // partitions" from "too many simultaneous tasks" (r16 kcore probe)
     val taskCpus = sys.env.getOrElse("SPARK_GRAFT_TASK_CPUS", "1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = Sessions.builder(cpus.toInt)
       .config("spark.sql.shuffle.partitions", shuf)
       .config("spark.task.cpus", taskCpus)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val graphOps = Set("pagerank", "hits", "kcore", "bfs", "harmonic",

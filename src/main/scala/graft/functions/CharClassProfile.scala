@@ -15,10 +15,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Why a custom expression: the class counts alone are five
   * `regexp_count` passes, and Shannon entropy over the char
-  * distribution has no built-in at all — the composable fallback
-  * ([[graft.ops.TextFunctions.charProfile]]'s non-native branch) filters
-  * the char array once per DISTINCT character, an O(len × distinct)
-  * interpreted loop. Here one code-point walk fills a count map and
+  * distribution has no built-in at all — the composed spelling
+  * (CharProfileSpec's reference) filters the char array once per
+  * DISTINCT character, an O(len × distinct) interpreted loop. Here one code-point walk fills a count map and
   * every signal falls out; whole-stage codegen CSE shares the single
   * evaluation across derived columns.
   *
@@ -31,7 +30,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * (and the DuckDB oracle) reproduces it bit-for-bit regardless of its
   * aggregation order.
   *
-  * Null text is null-out at the struct level. The composed fallback
+  * Null text is null-out at the struct level. The composed spelling
   * walks UTF-16 units (Java `split("")`), so it mis-splits
   * supplementary characters the native path counts as one code point —
   * equivalent on BMP text (CharProfileSpec), native is the correct one

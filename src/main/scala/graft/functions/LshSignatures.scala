@@ -15,10 +15,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * and re-converts the float vector once per plane — tables×nbits
   * conversions and allocations per row, plus a Janino compile of hundreds
   * of expression calls. Fused here: ONE float→double conversion, then all
-  * tables×nbits plane dots in a single loop over cached plane data. The
-  * plane family is identical to [[graft.ops.Similarity.lshBucket]]'s
-  * (seeded `scala.util.Random`, seed = seedBase + table), so both paths
-  * produce bit-identical signatures (spec-pinned).
+  * tables×nbits plane dots in a single loop over cached plane data.
+  * Planes come from a seeded `scala.util.Random` (seed = seedBase +
+  * table), so the signatures are bit-identical to that per-plane combo
+  * (OpsSpec keeps it as the reference).
   */
 case class LshSignatures(child: Expression, nbits: Int, tables: Int,
                          dim: Int, seedBase: Long) extends UnaryExpression {
@@ -79,10 +79,10 @@ object LshSignatures {
     })
 
   /** Called from interpreted and generated code (static forwarder).
-    * `dim` is declared (the plane family is drawn per dim, and the
-    * non-extension fallback bakes it into literal plane arrays) — a
-    * vector of a different length is a loud error here rather than a
-    * silent divergence between the two paths. */
+    * `dim` is declared (the plane family is drawn per dim, and a
+    * per-plane combo bakes it into literal plane arrays) — a vector of
+    * a different length is a loud error here rather than a silent
+    * divergence from that spelling. */
   def compute(vec: ArrayData, float: Boolean, nbits: Int, tables: Int,
               dim: Int, seedBase: Long): ArrayData = {
     val v: Array[Double] =

@@ -136,8 +136,8 @@ object MinHashOph {
     sig
   }
 
-  /** Boxed-Seq mirror for the no-extension UDF fallback path —
-    * identical bits to [[compute]] (spec-pinned). */
+  /** Boxed-Seq mirror of [[compute]] for a JVM scalar reference —
+    * identical bits (spec-pinned). */
   def computeSeq(shingles: Seq[Long], k: Int): Option[Seq[Long]] = {
     if (shingles == null || shingles.isEmpty) return None
     val arr = compute(new GenericArrayData(shingles.toArray), k)

@@ -64,9 +64,9 @@ case class MinHashSig(child: Expression, numHashes: Int)
 object MinHashSig {
 
   /** Salt of hash function i, derived by the shared fmix avalanche
-    * (deterministic across JVMs — no Random state). Public so the
-    * non-extension fallback in [[graft.ops.Dedup.minhashSignatures]] can
-    * reproduce the identical hash family. */
+    * (deterministic across JVMs — no Random state). Public so a
+    * composed reference spelling can reproduce the identical hash
+    * family. */
   def salt(i: Int): Long = Fnv.fmix(0x9e3779b97f4a7c15L * (i + 1))
 
   private def salts(k: Int): Array[Long] = {

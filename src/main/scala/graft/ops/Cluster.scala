@@ -139,7 +139,6 @@ object Cluster {
                     threshold: Double, ncentroids: Int = 0,
                     nassign: Int = 4, lloydIters: Int = 3,
                     maxCluster: Int = 1 << 16): DataFrame = {
-    val spark = df.sparkSession
     val k =
       if (ncentroids > 0) ncentroids
       else {
@@ -186,7 +185,7 @@ object Cluster {
       .join(vecs.select(col("id").as("ida"), col("v").as("va")), "ida")
       .join(vecs.select(col("id").as("idb"), col("v").as("vb")), "idb")
       .withColumn("cos",
-        round(Similarity.cosineFast(df.sparkSession, col("va"), col("vb")), 6))
+        round(Similarity.cosineFast(col("va"), col("vb")), 6))
       .filter(col("cos") >= threshold)
       .select("ida", "idb", "cos")
   }
@@ -313,7 +312,7 @@ object Cluster {
         col("cid").as("pb")), "pb")
       .filter(col("ida") < col("idb"))
       .withColumn("cos",
-        round(Similarity.cosineFast(spark, col("va"), col("vb")), 6))
+        round(Similarity.cosineFast(col("va"), col("vb")), 6))
       .filter(col("cos") >= threshold)
       .select("ida", "idb", "cos")
   }
@@ -452,7 +451,7 @@ object Cluster {
     pairs
       .select(least(col("aid"), col("bid")).as("ida"),
         greatest(col("aid"), col("bid")).as("idb"),
-        round(Similarity.cosineFast(spark, col("va"), col("vb")), 6)
+        round(Similarity.cosineFast(col("va"), col("vb")), 6)
           .as("cos"))
       .filter(col("cos") >= threshold)
   }

@@ -24,11 +24,7 @@ object Contamination {
            idCol: String, n: Int = 8, minShared: Int = 1): DataFrame = {
     def index(df: DataFrame, as: String) =
       df.select(col(idCol).as(as),
-          explode(
-            if (df.sparkSession.catalog.functionExists("graft_shingles"))
-              call_function("graft_shingles", col(textCol), lit(n))
-            else transform(Dedup.shingles(col(textCol), n), s => xxhash64(s))
-          ).as(s"__sh_$as"))
+        explode(Dedup.hashedShingles(col(textCol), n)).as(s"__sh_$as"))
     val c = index(corpus, "corpus_id")
     val b = broadcast(index(bench, "bench_id"))
     c.join(b, col("__sh_corpus_id") === col("__sh_bench_id"))
@@ -56,17 +52,14 @@ object Contamination {
     * `shared >= minShared`. */
   def flagStream(docs: DataFrame, bench: DataFrame, textCol: String,
                  n: Int = 8, minShared: Int = 1): DataFrame = {
-    def shingleHashes(df: DataFrame) =
-      if (df.sparkSession.catalog.functionExists("graft_shingles"))
-        call_function("graft_shingles", col(textCol), lit(n))
-      else transform(Dedup.shingles(col(textCol), n), s => xxhash64(s))
+    val shingleHashes = Dedup.hashedShingles(col(textCol), n)
     val benchSet: Set[Long] = bench
-      .select(explode(shingleHashes(bench)).as("h")).distinct()
+      .select(explode(shingleHashes).as("h")).distinct()
       .collect().map(_.getLong(0)).toSet
     val bc = docs.sparkSession.sparkContext.broadcast(benchSet)
     val hits = udf((sh: Seq[Long]) =>
       if (sh == null) 0 else sh.count(bc.value.contains))
-    docs.withColumn("shared", hits(shingleHashes(docs)))
+    docs.withColumn("shared", hits(shingleHashes))
       .filter(col("shared") >= minShared)
   }
 

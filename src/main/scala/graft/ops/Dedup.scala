@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftShim}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.{HashedShingles, MinHashOph, MinHashSig, SimHash64}
 
 /** Deduplication operators for web-scale corpora: exact, MinHash+LSH,
   * SimHash, exact n-gram Jaccard, and embedding-cosine near-dup.
@@ -35,15 +36,14 @@ object Dedup {
       .otherwise(array().cast("array<string>"))
   }
 
-  /** Hashed shingle set (`array<long>`): the codegen graft_shingles
-    * expression when [[graft.GraftExtensions]] is registered, else the
-    * string-shingle + xxhash64 fallback. Hash families differ between the
-    * two paths, but every consumer only relies on hash *distinctness*
-    * (set sizes, intersections, min-hash ordering), so results agree. */
-  private def hashedShingles(df: DataFrame, textCol: String, n: Int): Column =
-    if (df.sparkSession.catalog.functionExists("graft_shingles"))
-      call_function("graft_shingles", col(textCol), lit(n))
-    else transform(shingles(col(textCol), n), s => xxhash64(s))
+  /** Hashed word n-gram shingle set (`array<long>`): the codegen
+    * [[HashedShingles]] expression — the one shingle hash family shared
+    * by the dedup, contamination, linkage and diversity operators, so
+    * band tables, signatures and verification always agree. It has the
+    * same set sizes as [[shingles]]; consumers rely only on hash
+    * distinctness (set sizes, intersections, min-hash ordering). */
+  private[graft] def hashedShingles(text: Column, n: Int): Column =
+    GraftShim.column(HashedShingles(GraftShim.expression(text), n))
 
   /** WINNOWING document fingerprints (Schleimer–Wilkerson–Aiken, the
     * MOSS algorithm): hash every word `k`-gram, slide a window of `w`
@@ -283,7 +283,7 @@ object Dedup {
                             threshold: Double, n: Int = 3,
                             maxDf: Option[Int] = None): DataFrame = {
     val sh = df.select(col(idCol).as("id"),
-        hashedShingles(df, textCol, n).as("shs"))
+        hashedShingles(col(textCol), n).as("shs"))
       // explode_outer: the inferred size(shs) > 0 filter re-evaluates
       // the whole shingle expression per row (r14 sweep)
       .select(col("id"), size(col("shs")).as("n"),
@@ -369,7 +369,7 @@ object Dedup {
     val rowStruct = struct(batch.columns.map(col).toSeq: _*)
     val collapsed = batch.groupBy(fp.as("__fp"))
       .agg(min_by(rowStruct, col(idCol)).as("__row"))
-    val seen = Join.mightContainExpr(batch, bloom, col("__fp").cast("string"))
+    val seen = Join.mightContainExpr(bloom, col("__fp").cast("string"))
     val certain = collapsed.filter(!seen)
     val checked = collapsed.filter(seen)
       .join(index.select(col("fp").as("__fp")), Seq("__fp"), "left_anti")
@@ -464,7 +464,7 @@ object Dedup {
       oph = oph)
     val batchBands = bloom match {
       case None => allBands
-      case Some(bf) => allBands.filter(Join.mightContainExpr(allBands, bf,
+      case Some(bf) => allBands.filter(Join.mightContainExpr(bf,
         concat_ws(":", col("band"), col("bh"))))
     }
     val capped = index.groupBy("band", "bh")
@@ -484,9 +484,9 @@ object Dedup {
       .join(cand.select(col("id_old").as(idCol)).distinct(), Seq(idCol),
         "left_semi")
     val shOld = oldNeeded.select(col(idCol).as("id_old"),
-      hashedShingles(oldNeeded, textCol, n).as("sho"))
+      hashedShingles(col(textCol), n).as("sho"))
     val shNew = batch.select(col(idCol).as("idb_new"),
-      hashedShingles(batch, textCol, n).as("shn"))
+      hashedShingles(col(textCol), n).as("shn"))
     cand.join(shNew, "idb_new").join(shOld, "id_old")
       .withColumn("common", size(array_intersect(col("shn"), col("sho"))))
       .withColumn("jaccard", col("common").cast("double") /
@@ -512,7 +512,7 @@ object Dedup {
     // built on HASHED shingles (8-byte join keys, no shingle strings
     // materialized; collision odds ~1e-8 at 1M distinct shingles —
     // negligible against the exact-measure guarantee).
-    val sh = df.select(col(idCol).as("id"), hashedShingles(df, textCol, n).as("shs"))
+    val sh = df.select(col(idCol).as("id"), hashedShingles(col(textCol), n).as("shs"))
       // explode_outer: see ngramContainmentPairs (r14 sweep)
       .select(col("id"), size(col("shs")).as("n"),
         explode_outer(col("shs")).as("sh"))
@@ -566,11 +566,9 @@ object Dedup {
 
   /** MinHash signatures — a PER-DOCUMENT map, not an aggregation.
     *
-    * With [[graft.GraftExtensions]] registered this is the graft_minhash
-    * codegen expression: one fused loop per row, no shuffle at all —
-    * signatures stream from the scan straight into LSH banding. Without
-    * it, the fallback keeps the same hash family via per-row higher-order
-    * functions (slower, interpreted, still shuffle-free).
+    * This is the [[MinHashSig]] codegen expression over
+    * [[hashedShingles]]: one fused loop per row, no shuffle at all —
+    * signatures stream from the scan straight into LSH banding.
     *
     * The earlier formulation (explode shingles → groupBy(id) → k
     * min-aggregates) shuffled |docs|×|shingles| rows and paid seconds of
@@ -582,47 +580,14 @@ object Dedup {
                         numHashes: Int = 128, n: Int = 3,
                         keep: Seq[String] = Nil,
                         oph: Boolean = false): DataFrame = {
-    val sh = hashedShingles(df, textCol, n)
-    val sigCol =
-      if (oph) {
-        // One-permutation tier: ONE avalanche per shingle instead of
-        // numHashes — the signature stage's CPU drops ~k× on long
-        // documents (see MinHashOph's scaladoc for the recall trade).
-        if (df.sparkSession.catalog.functionExists("graft_minhash_oph"))
-          call_function("graft_minhash_oph", sh, lit(numHashes))
-        else ophFallbackUdf(numHashes)(sh)
-      } else if (df.sparkSession.catalog.functionExists("graft_minhash"))
-        call_function("graft_minhash", sh, lit(numHashes))
-      else minhashFallbackCol(sh, numHashes)
+    val sh = GraftShim.expression(hashedShingles(col(textCol), n))
+    // One-permutation tier: ONE avalanche per shingle instead of
+    // numHashes — the signature stage's CPU drops ~k× on long
+    // documents (see MinHashOph's scaladoc for the recall trade).
+    val sigCol = GraftShim.column(
+      if (oph) MinHashOph(sh, numHashes) else MinHashSig(sh, numHashes))
     df.select(col(idCol).as("id") +: sigCol.as("sig") +: keep.map(col): _*)
       .filter(col("sig").isNotNull)
-  }
-
-  /** No-extension fallback for the OPH tier: the densification walk is
-    * a state machine HOFs can't express, so (like the robots/NFC
-    * parsers) it ships as a JVM scalar calling the SAME static compute
-    * as the codegen expression — identical bits, spec-pinned. */
-  private[graft] def ophFallbackUdf(numHashes: Int) =
-    udf((sh: Seq[Long]) => graft.functions.MinHashOph.computeSeq(sh, numHashes))
-
-  /** Expression-only minhash over a hashed-shingle array column — same
-    * salts/mix as MinHashSig.compute (fmix of golden-ratio steps), so
-    * both paths produce identical signatures (spec-pinned). Package-
-    * visible for that equality test. */
-  private[graft] def minhashFallbackCol(sh: Column, numHashes: Int): Column = {
-    val salts = (0 until numHashes).map(graft.functions.MinHashSig.salt)
-    val fm = (c: Column) => {
-      // murmur3 fmix64 via expressions (xxhash64 differs from fmix;
-      // spelled out so both paths produce identical signatures)
-      val m1 = lit(0xff51afd7ed558ccdL)
-      val m2 = lit(0xc4ceb9fe1a85ec53L)
-      val s1 = (c.bitwiseXOR(shiftrightunsigned(c, 33))) * m1
-      val s2 = (s1.bitwiseXOR(shiftrightunsigned(s1, 33))) * m2
-      s2.bitwiseXOR(shiftrightunsigned(s2, 33))
-    }
-    when(size(sh) > 0,
-      array(salts.map(s =>
-        array_min(transform(sh, h => fm(h.bitwiseXOR(lit(s)))))): _*))
   }
 
   /** MinHash + LSH banding near-dup candidates, verified with exact
@@ -670,7 +635,7 @@ object Dedup {
     * re-explode of the corpus. */
   private def verifyJaccard(df: DataFrame, textCol: String, idCol: String,
                             cand: DataFrame, threshold: Double, n: Int): DataFrame = {
-    val docs = df.select(col(idCol).as("id"), hashedShingles(df, textCol, n).as("sh"))
+    val docs = df.select(col(idCol).as("id"), hashedShingles(col(textCol), n).as("sh"))
     cand
       .join(docs.select(col("id").as("ida"), col("sh").as("sha")), "ida")
       .join(docs.select(col("id").as("idb"), col("sh").as("shb")), "idb")
@@ -681,34 +646,12 @@ object Dedup {
       .select("ida", "idb", "jaccard")
   }
 
-  /** 64-bit SimHash fingerprint per document: each token hashes to 64
-    * bits (xxhash64); fingerprint bit i is the sign of Σ(±1) over tokens'
-    * bit i. Near-dups have small Hamming distance.
-    *
-    * Expression-only fallback: 64 folds over the token-hash array
-    * (CodegenFallback — fine for small/interactive use; the table-scale
-    * path is [[simhashTable]]). */
-  def simhash(text: Column): Column = {
-    val hashes = transform(TextFunctions.tokens(text), t => xxhash64(t))
-    val bitExprs = (0 until 64).map { i =>
-      val votes = aggregate(hashes, lit(0L),
-        (acc, h) => acc + when(shiftright(h, i).bitwiseAND(1) === 1, 1L).otherwise(-1L))
-      when(votes > 0, shiftleft(lit(1L), i)).otherwise(0L)
-    }
-    bitExprs.reduce(_.bitwiseOR(_))
-  }
-
   /** SimHash fingerprints for a whole table: the per-row codegen
-    * graft_simhash expression when [[graft.GraftExtensions]] is
-    * registered (no shuffle, no aggregation — SimHash is per-document),
-    * else the expression-fold fallback. Returns (id, fp). */
-  def simhashTable(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val fp =
-      if (df.sparkSession.catalog.functionExists("graft_simhash"))
-        call_function("graft_simhash", col(textCol))
-      else simhash(col(textCol))
-    df.select(col(idCol).as("id"), fp.as("fp"))
-  }
+    * [[SimHash64]] expression (no shuffle, no aggregation — SimHash is
+    * per-document). Returns (id, fp); null text has a null fp. */
+  def simhashTable(df: DataFrame, textCol: String, idCol: String): DataFrame =
+    df.select(col(idCol).as("id"),
+      GraftShim.column(SimHash64(GraftShim.expression(col(textCol)))).as("fp"))
 
   /** SimHash near-dup pairs with Hamming distance ≤ maxDist, found by
     * banding the 64-bit fingerprint into `bands` chunks (pigeonhole: any
@@ -1635,7 +1578,7 @@ object Dedup {
     val b = df.select(col(idCol).as("idb"), col(vecCol).as("vb"))
     a.join(b, col("ida") < col("idb"))
       .withColumn("cos",
-        round(Similarity.cosineFast(df.sparkSession, col("va"), col("vb")), 6))
+        round(Similarity.cosineFast(col("va"), col("vb")), 6))
       .filter(col("cos") >= threshold)
       .select("ida", "idb", "cos")
   }
@@ -1665,8 +1608,7 @@ object Dedup {
                                tables: Int = 48, dim: Int = 64,
                                seedBase: Long = 42L,
                                maxBucket: Int = 1 << 16): DataFrame = {
-    val spark = df.sparkSession
-    val sig = Similarity.lshSignatures(spark, col(vecCol), nbits, dim,
+    val sig = Similarity.lshSignatures(col(vecCol), nbits, dim,
       tables, seedBase)
     // materialized once: the band table feeds the size cap AND both
     // sides of the candidate self-join — without it the fused
@@ -1704,7 +1646,7 @@ object Dedup {
       .join(vecs.select(col("id").as("ida"), col("v").as("va")), "ida")
       .join(vecs.select(col("id").as("idb"), col("v").as("vb")), "idb")
       .withColumn("cos",
-        round(Similarity.cosineFast(spark, col("va"), col("vb")), 6))
+        round(Similarity.cosineFast(col("va"), col("vb")), 6))
       .filter(col("cos") >= threshold)
       .select("ida", "idb", "cos")
   }

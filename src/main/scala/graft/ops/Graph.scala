@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, GraftShim}
 import org.apache.spark.sql.functions._
+import graft.functions.{SortedIntersectArr, SortedIntersectCount}
 
 /** Iterative graph analytics on edge DataFrames. Companion to the
   * connected-components family in [[Dedup]]: where CC labels groups,
@@ -15,24 +16,20 @@ object Graph {
   val Scale: Long = 1000000000000L
 
   /** |a ∩ b| for two SORTED long arrays: the codegen merge-walk
-    * expression when [[graft.GraftExtensions]] is registered (r16 —
-    * array_intersect builds a per-row hash set although the
-    * triangle-census neighbour lists are sort_array'd), else
-    * size(array_intersect). Identical set semantics on sorted input. */
-  private def sortedIntersectCount(df: DataFrame,
-      a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-    if (df.sparkSession.catalog.functionExists("graft_sorted_intersect_count"))
-      call_function("graft_sorted_intersect_count", a, b)
-    else size(array_intersect(a, b)).cast("long")
+    * [[SortedIntersectCount]] (r16 — array_intersect builds a per-row
+    * hash set although the triangle-census neighbour lists are
+    * sort_array'd). Same set semantics as size(array_intersect) on
+    * sorted input. */
+  private def sortedIntersectCount(a: Column, b: Column): Column =
+    GraftShim.column(SortedIntersectCount(
+      GraftShim.expression(a), GraftShim.expression(b)))
 
   /** a ∩ b (ascending, deduped) for two SORTED long arrays — the
     * array-returning sibling, identical to array_intersect on sorted
     * input (which preserves first-array order and dedups). */
-  private def sortedIntersectArr(df: DataFrame,
-      a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-    if (df.sparkSession.catalog.functionExists("graft_sorted_intersect"))
-      call_function("graft_sorted_intersect", a, b)
-    else array_intersect(a, b)
+  private def sortedIntersectArr(a: Column, b: Column): Column =
+    GraftShim.column(SortedIntersectArr(
+      GraftShim.expression(a), GraftShim.expression(b)))
 
   /** PageRank in EXACT integer arithmetic — every quantity is a BIGINT
     * in units of 1e-12 rank mass, all divisions are integer `div`, so
@@ -481,7 +478,7 @@ object Graph {
       .join(maybeB(nbrs.select(col("s").as("t"), col("ns").as("nt"))),
         Seq("t"), "left")
       .select(when(col("nt").isNull, lit(0L))
-        .otherwise(sortedIntersectCount(o, col("ns"), col("nt")))
+        .otherwise(sortedIntersectCount(col("ns"), col("nt")))
         .cast("long").as("c"))
       .agg(sum("c").as("n_triangles"))
     val stats = deg.agg(count(lit(1)).as("n_nodes"),
@@ -886,7 +883,7 @@ object Graph {
       .localCheckpoint(true)
     val empty = slice(col("ns"), 1, 0) // typed empty array
     val ws = coalesce(when(col("nt").isNotNull,
-      sortedIntersectArr(o, col("ns"), col("nt"))), empty)
+      sortedIntersectArr(col("ns"), col("nt"))), empty)
     val withWs = o
       .join(maybeB(nbrs), "s")
       .join(maybeB(nbrs.select(col("s").as("t"), col("ns").as("nt"))),
@@ -1535,7 +1532,7 @@ object Graph {
         .localCheckpoint(true)
       val empty = slice(col("ns"), 1, 0)
       val ws = coalesce(when(col("nt").isNotNull,
-        sortedIntersectArr(o, col("ns"), col("nt"))), empty)
+        sortedIntersectArr(col("ns"), col("nt"))), empty)
       def ckey(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
         struct(least(a, b).as("u"), greatest(a, b).as("v"))
       // r15: same interpreted-HOF fix as [[localClustering]] — the

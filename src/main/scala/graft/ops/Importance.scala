@@ -647,12 +647,6 @@ object Importance {
   def knnShapley(corpus: DataFrame, probes: DataFrame, vecCol: String,
                  idCol: String, labelCol: String, k: Int = 5): DataFrame = {
     require(k >= 1, "knnShapley needs k >= 1")
-    val spark = corpus.sparkSession
-    def dot(a: Column, b: Column): Column =
-      if (spark.catalog.functionExists("graft_dot"))
-        call_function("graft_dot", a, b)
-      else aggregate(zip_with(transform(a, _.cast("double")),
-        transform(b, _.cast("double")), _ * _), lit(0.0), _ + _)
     // r16 (guide §1.2 per-task work): the squared norms depend on ONE
     // side each, so they are computed once per probe / corpus row
     // BEFORE the cross join instead of re-running both self-dots on
@@ -661,14 +655,14 @@ object Importance {
     // association: d2 is bit-identical.
     val q = broadcast(probes.select(col(idCol).as("qid"),
       col(vecCol).as("qv"), col(labelCol).as("qlab"))
-      .withColumn("qn2", dot(col("qv"), col("qv"))))
+      .withColumn("qn2", Similarity.dot(col("qv"), col("qv"))))
     val pairs = corpus
       .select(col(idCol).as("id"), col(vecCol).as("cv"),
         col(labelCol).as("lab"))
-      .withColumn("cn2", dot(col("cv"), col("cv")))
+      .withColumn("cn2", Similarity.dot(col("cv"), col("cv")))
       .crossJoin(q)
       .withColumn("d2", round(col("qn2") + col("cn2") -
-        lit(2.0) * dot(col("qv"), col("cv")), 6))
+        lit(2.0) * Similarity.dot(col("qv"), col("cv")), 6))
       .withColumn("ind",
         when(col("lab") === col("qlab"), 1L).otherwise(0L))
     val w = Window.partitionBy("qid").orderBy(col("d2").asc, col("id"))

@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftShim}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.{ChrfRails, NgramRails}
 
 /** Corpus insight operators a curation pipeline runs between cleaning
   * and sampling: readability grading, collocation (PMI) mining, and
@@ -1620,81 +1621,37 @@ object Insight {
     * (no geometric mean / brevity penalty here — those are one exp()
     * over THIS table's four numbers, done at report time).
     *
-    * Shape: per (row, n) the grams are built by a bounded transform
-    * expression (token-array slices — one map pass), then multiset
-    * intersection = explode → per-(id, n, gram) counts → hyp LEFT JOIN
-    * ref on the gram → Σ min(c_hyp, c_ref). Every shuffle is co-keyed
-    * on the row id (gram volume ∝ corpus tokens × maxN, never
-    * pairwise); rows whose hypothesis is shorter than n report
-    * n_hyp = 0 with null precision, kept via the (id, n) skeleton.
+    * Shape: one row-local pass — the [[NgramRails]] expression counts
+    * every order's hypothesis grams and clipped matches on the pair's
+    * own row, and `inline` emits one row per order; no join, no
+    * exchange. Rows whose hypothesis is shorter than n report
+    * n_hyp = 0 with null precision.
     *
     * @return (id, n, n_hyp, n_match, p_ppm) — one row per input row
     *         per order n = 1..maxN */
   def ngramPrecision(df: DataFrame, hypCol: String, refCol: String,
-                     idCol: String, maxN: Int = 2): DataFrame =
-    ngramPrecisionImpl(df, hypCol, refCol, idCol, maxN, useNative = true)
-
-  /** The row-local rails column shared by the metric family when
-    * [[graft.GraftExtensions]] is registered: per-order clipped counts
-    * computed in ONE codegen pass over the pair's token arrays (r16 —
-    * the composed spelling shuffled ~maxN × corpus tokens through five
-    * exchanges for per-ROW results; guide §2.3/§2.4). Null token
-    * arrays coalesce to empty — bit-identical to the composed
-    * skeleton's treatment of a null side (zero grams at every order). */
-  private def ngramRailsCol(hyp: Column, ref: Column, maxN: Int): Column = {
-    val empty = lit(Array.empty[String])
-    call_function("graft_ngram_rails",
-      coalesce(TextFunctions.tokens(hyp), empty),
-      coalesce(TextFunctions.tokens(ref), empty), lit(maxN))
+                     idCol: String, maxN: Int = 2): DataFrame = {
+    require(maxN >= 1, "ngramPrecision needs maxN >= 1")
+    df.select(col(idCol).as("id"),
+        inline(ngramRailsCol(col(hypCol), col(refCol), maxN)))
+      .select(col("id"), col("n"),
+        col("n_hyp"), col("n_match"),
+        when(col("n_hyp") > 0,
+          expr("n_match * 1000000 div n_hyp")).as("p_ppm"))
   }
 
-  /** useNative=false forces the composed fallback (spec equivalence). */
-  private[graft] def ngramPrecisionImpl(df: DataFrame, hypCol: String,
-      refCol: String, idCol: String, maxN: Int,
-      useNative: Boolean): DataFrame = {
-    require(maxN >= 1, "ngramPrecision needs maxN >= 1")
-    if (useNative &&
-        df.sparkSession.catalog.functionExists("graft_ngram_rails")) {
-      return df.select(col(idCol).as("id"),
-          inline(ngramRailsCol(col(hypCol), col(refCol), maxN)))
-        .select(col("id"), col("n"),
-          col("n_hyp"), col("n_match"),
-          when(col("n_hyp") > 0,
-            expr("n_match * 1000000 div n_hyp")).as("p_ppm"))
-    }
-    // pure slices at every order (no empty-token filtering): the gram
-    // multisets are a total function of the token arrays, so the oracle
-    // replays them verbatim — an empty token counts identically on
-    // both sides (only the degenerate empty-text row produces one)
-    def grams(c: String, n: Int): Column =
-      if (n == 1) col(c)
-      else expr(s"CASE WHEN size($c) >= $n THEN transform(" +
-        s"sequence(1, size($c) - ${n - 1}), " +
-        s"i -> array_join(slice($c, i, $n), ' ')) " +
-        "ELSE CAST(array() AS ARRAY<STRING>) END")
-    val base = df.select(col(idCol).as("id"),
-        TextFunctions.tokens(col(hypCol)).as("__h"),
-        TextFunctions.tokens(col(refCol)).as("__r"))
-      .localCheckpoint(true) // referenced once per order below
-    val perN = (1 to maxN).map { n =>
-      base.select(col("id"), lit(n).as("n"),
-        grams("__h", n).as("__hg"), grams("__r", n).as("__rg"))
-    }.reduce(_ unionAll _)
-    val hc = perN.select(col("id"), col("n"), explode(col("__hg")).as("g"))
-      .groupBy("id", "n", "g").agg(count(lit(1)).as("__ch"))
-    val rc = perN.select(col("id"), col("n"), explode(col("__rg")).as("g"))
-      .groupBy("id", "n", "g").agg(count(lit(1)).as("__cr"))
-    val m = hc.join(rc, Seq("id", "n", "g"), "left")
-      .groupBy("id", "n")
-      .agg(sum("__ch").as("__nh"),
-        sum(least(col("__ch"), coalesce(col("__cr"), lit(0L)))).as("__nm"))
-    perN.select(col("id"), col("n"))
-      .join(m, Seq("id", "n"), "left")
-      .select(col("id"), col("n"),
-        coalesce(col("__nh"), lit(0L)).as("n_hyp"),
-        coalesce(col("__nm"), lit(0L)).as("n_match"),
-        when(coalesce(col("__nh"), lit(0L)) > 0,
-          expr("__nm * 1000000 div __nh")).as("p_ppm"))
+  /** The row-local rails column shared by the metric family: the
+    * codegen [[NgramRails]] expression computes per-order clipped counts
+    * in ONE pass over the pair's token arrays (r16 — the composed
+    * spelling shuffled ~maxN × corpus tokens through five exchanges for
+    * per-ROW results; guide §2.3/§2.4). Null token arrays coalesce to
+    * empty — bit-identical to the composed skeleton's treatment of a
+    * null side (zero grams at every order). */
+  private def ngramRailsCol(hyp: Column, ref: Column, maxN: Int): Column = {
+    val empty = lit(Array.empty[String])
+    GraftShim.column(NgramRails(
+      GraftShim.expression(coalesce(TextFunctions.tokens(hyp), empty)),
+      GraftShim.expression(coalesce(TextFunctions.tokens(ref), empty)), maxN))
   }
 
   /** ROUGE-N per (candidate, reference) pair — the summarization-eval
@@ -1707,63 +1664,18 @@ object Insight {
     *
     * @return (id, n, n_hyp, n_ref, n_match, p_ppm, r_ppm, f1_ppm) */
   def rougeN(df: DataFrame, hypCol: String, refCol: String,
-             idCol: String, maxN: Int = 2): DataFrame =
-    rougeNImpl(df, hypCol, refCol, idCol, maxN, useNative = true)
-
-  /** useNative=false forces the composed fallback (spec equivalence). */
-  private[graft] def rougeNImpl(df: DataFrame, hypCol: String,
-      refCol: String, idCol: String, maxN: Int,
-      useNative: Boolean): DataFrame = {
+             idCol: String, maxN: Int = 2): DataFrame = {
     require(maxN >= 1, "rougeN needs maxN >= 1")
-    if (useNative &&
-        df.sparkSession.catalog.functionExists("graft_ngram_rails")) {
-      return df.select(col(idCol).as("id"),
-          inline(ngramRailsCol(col(hypCol), col(refCol), maxN)))
-        .select(col("id"), col("n"),
-          col("n_hyp"), col("n_ref"), col("n_match"),
-          when(col("n_hyp") > 0,
-            expr("n_match * 1000000 div n_hyp")).as("p_ppm"),
-          when(col("n_ref") > 0,
-            expr("n_match * 1000000 div n_ref")).as("r_ppm"),
-          when(col("n_hyp") + col("n_ref") > 0,
-            expr("2 * n_match * 1000000 div (n_hyp + n_ref)")).as("f1_ppm"))
-    }
-    def grams(c: String, n: Int): Column =
-      if (n == 1) col(c)
-      else expr(s"CASE WHEN size($c) >= $n THEN transform(" +
-        s"sequence(1, size($c) - ${n - 1}), " +
-        s"i -> array_join(slice($c, i, $n), ' ')) " +
-        "ELSE CAST(array() AS ARRAY<STRING>) END")
-    val base = df.select(col(idCol).as("id"),
-        TextFunctions.tokens(col(hypCol)).as("__h"),
-        TextFunctions.tokens(col(refCol)).as("__r"))
-      .localCheckpoint(true)
-    val perN = (1 to maxN).map { n =>
-      base.select(col("id"), lit(n).as("n"),
-        grams("__h", n).as("__hg"), grams("__r", n).as("__rg"))
-    }.reduce(_ unionAll _)
-    val hc = perN.select(col("id"), col("n"), explode(col("__hg")).as("g"))
-      .groupBy("id", "n", "g").agg(count(lit(1)).as("__ch"))
-    val rc = perN.select(col("id"), col("n"), explode(col("__rg")).as("g"))
-      .groupBy("id", "n", "g").agg(count(lit(1)).as("__cr"))
-    val m = hc.join(rc, Seq("id", "n", "g"), "full_outer")
-      .groupBy("id", "n")
-      .agg(sum(coalesce(col("__ch"), lit(0L))).as("__nh"),
-        sum(coalesce(col("__cr"), lit(0L))).as("__nr"),
-        sum(least(coalesce(col("__ch"), lit(0L)),
-          coalesce(col("__cr"), lit(0L)))).as("__nm"))
-    perN.select(col("id"), col("n"))
-      .join(m, Seq("id", "n"), "left")
+    df.select(col(idCol).as("id"),
+        inline(ngramRailsCol(col(hypCol), col(refCol), maxN)))
       .select(col("id"), col("n"),
-        coalesce(col("__nh"), lit(0L)).as("n_hyp"),
-        coalesce(col("__nr"), lit(0L)).as("n_ref"),
-        coalesce(col("__nm"), lit(0L)).as("n_match"),
-        when(coalesce(col("__nh"), lit(0L)) > 0,
-          expr("__nm * 1000000 div __nh")).as("p_ppm"),
-        when(coalesce(col("__nr"), lit(0L)) > 0,
-          expr("__nm * 1000000 div __nr")).as("r_ppm"),
-        when(coalesce(col("__nh"), lit(0L)) + coalesce(col("__nr"), lit(0L)) > 0,
-          expr("2 * __nm * 1000000 div (__nh + __nr)")).as("f1_ppm"))
+        col("n_hyp"), col("n_ref"), col("n_match"),
+        when(col("n_hyp") > 0,
+          expr("n_match * 1000000 div n_hyp")).as("p_ppm"),
+        when(col("n_ref") > 0,
+          expr("n_match * 1000000 div n_ref")).as("r_ppm"),
+        when(col("n_hyp") + col("n_ref") > 0,
+          expr("2 * n_match * 1000000 div (n_hyp + n_ref)")).as("f1_ppm"))
   }
 
   /** Per-pair BLEU on the exact integer rails — the standard
@@ -1784,87 +1696,44 @@ object Insight {
     * (hyp shorter than n) drop and the weight renormalizes over the
     * remaining orders (sacreBLEU's effective-order convention).
     *
-    * Plan shape: ngramPrecision's gram aggregation (per-pair local,
-    * uniform md5-free string keys) + one groupBy(id) + a lengths
-    * join — nothing corpus-global.
+    * Plan shape: one row-local Project over [[ngramPrecision]]'s rails
+    * — nothing corpus-global, no exchange.
     *
     * @return (id, hyp_len, ref_len, orders, log_bleu_micro, bleu_micro,
     *         bleu) — bleu = bleu_micro/1e6, 0 for unigram-zero pairs */
   def bleu(df: DataFrame, hypCol: String, refCol: String, idCol: String,
-           maxN: Int = 4): DataFrame =
-    bleuImpl(df, hypCol, refCol, idCol, maxN, useNative = true)
-
-  /** useNative=false forces the composed fallback (spec equivalence). */
-  private[graft] def bleuImpl(df: DataFrame, hypCol: String, refCol: String,
-      idCol: String, maxN: Int, useNative: Boolean): DataFrame = {
+           maxN: Int = 4): DataFrame = {
     require(maxN >= 1, "bleu needs maxN >= 1")
-    if (useNative &&
-        df.sparkSession.catalog.functionExists("graft_ngram_rails")) {
-      // ONE row-local pass (guide §2.3/§2.4): the rails expression
-      // yields every order's clipped counts on the pair's own row, and
-      // maxN is a literal, so the per-order smoothed log terms unroll
-      // into plain codegen expressions — Spark's OWN log/floor on the
-      // same integer operands as the composed aggregate, hence
-      // bit-identical micro-nat terms, with no join and no exchange.
-      // s sums term-or-0 (not term-or-null): the composed sum skips the
-      // null clip=0 term, and log_bleu_micro only reads __s when
-      // __zeros = 0, where both spellings agree exactly.
-      val b = col("__b")
-      def nh(n: Int): Column = b.getItem(n - 1).getField("n_hyp")
-      def nm(n: Int): Column = b.getItem(n - 1).getField("n_match")
-      def clip(n: Int): Column =
-        when(lit(n) === 1 || nm(n) > 0, nm(n)).otherwise(lit(1L))
-      def tot(n: Int): Column =
-        when(lit(n) === 1 || nm(n) > 0, nh(n)).otherwise(nh(n) + 1)
-      def term(n: Int): Column =
-        when(nh(n) > 0 && clip(n) > 0,
-          floor(log(clip(n).cast("double") / tot(n).cast("double")) * 1e6
-            + 0.5).cast("long")).otherwise(lit(0L))
-      val orders = (1 to maxN).map(n =>
-        when(nh(n) > 0, lit(1L)).otherwise(lit(0L))).reduce(_ + _)
-      val zeros = when(nh(1) > 0 && nm(1) === 0, lit(1L)).otherwise(lit(0L))
-      val s = (1 to maxN).map(term).reduce(_ + _)
-      return df.select(col(idCol).as("id"),
-          size(TextFunctions.tokens(col(hypCol))).cast("long").as("hyp_len"),
-          size(TextFunctions.tokens(col(refCol))).cast("long").as("ref_len"),
-          ngramRailsCol(col(hypCol), col(refCol), maxN).as("__b"))
-        .select(col("id"), col("hyp_len"), col("ref_len"),
-          orders.as("orders"), zeros.as("__zeros"), s.as("__s"))
-        .withColumn("__bp", when(col("hyp_len") >= col("ref_len"), 0L)
-          .otherwise(floor((lit(1.0) - col("ref_len").cast("double") /
-            col("hyp_len")) * 1e6 + 0.5).cast("long")))
-        .withColumn("log_bleu_micro",
-          when(col("orders") > 0 && col("__zeros") === 0,
-            expr("__s div orders") + col("__bp")))
-        .withColumn("bleu_micro",
-          when(col("log_bleu_micro").isNotNull,
-            floor(exp(col("log_bleu_micro").cast("double") / 1e6) * 1e6 + 0.5)
-              .cast("long")).otherwise(lit(0L)))
-        .select(col("id"), col("hyp_len"), col("ref_len"), col("orders"),
-          col("log_bleu_micro"), col("bleu_micro"),
-          (col("bleu_micro").cast("double") / 1e6).as("bleu"))
-    }
-    val prec = ngramPrecisionImpl(df, hypCol, refCol, idCol, maxN,
-      useNative = false)
-    val lens = df.select(col(idCol).as("id"),
-      size(TextFunctions.tokens(col(hypCol))).cast("long").as("hyp_len"),
-      size(TextFunctions.tokens(col(refCol))).cast("long").as("ref_len"))
-    val t = prec.filter(col("n_hyp") > 0)
-      .withColumn("__clip",
-        when(col("n") === 1 || col("n_match") > 0, col("n_match"))
-          .otherwise(lit(1L)))
-      .withColumn("__tot",
-        when(col("n") === 1 || col("n_match") > 0, col("n_hyp"))
-          .otherwise(col("n_hyp") + 1))
-      .withColumn("__term", when(col("__clip") > 0,
-        floor(log(col("__clip").cast("double") /
-          col("__tot").cast("double")) * 1e6 + 0.5).cast("long")))
-    val agg = t.groupBy("id").agg(
-      count(lit(1)).as("orders"),
-      sum(when(col("__clip") === 0, 1L).otherwise(0L)).as("__zeros"),
-      sum("__term").as("__s"))
-    lens.join(agg, Seq("id"), "left")
-      .withColumn("orders", coalesce(col("orders"), lit(0L)))
+    // ONE row-local pass (guide §2.3/§2.4): the rails expression
+    // yields every order's clipped counts on the pair's own row, and
+    // maxN is a literal, so the per-order smoothed log terms unroll
+    // into plain codegen expressions — Spark's OWN log/floor on the
+    // same integer operands as the composed aggregate, hence
+    // bit-identical micro-nat terms, with no join and no exchange.
+    // s sums term-or-0 (not term-or-null): the composed sum skips the
+    // null clip=0 term, and log_bleu_micro only reads __s when
+    // __zeros = 0, where both spellings agree exactly.
+    val b = col("__b")
+    def nh(n: Int): Column = b.getItem(n - 1).getField("n_hyp")
+    def nm(n: Int): Column = b.getItem(n - 1).getField("n_match")
+    def clip(n: Int): Column =
+      when(lit(n) === 1 || nm(n) > 0, nm(n)).otherwise(lit(1L))
+    def tot(n: Int): Column =
+      when(lit(n) === 1 || nm(n) > 0, nh(n)).otherwise(nh(n) + 1)
+    def term(n: Int): Column =
+      when(nh(n) > 0 && clip(n) > 0,
+        floor(log(clip(n).cast("double") / tot(n).cast("double")) * 1e6
+          + 0.5).cast("long")).otherwise(lit(0L))
+    val orders = (1 to maxN).map(n =>
+      when(nh(n) > 0, lit(1L)).otherwise(lit(0L))).reduce(_ + _)
+    val zeros = when(nh(1) > 0 && nm(1) === 0, lit(1L)).otherwise(lit(0L))
+    val s = (1 to maxN).map(term).reduce(_ + _)
+    df.select(col(idCol).as("id"),
+        size(TextFunctions.tokens(col(hypCol))).cast("long").as("hyp_len"),
+        size(TextFunctions.tokens(col(refCol))).cast("long").as("ref_len"),
+        ngramRailsCol(col(hypCol), col(refCol), maxN).as("__b"))
+      .select(col("id"), col("hyp_len"), col("ref_len"),
+        orders.as("orders"), zeros.as("__zeros"), s.as("__s"))
       .withColumn("__bp", when(col("hyp_len") >= col("ref_len"), 0L)
         .otherwise(floor((lit(1.0) - col("ref_len").cast("double") /
           col("hyp_len")) * 1e6 + 0.5).cast("long")))
@@ -1897,78 +1766,23 @@ object Insight {
     * 5·10¹² — far inside BIGINT). Both-empty pairs report all-zero
     * rows rather than dropping.
     *
-    * Plan shape: with [[graft.GraftExtensions]] registered, ONE
-    * row-local Project ([[graft.functions.ChrfRails]] — both sides of
+    * Plan shape: ONE row-local Project ([[ChrfRails]] — both sides of
     * a pair sit on the same row, so nothing needs an exchange; the
     * metric is a pure scan-bandwidth pass at any corpus size).
-    * Fallback without the extension: per-pair local gram counting (one
-    * generator + one groupBy per side, uniform keys) + one groupBy(id)
-    * — correct but it shuffles ~6× corpus characters.
     *
     * @return (id, orders_p, orders_r, p_ppm, r_ppm, chrf_ppm) */
   def chrF(df: DataFrame, hypCol: String, refCol: String, idCol: String,
-           maxN: Int = 6, beta: Int = 2): DataFrame =
-    chrFImpl(df, hypCol, refCol, idCol, maxN, beta, useNative = true)
-
-  /** useNative=false forces the composed fallback (spec equivalence). */
-  private[graft] def chrFImpl(df: DataFrame, hypCol: String, refCol: String,
-                              idCol: String, maxN: Int, beta: Int,
-                              useNative: Boolean): DataFrame = {
+           maxN: Int = 6, beta: Int = 2): DataFrame = {
     require(maxN >= 1, "chrF needs maxN >= 1")
     require(beta >= 1, "chrF needs beta >= 1")
-    if (useNative && df.sparkSession.catalog.functionExists("graft_chrf")) {
-      return df.select(col(idCol).as("id"),
-          call_function("graft_chrf",
-            coalesce(col(hypCol), lit("")), coalesce(col(refCol), lit("")),
-            lit(maxN), lit(beta)).as("__c"))
-        .select(col("id"), col("__c.orders_p").as("orders_p"),
-          col("__c.orders_r").as("orders_r"), col("__c.p_ppm").as("p_ppm"),
-          col("__c.r_ppm").as("r_ppm"), col("__c.chrf_ppm").as("chrf_ppm"))
-    }
-    val b2 = (beta.toLong * beta).toString
-    def stripWs(c: Column): Column =
-      regexp_replace(coalesce(c, lit("")), "\\s+", "")
-    val base = df.select(col(idCol).as("id"),
-        stripWs(col(hypCol)).as("__h"), stripWs(col(refCol)).as("__r"))
-      .localCheckpoint(true)
-    def grams(c: String, n: Int): Column =
-      expr(s"CASE WHEN length($c) >= $n THEN transform(" +
-        s"sequence(1, length($c) - ${n - 1}), " +
-        s"i -> substring($c, i, $n)) " +
-        "ELSE CAST(array() AS ARRAY<STRING>) END")
-    val perN = (1 to maxN).map { n =>
-      base.select(col("id"), lit(n).as("n"),
-        grams("__h", n).as("__hg"), grams("__r", n).as("__rg"))
-    }.reduce(_ unionAll _)
-    val hc = perN.select(col("id"), col("n"), explode(col("__hg")).as("g"))
-      .groupBy("id", "n", "g").agg(count(lit(1)).as("__ch"))
-    val rc = perN.select(col("id"), col("n"), explode(col("__rg")).as("g"))
-      .groupBy("id", "n", "g").agg(count(lit(1)).as("__cr"))
-    val m = hc.join(rc, Seq("id", "n", "g"), "full_outer")
-      .groupBy("id", "n")
-      .agg(sum(coalesce(col("__ch"), lit(0L))).as("__nh"),
-        sum(coalesce(col("__cr"), lit(0L))).as("__nr"),
-        sum(least(coalesce(col("__ch"), lit(0L)),
-          coalesce(col("__cr"), lit(0L)))).as("__nm"))
-      .select(col("id"),
-        when(col("__nh") > 0, expr("__nm * 1000000 div __nh")).as("__pn"),
-        when(col("__nr") > 0, expr("__nm * 1000000 div __nr")).as("__rn"))
-    val agg = m.groupBy("id").agg(
-      count(col("__pn")).as("orders_p"), count(col("__rn")).as("orders_r"),
-      sum(col("__pn")).as("__ps"), sum(col("__rn")).as("__rs"))
-    base.select(col("id")).distinct()
-      .join(agg, Seq("id"), "left")
-      .select(col("id"),
-        coalesce(col("orders_p"), lit(0L)).as("orders_p"),
-        coalesce(col("orders_r"), lit(0L)).as("orders_r"),
-        when(col("orders_p") > 0, expr("__ps div orders_p"))
-          .otherwise(lit(0L)).as("p_ppm"),
-        when(col("orders_r") > 0, expr("__rs div orders_r"))
-          .otherwise(lit(0L)).as("r_ppm"))
-      .withColumn("chrf_ppm",
-        when(expr(s"$b2 * p_ppm + r_ppm") > 0,
-          expr(s"(1 + $b2) * p_ppm * r_ppm div ($b2 * p_ppm + r_ppm)"))
-          .otherwise(lit(0L)))
+    df.select(col(idCol).as("id"),
+        GraftShim.column(ChrfRails(
+          GraftShim.expression(coalesce(col(hypCol), lit(""))),
+          GraftShim.expression(coalesce(col(refCol), lit(""))),
+          maxN, beta)).as("__c"))
+      .select(col("id"), col("__c.orders_p").as("orders_p"),
+        col("__c.orders_r").as("orders_r"), col("__c.p_ppm").as("p_ppm"),
+        col("__c.r_ppm").as("r_ppm"), col("__c.chrf_ppm").as("chrf_ppm"))
   }
 
   def timeWeightedMean(events: DataFrame, keyCol: String, tsCol: String,

@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, GraftShim}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
+import graft.functions.BloomMightContain
 
 /** Join-side pruning for the large-fact × filtered-dimension shape.
   *
@@ -45,35 +46,24 @@ object Join {
       .filter(col("__k").isNotNull)
       .stat.bloomFilter("__k", expectedKeys, fpp)
     val probe =
-      mightContainExpr(fact, bf, col(factKey).cast("string"))
+      mightContainExpr(bf, col(factKey).cast("string"))
     // Null fact keys match nothing in an equi-join — drop them here too.
     fact.filter(col(factKey).isNotNull && probe)
   }
 
-  /** Membership-test column for a driver-held bloom filter. With
-    * GraftExtensions this is the graft_bloom_contains codegen
-    * expression — the filter stays inside whole-stage codegen, no
-    * per-row String boxing. Fallback: a Scala UDF over a broadcast of
-    * the same filter (identical semantics, spec-pinned).
+  /** Membership-test column for a driver-held bloom filter: the
+    * [[BloomMightContain]] codegen expression — the filter stays inside
+    * whole-stage codegen, no per-row String boxing.
     *
-    * Null keys test FALSE on both paths: the codegen expression is
-    * null-in/null-out (UnaryExpression nullSafeEval), so without the
-    * coalesce a null key would fail both `filter(probe)` and
-    * `filter(!probe)` — silently dropping the row from two-branch splits
-    * like [[graft.ops.Dedup.incrementalExactBloom]] — while the UDF
-    * path already answers false. "Not present" is the only sound
-    * answer a membership sketch can give for a missing key. */
-  private[graft] def mightContainExpr(df: DataFrame, bf: BloomFilter,
-                                      key: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column =
-    if (df.sparkSession.catalog.functionExists("graft_bloom_contains"))
-      coalesce(call_function("graft_bloom_contains",
-        key, lit(graft.functions.BloomMightContain.serialize(bf))), lit(false))
-    else {
-      val bc = df.sparkSession.sparkContext.broadcast(bf)
-      udf((k: String) => k != null && bc.value.mightContainString(k))
-        .apply(key)
-    }
+    * Null keys test FALSE: the expression is null-in/null-out
+    * (UnaryExpression nullSafeEval), so without the coalesce a null key
+    * would fail both `filter(probe)` and `filter(!probe)` — silently
+    * dropping the row from two-branch splits like
+    * [[graft.ops.Dedup.incrementalExactBloom]]. "Not present" is the
+    * only sound answer a membership sketch can give for a missing key. */
+  private[graft] def mightContainExpr(bf: BloomFilter, key: Column): Column =
+    coalesce(GraftShim.column(BloomMightContain(GraftShim.expression(key),
+      BloomMightContain.serialize(bf))), lit(false))
 
   /** Inner-join `fact` to `dim` with the fact side bloom-pruned first.
     * Result is identical to `fact.join(dim, factKey === dimKey)`; the

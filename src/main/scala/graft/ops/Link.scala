@@ -50,9 +50,9 @@ object Link {
     val rNeed = right.join(cand.select(col("id_right").as(rightId)).distinct(),
       Seq(rightId), "left_semi")
     val shL = lNeed.select(col(leftId).as("id_left"),
-      hashedShinglesOf(lNeed, leftText, n).as("shl"))
+      Dedup.hashedShingles(col(leftText), n).as("shl"))
     val shR = rNeed.select(col(rightId).as("id_right"),
-      hashedShinglesOf(rNeed, rightText, n).as("shr"))
+      Dedup.hashedShingles(col(rightText), n).as("shr"))
     cand.join(shL, "id_left").join(shR, "id_right")
       .withColumn("common", size(array_intersect(col("shl"), col("shr"))))
       .withColumn("jaccard", col("common").cast("double") /
@@ -233,16 +233,6 @@ object Link {
       .filter(col("jw") >= threshold)
       .select("id_left", "id_right", "jw")
   }
-
-  /** Same hashed-shingle family as the Dedup operators (codegen
-    * graft_shingles when registered, string-shingle + xxhash64
-    * fallback) — signatures and verification must agree with the band
-    * tables built above. */
-  private def hashedShinglesOf(df: DataFrame, textCol: String,
-                               n: Int): org.apache.spark.sql.Column =
-    if (df.sparkSession.catalog.functionExists("graft_shingles"))
-      call_function("graft_shingles", col(textCol), lit(n))
-    else transform(Dedup.shingles(col(textCol), n), s => xxhash64(s))
 
   /** Fellegi–Sunter probabilistic record linkage (Fellegi & Sunter
     * JASA 1969; the Splink/fastLink model): per-field conditional

@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftShim}
 import org.apache.spark.sql.functions._
+import graft.functions.KllSketchAgg
 
 /** Column profiling for pipeline data-quality gates: one row per profiled
   * column with counts, null counts, range, moments and exact quantiles.
@@ -287,48 +288,25 @@ object Profile {
     * distribution, and sketches MERGE: per-slice sketches roll up to
     * any coarser grouping without rescanning raw data.
     *
-    * Scale shape: one pass builds per-partition partial sketches in a
-    * `mapPartitions` hashmap (slices per partition are bounded by the
-    * slice-key cardinality), then one aggregation merges ≤ numPartitions
-    * partials per slice — the classic map-side-combine shape with a
-    * few-KB payload. No driver state.
+    * Scale shape: the [[KllSketchAgg]] TypedImperativeAggregate builds
+    * map-side partial sketches (serialized only at the shuffle
+    * boundary), then merges ≤ numPartitions partials per slice — the
+    * classic map-side-combine shape with a few-KB payload, planned by
+    * Catalyst like any other aggregate. No driver state.
     *
     * Returns one row per slice: (keys…, kll BINARY). Compaction inside
     * KLL is randomized, so two builds of the same data may differ in
     * retained items while both honoring the rank-error bound — output
     * is contract-checked (rank-error bounds), not hash-pinned. */
   def kllSketches(df: DataFrame, keys: Seq[String], valueCol: String,
-                  k: Int = 200): DataFrame = {
-    import org.apache.datasketches.kll.KllDoublesSketch
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
-    // Native path: the graft_kll_agg TypedImperativeAggregate (map-side
-    // partial sketches, serialization only at shuffle boundaries) — one
-    // declarative aggregation Catalyst can plan with everything else.
-    if (df.sparkSession.catalog.functionExists("graft_kll_agg"))
-      return df.groupBy(keys.map(col): _*)
-        .agg(call_function("graft_kll_agg",
-          col(valueCol).cast("double"), lit(k)).as("kll"))
-    // Fallback without GraftExtensions: hand-rolled map-side combine.
-    val proj = df.select((keys.map(col) :+
-      col(valueCol).cast("double").as("__v")): _*)
-    val nk = keys.length
-    val schema = StructType(
-      proj.schema.fields.dropRight(1).toSeq :+ StructField("kll", BinaryType))
-    val partial = proj.mapPartitions { it =>
-      val m = scala.collection.mutable.HashMap[Seq[Any], KllDoublesSketch]()
-      it.foreach { r =>
-        if (!r.isNullAt(nk)) {
-          val key = (0 until nk).map(r.get)
-          m.getOrElseUpdate(key, KllDoublesSketch.newHeapInstance(k))
-            .update(r.getDouble(nk))
-        }
-      }
-      m.iterator.map { case (key, sk) => Row.fromSeq(key :+ sk.toByteArray) }
-    }(Encoders.row(schema))
-    partial.groupBy(keys.map(col): _*)
-      .agg(kllMergeUdf(k)(collect_list(col("kll"))).as("kll"))
-  }
+                  k: Int = 200): DataFrame =
+    df.groupBy(keys.map(col): _*).agg(kllAgg(col(valueCol), k).as("kll"))
+
+  /** The [[KllSketchAgg]] aggregate over `value` cast to double — one
+    * serialized KLL sketch per group. */
+  private[graft] def kllAgg(value: Column, k: Int): Column =
+    GraftShim.column(KllSketchAgg(
+      GraftShim.expression(value.cast("double")), k).toAggregateExpression())
 
   private def kllMergeUdf(k: Int) = udf { (parts: Seq[Array[Byte]]) =>
     import org.apache.datasketches.kll.KllDoublesSketch
@@ -386,9 +364,8 @@ object Profile {
     * answer any coarser "top hosts / top tokens" rollup without
     * rescanning raw data. ~maxMapSize entries per sketch.
     *
-    * Same scale shape as [[kllSketches]]'s fallback: per-partition
-    * partial sketches via mapPartitions, one merge aggregation of
-    * ≤ numPartitions partials per slice. */
+    * Scale shape: per-partition partial sketches via mapPartitions,
+    * one merge aggregation of ≤ numPartitions partials per slice. */
   def freqSketches(df: DataFrame, keys: Seq[String], itemCol: String,
                    maxMapSize: Int = 256): DataFrame = {
     import org.apache.datasketches.frequencies.ItemsSketch

@@ -279,7 +279,6 @@ object Rank {
     require(m >= 1, "m must be >= 1")
     require(lambdaDen > 0 && lambdaNum >= 0 && lambdaNum <= lambdaDen,
       "lambda must be a fraction in [0, 1]")
-    val spark = cand.sparkSession
     val shim = org.apache.spark.sql.GraftShim
     def matQ(df: DataFrame): DataFrame =
       shim.materializeHashPartitionedWithCount(df, Seq("qid"))._1
@@ -305,7 +304,7 @@ object Rank {
     // the k²-sized table every round
     val pairs = matQ(a.join(b, Seq("qid")).filter(col("a") =!= col("b"))
       .select(col("qid"), col("a"), col("b"), col("rel_a"),
-        round(Similarity.cosineFast(spark, col("va"), col("vb")) * 1e6)
+        round(Similarity.cosineFast(col("va"), col("vb")) * 1e6)
           .cast("long").as("sim")))
     var picked = matQ(rel.filter(col("rank") === 1)
       .select(col("qid"), col("id"), lit(1L).as("sel_rank"),

@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{DataFrame, GraftShim}
 import org.apache.spark.sql.functions._
+import graft.functions.RpProjectExpr
 
 /** Johnson–Lindenstrauss random projection: reduce an embedding column
   * from `d` to `k` dims with a deterministic ±1 sign matrix (Achlioptas
@@ -21,10 +22,8 @@ import org.apache.spark.sql.functions._
   * realistic norms).
   *
   * Scale shape: pure per-row projection — zero shuffles, zero
-  * broadcast (signs are plan literals). With [[graft.GraftExtensions]]
-  * registered the whole row folds in ONE codegen pass
-  * ([[graft.functions.RpProjectExpr]]); otherwise `k`
-  * aggregate-over-zip_with expressions (interpreted HOFs). The JL
+  * broadcast (signs are plan literals). The whole row folds in ONE
+  * codegen pass ([[graft.functions.RpProjectExpr]]). The JL
   * guarantee audited here is norm preservation E[‖p‖²/k] = ‖u‖²;
   * pairwise-distance preservation follows by applying the same linear
   * map to difference vectors.
@@ -41,9 +40,6 @@ object Rp {
     if (java.lang.Long.parseLong(hex, 16) % 2 == 0) 1 else -1
   }
 
-  private def micro(x: Column): Column =
-    floor(x.cast("double") * 1e6 + 0.5).cast("long")
-
   /** Project `vecCol` (array<float|double>, length `d`) to `k` dims.
     * Output vector is serialized to a comma-joined string (the driver
     * compare cannot sort array cells); `ratio_ppm` is the per-row norm
@@ -54,29 +50,18 @@ object Rp {
   def project(df: DataFrame, vecCol: String, idCol: String,
               d: Int, k: Int, seed: String = "rp"): DataFrame = {
     require(d >= 1 && k >= 1 && k <= d, "need 1 <= k <= d")
-    // codegen tier when GraftExtensions is registered: quantize once,
-    // fold all k sums + the norm in ONE pass (the HOF spelling below is
+    // the codegen RpProjectExpr quantizes once and folds all k sums +
+    // the norm in ONE pass (the aggregate(zip_with) spelling is
     // CodegenFallback/interpreted — measured ~5x slower at 10x scale)
-    val base = if (df.sparkSession.catalog.functionExists("graft_rp_project")) {
-      val flat = lit((0 until k).flatMap(j =>
-        (0 until d).map(i => sign(seed, i, j))).toArray)
-      val packed = df.withColumn("__rp",
-        call_function("graft_rp_project", col(vecCol), flat))
-      packed.select(
+    val flat = lit((0 until k).flatMap(j =>
+      (0 until d).map(i => sign(seed, i, j))).toArray)
+    val base = df
+      .withColumn("__rp", GraftShim.column(RpProjectExpr(
+        GraftShim.expression(col(vecCol)), GraftShim.expression(flat))))
+      .select(
         col(idCol) +:
           element_at(col("__rp"), k + 1).as("norm2") +:
           (0 until k).map(j => element_at(col("__rp"), j + 1).as(s"__p$j")): _*)
-    } else {
-      val pCols = (0 until k).map { j =>
-        val signs = lit((0 until d).map(i => sign(seed, i, j)).toArray)
-        aggregate(
-          zip_with(col(vecCol), signs, (x, s) => s.cast("long") * micro(x)),
-          lit(0L), _ + _).as(s"__p$j")
-      }
-      val norm2 = aggregate(col(vecCol), lit(0L),
-        (acc, x) => acc + micro(x) * micro(x)).as("norm2")
-      df.select(col(idCol) +: norm2 +: pCols: _*)
-    }
     val pnorm2 = (0 until k).map(j => col(s"__p$j") * col(s"__p$j"))
       .reduce(_ + _).as("pnorm2")
     base

@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftShim}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.{CosineSimilarity, DotProduct, LshSignatures, PqLookupSum}
 
 /** Approximate/exact nearest-neighbor search over an embedding column
   * (`array<float>`).
@@ -24,8 +25,10 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** cos(a, b) in double arithmetic — higher-order-function fallback
-    * (CodegenFallback, interpreted; ~25x slower than the native path). */
+  /** cos(a, b) in double arithmetic as a higher-order-function fold
+    * (CodegenFallback, interpreted; ~25x slower than [[cosineFast]]).
+    * [[cosineFast]] takes two `array<float>` operands; this fold also
+    * takes `array<double>`, e.g. a literal centroid. */
   def cosine(a: Column, b: Column): Column = {
     val ad = transform(a, x => x.cast("double"))
     val bd = transform(b, x => x.cast("double"))
@@ -35,13 +38,12 @@ object Similarity {
     dot / (na * nb)
   }
 
-  /** cos(a, b): the codegen'd graft_cosine expression when
-    * [[graft.GraftExtensions]] is registered on the session, otherwise the
-    * expression-combo fallback. Both accumulate in double in index order,
-    * so they agree bit-for-bit. */
-  def cosineFast(spark: org.apache.spark.sql.SparkSession, a: Column, b: Column): Column =
-    if (spark.catalog.functionExists("graft_cosine")) call_function("graft_cosine", a, b)
-    else cosine(a, b)
+  /** cos(a, b): the codegen [[CosineSimilarity]] expression. It
+    * accumulates in double in index order, so it agrees bit-for-bit
+    * with [[cosine]]. */
+  def cosineFast(a: Column, b: Column): Column =
+    GraftShim.column(CosineSimilarity(
+      GraftShim.expression(a), GraftShim.expression(b)))
 
   /** Exact brute-force cosine top-k: for each query vector, the k nearest
     * corpus vectors (excluding itself). Deterministic tie-break on
@@ -58,7 +60,7 @@ object Similarity {
     val c0 = corpus.select(col(idCol).as("id"), col(vecCol).as("cv"))
     val c = if (c0.rdd.getNumPartitions < par / 2) c0.repartition(par) else c0
     val scored = c.join(q, col("qid") =!= col("id"))
-      .withColumn("sim", round(cosineFast(corpus.sparkSession, col("qv"), col("cv")), 6))
+      .withColumn("sim", round(cosineFast(col("qv"), col("cv")), 6))
       .select("qid", "id", "sim")
     // Stage 1: local prune — each partition keeps at most k per query.
     val localW = Window.partitionBy("qid", "__part").orderBy(col("sim").desc, col("id"))
@@ -89,7 +91,7 @@ object Similarity {
     val c0 = corpus.select(col(idCol).as("id"), col(vecCol).as("cv"))
     val c = if (c0.rdd.getNumPartitions < par / 2) c0.repartition(par) else c0
     val scored = c.join(q, col("qid") =!= col("id"))
-      .withColumn("sim", round(cosineFast(corpus.sparkSession, col("qv"), col("cv")), 6))
+      .withColumn("sim", round(cosineFast(col("qv"), col("cv")), 6))
     val topk = udaf(new TopKAggregator(k), TopKAggregator.inputEncoder)
     scored
       .groupBy("qid")
@@ -141,9 +143,9 @@ object Similarity {
       else c0
     // tier 0 = full width; prefix tiers by first-d-dims slices
     val tierCols = struct(lit(0).as("prefix_dim"),
-      round(cosineFast(spark, col("qv"), col("cv")), 6).as("sim")) +:
+      round(cosineFast(col("qv"), col("cv")), 6).as("sim")) +:
       prefixDims.map(d => struct(lit(d).as("prefix_dim"),
-        round(cosineFast(spark, slice(col("qv"), 1, d),
+        round(cosineFast(slice(col("qv"), 1, d),
           slice(col("cv"), 1, d)), 6).as("sim")))
     val scored = c.join(q, col("qid") =!= col("id"))
       .select(col("qid"), col("id"),
@@ -203,10 +205,9 @@ object Similarity {
   def bitextMarginPairs(xs: DataFrame, ys: DataFrame, vecCol: String,
                         idCol: String, k: Int): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    val s = xs.sparkSession
     val x = xs.select(col(idCol).as("src"), col(vecCol).as("xv"))
     val y = broadcast(ys.select(col(idCol).as("dst"), col(vecCol).as("yv")))
-    val cm = round(cosineFast(s, col("xv"), col("yv")) * 1e6).cast("long")
+    val cm = round(cosineFast(col("xv"), col("yv")) * 1e6).cast("long")
     val scored = x.join(y).select(col("src"), col("dst"), cm.as("cm"))
       .filter(col("cm") > 0)
     val wx = Window.partitionBy("src").orderBy(col("cm").desc, col("dst"))
@@ -237,51 +238,22 @@ object Similarity {
         coalesce(col("bsrc") === col("src"), lit(false)).as("mutual"))
   }
 
-  /** Deterministic random hyperplanes: `nbits × dim` doubles in [-1, 1)
-    * from a seeded RNG (no runtime randomness — same planes every run). */
-  private def hyperplanes(nbits: Int, dim: Int, seed: Long): Array[Array[Double]] = {
-    val rng = new scala.util.Random(seed)
-    Array.fill(nbits, dim)(rng.nextDouble() * 2 - 1)
-  }
+  /** a · b for two float/double array columns, accumulated in double in
+    * index order: the codegen [[DotProduct]] expression (the
+    * higher-order-function spelling is interpreted). */
+  private[graft] def dot(a: Column, b: Column): Column =
+    GraftShim.column(DotProduct(GraftShim.expression(a), GraftShim.expression(b)))
 
-  /** v · constant plane: codegen graft_dot when registered on the given
-    * session, else the interpreted higher-order-function fallback. The
-    * session is passed explicitly (like [[cosineFast]]) — resolving via
-    * SparkSession.active would pick the wrong session in multi-session
-    * apps or throw on non-query threads. */
-  private def dotFast(spark: org.apache.spark.sql.SparkSession,
-                      vec: Column, plane: Column): Column =
-    if (spark.catalog.functionExists("graft_dot"))
-      call_function("graft_dot", vec, plane)
-    else aggregate(zip_with(transform(vec, _.cast("double")), plane, _ * _),
-      lit(0.0), _ + _)
-
-  /** Sign-bucket id for a vector under one hash table's hyperplanes:
-    * bit b = sign(v · plane_b) — the standard cosine-LSH quantizer. */
-  def lshBucket(spark: org.apache.spark.sql.SparkSession, vec: Column,
-                nbits: Int, dim: Int, seed: Long): Column = {
-    val planes = hyperplanes(nbits, dim, seed)
-    (0 until nbits).map { b =>
-      val plane = array(planes(b).toIndexedSeq.map(lit): _*)
-      when(dotFast(spark, vec, plane) >= 0, lit(1L << b)).otherwise(lit(0L))
-    }.reduce(_ + _)
-  }
-
-  /** Multi-table LSH signatures as one `array<long>` column (element t =
-    * [[lshBucket]] under seed `seedBase + t`): the fused graft_lsh_sig
-    * codegen expression when [[graft.GraftExtensions]] is registered (one
-    * vector conversion + all tables×nbits plane dots in a single loop),
-    * else the per-table [[lshBucket]] expression combo. Both draw planes
-    * from the same seeded family, so signatures are bit-identical
-    * (spec-pinned). */
-  def lshSignatures(spark: org.apache.spark.sql.SparkSession, vec: Column,
-                    nbits: Int, dim: Int, tables: Int,
+  /** Multi-table LSH signatures as one `array<long>` column: element t
+    * is the sign-bucket id of `vec` under table t's `nbits` random
+    * hyperplanes (bit b = sign(v · plane_b), the standard cosine-LSH
+    * quantizer), planes drawn from a `scala.util.Random(seedBase + t)`.
+    * The fused [[LshSignatures]] codegen expression converts the vector
+    * once and runs all tables×nbits plane dots in a single loop. */
+  def lshSignatures(vec: Column, nbits: Int, dim: Int, tables: Int,
                     seedBase: Long = 42L): Column =
-    if (spark.catalog.functionExists("graft_lsh_sig"))
-      call_function("graft_lsh_sig", vec, lit(nbits), lit(tables), lit(dim),
-        lit(seedBase))
-    else array((0 until tables).map(t =>
-      lshBucket(spark, vec, nbits, dim, seed = seedBase + t)): _*)
+    GraftShim.column(LshSignatures(GraftShim.expression(vec), nbits, tables,
+      dim, seedBase))
 
   /** IVF (inverted-file) approximate top-k — the other classic ANN scale
     * path next to LSH. A coarse quantizer of `ncentroids` centroids
@@ -317,7 +289,7 @@ object Similarity {
       .select("qid", "qv", "cid"))
     val scored = assigned.join(probes, "cid")
       .filter(col("qid") =!= col("id"))
-      .withColumn("sim", round(cosineFast(spark, col("qv"), col("cv")), 6))
+      .withColumn("sim", round(cosineFast(col("qv"), col("cv")), 6))
     val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("id"))
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -406,7 +378,7 @@ object Similarity {
     val scored = assign.join(probes, "cid")
       .filter(col("qid") =!= col("id"))
       .withColumn("sim",
-        round(cosineFast(spark, col("qv"), col("cv")), 6))
+        round(cosineFast(col("qv"), col("cv")), 6))
     val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("id"))
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -435,16 +407,15 @@ object Similarity {
                            vec: Column): Column =
     if (cents.isEmpty ||
         cents.length.toLong * cents.head._1.length <= CentroidLiteralBudget)
-      centroidSimsLiteral(spark, cents, vec)
+      centroidSimsLiteral(cents, vec)
     else centroidSimsBroadcast(spark, cents, vec)
 
   /** Literal formulation: one codegen'd dot per centroid over an
     * inlined plane constant — fastest at small ncentroids. */
   private[graft] def centroidSimsLiteral(
-      spark: org.apache.spark.sql.SparkSession,
       cents: Array[(Array[Double], Double)], vec: Column): Column =
     array(cents.toIndexedSeq.map { case (v, n) =>
-      dotFast(spark, vec, array(v.toIndexedSeq.map(lit): _*)) / lit(n)
+      dot(vec, array(v.toIndexedSeq.map(lit): _*)) / lit(n)
     }: _*)
 
   /** Broadcast formulation: the centroid table ships once per executor
@@ -526,8 +497,7 @@ object Similarity {
     * its 16-byte code rows, never reconstructed. Per query, a m×k table
     * of subspace dot products is built once (UDF over the broadcast
     * query side — |queries|·m·k work total); each candidate then scores
-    * in m table lookups via the `graft_pq_lookup` codegen expression
-    * (an m-term `element_at` combo when the extension is absent).
+    * in m table lookups via the [[PqLookupSum]] codegen expression.
     * Cosine uses a query-independent codebook-norm² table the same way,
     * so `sim` equals the cosine against the float-decoded vector (up to
     * summation-order ulp — spec-bounded). Same broadcast-queries /
@@ -536,13 +506,12 @@ object Similarity {
              queries: DataFrame, vecCol: String, qIdCol: String,
              codebooks: Array[Array[Array[Double]]], k: Int): DataFrame = {
     val spark = codes.sparkSession
-    val m = codebooks.length
     val kCent = codebooks(0).length
     val cbF = pqFloatCb(codebooks)
     val norm2Col = pqNorm2Col(cbF)
     val q = broadcast(pqQuerySide(spark, cbF, queries, vecCol, qIdCol))
     def lookup(cs: Column, table: Column): Column =
-      pqLookup(spark, cs, table, m, kCent)
+      pqLookup(cs, table, kCent)
     val par = spark.sparkContext.defaultParallelism
     val c0 = codes.select(col(idCol).as("id"), col(codesCol).as("__codes"))
     val c = if (c0.rdd.getNumPartitions < par / 2) c0.repartition(par) else c0
@@ -608,24 +577,11 @@ object Similarity {
       dotTable(col(vecCol)).as("__dt"), qNorm(col(vecCol)).as("__qn"))
   }
 
-  /** `Σ_j table[j·k + codes[j]]`: the graft_pq_lookup codegen expression
-    * when GraftExtensions is registered, else the element_at combo. */
-  private def pqLookup(spark: org.apache.spark.sql.SparkSession,
-                       cs: Column, table: Column, m: Int, kCent: Int): Column =
-    if (spark.catalog.functionExists("graft_pq_lookup"))
-      call_function("graft_pq_lookup", cs, table, lit(kCent))
-    else pqLookupCombo(cs, table, m, kCent)
-
-  /** Expression-combo twin of the `graft_pq_lookup` codegen expression:
-    * `Σ_j table[j·k + codes[j]]` as m `element_at` terms (1-based) —
-    * the path [[pqTopK]] takes on sessions without GraftExtensions.
-    * Package-visible for the bit-equality spec against the native
+  /** `Σ_j table[j·k + codes[j]]`: the [[PqLookupSum]] codegen
     * expression. */
-  private[graft] def pqLookupCombo(cs: Column, table: Column,
-                                   m: Int, kCent: Int): Column =
-    (0 until m).map(j =>
-      element_at(table, element_at(cs, j + 1) + lit(j * kCent + 1)))
-      .reduce(_ + _)
+  private def pqLookup(cs: Column, table: Column, kCent: Int): Column =
+    GraftShim.column(PqLookupSum(
+      GraftShim.expression(cs), GraftShim.expression(table), kCent))
 
   /** Multi-table LSH approximate top-k: `tables` independent sign
     * signatures; each query probes its bucket and every Hamming-1
@@ -641,12 +597,11 @@ object Similarity {
   def lshTopK(corpus: DataFrame, queries: DataFrame, vecCol: String,
               idCol: String, k: Int, nbits: Int = 8, dim: Int = 64,
               tables: Int = 4): DataFrame = {
-    val spark = corpus.sparkSession
     val c = corpus.select(col(idCol).as("id"),
-        lshSignatures(spark, col(vecCol), nbits, dim, tables).as("bs"))
+        lshSignatures(col(vecCol), nbits, dim, tables).as("bs"))
       .select(col("id"), posexplode(col("bs")).as(Seq("tbl", "bucket")))
     val qsig = queries.select(col(idCol).as("qid"),
-      lshSignatures(spark, col(vecCol), nbits, dim, tables).as("bs"))
+      lshSignatures(col(vecCol), nbits, dim, tables).as("bs"))
     // probe masks: the bucket itself plus each Hamming-1 neighbor
     val masks = lit(0L) +: (0 until nbits).map(b => lit(1L << b))
     val q = broadcast(qsig
@@ -669,7 +624,7 @@ object Similarity {
         col(vecCol).as("qv"))), "qid")
       .join(corpus.select(col(idCol).as("id"), col(vecCol).as("cv")), "id")
       .withColumn("sim",
-        round(cosineFast(corpus.sparkSession, col("qv"), col("cv")), 6))
+        round(cosineFast(col("qv"), col("cv")), 6))
     val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("id"))
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -723,7 +678,6 @@ object Similarity {
   def ivfPqTopK(index: IvfPq, queries: DataFrame, vecCol: String,
                 qIdCol: String, k: Int, nprobe: Int = 4): DataFrame = {
     val spark = index.codes.sparkSession
-    val m = index.codebooks.length
     val kCent = index.codebooks(0).length
     val cbF = pqFloatCb(index.codebooks)
     val norm2Col = pqNorm2Col(cbF)
@@ -741,8 +695,8 @@ object Similarity {
     val scored = index.codes.join(probes, "cid")
       .filter(col("qid") =!= col("id"))
       .withColumn("sim",
-        round(pqLookup(spark, col("codes"), col("__dt"), m, kCent) /
-          (col("__qn") * sqrt(pqLookup(spark, col("codes"), norm2Col, m, kCent))), 6))
+        round(pqLookup(col("codes"), col("__dt"), kCent) /
+          (col("__qn") * sqrt(pqLookup(col("codes"), norm2Col, kCent))), 6))
       .select("qid", "id", "sim")
     val localW = Window.partitionBy("qid", "__part").orderBy(col("sim").desc, col("id"))
     val pruned = scored.withColumn("__part", spark_partition_id())

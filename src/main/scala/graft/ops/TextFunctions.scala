@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftShim}
 import org.apache.spark.sql.functions._
+import graft.functions.{CharClassProfile, DeflateSize, GopherStats, MtldRails, StopProfile}
 
 /** Text-analysis primitives for large-scale training-data pipelines:
   * tokenization, token counting, quality scoring, language ID, and
@@ -35,81 +36,49 @@ object TextFunctions {
       .replaceAll("\\s+", " ").split(" ", -1)
   }
 
-  /** The one-pass codegen graft_gopher_stats struct when
-    * [[graft.GraftExtensions]] is registered on the active session,
-    * else None (callers fall back to the composed expressions). The
-    * composed battery re-tokenizes under five rule columns through
-    * CodegenFallback higher-order functions (~80× the per-row cost of
-    * the single-pass expression — see [[graft.functions.GopherStats]]);
-    * both paths are bit-equivalent (GopherStatsSpec). */
-  private def gopherStatsCol(text: Column): Option[Column] =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .filter(_.catalog.functionExists("graft_gopher_stats"))
-      .map(_ => call_function("graft_gopher_stats", text))
+  /** The one-pass codegen [[GopherStats]] struct. The composed battery
+    * it replaced re-tokenized under five rule columns through
+    * CodegenFallback higher-order functions (~80× the per-row cost);
+    * GopherStatsSpec pins the two bit-equal. */
+  private def gopherStats(text: Column): Column =
+    GraftShim.column(GopherStats(GraftShim.expression(text)))
 
   /** Fraction of word 2-grams that are repeats — the Gopher/RefinedWeb
     * repetition signal (0 for no repetition; boilerplate-heavy docs
-    * score high). 0.0 for docs with fewer than 2 tokens (and for null
-    * text — the when-chain's otherwise-branch fires on a null count). */
-  def dupBigramFraction(text: Column): Column = gopherStatsCol(text) match {
-    case Some(g) => coalesce(g.getField("dup2"), lit(0.0))
-    case None =>
-      val toks = tokens(text)
-      val cnt = size(toks) - 1
-      val grams = when(cnt >= 1,
-        transform(sequence(lit(1), cnt), i => concat_ws(" ", slice(toks, i, lit(2)))))
-        .otherwise(array().cast("array<string>"))
-      when(size(grams) === 0, lit(0.0))
-        .otherwise((size(grams) - size(array_distinct(grams))).cast("double") /
-          size(grams))
-  }
+    * score high). 0.0 for docs with fewer than 2 tokens and for null
+    * text. */
+  def dupBigramFraction(text: Column): Column =
+    coalesce(gopherStats(text).getField("dup2"), lit(0.0))
 
   /** Gopher-style quality rule battery: per-rule booleans plus the
     * conjunction. Thresholds follow the published Gopher filters where
     * the signal is computable from text alone. */
   def gopherRules(text: Column): Column = {
-    val (wordCountOk, meanLenOk, symbolOk, dupOk) = gopherStatsCol(text) match {
-      case Some(g) =>
-        // null text: the composed form sees size(null) = -1 (legacy
-        // non-ANSI sizeOfNull), so word_count_ok is FALSE — not null —
-        // and short-circuits pass to false; dup2's when-chain yields 0.0
-        (coalesce(g.getField("n_words"), lit(-1)).between(50, 100000),
-          g.getField("mean_len").between(3.0, 10.0),
-          g.getField("symbol_ratio") < 0.1,
-          coalesce(g.getField("dup2"), lit(0.0)) < 0.2)
-      case None =>
-        val nWords = size(tokens(text))
-        val symbolRatio = (regexp_count(text, lit("#")) +
-          regexp_count(text, lit("\\.\\.\\."))).cast("double") /
-          greatest(nWords, lit(1))
-        (nWords.between(50, 100000),
-          avgTokenLen(text).between(3.0, 10.0),
-          symbolRatio < 0.1,
-          dupBigramFraction(text) < 0.2)
-    }
+    val g = gopherStats(text)
+    // null text: like the composed `size(null)` = -1 (legacy non-ANSI
+    // sizeOfNull), word_count_ok is FALSE — not null — and
+    // short-circuits pass to false; dup2 reads 0.0
+    val wordCountOk = coalesce(g.getField("n_words"), lit(-1)).between(50, 100000)
+    val meanLenOk = g.getField("mean_len").between(3.0, 10.0)
+    val symbolOk = g.getField("symbol_ratio") < 0.1
+    val dupOk = coalesce(g.getField("dup2"), lit(0.0)) < 0.2
     struct(
       wordCountOk.as("word_count_ok"), meanLenOk.as("mean_len_ok"),
       symbolOk.as("symbol_ok"), dupOk.as("dup_ok"),
       (wordCountOk && meanLenOk && symbolOk && dupOk).as("pass"))
   }
 
-  /** The one-pass codegen graft_stop_profile struct when
-    * [[graft.GraftExtensions]] is registered, else None. The composed
-    * forms tokenize-and-filter once per language profile through
-    * CodegenFallback lambdas; the expression does one map lookup per
-    * token. Coalescing the null struct's fields to -1 reproduces the
-    * composed `size(null)` = -1 legacy semantics bit-exactly
-    * (StopProfileSpec). */
-  private def stopProfileCol(text: Column): Option[Column] =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .filter(_.catalog.functionExists("graft_stop_profile"))
-      .map(_ => call_function("graft_stop_profile", text))
+  /** The one-pass codegen [[StopProfile]] struct: one map lookup per
+    * token, where the composed forms tokenized and filtered once per
+    * language profile through CodegenFallback lambdas. Coalescing the
+    * null struct's fields to -1 reproduces the composed `size(null)` =
+    * -1 legacy semantics bit-exactly (StopProfileSpec). */
+  private def stopProfile(text: Column): Column =
+    GraftShim.column(StopProfile(GraftShim.expression(text)))
 
   /** Whitespace token count. */
-  def tokenCountWs(text: Column): Column = stopProfileCol(text) match {
-    case Some(p) => coalesce(p.getField("n_words"), lit(-1))
-    case None => size(tokens(text))
-  }
+  def tokenCountWs(text: Column): Column =
+    coalesce(stopProfile(text).getField("n_words"), lit(-1))
 
   /** BPE-ish subword count: runs of letters, runs of digits, and single
     * non-alphanumeric marks each count as one token — the usual cheap
@@ -118,12 +87,7 @@ object TextFunctions {
     regexp_count(lower(text), lit("[a-z]+|[0-9]+|[^a-z0-9 ]"))
 
   /** Mean whitespace-token length. */
-  def avgTokenLen(text: Column): Column = gopherStatsCol(text) match {
-    case Some(g) => g.getField("mean_len")
-    case None =>
-      val t = tokens(text)
-      aggregate(t, lit(0), (acc, x) => acc + length(x)).cast("double") / size(t)
-  }
+  def avgTokenLen(text: Column): Column = gopherStats(text).getField("mean_len")
 
   private[graft] val enStop = Seq("the", "a", "and", "of", "to", "in", "is")
   private[graft] val langStops: Seq[(String, Seq[String])] = Seq(
@@ -133,20 +97,17 @@ object TextFunctions {
     "es" -> Seq("el", "los", "las", "y", "es", "un", "una"),
     "zh" -> Seq("的", "是", "了", "在", "和"))
 
-  private def stopHits(text: Column, words: Seq[String]): Column = {
-    val idx = langStops.indexWhere(_._2 == words)
-    stopProfileCol(text) match {
-      case Some(p) if idx >= 0 =>
-        coalesce(element_at(p.getField("hits"), lit(idx + 1)), lit(-1))
-      case _ => size(filter(tokens(text), t => t.isin(words.map(lit): _*)))
-    }
-  }
+  /** Stopword hits of `langStops(lang)`'s words among the tokens. */
+  private def stopHits(text: Column, lang: Int): Column =
+    coalesce(element_at(stopProfile(text).getField("hits"), lit(lang + 1)),
+      lit(-1))
 
   /** Fraction of tokens that are (English) stopwords — a standard quality
     * signal: natural prose has a stable stopword rate, keyword spam and
     * boilerplate don't. */
   def stopwordRatio(text: Column): Column =
-    stopHits(text, enStop).cast("double") / tokenCountWs(text)
+    stopHits(text, langStops.indexWhere(_._1 == "en")).cast("double") /
+      tokenCountWs(text)
 
   /** Fraction of characters that are punctuation marks. */
   def punctRatio(text: Column): Column =
@@ -172,8 +133,8 @@ object TextFunctions {
     * (single map pass, no shuffle) is identical. */
   def langId(text: Column): Column = {
     val n = greatest(tokenCountWs(text), lit(1)).cast("double")
-    val scored = langStops.map { case (lang, words) =>
-      struct((stopHits(text, words).cast("double") / n).as("score"),
+    val scored = langStops.zipWithIndex.map { case ((lang, _), i) =>
+      struct((stopHits(text, i).cast("double") / n).as("score"),
         lit(lang).as("lang"))
     }
     // Strict > keeps the earlier language on score ties, making the pick
@@ -209,48 +170,15 @@ object TextFunctions {
   /** Character-level profile — class counts, distinct characters, and
     * Shannon entropy over the char distribution (bits): the
     * charset-health battery (encoding damage → high `n_other`,
-    * binary-in-text → high entropy, repetitive spam → low). Routed
-    * through the one-pass `graft_char_profile` codegen expression when
-    * [[graft.GraftExtensions]] is registered; the composed fallback
-    * below is O(len × distinct) interpreted lambdas and walks UTF-16
-    * units (it mis-splits supplementary characters) — fine for specs
-    * and small batches, register the extension for corpus runs. Both
-    * accumulate entropy in rounded 1e-6-bit integer units per distinct
+    * binary-in-text → high entropy, repetitive spam → low). One pass of
+    * the codegen [[CharClassProfile]] expression over code points. It
+    * accumulates entropy in rounded 1e-6-bit integer units per distinct
     * character, so the sum is order-independent and engine-exact
-    * (bit-equal paths pinned by CharProfileSpec; DuckDB oracle
+    * (CharProfileSpec pins it bit-equal to the composed
+    * higher-order-function spelling on BMP text; DuckDB oracle
     * `text_entropy`). */
-  def charProfile(text: Column): Column = {
-    val native = org.apache.spark.sql.SparkSession.getActiveSession
-      .filter(_.catalog.functionExists("graft_char_profile"))
-      .map(_ => call_function("graft_char_profile", text))
-    native.getOrElse {
-      val chars = filter(split(text, ""), c => c =!= "")
-      val n = size(chars)
-      val dist = array_distinct(chars)
-      val classCount = (re: String) => regexp_count(text, lit(re)).cast("long")
-      val letters = classCount("[A-Za-z]")
-      val digits = classCount("[0-9]")
-      val spaces = classCount("[ \\t\\n\\r]")
-      val printable = classCount("[!-~]")
-      val micros = aggregate(
-        transform(dist, c => {
-          val p = size(filter(chars, x => x === c)).cast("double") / n
-          // Math.round twin: floor(x + 0.5)
-          floor(-(p * log(p) / lit(Ln2)) * 1e6 + 0.5).cast("long")
-        }),
-        lit(0L), (acc, x) => acc + x)
-      struct(
-        n.cast("long").as("n_chars"),
-        letters.as("n_letters"),
-        digits.as("n_digits"),
-        spaces.as("n_spaces"),
-        (printable - letters - digits).as("n_punct"),
-        (n.cast("long") - printable - spaces).as("n_other"),
-        size(dist).as("n_distinct"),
-        when(n === 0, lit(0.0))
-          .otherwise(micros.cast("double") / lit(1e6)).as("entropy"))
-    }
-  }
+  def charProfile(text: Column): Column =
+    GraftShim.column(CharClassProfile(GraftShim.expression(text)))
 
   /** Unicode-SCRIPT mix profile — the multilingual-curation twin of
     * [[charProfile]]'s ASCII classes: per-script character counts
@@ -303,8 +231,6 @@ object TextFunctions {
   private def expr_intdiv(a: Column, b: Column): Column =
     call_function("div", a, b)
 
-  private val Ln2 = math.log(2.0)
-
   /** 64-bit rolling polynomial hash (base-31 Horner over UTF-8 code
     * points) — the classic shingling hash, as a pure fold expression.
     * Java-long overflow semantics (wraps), deterministic everywhere. */
@@ -314,14 +240,6 @@ object TextFunctions {
       lit(0L),
       (acc, c) => acc * lit(31L) + c)
 
-  /** DEFLATE compression ratio (compressed bytes / raw UTF-8 bytes) —
-    * the crawl-curation quality signal: template/boilerplate spam
-    * compresses far below prose, binary-ish garbage sits near (or
-    * above) 1. Requires [[graft.GraftExtensions]] for the
-    * `graft_deflate_size` expression (no composed fallback exists —
-    * DEFLATE is not expressible in relational primitives, which is
-    * also why this signal has no SQL oracle and is contract-checked
-    * instead). Null/empty text yields null. */
   /** MTLD lexical diversity, forward pass (see
     * [[graft.functions.MtldRails]] for the walk semantics): per doc,
     * the factor state plus the derived ppm rails — remainder-TTR,
@@ -329,38 +247,12 @@ object TextFunctions {
     * (remainder TTR ≥ 0.72 by construction, so the credit is ≤ 10⁶),
     * and MTLD = n·10¹² div (factors·10⁶ + partial) in micro units
     * (null when the doc is empty or never leaves its first full-TTR
-    * factor — plain TTR is the read there). Codegen expression when
-    * [[graft.GraftExtensions]] is registered; bit-identical JVM UDF
-    * walk otherwise.
+    * factor — plain TTR is the read there).
     *
     * @return (id, n_tokens, factors, rem_types, rem_tokens,
     *         partial_ppm, mtld_micro) */
   def mtld(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val toks = tokens(col(textCol))
-    val rails =
-      if (df.sparkSession.catalog.functionExists("graft_mtld"))
-        call_function("graft_mtld", toks)
-      else {
-        val walk = udf { (ts: Seq[String]) =>
-          if (ts == null) null
-          else {
-            var total = 0L; var factors = 0L; var fTokens = 0L
-            val seen = new java.util.HashSet[String]()
-            ts.foreach { t =>
-              if (t != null && t.nonEmpty) {
-                total += 1; fTokens += 1; seen.add(t)
-                if (seen.size * 25L < fTokens * 18L) {
-                  factors += 1; fTokens = 0L; seen.clear()
-                }
-              }
-            }
-            (total, factors, seen.size.toLong, fTokens)
-          }
-        }
-        walk(toks).cast(
-          "struct<n_tokens:bigint,factors:bigint,rem_types:bigint," +
-            "rem_tokens:bigint>")
-      }
+    val rails = GraftShim.column(MtldRails(GraftShim.expression(tokens(col(textCol)))))
     df.select(col(idCol).as("id"), rails.as("__m"))
       .select(col("id"), col("__m.n_tokens").as("n_tokens"),
         col("__m.factors").as("factors"),
@@ -375,13 +267,19 @@ object TextFunctions {
             "div (factors * 1000000 + partial_ppm)")))
   }
 
+  /** DEFLATE compression ratio (compressed bytes / raw UTF-8 bytes) —
+    * the crawl-curation quality signal: template/boilerplate spam
+    * compresses far below prose, binary-ish garbage sits near (or
+    * above) 1. DEFLATE is not expressible in relational primitives,
+    * which is also why this signal has no SQL oracle and is
+    * contract-checked instead. Null/empty text yields null. */
   def compressionRatio(text: Column): Column = {
-    val spark = org.apache.spark.sql.SparkSession.getActiveSession
-      .getOrElse(throw new IllegalStateException("no active SparkSession"))
-    require(spark.catalog.functionExists("graft_deflate_size"),
-      "compressionRatio needs GraftExtensions (graft_deflate_size)")
     val raw = octet_length(text)
-    when(raw > 0,
-      call_function("graft_deflate_size", text).cast("double") / raw)
+    when(raw > 0, deflateSize(text).cast("double") / raw)
   }
+
+  /** DEFLATE-compressed byte count of the UTF-8 text: the codegen
+    * [[DeflateSize]] expression. */
+  private[graft] def deflateSize(text: Column): Column =
+    GraftShim.column(DeflateSize(GraftShim.expression(text)))
 }

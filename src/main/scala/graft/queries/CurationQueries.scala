@@ -1018,15 +1018,8 @@ private[graft] object CurationQueries {
     // distinct) — the string-trigram composed form is CodegenFallback
     // and was 10× the cost; 64-bit hashing preserves distinct counts
     // (the dedup family's established contract)
-    val sh =
-      if (d.sparkSession.catalog.functionExists("graft_shingles"))
-        call_function("graft_shingles", col("text"), lit(3))
-      else array_distinct(
-        when(size(toks) >= 3,
-          transform(sequence(lit(1), size(toks) - 2),
-            i => concat_ws(" ", slice(toks, i, lit(3)))))
-        .otherwise(array().cast("array<string>")).cast("array<string>"))
-    val distincts = d.select(col("lang"), explode(sh).as("g"))
+    val distincts = d
+      .select(col("lang"), explode(Dedup.hashedShingles(col("text"), 3)).as("g"))
       .groupBy("lang")
       .agg(count_distinct(col("g")).as("distinct_3grams"))
     totals.join(distincts, "lang")

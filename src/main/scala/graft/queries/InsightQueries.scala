@@ -46,9 +46,8 @@ private[graft] object InsightQueries {
   private[graft] def qTextCompressRatio(s: SparkSession, dir: String): DataFrame = {
     val d = t(s, dir, "documents")
     val raw = octet_length(col("text"))
-    val dz = call_function("graft_deflate_size", col("text"))
-    val dz2 = call_function("graft_deflate_size",
-      concat(col("text"), col("text")))
+    val dz = TextFunctions.deflateSize(col("text"))
+    val dz2 = TextFunctions.deflateSize(concat(col("text"), col("text")))
     d.select(col("doc_id"), raw.cast("long").as("raw_bytes"),
       (dz > 0).as("deflate_positive"),
       (dz <= raw + lit(64)).as("deflate_bounded"),

@@ -550,7 +550,7 @@ private[graft] object SimilarityQueries {
       .join(e.select(col("vec_id").as("qid"), col("embedding").as("__qv")), "qid")
       .join(e.select(col("vec_id").as("id"), col("embedding").as("__cv")), "id")
       .withColumn("__true_sim",
-        round(Similarity.cosineFast(s, col("__qv"), col("__cv")), 6))
+        round(Similarity.cosineFast(col("__qv"), col("__cv")), 6))
     val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("id"))
     val checked = withVecs
       .withColumn("__rn", row_number().over(w))

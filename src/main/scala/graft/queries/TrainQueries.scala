@@ -158,7 +158,7 @@ private[graft] object TrainQueries {
       .select(
         when(col("neg_id") =!= col("doc_id"), 1).otherwise(0).as("__excl"),
         when(col("neg_sim") ===
-          round(Similarity.cosineFast(s, col("__qv"), col("__nv")), 6), 1)
+          round(Similarity.cosineFast(col("__qv"), col("__nv")), 6), 1)
           .otherwise(0).as("__sim_ok"),
         when(col("negative") === col("__na"), 1).otherwise(0).as("__txt_ok"))
     // candidates_ok: every mined neg_id resolves inside the universe —

@@ -212,24 +212,20 @@ object StreamingOps {
   /** Streaming QUANTILE sketches — the live leg of
     * [[graft.ops.Profile.kllSketches]]: each watermarked (window × keys)
     * slice aggregates its values into one DataSketches KLL sketch row
-    * via the graft_kll_agg TypedImperativeAggregate (requires
-    * [[graft.GraftExtensions]] on the session — streaming aggregation
-    * needs a true incremental aggregate, a mapPartitions pre-pass
-    * cannot watermark). Emitted rows are byte-compatible with the batch
-    * sketch table, so live and backfill slices mix freely in one
-    * [[graft.ops.Profile.kllQuantiles]] rollup. State per open group is
-    * one ~KB sketch, dropped at window close. */
+    * via the [[graft.functions.KllSketchAgg]] TypedImperativeAggregate
+    * (streaming aggregation needs a true incremental aggregate, a
+    * mapPartitions pre-pass cannot watermark). Emitted rows are
+    * byte-compatible with the batch sketch table, so live and backfill
+    * slices mix freely in one [[graft.ops.Profile.kllQuantiles]] rollup.
+    * State per open group is one ~KB sketch, dropped at window close. */
   def kllSketchStream(events: DataFrame, keys: Seq[String], valueCol: String,
                       tsCol: String = "ts", window_ : String = "1 day",
                       lateness: String = "15 minutes",
                       k: Int = 200): DataFrame = {
-    require(events.sparkSession.catalog.functionExists("graft_kll_agg"),
-      "kllSketchStream needs graft.GraftExtensions (graft_kll_agg)")
     events
       .withWatermark(tsCol, lateness)
       .groupBy((window(col(tsCol), window_).as("w") +: keys.map(col)): _*)
-      .agg(call_function("graft_kll_agg",
-        col(valueCol).cast("double"), lit(k)).as("kll"))
+      .agg(graft.ops.Profile.kllAgg(col(valueCol), k).as("kll"))
       .withColumn("window_start", col("w.start"))
       .drop("w")
   }
@@ -490,7 +486,7 @@ object StreamingOps {
     import spark.implicits._
     val src = tsCol.map(tc => vecs.withWatermark(tc, lateness))
       .getOrElse(vecs)
-    val sig = graft.ops.Similarity.lshSignatures(spark, col(vecCol), nbits,
+    val sig = graft.ops.Similarity.lshSignatures(col(vecCol), nbits,
       dim, tables, seedBase)
     val banded = src
       .select(col(idCol).as("vec_id"), col(vecCol).as("vec"),

@@ -17,10 +17,16 @@ package org.apache.spark.sql
   */
 object GraftShim {
 
-  /** A Column over a catalyst expression — for aggregates Spark has no
-    * `functions` entry for (graft's own aggregates). */
+  /** A Column over a catalyst expression — how operators use graft's
+    * own expressions (`graft.functions`), which have no `functions`
+    * entry. */
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
+
+  /** The catalyst expression under a Column — the inverse of [[column]],
+    * for passing Column arguments to a graft expression's constructor. */
+  def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
+    org.apache.spark.sql.classic.ExpressionUtils.expression(c)
 
   /** Materialize `df` as an UNRELIABLE (executor-local) checkpoint and
     * return the re-wrapped DataFrame plus its row count, in ONE job.

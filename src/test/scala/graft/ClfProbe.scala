@@ -1,18 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Throwaway timing probe for the heavy bench queries. */
 object ClfProbe {
   def main(args: Array[String]): Unit = {
     val dir = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Seq("documents").foreach(t => spark.read.parquet(s"$dir/$t.parquet").count())
     def time(label: String)(f: => Unit): Unit = {

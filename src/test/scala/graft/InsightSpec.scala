@@ -1,7 +1,8 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.ops.{Graph, Insight}
+import graft.ops.{Graph, Insight, TextFunctions}
 
 /** Pins the corpus-insight operators (readability, PMI collocations,
   * z-outliers, Markov transitions) and the integer-exact PageRank. */
@@ -1083,8 +1084,8 @@ class InsightSpec extends SparkSpec {
         col("r.text").as("ref"))
     assert(spark.catalog.functionExists("graft_chrf"))
     val native = Insight.chrF(pairs, "hyp", "ref", "doc_id")
-    val composed = Insight.chrFImpl(pairs, "hyp", "ref", "doc_id",
-      maxN = 6, beta = 2, useNative = false)
+    val composed = InsightSpec.chrFComposed(pairs, "hyp", "ref", "doc_id",
+      maxN = 6, beta = 2)
     val diff = native.as("n").join(composed.as("c"), "id")
       .filter(not(col("n.p_ppm") <=> col("c.p_ppm")) ||
         not(col("n.r_ppm") <=> col("c.r_ppm")) ||
@@ -1143,10 +1144,9 @@ class InsightSpec extends SparkSpec {
     val pairs = corpus.unionAll(edges)
     def cols(df: org.apache.spark.sql.DataFrame) = df.columns.toSeq
     for (maxN <- Seq(2, 4)) {
-      val np = Insight.ngramPrecisionImpl(pairs, "hyp", "ref", "doc_id",
-        maxN, useNative = true)
-      val cp = Insight.ngramPrecisionImpl(pairs, "hyp", "ref", "doc_id",
-        maxN, useNative = false)
+      val np = Insight.ngramPrecision(pairs, "hyp", "ref", "doc_id", maxN)
+      val cp = InsightSpec.ngramPrecisionComposed(pairs, "hyp", "ref",
+        "doc_id", maxN)
       assert(cols(np) === cols(cp))
       val j = np.as("a").join(cp.as("b"), Seq("id", "n"))
         .filter(not(col("a.n_hyp") <=> col("b.n_hyp")) ||
@@ -1155,10 +1155,8 @@ class InsightSpec extends SparkSpec {
       assert(j.count() == 0, s"ngramPrecision maxN=$maxN diverged")
       assert(np.count() == cp.count())
     }
-    val nr = Insight.rougeNImpl(pairs, "hyp", "ref", "doc_id", 2,
-      useNative = true)
-    val cr = Insight.rougeNImpl(pairs, "hyp", "ref", "doc_id", 2,
-      useNative = false)
+    val nr = Insight.rougeN(pairs, "hyp", "ref", "doc_id", 2)
+    val cr = InsightSpec.rougeNComposed(pairs, "hyp", "ref", "doc_id", 2)
     assert(cols(nr) === cols(cr))
     val jr = nr.as("a").join(cr.as("b"), Seq("id", "n"))
       .filter(not(col("a.n_hyp") <=> col("b.n_hyp")) ||
@@ -1169,10 +1167,8 @@ class InsightSpec extends SparkSpec {
         not(col("a.f1_ppm") <=> col("b.f1_ppm")))
     assert(jr.count() == 0, "rougeN diverged")
     assert(nr.count() == cr.count())
-    val nb = Insight.bleuImpl(pairs, "hyp", "ref", "doc_id", 4,
-      useNative = true)
-    val cb = Insight.bleuImpl(pairs, "hyp", "ref", "doc_id", 4,
-      useNative = false)
+    val nb = Insight.bleu(pairs, "hyp", "ref", "doc_id", 4)
+    val cb = InsightSpec.bleuComposed(pairs, "hyp", "ref", "doc_id", 4)
     assert(cols(nb) === cols(cb))
     val jb = nb.as("a").join(cb.as("b"), Seq("id"))
       .filter(not(col("a.hyp_len") <=> col("b.hyp_len")) ||
@@ -1188,5 +1184,182 @@ class InsightSpec extends SparkSpec {
     val plan = nb.queryExecution.executedPlan.toString
     assert(plan.contains("graft_ngram_rails"), "rails expr absent")
     assert(!plan.contains("SortMergeJoin"), "bleu native must not join")
+  }
+}
+
+/** The composed spellings of the n-gram text metrics, kept as the
+  * reference implementations the native [[graft.functions.NgramRails]]
+  * and [[graft.functions.ChrfRails]] paths are pinned against. */
+object InsightSpec {
+
+  /** Composed ngramPrecision: explode each order's gram multisets,
+    * count per (id, n, gram), LEFT JOIN hypothesis to reference on the
+    * gram and sum the clipped matches. */
+  def ngramPrecisionComposed(df: DataFrame, hypCol: String, refCol: String,
+      idCol: String, maxN: Int): DataFrame = {
+    // pure slices at every order (no empty-token filtering): the gram
+    // multisets are a total function of the token arrays, so the oracle
+    // replays them verbatim — an empty token counts identically on
+    // both sides (only the degenerate empty-text row produces one)
+    def grams(c: String, n: Int): Column =
+      if (n == 1) col(c)
+      else expr(s"CASE WHEN size($c) >= $n THEN transform(" +
+        s"sequence(1, size($c) - ${n - 1}), " +
+        s"i -> array_join(slice($c, i, $n), ' ')) " +
+        "ELSE CAST(array() AS ARRAY<STRING>) END")
+    val base = df.select(col(idCol).as("id"),
+        TextFunctions.tokens(col(hypCol)).as("__h"),
+        TextFunctions.tokens(col(refCol)).as("__r"))
+      .localCheckpoint(true) // referenced once per order below
+    val perN = (1 to maxN).map { n =>
+      base.select(col("id"), lit(n).as("n"),
+        grams("__h", n).as("__hg"), grams("__r", n).as("__rg"))
+    }.reduce(_ unionAll _)
+    val hc = perN.select(col("id"), col("n"), explode(col("__hg")).as("g"))
+      .groupBy("id", "n", "g").agg(count(lit(1)).as("__ch"))
+    val rc = perN.select(col("id"), col("n"), explode(col("__rg")).as("g"))
+      .groupBy("id", "n", "g").agg(count(lit(1)).as("__cr"))
+    val m = hc.join(rc, Seq("id", "n", "g"), "left")
+      .groupBy("id", "n")
+      .agg(sum("__ch").as("__nh"),
+        sum(least(col("__ch"), coalesce(col("__cr"), lit(0L)))).as("__nm"))
+    perN.select(col("id"), col("n"))
+      .join(m, Seq("id", "n"), "left")
+      .select(col("id"), col("n"),
+        coalesce(col("__nh"), lit(0L)).as("n_hyp"),
+        coalesce(col("__nm"), lit(0L)).as("n_match"),
+        when(coalesce(col("__nh"), lit(0L)) > 0,
+          expr("__nm * 1000000 div __nh")).as("p_ppm"))
+  }
+
+  /** Composed rougeN: the [[ngramPrecisionComposed]] gram counts with a
+    * FULL OUTER join, so reference grams count too. */
+  def rougeNComposed(df: DataFrame, hypCol: String, refCol: String,
+      idCol: String, maxN: Int): DataFrame = {
+    def grams(c: String, n: Int): Column =
+      if (n == 1) col(c)
+      else expr(s"CASE WHEN size($c) >= $n THEN transform(" +
+        s"sequence(1, size($c) - ${n - 1}), " +
+        s"i -> array_join(slice($c, i, $n), ' ')) " +
+        "ELSE CAST(array() AS ARRAY<STRING>) END")
+    val base = df.select(col(idCol).as("id"),
+        TextFunctions.tokens(col(hypCol)).as("__h"),
+        TextFunctions.tokens(col(refCol)).as("__r"))
+      .localCheckpoint(true)
+    val perN = (1 to maxN).map { n =>
+      base.select(col("id"), lit(n).as("n"),
+        grams("__h", n).as("__hg"), grams("__r", n).as("__rg"))
+    }.reduce(_ unionAll _)
+    val hc = perN.select(col("id"), col("n"), explode(col("__hg")).as("g"))
+      .groupBy("id", "n", "g").agg(count(lit(1)).as("__ch"))
+    val rc = perN.select(col("id"), col("n"), explode(col("__rg")).as("g"))
+      .groupBy("id", "n", "g").agg(count(lit(1)).as("__cr"))
+    val m = hc.join(rc, Seq("id", "n", "g"), "full_outer")
+      .groupBy("id", "n")
+      .agg(sum(coalesce(col("__ch"), lit(0L))).as("__nh"),
+        sum(coalesce(col("__cr"), lit(0L))).as("__nr"),
+        sum(least(coalesce(col("__ch"), lit(0L)),
+          coalesce(col("__cr"), lit(0L)))).as("__nm"))
+    perN.select(col("id"), col("n"))
+      .join(m, Seq("id", "n"), "left")
+      .select(col("id"), col("n"),
+        coalesce(col("__nh"), lit(0L)).as("n_hyp"),
+        coalesce(col("__nr"), lit(0L)).as("n_ref"),
+        coalesce(col("__nm"), lit(0L)).as("n_match"),
+        when(coalesce(col("__nh"), lit(0L)) > 0,
+          expr("__nm * 1000000 div __nh")).as("p_ppm"),
+        when(coalesce(col("__nr"), lit(0L)) > 0,
+          expr("__nm * 1000000 div __nr")).as("r_ppm"),
+        when(coalesce(col("__nh"), lit(0L)) + coalesce(col("__nr"), lit(0L)) > 0,
+          expr("2 * __nm * 1000000 div (__nh + __nr)")).as("f1_ppm"))
+  }
+
+  /** Composed bleu: per-order smoothed log terms over
+    * [[ngramPrecisionComposed]], one groupBy(id) and a lengths join. */
+  def bleuComposed(df: DataFrame, hypCol: String, refCol: String,
+      idCol: String, maxN: Int): DataFrame = {
+    val prec = ngramPrecisionComposed(df, hypCol, refCol, idCol, maxN)
+    val lens = df.select(col(idCol).as("id"),
+      size(TextFunctions.tokens(col(hypCol))).cast("long").as("hyp_len"),
+      size(TextFunctions.tokens(col(refCol))).cast("long").as("ref_len"))
+    val t = prec.filter(col("n_hyp") > 0)
+      .withColumn("__clip",
+        when(col("n") === 1 || col("n_match") > 0, col("n_match"))
+          .otherwise(lit(1L)))
+      .withColumn("__tot",
+        when(col("n") === 1 || col("n_match") > 0, col("n_hyp"))
+          .otherwise(col("n_hyp") + 1))
+      .withColumn("__term", when(col("__clip") > 0,
+        floor(log(col("__clip").cast("double") /
+          col("__tot").cast("double")) * 1e6 + 0.5).cast("long")))
+    val agg = t.groupBy("id").agg(
+      count(lit(1)).as("orders"),
+      sum(when(col("__clip") === 0, 1L).otherwise(0L)).as("__zeros"),
+      sum("__term").as("__s"))
+    lens.join(agg, Seq("id"), "left")
+      .withColumn("orders", coalesce(col("orders"), lit(0L)))
+      .withColumn("__bp", when(col("hyp_len") >= col("ref_len"), 0L)
+        .otherwise(floor((lit(1.0) - col("ref_len").cast("double") /
+          col("hyp_len")) * 1e6 + 0.5).cast("long")))
+      .withColumn("log_bleu_micro",
+        when(col("orders") > 0 && col("__zeros") === 0,
+          expr("__s div orders") + col("__bp")))
+      .withColumn("bleu_micro",
+        when(col("log_bleu_micro").isNotNull,
+          floor(exp(col("log_bleu_micro").cast("double") / 1e6) * 1e6 + 0.5)
+            .cast("long")).otherwise(lit(0L)))
+      .select(col("id"), col("hyp_len"), col("ref_len"), col("orders"),
+        col("log_bleu_micro"), col("bleu_micro"),
+        (col("bleu_micro").cast("double") / 1e6).as("bleu"))
+  }
+
+  /** Composed chrF: per-pair character gram counting (one generator +
+    * one groupBy per side) and one groupBy(id). */
+  def chrFComposed(df: DataFrame, hypCol: String, refCol: String,
+      idCol: String, maxN: Int, beta: Int): DataFrame = {
+    val b2 = (beta.toLong * beta).toString
+    def stripWs(c: Column): Column =
+      regexp_replace(coalesce(c, lit("")), "\\s+", "")
+    val base = df.select(col(idCol).as("id"),
+        stripWs(col(hypCol)).as("__h"), stripWs(col(refCol)).as("__r"))
+      .localCheckpoint(true)
+    def grams(c: String, n: Int): Column =
+      expr(s"CASE WHEN length($c) >= $n THEN transform(" +
+        s"sequence(1, length($c) - ${n - 1}), " +
+        s"i -> substring($c, i, $n)) " +
+        "ELSE CAST(array() AS ARRAY<STRING>) END")
+    val perN = (1 to maxN).map { n =>
+      base.select(col("id"), lit(n).as("n"),
+        grams("__h", n).as("__hg"), grams("__r", n).as("__rg"))
+    }.reduce(_ unionAll _)
+    val hc = perN.select(col("id"), col("n"), explode(col("__hg")).as("g"))
+      .groupBy("id", "n", "g").agg(count(lit(1)).as("__ch"))
+    val rc = perN.select(col("id"), col("n"), explode(col("__rg")).as("g"))
+      .groupBy("id", "n", "g").agg(count(lit(1)).as("__cr"))
+    val m = hc.join(rc, Seq("id", "n", "g"), "full_outer")
+      .groupBy("id", "n")
+      .agg(sum(coalesce(col("__ch"), lit(0L))).as("__nh"),
+        sum(coalesce(col("__cr"), lit(0L))).as("__nr"),
+        sum(least(coalesce(col("__ch"), lit(0L)),
+          coalesce(col("__cr"), lit(0L)))).as("__nm"))
+      .select(col("id"),
+        when(col("__nh") > 0, expr("__nm * 1000000 div __nh")).as("__pn"),
+        when(col("__nr") > 0, expr("__nm * 1000000 div __nr")).as("__rn"))
+    val agg = m.groupBy("id").agg(
+      count(col("__pn")).as("orders_p"), count(col("__rn")).as("orders_r"),
+      sum(col("__pn")).as("__ps"), sum(col("__rn")).as("__rs"))
+    base.select(col("id")).distinct()
+      .join(agg, Seq("id"), "left")
+      .select(col("id"),
+        coalesce(col("orders_p"), lit(0L)).as("orders_p"),
+        coalesce(col("orders_r"), lit(0L)).as("orders_r"),
+        when(col("orders_p") > 0, expr("__ps div orders_p"))
+          .otherwise(lit(0L)).as("p_ppm"),
+        when(col("orders_r") > 0, expr("__rs div orders_r"))
+          .otherwise(lit(0L)).as("r_ppm"))
+      .withColumn("chrf_ppm",
+        when(expr(s"$b2 * p_ppm + r_ppm") > 0,
+          expr(s"(1 + $b2) * p_ppm * r_ppm div ($b2 * p_ppm + r_ppm)"))
+          .otherwise(lit(0L)))
   }
 }

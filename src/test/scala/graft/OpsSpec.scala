@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.ops._
 
@@ -174,7 +175,7 @@ class OpsSpec extends SparkSpec {
     val rows = docs.limit(50).select(
         call_function("graft_minhash",
           call_function("graft_shingles", col("text"), lit(3)), lit(32)).as("a"),
-        Dedup.minhashFallbackCol(
+        OpsSpec.minhashComposed(
           call_function("graft_shingles", col("text"), lit(3)), 32).as("b"))
       .collect()
     assert(rows.nonEmpty)
@@ -220,7 +221,7 @@ class OpsSpec extends SparkSpec {
     val sh = call_function("graft_shingles", col("text"), lit(3))
     val rows = docs.limit(50).select(
         call_function("graft_minhash_oph", sh, lit(32)).as("a"),
-        Dedup.ophFallbackUdf(32)(sh).as("b"))
+        OpsSpec.ophUdf(32)(sh).as("b"))
       .collect()
     assert(rows.nonEmpty)
     rows.foreach(r => assert(r.getSeq[Long](0) == r.getSeq[Long](1)))
@@ -684,7 +685,7 @@ class OpsSpec extends SparkSpec {
   test("graft_lsh_sig is bit-identical to the per-table lshBucket combo") {
     assert(spark.catalog.functionExists("graft_lsh_sig"))
     val combo = array((0 until 6).map(t =>
-      Similarity.lshBucket(spark, col("embedding"), nbits = 5, dim = 64,
+      OpsSpec.lshBucket(col("embedding"), nbits = 5, dim = 64,
         seed = 42L + t)): _*)
     val diff = emb.select(
         call_function("graft_lsh_sig", col("embedding"), lit(5), lit(6),
@@ -1575,7 +1576,7 @@ class OpsSpec extends SparkSpec {
   test("centroidSims: broadcast scorer bit-equal to literal; auto-select by size") {
     val cents = Cluster.fit(emb, "embedding", "vec_id", 256, lloydIters = 1)
     val lit256 = emb.select(col("vec_id"),
-      Similarity.centroidSimsLiteral(spark, cents, col("embedding")).as("s"))
+      Similarity.centroidSimsLiteral(cents, col("embedding")).as("s"))
     val bc256 = emb.select(col("vec_id"),
       Similarity.centroidSimsBroadcast(spark, cents, col("embedding")).as("s"))
     val ne = lit256.join(bc256.withColumnRenamed("s", "s2"), "vec_id")
@@ -2809,7 +2810,7 @@ class OpsSpec extends SparkSpec {
     val df = rows.toDF("id", "codes", "table")
     val both = df.select(col("id"),
         call_function("graft_pq_lookup", col("codes"), col("table"), lit(k)).as("native"),
-        Similarity.pqLookupCombo(col("codes"), col("table"), m, k).as("combo"))
+        OpsSpec.pqLookupCombo(col("codes"), col("table"), m, k).as("combo"))
       .collect()
     // identical lookups added in identical order -> bit-equal doubles
     both.foreach(r => assert(r.getDouble(1) == r.getDouble(2),
@@ -4869,4 +4870,52 @@ class OpsSpec extends SparkSpec {
     val full = Profile.inclusion(b, "w", b, "w", "b.w", "b.w").head()
     assert(full.getLong(4) == 1000000L && full.getBoolean(5))
   }
+}
+
+/** Composed spellings of graft's native expressions, kept as the
+  * reference implementations the expressions are pinned against. */
+object OpsSpec {
+
+  /** Expression-only minhash over a hashed-shingle array column — same
+    * salts/mix as MinHashSig.compute (fmix of golden-ratio steps). */
+  def minhashComposed(sh: Column, numHashes: Int): Column = {
+    val salts = (0 until numHashes).map(graft.functions.MinHashSig.salt)
+    val fm = (c: Column) => {
+      // murmur3 fmix64 via expressions (xxhash64 differs from fmix)
+      val m1 = lit(0xff51afd7ed558ccdL)
+      val m2 = lit(0xc4ceb9fe1a85ec53L)
+      val s1 = (c.bitwiseXOR(shiftrightunsigned(c, 33))) * m1
+      val s2 = (s1.bitwiseXOR(shiftrightunsigned(s1, 33))) * m2
+      s2.bitwiseXOR(shiftrightunsigned(s2, 33))
+    }
+    when(size(sh) > 0,
+      array(salts.map(s =>
+        array_min(transform(sh, h => fm(h.bitwiseXOR(lit(s)))))): _*))
+  }
+
+  /** The OPH densification walk is a state machine higher-order
+    * functions can't express, so its reference is a JVM scalar calling
+    * the expression's static compute. */
+  def ophUdf(numHashes: Int) =
+    udf((sh: Seq[Long]) => graft.functions.MinHashOph.computeSeq(sh, numHashes))
+
+  /** Sign-bucket id for a vector under one table's hyperplanes: bit b =
+    * sign(v · plane_b), planes `nbits × dim` doubles in [-1, 1) from a
+    * `scala.util.Random(seed)`, dots as index-order double folds. */
+  def lshBucket(vec: Column, nbits: Int, dim: Int, seed: Long): Column = {
+    val rng = new scala.util.Random(seed)
+    val planes = Array.fill(nbits, dim)(rng.nextDouble() * 2 - 1)
+    (0 until nbits).map { b =>
+      val plane = array(planes(b).toIndexedSeq.map(lit): _*)
+      val dot = aggregate(zip_with(transform(vec, _.cast("double")), plane, _ * _),
+        lit(0.0), _ + _)
+      when(dot >= 0, lit(1L << b)).otherwise(lit(0L))
+    }.reduce(_ + _)
+  }
+
+  /** `Σ_j table[j·k + codes[j]]` as m `element_at` terms (1-based). */
+  def pqLookupCombo(cs: Column, table: Column, m: Int, kCent: Int): Column =
+    (0 until m).map(j =>
+      element_at(table, element_at(cs, j + 1) + lit(j * kCent + 1)))
+      .reduce(_ + _)
 }
