@@ -1,6 +1,8 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, GraftShim}
+import org.apache.spark.sql.GraftShim.Layout.Hash
+import org.apache.spark.sql.GraftShim.materialize
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{HashedShingles, MinHashOph, MinHashSig, SimHash64}
@@ -1025,11 +1027,9 @@ object Dedup {
     // cascade runs as hash probes with zero exchanges. Tokens are also
     // materialized ONCE (the old spelling re-tokenized the corpus for
     // the length table and again for rank 0).
-    val mat = org.apache.spark.sql.GraftShim.materializeWithCount _
-    val (toksM, nToks) = mat(df.select(col(idCol).as("id"),
+    val tm = materialize(df.select(col(idCol).as("id"),
       posexplode(TextFunctions.tokens(col(textCol))).as(Seq("pos", "w"))))
-    def maybeB(t: DataFrame): DataFrame =
-      if (nToks <= (4L << 20)) broadcast(t) else t
+    val (toksM, nToks) = (tm.df, tm.rows)
     // dense order-preserving rank of (kl, kr): distinct keys get their
     // global sorted index (two-pass range shuffle), then join back —
     // the index table (≤ nToks rows) broadcasts under the cap
@@ -1040,11 +1040,10 @@ object Dedup {
       // the real shuffle, so the un-materialized spelling ran the
       // distinct (an exchange + aggregate over the token-sized table)
       // TWICE per doubling round.
-      val (keys, _) = org.apache.spark.sql.GraftShim
-        .materializeWithCount(t.select("kl", "kr").distinct())
+      val keys = materialize(t.select("kl", "kr").distinct()).df
       t.join(
-          maybeB(Order.globalIndex(keys,
-            struct(col("kl"), col("kr")), "r")),
+          BroadcastCap.hint(Order.globalIndex(keys,
+            struct(col("kl"), col("kr")), "r"), nToks),
           Seq("kl", "kr"))
         .select("id", "pos", "r")
     }
@@ -1060,7 +1059,7 @@ object Dedup {
       val k = 1 << p
       val cur = ranks(p)
       ranks(p + 1) = rerank(cur.as("a")
-          .join(maybeB(cur.as("b")),
+          .join(BroadcastCap.hint(cur.as("b"), nToks),
             col("a.id") === col("b.id") &&
               col("b.pos") === col("a.pos") + lit(k), "left")
           .select(col("a.id").as("id"), col("a.pos").as("pos"),
@@ -1072,10 +1071,11 @@ object Dedup {
     // cap, so any tiebreak is safe) → adjacent-neighbor pairs; the
     // index is materialized once so the self-join's broadcast build
     // does not re-run the range shuffle
-    val (indexed, _) = mat(Order.globalIndex(ranks(maxPow),
-      struct(col("r"), col("id"), col("pos")), "g"))
+    val indexed = materialize(Order.globalIndex(ranks(maxPow),
+      struct(col("r"), col("id"), col("pos")), "g")).df
     var pairs = indexed.as("a")
-      .join(maybeB(indexed.as("b")), col("b.g") === col("a.g") + 1)
+      .join(BroadcastCap.hint(indexed.as("b"), nToks),
+        col("b.g") === col("a.g") + 1)
       .select(col("a.id").as("ida"), col("a.pos").as("posa"),
         col("b.id").as("idb"), col("b.pos").as("posb"))
       .withColumn("ext", lit(0L))
@@ -1095,10 +1095,10 @@ object Dedup {
       val ra = ranks(p).withColumnRenamed("r", "ra")
       val rb = ranks(p).withColumnRenamed("r", "rb")
       pairs = pairs
-        .join(maybeB(ra), col("ida") === ra("id") &&
+        .join(BroadcastCap.hint(ra, nToks), col("ida") === ra("id") &&
           ra("pos") === col("posa") + col("ext"), "left")
         .drop("id", "pos")
-        .join(maybeB(rb), col("idb") === rb("id") &&
+        .join(BroadcastCap.hint(rb, nToks), col("idb") === rb("id") &&
           rb("pos") === col("posb") + col("ext"), "left")
         .drop("id", "pos")
         .withColumn("ext",
@@ -1116,7 +1116,8 @@ object Dedup {
     // agreement to the common end), cap, and take each doc's best
     val la = lens.select(col("id").as("ida"), col("len").as("lena"))
     val lb = lens.select(col("id").as("idb"), col("len").as("lenb"))
-    val lce = pairs.join(maybeB(la), "ida").join(maybeB(lb), "idb")
+    val lce = pairs.join(BroadcastCap.hint(la, nToks), "ida")
+      .join(BroadcastCap.hint(lb, nToks), "idb")
       .withColumn("lce",
         least(col("ext"), col("lena") - col("posa"),
           col("lenb") - col("posb"), lit(cap)))
@@ -1173,32 +1174,32 @@ object Dedup {
     // r15: counts from the materializations drive broadcast hints on
     // every small-side join below (same rationale as positionDupLens —
     // checkpointed tables carry no stats, so these all planned SMJ)
-    val mat = org.apache.spark.sql.GraftShim.materializeWithCount _
-    val (posD, nPos) = mat(posD0) // feeds occ filter + maximality
-    def maybeB(t: DataFrame, n: Long): DataFrame =
-      if (n <= (4L << 20)) broadcast(t) else t
+    val pm = materialize(posD0) // feeds occ filter + maximality
+    val (posD, nPos) = (pm.df, pm.rows)
     val occ = posD.filter(col("d") >= minLen)
-      .join(maybeB(posD.select(col("id"), (col("pos") + 1).as("pos"),
-          col("d").as("dprev")), nPos),
+      .join(BroadcastCap.hint(posD.select(col("id"),
+          (col("pos") + 1).as("pos"), col("d").as("dprev")), nPos),
         Seq("id", "pos"), "left")
       .filter(col("dprev").isNull || col("dprev") =!= col("d") + 1)
       .select(col("id"), col("pos"), col("d"))
-    val (keyed, nKeyed) = mat((0 to maxPow).map { p =>
+    val km = materialize((0 to maxPow).map { p =>
       val w = 1 << p
       val r1 = ranks(p).select(col("id").as("i1"), col("pos").as("p1"),
         col("r").as("r1"))
       val r2 = ranks(p).select(col("id").as("i2"), col("pos").as("p2"),
         col("r").as("r2"))
       occ.filter(col("d") >= w && col("d") <= 2L * w - 1)
-        .join(maybeB(r1, nPos),
+        .join(BroadcastCap.hint(r1, nPos),
           col("id") === col("i1") && col("pos") === col("p1"))
-        .join(maybeB(r2, nPos), col("id") === col("i2") &&
+        .join(BroadcastCap.hint(r2, nPos), col("id") === col("i2") &&
           col("p2") === col("pos") + col("d").cast("int") - w)
         .select(col("id"), col("pos"), col("d"), col("r1"), col("r2"))
     }.reduce(_ unionAll _))
+    val (keyed, nKeyed) = (km.df, km.rows)
     val keep = keyed.groupBy("d", "r1", "r2")
       .agg(min(struct(col("id"), col("pos"))).as("__keep"))
-    val covered = keyed.join(maybeB(keep, nKeyed), Seq("d", "r1", "r2"))
+    val covered = keyed
+      .join(BroadcastCap.hint(keep, nKeyed), Seq("d", "r1", "r2"))
       .filter(struct(col("id"), col("pos")) =!= col("__keep"))
       .select(col("id"),
         explode(sequence(col("pos"),
@@ -1206,7 +1207,7 @@ object Dedup {
       .distinct()
     val tokens = df.select(col(idCol).as("id"),
       posexplode(TextFunctions.tokens(col(textCol))).as(Seq("pos", "w")))
-    val kept = tokens.join(maybeB(covered, nKeyed << maxPow),
+    val kept = tokens.join(BroadcastCap.hint(covered, nKeyed << maxPow),
       Seq("id", "pos"), "left_anti")
     val rebuilt = kept.groupBy("id")
       .agg(array_join(
@@ -1232,11 +1233,10 @@ object Dedup {
     // exchange once the label table broadcasts (dup-graph vertex sets
     // are candidate-sized); executor-local checkpoint blocks free via
     // the ContextCleaner, replacing the old persist/unpersist pair
-    val (edges, _) = org.apache.spark.sql.GraftShim
-      .materializeHashPartitionedWithCount(
-        pairs.select(col("ida").as("src"), col("idb").as("dst"))
-          .unionAll(pairs.select(col("idb").as("src"), col("ida").as("dst")))
-          .distinct(), Seq("dst"))
+    val edges = materialize(
+      pairs.select(col("ida").as("src"), col("idb").as("dst"))
+        .unionAll(pairs.select(col("idb").as("src"), col("ida").as("dst")))
+        .distinct(), Hash(Seq("dst"))).df
     // Seed with one propagation step folded into the init — component =
     // min(self, direct neighbors). Near-dup graphs are mostly isolated
     // pairs/stars (diameter 1), which converge at iteration 1 this way

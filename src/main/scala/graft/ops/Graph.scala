@@ -1,6 +1,8 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, GraftShim}
+import org.apache.spark.sql.GraftShim.Layout.Hash
+import org.apache.spark.sql.GraftShim.materialize
 import org.apache.spark.sql.functions._
 import graft.functions.{SortedIntersectArr, SortedIntersectCount}
 
@@ -78,7 +80,6 @@ object Graph {
     require(dampingDen > 0 && dampingNum >= 0 && dampingNum <= dampingDen,
       "damping must be a fraction in [0, 1]")
     val w = weightCol.map(col(_).cast("long")).getOrElse(lit(1L))
-    val shim = org.apache.spark.sql.GraftShim
     // The r15 lesson (executed-plan dump, r14 weak flag): the old
     // "declare hash(dst), let AQE broadcast" spelling still shuffle-
     // WROTE the edge table twice per iteration — EnsureRequirements
@@ -101,16 +102,14 @@ object Graph {
     // materialized table, not from `edges` — link extraction can be the
     // expensive part); only the rare big-vertex fallback pays one extra
     // edge shuffle to re-key the stationary table by src
-    val (e0, _) = shim.materializeHashPartitionedWithCount(
-      edges.select(col("src"), col("dst"), w.as("__w")), Seq("dst"))
-    val (vertices, n) = shim.materializeHashPartitionedWithCount(
-      e0.select(col("src").as("id"))
-        .unionAll(e0.select(col("dst").as("id"))).distinct(), Seq("id"))
+    val e0 = materialize(
+      edges.select(col("src"), col("dst"), w.as("__w")), Hash(Seq("dst"))).df
+    val v = materialize(e0.select(col("src").as("id"))
+      .unionAll(e0.select(col("dst").as("id"))).distinct(), Hash(Seq("id")))
+    val (vertices, n) = (v.df, v.rows)
     require(n > 0, "pagerank: empty graph")
-    val bcast = n <= (4L << 20)
-    def maybeB(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
-    val e = if (bcast) e0
-      else shim.materializeHashPartitionedWithCount(e0, Seq("src"))._1
+    val bcast = BroadcastCap.fits(n)
+    val e = if (bcast) e0 else materialize(e0, Hash(Seq("src"))).df
     val outdeg = e.groupBy("src").agg(sum("__w").as("outdeg"))
       .localCheckpoint(true)
     val teleport = (Scale * (dampingDen - dampingNum) / dampingDen) / n
@@ -128,11 +127,12 @@ object Graph {
       // never matched the edge join before. outdeg broadcasts under
       // the same vertex cap so the fold join is itself exchange-free
       // (the zero-shuffle iteration pin stays green).
-      val rs0 = ranks.join(maybeB(outdeg), ranks("id") === outdeg("src"))
+      val rs0 = ranks.join(BroadcastCap.hint(outdeg, n),
+        ranks("id") === outdeg("src"))
       val rs = if (weightCol.isEmpty)
         rs0.select(col("src"), expr("rank_units DIV outdeg").as("__q"))
       else rs0.select(col("src"), col("rank_units"), col("outdeg"))
-      val inflow = e.join(maybeB(rs), Seq("src"))
+      val inflow = e.join(BroadcastCap.hint(rs, n), Seq("src"))
         .select(col("dst").as("id"),
           (if (weightCol.isEmpty) col("__q")
            else expr("rank_units * __w DIV outdeg")).as("c"))
@@ -148,7 +148,7 @@ object Graph {
       ranks =
         if (it == iterations) next
         else if (bcast) next.localCheckpoint(true)
-        else shim.materializeHashPartitionedWithCount(next, Seq("id"))._1
+        else materialize(next, Hash(Seq("id"))).df
     }
     ranks.withColumn("rank",
       round(col("rank_units").cast("double") / Scale, 6))
@@ -178,24 +178,21 @@ object Graph {
     require(dampingDen > 0 && dampingNum >= 0 && dampingNum <= dampingDen,
       "damping must be a fraction in [0, 1]")
     val w = weightCol.map(col(_).cast("long")).getOrElse(lit(1L))
-    val shim = org.apache.spark.sql.GraftShim
     val seedCol = seeds.columns.head
     // same per-iteration materialize-then-broadcast shape as
     // [[pagerank]] (see the r15 note there: the AQE-broadcast spelling
     // shuffle-wrote the edge list twice per iteration)
-    val (e0, _) = shim.materializeHashPartitionedWithCount(
-      edges.select(col("src"), col("dst"), w.as("__w")), Seq("dst"))
-    val (vertices, nV) = shim.materializeHashPartitionedWithCount(
-      e0.select(col("src").as("id"))
-        .unionAll(e0.select(col("dst").as("id"))).distinct()
-        .join(seeds.select(col(seedCol).as("id")).distinct()
-          .withColumn("__seed", lit(true)), Seq("id"), "left")
-        .select(col("id"),
-          coalesce(col("__seed"), lit(false)).as("__seed")), Seq("id"))
-    val bcast = nV <= (4L << 20)
-    def maybeB(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
-    val e = if (bcast) e0
-      else shim.materializeHashPartitionedWithCount(e0, Seq("src"))._1
+    val e0 = materialize(
+      edges.select(col("src"), col("dst"), w.as("__w")), Hash(Seq("dst"))).df
+    val v = materialize(e0.select(col("src").as("id"))
+      .unionAll(e0.select(col("dst").as("id"))).distinct()
+      .join(seeds.select(col(seedCol).as("id")).distinct()
+        .withColumn("__seed", lit(true)), Seq("id"), "left")
+      .select(col("id"),
+        coalesce(col("__seed"), lit(false)).as("__seed")), Hash(Seq("id")))
+    val (vertices, nV) = (v.df, v.rows)
+    val bcast = BroadcastCap.fits(nV)
+    val e = if (bcast) e0 else materialize(e0, Hash(Seq("src"))).df
     val outdeg = e.groupBy("src").agg(sum("__w").as("outdeg"))
       .localCheckpoint(true)
     val nSeeds = vertices.filter(col("__seed")).count()
@@ -208,11 +205,12 @@ object Graph {
       // see [[pagerank]] (one edge-stream join per iteration; the
       // unweighted per-edge term precomputes per vertex; outdeg
       // broadcasts under the same cap to keep the fold exchange-free)
-      val rs0 = ranks.join(maybeB(outdeg), ranks("id") === outdeg("src"))
+      val rs0 = ranks.join(BroadcastCap.hint(outdeg, nV),
+        ranks("id") === outdeg("src"))
       val rs = if (weightCol.isEmpty)
         rs0.select(col("src"), expr("rank_units DIV outdeg").as("__q"))
       else rs0.select(col("src"), col("rank_units"), col("outdeg"))
-      val inflow = e.join(maybeB(rs), Seq("src"))
+      val inflow = e.join(BroadcastCap.hint(rs, nV), Seq("src"))
         .select(col("dst").as("id"),
           (if (weightCol.isEmpty) col("__q")
            else expr("rank_units * __w DIV outdeg")).as("c"))
@@ -225,7 +223,7 @@ object Graph {
       ranks =
         if (it == iterations) next
         else if (bcast) next.localCheckpoint(true)
-        else shim.materializeHashPartitionedWithCount(next, Seq("id"))._1
+        else materialize(next, Hash(Seq("id"))).df
     }
     ranks
       .select(col("id"), col("rank_units").as("trust_units"),
@@ -254,23 +252,19 @@ object Graph {
     require(iterations >= 0 && k >= 1, "pprTopK: bad iterations/k")
     require(dampingDen > 0 && dampingNum >= 0 && dampingNum <= dampingDen,
       "damping must be a fraction in [0, 1]")
-    val shim = org.apache.spark.sql.GraftShim
     val seedCol = seeds.columns.head
-    val (e, _) = shim.materializeHashPartitionedWithCount(
-      edges.select(col("src"), col("dst")), Seq("src"))
+    val e =
+      materialize(edges.select(col("src"), col("dst")), Hash(Seq("src"))).df
     // r16: checkpointed tables carry no stats, so the per-iteration
     // state⋈outdeg and edge⋈state joins planned as shuffle joins —
     // the same stat-less trap pagerank/trustRank fixed in r15. Counts
     // ride the materializations and both joins broadcast under the
-    // family's 4M-row cap: the edge stream then passes one hash probe
+    // [[BroadcastCap]]: the edge stream then passes one hash probe
     // per iteration with zero exchanges on the stationary (hash(src))
     // edge table.
-    val (outdeg, nV) = shim.materializeWithCount(
-      e.groupBy("src").agg(count(lit(1)).as("outdeg")))
-    def maybeB(df: DataFrame, n: Long): DataFrame =
-      if (n <= (4L << 20)) broadcast(df) else df
-    val (sd, _) = shim.materializeWithCount(
-      seeds.select(col(seedCol).as("label")).distinct())
+    val od = materialize(e.groupBy("src").agg(count(lit(1)).as("outdeg")))
+    val (outdeg, nV) = (od.df, od.rows)
+    val sd = materialize(seeds.select(col(seedCol).as("label")).distinct()).df
     val teleport = Scale * (dampingDen - dampingNum) / dampingDen
     val seedRows = sd.select(col("label"), col("label").as("id"),
       lit(teleport).as("m"))
@@ -283,19 +277,18 @@ object Graph {
       // (state ⋈ outdeg, state-sized) so the edge expansion passes one
       // join and zero divisions (identical integer arithmetic; the
       // pagerank outdeg-fold, see there)
-      val st = state.join(maybeB(outdeg, nV),
+      val st = state.join(BroadcastCap.hint(outdeg, nV),
           state("id") === outdeg("src"))
         .select(col("label"), col("src"), expr("mass DIV outdeg").as("__q"))
-      val inflow = e.join(maybeB(st, nState), Seq("src"))
+      val inflow = e.join(BroadcastCap.hint(st, nState), Seq("src"))
         .select(col("label"), col("dst").as("id"), col("__q").as("c"))
         .groupBy("label", "id").agg(sum("c").as("inflow"))
         .select(col("label"), col("id"),
           expr(s"$dampingNum * inflow DIV $dampingDen").as("m"))
-      val (next, nNext) = shim.materializeWithCount(
-        inflow.unionAll(seedRows)
-          .groupBy("label", "id").agg(sum("m").as("mass")))
-      state = next
-      nState = nNext
+      val next = materialize(inflow.unionAll(seedRows)
+        .groupBy("label", "id").agg(sum("m").as("mass")))
+      state = next.df
+      nState = next.rows
     }
     val w = org.apache.spark.sql.expressions.Window.partitionBy("label")
       .orderBy(col("mass").desc, col("id"))
@@ -343,7 +336,6 @@ object Graph {
     *         a vertex with no out-edges has hub 0, no in-edges auth 0 */
   def hits(edges: DataFrame, iterations: Int = 4): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    val shim = org.apache.spark.sql.GraftShim
     // TWO stationary edge copies, one per half-step's GROUPING key
     // (r15, the pagerank lesson: AQE's broadcast conversion lands
     // after the edge shuffle stage already materialized, so the old
@@ -354,16 +346,14 @@ object Graph {
     // copy. 2× stationary storage buys zero edge-sized exchanges
     // across all iterations; past the broadcast cap the second copy
     // is skipped and the joins fall back to co-keyed shuffles.
-    val (eBySrc, _) = shim.materializeHashPartitionedWithCount(
-      edges.select(col("src"), col("dst")), Seq("src"))
-    val (vertices, n) = shim.materializeHashPartitionedWithCount(
-      eBySrc.select(col("src").as("id"))
-        .unionAll(eBySrc.select(col("dst").as("id"))).distinct(), Seq("id"))
+    val eBySrc = materialize(
+      edges.select(col("src"), col("dst")), Hash(Seq("src"))).df
+    val v = materialize(eBySrc.select(col("src").as("id"))
+      .unionAll(eBySrc.select(col("dst").as("id"))).distinct(), Hash(Seq("id")))
+    val (vertices, n) = (v.df, v.rows)
     require(n > 0, "hits: empty graph")
-    val bcast = n <= (4L << 20)
-    def maybeB(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
-    val eByDst = if (bcast)
-      shim.materializeHashPartitionedWithCount(eBySrc, Seq("dst"))._1
+    val bcast = BroadcastCap.fits(n)
+    val eByDst = if (bcast) materialize(eBySrc, Hash(Seq("dst"))).df
     else eBySrc
     // Each renorm references its input aggregate TWICE (the total and
     // the join back onto the vertex set), so without materialization
@@ -374,27 +364,27 @@ object Graph {
     // materialized score table is what the next half-step broadcasts
     // (a plain scan per build — never a chained plan).
     // r16: the mass total rides the materializing job itself
-    // (materializeHashPartitionedWithCountSum) instead of a separate
+    // (the materialization's sum column) instead of a separate
     // 1-row aggregate + broadcast per half-step — the total becomes a
     // literal in the renorm projection (identical integer arithmetic:
     // same BIGINT total, same DECIMAL(38,0) product, same DIV), and
     // 2 scheduler round-trips per iteration disappear.
     def renorm(rawIn: DataFrame): DataFrame = {
-      val (raw, _, total) = shim.materializeHashPartitionedWithCountSum(
-        rawIn, Seq("rid"), "raw")
+      val m = materialize(rawIn, Hash(Seq("rid")), Some("raw"))
+      val raw = m.df
       vertices.join(raw, vertices("id") === raw("rid"), "left")
         .select(col("id"),
           expr("CAST(coalesce(raw, 0L) AS DECIMAL(38,0)) " +
-            s"* $Scale DIV ${total}L").as("units"))
+            s"* $Scale DIV ${m.sum}L").as("units"))
     }
     var auth = vertices.withColumn("units", lit(Scale / n))
     var hubs = auth
     for (it <- 1 to iterations) {
       hubs = renorm(
-        eBySrc.join(maybeB(auth), eBySrc("dst") === auth("id"))
+        eBySrc.join(BroadcastCap.hint(auth, n), eBySrc("dst") === auth("id"))
           .groupBy(eBySrc("src").as("rid")).agg(sum("units").as("raw")))
       auth = renorm(
-        eByDst.join(maybeB(hubs), eByDst("src") === hubs("id"))
+        eByDst.join(BroadcastCap.hint(hubs, n), eByDst("src") === hubs("id"))
           .groupBy(eByDst("dst").as("rid")).agg(sum("units").as("raw")))
     }
     hubs.select(col("id"), col("units").as("hub_units"))
@@ -424,7 +414,6 @@ object Graph {
     * [[coOccurrenceEdges]] shape) or an undirected one; self-loops and
     * duplicates are dropped by the canonicalization. */
   def triangleStats(edges: DataFrame,
-                    broadcastEdgeCap: Long = 4L << 20,
                     assumeCanonical: Boolean = false): DataFrame = {
     // assumeCanonical: skip the least/greatest + distinct pre-shuffle
     // when the caller guarantees (src < dst, deduplicated) input — the
@@ -432,32 +421,32 @@ object Graph {
     // optimization round (guide §2.4: a distinct on already-unique
     // rows is a removable edge-sized exchange). Wrong input silently
     // miscounts, so it stays opt-in.
-    val e = (if (assumeCanonical)
+    // The materializing job also counts the edges; the count picks the
+    // join strategy below.
+    val em = materialize(if (assumeCanonical)
       edges.select(col("src").as("u"), col("dst").as("v"))
     else edges
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct())
-      .localCheckpoint(true)
-    // cheap action on checkpointed blocks; picks the join strategy below
-    val m = e.count()
-    // The oriented edge list is two longs per edge — up to
-    // `broadcastEdgeCap` edges (~64 MB) it broadcasts, turning BOTH
-    // triangle joins into map-side hash probes: the ~Σ outdeg² wedge
-    // stream pipelines through them with ZERO shuffle (the wedge set is
-    // the dominant intermediate — m^1.5-ish — and never materializes).
+    val (e, m) = (em.df, em.rows)
+    // The oriented edge list is two longs per edge — up to the
+    // [[BroadcastCap]] (~64 MB) it broadcasts, turning BOTH triangle
+    // joins into map-side hash probes: the ~Σ outdeg² wedge stream
+    // pipelines through them with ZERO shuffle (the wedge set is the
+    // dominant intermediate — m^1.5-ish — and never materializes).
     // Beyond the cap the hints drop away and AQE plans shuffle joins —
     // the crawl-scale path where no single edge list fits an executor.
-    def maybeB(df: DataFrame): DataFrame =
-      if (m <= broadcastEdgeCap) broadcast(df) else df
     val deg = e.select(col("u").as("id"))
       .unionAll(e.select(col("v").as("id")))
       .groupBy("id").agg(count(lit(1)).as("d"))
       .localCheckpoint(true)
     val ew = e
-      .join(maybeB(deg.select(col("id").as("u"), col("d").as("du"))), "u")
-      .join(maybeB(deg.select(col("id").as("v"), col("d").as("dv"))), "v")
+      .join(BroadcastCap.hint(
+        deg.select(col("id").as("u"), col("d").as("du")), m), "u")
+      .join(BroadcastCap.hint(
+        deg.select(col("id").as("v"), col("d").as("dv")), m), "v")
     val uFirst = col("du") < col("dv") ||
       (col("du") === col("dv") && col("u") < col("v"))
     val o = ew.select(
@@ -474,8 +463,9 @@ object Graph {
     val nbrs = o.groupBy("s").agg(sort_array(collect_list(col("t"))).as("ns"))
       .localCheckpoint(true)
     val tri = o
-      .join(maybeB(nbrs), "s")
-      .join(maybeB(nbrs.select(col("s").as("t"), col("ns").as("nt"))),
+      .join(BroadcastCap.hint(nbrs, m), "s")
+      .join(BroadcastCap.hint(
+        nbrs.select(col("s").as("t"), col("ns").as("nt")), m),
         Seq("t"), "left")
       .select(when(col("nt").isNull, lit(0L))
         .otherwise(sortedIntersectCount(col("ns"), col("nt")))
@@ -550,11 +540,9 @@ object Graph {
     // a plain localCheckpoint erases the layout and re-exchanges
     // every iteration (r14; measured 13.5 -> 7.8 s from layout alone,
     // further with the declaration)
-    val (adj0, _) = org.apache.spark.sql.GraftShim
-      .materializeHashPartitionedWithCount(
-        canon.select(col("u").as("id"), col("v").as("nbr"))
-          .unionAll(canon.select(col("v").as("id"), col("u").as("nbr"))),
-        Seq("id"))
+    val adj0 = materialize(canon.select(col("u").as("id"), col("v").as("nbr"))
+      .unionAll(canon.select(col("v").as("id"), col("u").as("nbr"))),
+      Hash(Seq("id"))).df
     // A checkpointed value table carries no size stats, so without a
     // hint every iteration's join plans sort-merge — re-SORTING the full
     // adjacency each round. The value table is one (id, c) row per
@@ -564,10 +552,11 @@ object Graph {
     // one job, not checkpoint + count). Past the cap, the adjacency is
     // instead pre-partitioned ONCE on the join key so the
     // per-iteration sort-merge join exchanges only the value table.
-    var (c, nVertices) = org.apache.spark.sql.GraftShim.materializeWithCount(
-      adj0.groupBy("id").agg(count(lit(1)).cast("int").as("c")))
-    val bcast = nVertices <= (4L << 20)
-    def maybeB(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
+    val c0 =
+      materialize(adj0.groupBy("id").agg(count(lit(1)).cast("int").as("c")))
+    var c = c0.df
+    val nVertices = c0.rows
+    val bcast = BroadcastCap.fits(nVertices)
     // broadcast branch: pre-partition the adjacency by id ONCE —
     // HashPartitioning(id) satisfies ClusteredDistribution(id, nc) (a
     // subset of the grouping keys), so BOTH per-iteration aggregates
@@ -600,7 +589,8 @@ object Graph {
     while (!done) {
       it += 1
       val next = adj
-        .join(maybeB(c.select(col("id").as("nbr"), col("c").as("nc"))), "nbr")
+        .join(BroadcastCap.hint(
+          c.select(col("id").as("nbr"), col("c").as("nc")), nVertices), "nbr")
         .groupBy("id", "nc").agg(count(lit(1)).as("cnt"))
         .groupBy("id").agg(histAgg.as("hist"))
         .select(col("id"), hIndex(col("hist")).as("c"))
@@ -636,7 +626,6 @@ object Graph {
     *
     * @return surviving canonical edges (src < dst) */
   def kCore(edges: DataFrame, k: Int, maxIter: Int = 100,
-            broadcastVertexCap: Long = 4L << 20,
             assumeCanonical: Boolean = false): DataFrame = {
     require(k >= 1, "k must be >= 1")
     // every materialization folds its row count into the checkpoint
@@ -654,36 +643,34 @@ object Graph {
     // map-side combine, while the adjacency spelling doubles the
     // per-round checkpoint copy volume (2m vs m rows). Reverted —
     // kept the r14 canonical-edge loop below.
-    val mat = org.apache.spark.sql.GraftShim.materializeWithCount _
-    var (e, m) = mat(if (assumeCanonical) edges.select("src", "dst")
+    var e = materialize(if (assumeCanonical) edges.select("src", "dst")
     else edges
       .select(least(col("src"), col("dst")).as("src"),
         greatest(col("src"), col("dst")).as("dst"))
       .filter(col("src") =!= col("dst"))
       .distinct())
-    var done = m == 0
+    var done = e.rows == 0
     var it = 0
     while (!done && it < maxIter) {
       it += 1
-      val deg = e.select(col("src").as("id"))
-        .unionAll(e.select(col("dst").as("id")))
+      val deg = e.df.select(col("src").as("id"))
+        .unionAll(e.df.select(col("dst").as("id")))
         .groupBy("id").agg(count(lit(1)).as("d"))
       // keep is materialized (reused by both semi joins) and therefore
       // carries no size stats — unhinted, both semi joins plan SMJ and
       // SORT the surviving edge list twice per round. It is one id per
       // surviving vertex: broadcast below the cap (hash semi-probe, no
       // edge sort — measured 6.8 s → 4.7 s on the bench k-core), AQE beyond.
-      val (keep, nKeep) = mat(deg.filter(col("d") >= k).select("id"))
-      val kb = if (nKeep <= broadcastVertexCap) broadcast(keep) else keep
-      val (e2, m2) = mat(e
+      val keep = materialize(deg.filter(col("d") >= k).select("id"))
+      val kb = BroadcastCap.hint(keep.df, keep.rows)
+      val e2 = materialize(e.df
         .join(kb.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
         .join(kb.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
         .select("src", "dst"))
-      done = m2 == m || m2 == 0
+      done = e2.rows == e.rows || e2.rows == 0
       e = e2
-      m = m2
     }
-    e
+    e.df
   }
 
   /** COMMUNITY DETECTION by synchronous label propagation (Raghavan,
@@ -697,7 +684,7 @@ object Graph {
     * expected community diameter).
     *
     * Shape per iteration: adjacency ⋈ labels (label table broadcast ≤
-    * `broadcastVertexCap` vertices, the [[coreness]] contract), then
+    * [[BroadcastCap]] vertices, the [[coreness]] contract), then
     * the per-vertex argmax from the LABEL HISTOGRAM — groupBy(id, lbl)
     * with map-side combine collapses a hub's neighbour list to its
     * distinct incident labels BEFORE the shuffle, and the argmax is
@@ -709,7 +696,6 @@ object Graph {
     * @param edges undirected edge list (either or both directions)
     * @return (id, community) — community = converged label */
   def labelPropagation(edges: DataFrame, iterations: Int = 4,
-                       broadcastVertexCap: Long = 4L << 20,
                        assumeCanonical: Boolean = false): DataFrame = {
     require(iterations >= 0, "iterations must be >= 0")
     // assumeCanonical skips the least/greatest + distinct pre-shuffle
@@ -730,20 +716,17 @@ object Graph {
     // set), so every LPA iteration plans with no exchange after the
     // broadcast label join (the r14 coreness co-partitioning trick;
     // measured 13.5 → 7.8 s there in the same window)
-    val (adj, _) = org.apache.spark.sql.GraftShim
-      .materializeHashPartitionedWithCount(
-        canon.select(col("u").as("id"), col("v").as("nbr"))
-          .unionAll(canon.select(col("v").as("id"), col("u").as("nbr"))),
-        Seq("id"))
+    val adj = materialize(canon.select(col("u").as("id"), col("v").as("nbr"))
+      .unionAll(canon.select(col("v").as("id"), col("u").as("nbr"))),
+      Hash(Seq("id"))).df
     // label-table materialization and vertex count in ONE job
-    var (l, nVertices) = org.apache.spark.sql.GraftShim.materializeWithCount(
-      adj.select(col("id")).distinct()
-        .select(col("id"), col("id").as("lbl")))
-    def maybeB(df: DataFrame): DataFrame =
-      if (nVertices <= broadcastVertexCap) broadcast(df) else df
+    val l0 = materialize(adj.select(col("id")).distinct()
+      .select(col("id"), col("id").as("lbl")))
+    var l = l0.df
     for (it <- 1 to iterations) {
       val next = adj
-        .join(maybeB(l.select(col("id").as("nbr"), col("lbl"))), "nbr")
+        .join(BroadcastCap.hint(
+          l.select(col("id").as("nbr"), col("lbl")), l0.rows), "nbr")
         .groupBy("id", "lbl").agg(count(lit(1)).as("cnt"))
         .groupBy("id")
         .agg(max(struct(col("cnt"),
@@ -772,7 +755,6 @@ object Graph {
     * crawl/co-purchase graphs) give r < 0; r is null for degree-regular
     * graphs (zero variance). */
   def assortativity(edges: DataFrame,
-                    broadcastVertexCap: Long = 4L << 20,
                     assumeCanonical: Boolean = false): DataFrame = {
     // assumeCanonical: see [[triangleStats]] (r15, guide §2.4)
     val e = (if (assumeCanonical)
@@ -783,17 +765,17 @@ object Graph {
       .filter(col("u") =!= col("v"))
       .distinct())
       .localCheckpoint(true)
-    val deg = e.select(col("u").as("id"))
+    // the vertex count rides the degree table's materializing job
+    val dm = materialize(e.select(col("u").as("id"))
       .unionAll(e.select(col("v").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("d"))
-      .localCheckpoint(true)
-    val n = deg.count()
-    def maybeB(df: DataFrame): DataFrame =
-      if (n <= broadcastVertexCap) broadcast(df) else df
+      .groupBy("id").agg(count(lit(1)).as("d")))
+    val (deg, n) = (dm.df, dm.rows)
     val dec = "decimal(38,0)"
     val ends = e
-      .join(maybeB(deg.select(col("id").as("u"), col("d").as("du"))), "u")
-      .join(maybeB(deg.select(col("id").as("v"), col("d").as("dv"))), "v")
+      .join(BroadcastCap.hint(
+        deg.select(col("id").as("u"), col("d").as("du")), n), "u")
+      .join(BroadcastCap.hint(
+        deg.select(col("id").as("v"), col("d").as("dv")), n), "v")
       // both directions of each edge: (du,dv) and (dv,du)
       .select(col("du"), col("dv"))
     val sums = ends.agg(
@@ -837,27 +819,26 @@ object Graph {
     * @return (id, deg BIGINT, triangles BIGINT, lcc_micro BIGINT,
     *         lcc DOUBLE) */
   def localClustering(edges: DataFrame,
-                      broadcastEdgeCap: Long = 4L << 20,
                       assumeCanonical: Boolean = false): DataFrame = {
-    // assumeCanonical: see [[triangleStats]] (r15, guide §2.4)
-    val e = (if (assumeCanonical)
+    // assumeCanonical: see [[triangleStats]] (r15, guide §2.4); the
+    // edge count rides the materializing job, as there
+    val em = materialize(if (assumeCanonical)
       edges.select(col("src").as("u"), col("dst").as("v"))
     else edges
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct())
-      .localCheckpoint(true)
-    val m = e.count()
-    def maybeB(df: DataFrame): DataFrame =
-      if (m <= broadcastEdgeCap) broadcast(df) else df
+    val (e, m) = (em.df, em.rows)
     val deg = e.select(col("u").as("id"))
       .unionAll(e.select(col("v").as("id")))
       .groupBy("id").agg(count(lit(1)).as("d"))
       .localCheckpoint(true)
     val ew = e
-      .join(maybeB(deg.select(col("id").as("u"), col("d").as("du"))), "u")
-      .join(maybeB(deg.select(col("id").as("v"), col("d").as("dv"))), "v")
+      .join(BroadcastCap.hint(
+        deg.select(col("id").as("u"), col("d").as("du")), m), "u")
+      .join(BroadcastCap.hint(
+        deg.select(col("id").as("v"), col("d").as("dv")), m), "v")
     val uFirst = col("du") < col("dv") ||
       (col("du") === col("dv") && col("u") < col("v"))
     val o = ew.select(
@@ -885,8 +866,9 @@ object Graph {
     val ws = coalesce(when(col("nt").isNotNull,
       sortedIntersectArr(col("ns"), col("nt"))), empty)
     val withWs = o
-      .join(maybeB(nbrs), "s")
-      .join(maybeB(nbrs.select(col("s").as("t"), col("ns").as("nt"))),
+      .join(BroadcastCap.hint(nbrs, m), "s")
+      .join(BroadcastCap.hint(
+        nbrs.select(col("s").as("t"), col("ns").as("nt")), m),
         Seq("t"), "left")
       .select(col("s"), col("t"), size(ws).cast("long").as("c"),
         ws.as("ws"))
@@ -940,17 +922,16 @@ object Graph {
     *         with u < v, non-adjacent pairs only */
   def commonNeighbors(edges: DataFrame,
                       maxCenterDeg: Option[Long] = None,
-                      broadcastVertexCap: Long = 4L << 20,
                       assumeCanonical: Boolean = false): DataFrame = {
     // assumeCanonical: see [[triangleStats]] (r15, guide §2.4)
-    val (e, nEdges) = org.apache.spark.sql.GraftShim.materializeWithCount(
-      if (assumeCanonical)
-        edges.select(col("src").as("u"), col("dst").as("v"))
-      else edges
-        .select(least(col("src"), col("dst")).as("u"),
-          greatest(col("src"), col("dst")).as("v"))
-        .filter(col("u") =!= col("v"))
-        .distinct())
+    val em = materialize(if (assumeCanonical)
+      edges.select(col("src").as("u"), col("dst").as("v"))
+    else edges
+      .select(least(col("src"), col("dst")).as("u"),
+        greatest(col("src"), col("dst")).as("v"))
+      .filter(col("u") =!= col("v"))
+      .distinct())
+    val e = em.df
     val adj = e.select(col("u").as("id"), col("v").as("nbr"))
       .unionAll(e.select(col("v").as("id"), col("u").as("nbr")))
     // r16 (guide §2.3/§2.4, the postings-list pattern of the dedup
@@ -964,26 +945,25 @@ object Graph {
     // aggregate ALSO yields each vertex's degree (size of its list)
     // and the vertex count, deleting the separate degree aggregate,
     // its checkpoint, and the maxCenterDeg semi-join.
-    val (lists, nVertices) =
-      org.apache.spark.sql.GraftShim.materializeWithCount(
-        adj.groupBy("id").agg(sort_array(collect_list(col("nbr"))).as("ns")))
+    val lm = materialize(
+      adj.groupBy("id").agg(sort_array(collect_list(col("nbr"))).as("ns")))
+    val (lists, nVertices) = (lm.df, lm.rows)
     val deg = lists.select(col("id"), size(col("ns")).cast("long").as("d"))
     val centers = maxCenterDeg match {
       case Some(cap) => lists.filter(size(col("ns")) <= cap)
       case None => lists
     }
-    def maybeB(df: DataFrame): DataFrame =
-      if (nVertices <= broadcastVertexCap) broadcast(df) else df
     centers
       .select(posexplode(col("ns")).as(Seq("i", "a")), col("ns"))
       .select(col("a").as("u"), explode(slice(col("ns"), col("i") + lit(2),
         greatest(size(col("ns")) - col("i") - lit(1), lit(0)))).as("v"))
       .groupBy(col("u"), col("v"))
       .agg(count(lit(1)).as("common"))
-      .join(if (nEdges <= broadcastVertexCap) broadcast(e) else e,
-        Seq("u", "v"), "left_anti")
-      .join(maybeB(deg.select(col("id").as("u"), col("d").as("du"))), "u")
-      .join(maybeB(deg.select(col("id").as("v"), col("d").as("dv"))), "v")
+      .join(BroadcastCap.hint(e, em.rows), Seq("u", "v"), "left_anti")
+      .join(BroadcastCap.hint(
+        deg.select(col("id").as("u"), col("d").as("du")), nVertices), "u")
+      .join(BroadcastCap.hint(
+        deg.select(col("id").as("v"), col("d").as("dv")), nVertices), "v")
       .withColumn("jaccard_micro",
         expr("common * 1000000 DIV (du + dv - common)"))
       .select("u", "v", "common", "du", "dv", "jaccard_micro")
@@ -1137,7 +1117,7 @@ object Graph {
     * count-folding checkpoint job (GraftShim, the betweenness action-
     * economy contract); the visited set is a lazy union over those
     * checkpointed frontiers, and frontier/visited probes broadcast
-    * below `broadcastVertexCap` ids (the [[kCore]] keep-list
+    * below the [[BroadcastCap]] (the [[kCore]] keep-list
     * discipline; AQE handles them beyond). Distances are exact
     * integers — same result on any engine, any partitioning.
     *
@@ -1146,7 +1126,6 @@ object Graph {
     * @param seeds one-column frame of seed vertex ids (column `id`)
     * @return (id, dist) — dist 0 for seeds, ≤ maxHops elsewhere */
   def bfsDistances(edges: DataFrame, seeds: DataFrame, maxHops: Int = 6,
-                   broadcastVertexCap: Long = 4L << 20,
                    assumeDistinct: Boolean = false): DataFrame = {
     require(maxHops >= 0, "maxHops must be >= 0")
     // r14 action economy (the betweenness r13 contract): each hop's
@@ -1155,7 +1134,6 @@ object Graph {
     // already-checkpointed frontiers (the per-hop visited re-checkpoint
     // re-copied O(reached) rows every hop for nothing). One job per
     // hop instead of three.
-    val mat = org.apache.spark.sql.GraftShim.materializeWithCount _
     // dst-partitioned ONCE: the per-hop frontier distinct keys on
     // dst and the broadcast probes preserve this partitioning — no
     // per-hop exchange (r14 co-partitioning trick). assumeDistinct:
@@ -1163,26 +1141,26 @@ object Graph {
     // list (duplicate edges don't change BFS REACHABILITY, but they
     // would inflate the per-hop frontier expansion, so the dedup is
     // kept by default; r15 opt, guide §2.4)
-    val (e, _) = org.apache.spark.sql.GraftShim
-      .materializeHashPartitionedWithCount(
-        if (assumeDistinct) edges.select(col("src"), col("dst"))
-        else edges.select(col("src"), col("dst")).distinct(), Seq("dst"))
-    def maybeB(df: DataFrame, n: Long): DataFrame =
-      if (n <= broadcastVertexCap) broadcast(df) else df
-    val (seed0, n0) = mat(seeds.select(col("id")).distinct())
-    var visited = seed0.withColumn("dist", lit(0L))
-    var frontier = seed0
-    var nFrontier = n0
+    val e = materialize(
+      if (assumeDistinct) edges.select(col("src"), col("dst"))
+      else edges.select(col("src"), col("dst")).distinct(), Hash(Seq("dst"))).df
+    val seed0 = materialize(seeds.select(col("id")).distinct())
+    var visited = seed0.df.withColumn("dist", lit(0L))
+    var frontier = seed0.df
+    var nFrontier = seed0.rows
     var nVisited = nFrontier
     var h = 0L
     while (nFrontier > 0 && h < maxHops) {
       h += 1
-      val (next, nf) = mat(e
-        .join(maybeB(frontier.withColumnRenamed("id", "src"), nFrontier),
+      val nm = materialize(e
+        .join(BroadcastCap.hint(
+          frontier.withColumnRenamed("id", "src"), nFrontier),
           Seq("src"), "left_semi")
         .select(col("dst").as("id")).distinct()
-        .join(maybeB(visited.select("id"), nVisited), Seq("id"), "left_anti"))
-      nFrontier = nf
+        .join(BroadcastCap.hint(visited.select("id"), nVisited),
+          Seq("id"), "left_anti"))
+      val next = nm.df
+      nFrontier = nm.rows
       if (nFrontier > 0) {
         visited = visited.unionAll(next.withColumn("dist", lit(h)))
         nVisited += nFrontier
@@ -1209,7 +1187,7 @@ object Graph {
     * Same level-synchronous shape as [[bfsDistances]] with the label
     * carried through the frontier: hop h joins the (label, id) frontier
     * to the edge list on src (co-keyed shuffle; the frontier side
-    * broadcasts below `broadcastRowCap` rows), dedups per (label, dst),
+    * broadcasts below the [[BroadcastCap]]), dedups per (label, dst),
     * and anti-joins the visited table on BOTH columns. State is
     * |seeds| × reached — keep the pivot set small (tens), which is
     * exactly the sampled-centrality regime.
@@ -1219,36 +1197,32 @@ object Graph {
     * @return (label, id, dist) with dist ≤ maxHops, dist 0 = the seed */
   def bfsDistancesLabeled(edges: DataFrame, seeds: DataFrame,
                           maxHops: Int = 6,
-                          broadcastRowCap: Long = 4L << 20,
                           assumeDistinct: Boolean = false): DataFrame = {
     require(maxHops >= 0, "maxHops must be >= 0")
     // same one-job-per-hop shape as [[bfsDistances]] (r14)
-    val mat = org.apache.spark.sql.GraftShim.materializeWithCount _
     // dst-partitioned ONCE: the per-hop frontier distinct keys on
     // dst and the broadcast probes preserve this partitioning — no
     // per-hop exchange (r14 co-partitioning trick). assumeDistinct:
     // see [[bfsDistances]] (r15, guide §2.4)
-    val (e, _) = org.apache.spark.sql.GraftShim
-      .materializeHashPartitionedWithCount(
-        if (assumeDistinct) edges.select(col("src"), col("dst"))
-        else edges.select(col("src"), col("dst")).distinct(), Seq("dst"))
-    def maybeB(df: DataFrame, n: Long): DataFrame =
-      if (n <= broadcastRowCap) broadcast(df) else df
-    val (seed0, n0) = mat(seeds.select(col("label"), col("id")).distinct())
-    var visited = seed0.withColumn("dist", lit(0L))
-    var frontier = seed0
-    var nFrontier = n0
+    val e = materialize(
+      if (assumeDistinct) edges.select(col("src"), col("dst"))
+      else edges.select(col("src"), col("dst")).distinct(), Hash(Seq("dst"))).df
+    val seed0 = materialize(seeds.select(col("label"), col("id")).distinct())
+    var visited = seed0.df.withColumn("dist", lit(0L))
+    var frontier = seed0.df
+    var nFrontier = seed0.rows
     var nVisited = nFrontier
     var h = 0L
     while (nFrontier > 0 && h < maxHops) {
       h += 1
-      val (next, nf) = mat(e
-        .join(maybeB(frontier.withColumnRenamed("id", "src"), nFrontier),
-          Seq("src"))
+      val nm = materialize(e
+        .join(BroadcastCap.hint(
+          frontier.withColumnRenamed("id", "src"), nFrontier), Seq("src"))
         .select(col("label"), col("dst").as("id")).distinct()
-        .join(maybeB(visited.select("label", "id"), nVisited),
+        .join(BroadcastCap.hint(visited.select("label", "id"), nVisited),
           Seq("label", "id"), "left_anti"))
-      nFrontier = nf
+      val next = nm.df
+      nFrontier = nm.rows
       if (nFrontier > 0) {
         visited = visited.unionAll(next.withColumn("dist", lit(h)))
         nVisited += nFrontier
@@ -1307,7 +1281,7 @@ object Graph {
     * centrality regime (keep pivots in the tens).
     *
     * Action economy (r13): each frontier materializes through
-    * [[org.apache.spark.sql.GraftShim.materializeWithCount]] — the
+    * [[org.apache.spark.sql.GraftShim.materialize]] — the
     * checkpoint-materializing job itself returns the count, instead of
     * the eager-localCheckpoint + separate-count pair that ran two jobs
     * per level — and the visited set is a lazy union over the
@@ -1319,41 +1293,38 @@ object Graph {
     * @return (id, bc_micro) for non-pivot vertices with bc_micro > 0 */
   def betweennessPivots(edges: DataFrame, pivots: DataFrame,
                         maxHops: Int = 3,
-                        broadcastRowCap: Long = 4L << 20,
                         assumeDistinct: Boolean = false): DataFrame = {
     require(maxHops >= 1, "maxHops must be >= 1")
-    val mat = org.apache.spark.sql.GraftShim.materializeWithCount _
     // dst-partitioned ONCE: each forward level's grouped frontier
     // aggregate keys on (label, dst) and the broadcast frontier join
     // preserves this partitioning, so the per-level exchange vanishes
     // (the r14 coreness co-partitioning trick). assumeDistinct: skip
     // the dedup on guaranteed-deduplicated input — a duplicate edge
     // would double-count σ paths, so it stays opt-in (r15, guide §2.4)
-    val (e, _) = org.apache.spark.sql.GraftShim
-      .materializeHashPartitionedWithCount(
-        if (assumeDistinct) edges.select(col("src"), col("dst"))
-        else edges.select(col("src"), col("dst")).distinct(), Seq("dst"))
-    def maybeB(df: DataFrame, n: Long): DataFrame =
-      if (n <= broadcastRowCap) broadcast(df) else df
+    val e = materialize(
+      if (assumeDistinct) edges.select(col("src"), col("dst"))
+      else edges.select(col("src"), col("dst")).distinct(), Hash(Seq("dst"))).df
     // forward: levels(h) = (label, id, sig); per-level counts retained
     // for the backward phase's broadcast decisions
-    val (l0, n0) = mat(pivots.select(col("id").as("label"), col("id"))
+    val l0 = materialize(pivots.select(col("id").as("label"), col("id"))
       .distinct().withColumn("sig", lit(1L).cast("decimal(38,0)")))
-    val levels = scala.collection.mutable.ArrayBuffer(l0)
-    val nLevels = scala.collection.mutable.ArrayBuffer(n0)
-    var visited = l0.select("label", "id")
-    var nFrontier = n0
+    val levels = scala.collection.mutable.ArrayBuffer(l0.df)
+    val nLevels = scala.collection.mutable.ArrayBuffer(l0.rows)
+    var visited = l0.df.select("label", "id")
+    var nFrontier = l0.rows
     var nVisited = nFrontier
     var h = 0
     while (nFrontier > 0 && h < maxHops) {
       h += 1
-      val (next, n) = mat(e
-        .join(maybeB(levels.last.withColumnRenamed("id", "src"),
+      val nm = materialize(e
+        .join(BroadcastCap.hint(levels.last.withColumnRenamed("id", "src"),
           nFrontier), Seq("src"))
         .groupBy(col("label"), col("dst").as("id"))
         .agg(sum("sig").as("sig"))
-        .join(maybeB(visited, nVisited), Seq("label", "id"), "left_anti"))
-      nFrontier = n
+        .join(BroadcastCap.hint(visited, nVisited), Seq("label", "id"),
+          "left_anti"))
+      val next = nm.df
+      nFrontier = nm.rows
       if (nFrontier > 0) {
         levels += next
         nLevels += nFrontier
@@ -1387,11 +1358,11 @@ object Graph {
       val vSide = levels(k).select(col("label"), col("id").as("src"),
         col("sig").as("__sv"))
       val expanded = if (nLevels(k) < nLevels(k + 1))
-        e.join(maybeB(vSide, nLevels(k)), Seq("src"))
-          .join(maybeB(dSide, nLevels(k + 1)), Seq("label", "dst"))
+        e.join(BroadcastCap.hint(vSide, nLevels(k)), Seq("src"))
+          .join(BroadcastCap.hint(dSide, nLevels(k + 1)), Seq("label", "dst"))
       else
-        e.join(maybeB(dSide, nLevels(k + 1)), Seq("dst"))
-          .join(maybeB(vSide, nLevels(k)), Seq("label", "src"))
+        e.join(BroadcastCap.hint(dSide, nLevels(k + 1)), Seq("dst"))
+          .join(BroadcastCap.hint(vSide, nLevels(k)), Seq("label", "src"))
       val dkAgg = expanded
         .groupBy(col("label"), col("src").as("id"))
         .agg(sum(expr(
@@ -1433,7 +1404,6 @@ object Graph {
     * @return (start, walk_id, path) — path = space-joined node ids,
     *         steps+1 entries */
   def walkCorpus(edges: DataFrame, steps: Int = 3, walksPerNode: Int = 1,
-                 broadcastVertexCap: Long = 4L << 20,
                  assumeCanonical: Boolean = false): DataFrame = {
     require(steps >= 1, "walkCorpus needs steps >= 1")
     require(walksPerNode >= 1, "walkCorpus needs walksPerNode >= 1")
@@ -1445,13 +1415,12 @@ object Graph {
         greatest(col("src"), col("dst")).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
-    val adj = canon.select(col("u").as("id"), col("v").as("nbr"))
+    // materialized: seeds + one probe per step; the vertex count rides
+    // the same job
+    val am = materialize(canon.select(col("u").as("id"), col("v").as("nbr"))
       .unionAll(canon.select(col("v").as("id"), col("u").as("nbr")))
-      .groupBy("id").agg(sort_array(collect_list("nbr")).as("ns"))
-      .localCheckpoint(true) // seeds + one probe per step
-    val nV = adj.count()
-    def maybeB(df: DataFrame): DataFrame =
-      if (nV <= broadcastVertexCap) broadcast(df) else df
+      .groupBy("id").agg(sort_array(collect_list("nbr")).as("ns")))
+    val (adj, nV) = (am.df, am.rows)
     var state = adj
       .select(col("id").as("start"),
         explode(expr(s"sequence(1, $walksPerNode)")).as("__w"))
@@ -1460,7 +1429,8 @@ object Graph {
       .withColumn("__path", array(col("start")))
     for (s <- 1 to steps) {
       state = state
-        .join(maybeB(adj.withColumnRenamed("id", "cur")), Seq("cur"))
+        .join(BroadcastCap.hint(adj.withColumnRenamed("id", "cur"), nV),
+          Seq("cur"))
         .withColumn("__nxt", expr("element_at(ns, CAST(" +
           s"CAST(conv(substring(md5(concat(start, '_', walk_id, '_', " +
           s"$s, '_', cur)), 1, 8), 16, 10) AS BIGINT) % size(ns) + 1" +
@@ -1496,7 +1466,6 @@ object Graph {
     * @param k     truss order (k ≥ 3; support threshold = k − 2)
     * @return surviving (u, v, support) — support within the survivors */
   def ktruss(edges: DataFrame, k: Int, iterations: Int = 2,
-             broadcastEdgeCap: Long = 4L << 20,
              assumeCanonical: Boolean = false): DataFrame = {
     require(k >= 3, "ktruss needs k >= 3")
     require(iterations >= 0, "iterations must be >= 0")
@@ -1511,15 +1480,15 @@ object Graph {
       .localCheckpoint(true)
     def support(ec: DataFrame): DataFrame = {
       val m = ec.count()
-      def maybeB(df: DataFrame): DataFrame =
-        if (m <= broadcastEdgeCap) broadcast(df) else df
       val deg = ec.select(col("u").as("id"))
         .unionAll(ec.select(col("v").as("id")))
         .groupBy("id").agg(count(lit(1)).as("d"))
       val ew = ec
-        .join(maybeB(deg.select(col("id").as("u"), col("d").as("du"))),
+        .join(BroadcastCap.hint(
+          deg.select(col("id").as("u"), col("d").as("du")), m),
           "u")
-        .join(maybeB(deg.select(col("id").as("v"), col("d").as("dv"))),
+        .join(BroadcastCap.hint(
+          deg.select(col("id").as("v"), col("d").as("dv")), m),
           "v")
       val uFirst = col("du") < col("dv") ||
         (col("du") === col("dv") && col("u") < col("v"))
@@ -1541,8 +1510,9 @@ object Graph {
       // checkpoints once and three codegen projections (edge rows +
       // one plain explode consumed twice) rebuild the identical
       // per-edge support multiset
-      val withWs = o.join(maybeB(nbrs), "s")
-        .join(maybeB(nbrs.select(col("s").as("t"), col("ns").as("nt"))),
+      val withWs = o.join(BroadcastCap.hint(nbrs, m), "s")
+        .join(BroadcastCap.hint(
+          nbrs.select(col("s").as("t"), col("ns").as("nt")), m),
           Seq("t"), "left")
         .select(col("s"), col("t"), size(ws).cast("long").as("c"),
           ws.as("ws"))
@@ -1601,17 +1571,18 @@ object Graph {
     // r15: the label table is vertex-sized and checkpointed (no
     // stats), so both endpoint joins planned SMJ — two full edge-list
     // exchanges + sorts. Materialize-with-count and broadcast under
-    // the family's 4M-vertex cap: the tagging pass becomes two hash
+    // the [[BroadcastCap]]: the tagging pass becomes two hash
     // probes over the un-shuffled edge list (guide §3.1).
-    val (lab, nLab) = org.apache.spark.sql.GraftShim.materializeWithCount(
+    val lm = materialize(
       labels.select(col(idCol).as("__id"), col(labelCol).as("__c")))
-    def maybeB(df: DataFrame): DataFrame =
-      if (nLab <= (4L << 20)) broadcast(df) else df
+    val (lab, nLab) = (lm.df, lm.rows)
     val e = edges.select(col("src").as("__u"), col("dst").as("__v"))
     val tagged = e
-      .join(maybeB(lab.select(col("__id").as("__u"), col("__c").as("__cu"))),
+      .join(BroadcastCap.hint(
+        lab.select(col("__id").as("__u"), col("__c").as("__cu")), nLab),
         "__u")
-      .join(maybeB(lab.select(col("__id").as("__v"), col("__c").as("__cv"))),
+      .join(BroadcastCap.hint(
+        lab.select(col("__id").as("__v"), col("__c").as("__cv")), nLab),
         "__v")
       .localCheckpoint(true) // m count + intra count share it
     val m = tagged.agg(count(lit(1)).as("__m"))
@@ -1698,10 +1669,10 @@ object Graph {
     * Every step is a co-keyed join + a map-side-combinable min/count
     * aggregate — no windows, no driver-side graph state on the
     * distributed path. Loop frames materialize through
-    * [[org.apache.spark.sql.GraftShim.materializeWithCount]] (lineage
+    * [[org.apache.spark.sql.GraftShim.materialize]] (lineage
     * stays O(1), the convergence/broadcast-eligibility count folds
     * into the materialization job); label/frontier tables broadcast
-    * below `broadcastVertexCap` with the shuffled fallback beyond.
+    * below the [[BroadcastCap]] with the shuffled fallback beyond.
     *
     * Below `driverMaxEdges` (integral ids) the edge list collects and
     * an iterative Tarjan answers in ONE job — the
@@ -1726,27 +1697,24 @@ object Graph {
     *         vertex incident to at least one non-loop edge */
   def scc(edges: DataFrame, maxRounds: Int = 50, trimIters: Int = 50,
           maxFixpointIters: Int = 100,
-          broadcastVertexCap: Long = 4L << 20,
           driverMaxEdges: Long = 1L << 20): DataFrame = {
-    val mat = org.apache.spark.sql.GraftShim.materializeWithCount _
-    def maybeB(df: DataFrame, n: Long): DataFrame =
-      if (n <= broadcastVertexCap) broadcast(df) else df
     val idType = edges.schema("src").dataType
     val integralIds = idType match {
       case org.apache.spark.sql.types.LongType |
            org.apache.spark.sql.types.IntegerType => true
       case _ => false
     }
-    var (e, ne) = mat(edges.select(col("src"), col("dst"))
+    val e0 = materialize(edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")).distinct())
+    var (e, ne) = (e0.df, e0.rows)
     if (integralIds && ne <= driverMaxEdges)
       return sccDriver(e, ne, idType)
     val parts = scala.collection.mutable.ListBuffer.empty[DataFrame]
     // every vertex the SWEEP never claims is a singleton SCC (trim
     // removes exactly the provably-cycle-free: no bookkeeping per pass,
     // one anti-join at the end settles them all)
-    val (initVerts, _) = mat(e.select(col("src").as("id"))
-      .unionAll(e.select(col("dst").as("id"))).distinct())
+    val initVerts = materialize(e.select(col("src").as("id"))
+      .unionAll(e.select(col("dst").as("id"))).distinct()).df
     // min-label fixpoint, `relaxPerSync` hops per materialization: the
     // edge set gains self-loops once so each relax step is ONE join +
     // one min-aggregate referencing the previous labels exactly once —
@@ -1763,10 +1731,9 @@ object Graph {
       // join(broadcast labels) + groupBy(dst), so the whole K-hop
       // chain pipelines as ONE exchange-free stage per sync instead
       // of K aggregate exchanges (r14 co-partitioning)
-      val (gSelf, _) = org.apache.spark.sql.GraftShim
-        .materializeHashPartitionedWithCount(g.unionAll(
-          vs.select(col("id").as("src"), col("id").as("dst"))), Seq("dst"))
-      var (labels, _) = mat(vs.select(col("id"), col("id").as("c")))
+      val gSelf = materialize(g.unionAll(vs.select(col("id").as("src"),
+        col("id").as("dst"))), Hash(Seq("dst"))).df
+      var labels = materialize(vs.select(col("id"), col("id").as("c"))).df
       def checksum(l: DataFrame): Option[java.math.BigDecimal] =
         Option(l.agg(sum(col("c").cast("decimal(38,0)"))).head()
           .getDecimal(0))
@@ -1800,10 +1767,11 @@ object Graph {
         }
         var cur = labels
         for (_ <- 1 to relax)
-          cur = gSelf.join(maybeB(cur, n).withColumnRenamed("id", "src"),
+          cur = gSelf.join(
+            BroadcastCap.hint(cur, n).withColumnRenamed("id", "src"),
             Seq("src"))
             .groupBy(col("dst").as("id")).agg(min(col("c")).as("c"))
-        val (merged, _) = mat(cur)
+        val merged = materialize(cur).df
         val cs = checksum(merged)
         converged = cs == prev
         prev = cs
@@ -1824,37 +1792,38 @@ object Graph {
         t += 1
         val haveIn = e.select(col("dst").as("src")).distinct()
         val haveOut = e.select(col("src").as("dst")).distinct()
-        val (e2, ne2) = mat(e
-          .join(maybeB(haveIn, ne), Seq("src"), "left_semi")
-          .join(maybeB(haveOut, ne), Seq("dst"), "left_semi"))
-        trimming = ne2 != ne
-        e = e2; ne = ne2
+        val e2 = materialize(e
+          .join(BroadcastCap.hint(haveIn, ne), Seq("src"), "left_semi")
+          .join(BroadcastCap.hint(haveOut, ne), Seq("dst"), "left_semi"))
+        trimming = e2.rows != ne
+        e = e2.df; ne = e2.rows
       }
       if (ne > 0) {
-        val (verts, nv) = mat(e.select(col("src").as("id"))
+        val vm = materialize(e.select(col("src").as("id"))
           .unionAll(e.select(col("dst").as("id"))).distinct())
+        val (verts, nv) = (vm.df, vm.rows)
         // ---- 2. forward coloring: F = min over {v} ∪ ancestors
         val f = minLabels(e, verts, nv)
-        val fb = maybeB(f, nv)
+        val fb = BroadcastCap.hint(f, nv)
         // ---- 3. backward sweep: B = min over within-class
         // descendants, on reversed intra-class edges
-        val (ec, _) = mat(e
+        val ec = materialize(e
           .join(fb.select(col("id").as("src"), col("c").as("__cs")), "src")
           .join(fb.select(col("id").as("dst"), col("c").as("__cd")), "dst")
           .filter(col("__cs") === col("__cd"))
-          .select(col("dst").as("src"), col("src").as("dst")))
+          .select(col("dst").as("src"), col("src").as("dst"))).df
         val b = minLabels(ec, verts, nv)
         // ---- 4. extract F = B (mutual reachability with the root)
-        val (done, nd) = mat(f.join(
+        val done = materialize(f.join(
           b.select(col("id"), col("c").as("__b")), Seq("id"))
           .filter(col("c") === col("__b"))
           .select(col("id"), col("c").as("scc_id")))
-        parts += done
-        val db = maybeB(done.select("id"), nd)
-        val (e2, ne2) = mat(e
+        parts += done.df
+        val db = BroadcastCap.hint(done.df.select("id"), done.rows)
+        val e2 = materialize(e
           .join(db.withColumnRenamed("id", "src"), Seq("src"), "left_anti")
           .join(db.withColumnRenamed("id", "dst"), Seq("dst"), "left_anti"))
-        e = e2; ne = ne2
+        e = e2.df; ne = e2.rows
       }
     }
     if (ne > 0)

@@ -1,6 +1,8 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftShim.{Materialized, materialize}
+import org.apache.spark.sql.GraftShim.Layout.{Hash, PidClustered}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -90,10 +92,10 @@ object Rank {
     // and the returned frame declares the pid clustering, so the window
     // below neither re-aggregates the blocks nor re-exchanges the table
     // (one job + one table-sized exchange fewer per call; see the shim)
-    val (parted, counts, _) = org.apache.spark.sql.GraftShim
-      .materializePidClusteredWithStats(
-        df.repartitionByRange(n, order: _*)
-          .withColumn("__gr_pid", spark_partition_id()), "__gr_pid", None)
+    val Materialized(parted, counts, _) = materialize(
+      df.repartitionByRange(n, order: _*)
+        .withColumn("__gr_pid", spark_partition_id()),
+      PidClustered("__gr_pid"))
     val offsets = counts.scanLeft(0L)(_ + _)
     // offsets(p) = total rows in partitions before p
     import spark.implicits._
@@ -136,13 +138,11 @@ object Rank {
       else spark.sessionState.conf.numShufflePartitions
     // r16: counts/sums ride the materializing job + declared pid
     // clustering (see globalRank)
-    val (parted, _, sums) = org.apache.spark.sql.GraftShim
-      .materializePidClusteredWithStats(
-        df.repartitionByRange(n, order: _*)
-          .withColumn("__ps_pid", spark_partition_id())
-          .withColumn("__ps_v",
-            coalesce(col(valueCol).cast("long"), lit(0L))),
-        "__ps_pid", Some("__ps_v"))
+    val Materialized(parted, _, sums) = materialize(
+      df.repartitionByRange(n, order: _*)
+        .withColumn("__ps_pid", spark_partition_id())
+        .withColumn("__ps_v", coalesce(col(valueCol).cast("long"), lit(0L))),
+      PidClustered("__ps_pid"), Some("__ps_v"))
     val offsets = sums.scanLeft(0L)(_ + _)
     import spark.implicits._
     val offDf = sums.indices.map(p => (p, offsets(p)))
@@ -173,13 +173,11 @@ object Rank {
       else spark.sessionState.conf.numShufflePartitions
     // r16: counts/sums ride the materializing job + declared pid
     // clustering (see globalRank)
-    val (parted, cnts, sums) = org.apache.spark.sql.GraftShim
-      .materializePidClusteredWithStats(
-        df.repartitionByRange(n, order: _*)
-          .withColumn("__rp_pid", spark_partition_id())
-          .withColumn("__rp_v",
-            coalesce(col(valueCol).cast("long"), lit(0L))),
-        "__rp_pid", Some("__rp_v"))
+    val Materialized(parted, cnts, sums) = materialize(
+      df.repartitionByRange(n, order: _*)
+        .withColumn("__rp_pid", spark_partition_id())
+        .withColumn("__rp_v", coalesce(col(valueCol).cast("long"), lit(0L))),
+      PidClustered("__rp_pid"), Some("__rp_v"))
     val rankOff = cnts.scanLeft(0L)(_ + _)
     val sumOff = sums.scanLeft(0L)(_ + _)
     import spark.implicits._
@@ -279,9 +277,7 @@ object Rank {
     require(m >= 1, "m must be >= 1")
     require(lambdaDen > 0 && lambdaNum >= 0 && lambdaNum <= lambdaDen,
       "lambda must be a fraction in [0, 1]")
-    val shim = org.apache.spark.sql.GraftShim
-    def matQ(df: DataFrame): DataFrame =
-      shim.materializeHashPartitionedWithCount(df, Seq("qid"))._1
+    def matQ(df: DataFrame): DataFrame = materialize(df, Hash(Seq("qid"))).df
     val base = matQ(cand.select(col(qidCol).as("qid"), col(idCol).as("id"),
         col(rankCol).cast("long").as("rank"))
       .join(vecs.select(col(idCol).as("id"), col(vecCol).as("v")), "id"))
@@ -306,28 +302,30 @@ object Rank {
       .select(col("qid"), col("a"), col("b"), col("rel_a"),
         round(Similarity.cosineFast(col("va"), col("vb")) * 1e6)
           .cast("long").as("sim")))
-    var picked = matQ(rel.filter(col("rank") === 1)
+    // round 1 = exactly one row per query
+    val picked1 = materialize(rel.filter(col("rank") === 1)
       .select(col("qid"), col("id"), lit(1L).as("sel_rank"),
-        lit(null).cast("long").as("mmr_units")))
+        lit(null).cast("long").as("mmr_units")), Hash(Seq("qid")))
+    var picked = picked1.df
     // the picked set is ≤ queries × m rows and is joined twice per
-    // round — broadcast it under the usual 4M-row cap so both joins
+    // round — broadcast it under the [[BroadcastCap]] so both joins
     // are map-side probes PRESERVING pairs' declared hash(qid) layout;
     // the aggregate and window then ride it too and every round plans
     // with zero shuffle exchanges (spec-pinned). Past the cap the
     // joins fall back to co-keyed shuffles.
-    val nQueries = picked.count() // round 1 = exactly one row per query
+    val nQueries = picked1.rows
     for (t <- 2 to m) {
       // current picked size is ≤ nQueries·(t−1): one new row per query
       // and round
-      def maybeB(df: DataFrame): DataFrame =
-        if (nQueries * (t - 1) <= (4L << 20)) broadcast(df) else df
+      val nPicked = nQueries * (t - 1)
       val scored = pairs
-        .join(maybeB(picked.select(col("qid"), col("id").as("b"))),
+        .join(BroadcastCap.hint(
+          picked.select(col("qid"), col("id").as("b")), nPicked),
           Seq("qid", "b"))
         .groupBy(col("qid"), col("a").as("id"))
         .agg(max("sim").as("maxsim"), max("rel_a").as("rel"))
-        .join(maybeB(picked.select("qid", "id")), Seq("qid", "id"),
-          "left_anti")
+        .join(BroadcastCap.hint(picked.select("qid", "id"), nPicked),
+          Seq("qid", "id"), "left_anti")
         .withColumn("score",
           expr(s"$lambdaNum * rel - ${lambdaDen - lambdaNum} * maxsim"))
       val w = Window.partitionBy("qid")

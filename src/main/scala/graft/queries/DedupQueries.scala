@@ -112,25 +112,24 @@ private[graft] object DedupQueries {
     // twin ran once per consumer (grams + minhash index) and the gram
     // stream THREE times (sizes + both intersection join sides).
     // Checkpoint each once; the intersection join probes a broadcast
-    // of the twin-side grams under the family's 4M-row cap instead of
+    // of the twin-side grams under the [[BroadcastCap]] instead of
     // exchanging both string-gram streams into an SMJ.
     val all = base.unionByName(twin).localCheckpoint(true)
     val tk = toks(col("text"))
-    val (grams, nGrams) = org.apache.spark.sql.GraftShim
-      .materializeWithCount(
-        all.select(pmod(col("doc_id"), lit(off)).as("pid"),
-          (col("doc_id") >= off).as("tw"),
-          explode(array_distinct(when(size(tk) >= 3,
-            transform(sequence(lit(1), size(tk) - 2),
-              i => concat_ws(" ", slice(tk, i, lit(3)))))
-            .otherwise(array().cast("array<string>")))).as("g")))
-    def maybeB(df: org.apache.spark.sql.DataFrame) =
-      if (nGrams <= (4L << 20)) broadcast(df) else df
+    val gm = org.apache.spark.sql.GraftShim.materialize(
+      all.select(pmod(col("doc_id"), lit(off)).as("pid"),
+        (col("doc_id") >= off).as("tw"),
+        explode(array_distinct(when(size(tk) >= 3,
+          transform(sequence(lit(1), size(tk) - 2),
+            i => concat_ws(" ", slice(tk, i, lit(3)))))
+          .otherwise(array().cast("array<string>")))).as("g")))
+    val grams = gm.df
     val sizes = grams.groupBy("pid")
       .agg(sum(when(col("tw"), 0L).otherwise(1L)).as("na"),
         sum(when(col("tw"), 1L).otherwise(0L)).as("nb"))
     val inter = grams.filter(!col("tw")).select("pid", "g")
-      .join(maybeB(grams.filter(col("tw")).select("pid", "g")),
+      .join(BroadcastCap.hint(
+        grams.filter(col("tw")).select("pid", "g"), gm.rows),
         Seq("pid", "g"))
       .groupBy("pid").agg(count(lit(1)).as("c"))
     val buckets = sizes.join(inter, Seq("pid"), "left")

@@ -611,9 +611,8 @@ private[graft] object InsightQueries {
   }
 
   /** The 80-core of the co-purchase graph by iterative peeling —
-    * surviving per-part in-core degrees (exact fixpoint; the oracle
-    * unrolls 12 peel rounds, idempotent once the fixpoint is reached,
-    * vs ≤6 rounds measured at sf0.1). */
+    * surviving per-part in-core degrees (exact fixpoint; so is the
+    * oracle's recursive peel). */
   private[graft] def qGraphKcore(s: SparkSession, dir: String): DataFrame = {
     val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
     val edges = Graph.coOccurrenceEdgesCanonical(li, "l_orderkey", "l_partkey")
@@ -625,29 +624,42 @@ private[graft] object InsightQueries {
       .select(col("id").as("part"), col("deg"))
   }
 
-  private[graft] val oGraphKcore = {
-    // MATERIALIZED is load-bearing: each round references the previous
-    // one three times — inlined, the 12-round unroll would expand to
-    // 3^12 scans of the base table
-    val round = (r: Int) =>
-      s"""d$r AS MATERIALIZED (SELECT id FROM (
-         |    SELECT id, count(*) AS d FROM (
-         |      SELECT src AS id FROM e${r - 1}
-         |      UNION ALL SELECT dst FROM e${r - 1}) GROUP BY id)
-         |  WHERE d >= 80),
-         |e$r AS MATERIALIZED (SELECT src, dst FROM e${r - 1}
-         |  WHERE src IN (SELECT id FROM d$r)
-         |    AND dst IN (SELECT id FROM d$r))""".stripMargin
-    s"""WITH items AS (SELECT DISTINCT l_orderkey AS g, l_partkey AS item
-       |  FROM lineitem),
-       |e0 AS MATERIALIZED (SELECT DISTINCT a.item AS src, b.item AS dst
-       |  FROM items a
-       |  JOIN items b ON a.g = b.g AND a.item < b.item),
-       |${(1 to 12).map(round).mkString(",\n")}
-       |SELECT id AS part, CAST(count(*) AS BIGINT) AS deg FROM (
-       |  SELECT src AS id FROM e12 UNION ALL SELECT dst FROM e12)
-       |GROUP BY id""".stripMargin
-  }
+  /** The k-core as a recursive peel to the exact fixed point. Each
+    * round keeps the edges whose endpoints both have degree >= 80 among
+    * the previous round's edges (windows, not aggregates, in the
+    * recursive term) and stops once a round removes nothing. A round
+    * that removes EVERY edge also stops the recursion, leaving the last
+    * non-empty round in `peel`, so the final select peels `last` once
+    * more: a fixed point keeps all its edges, a vanishing core none. */
+  private[graft] val oGraphKcore =
+    """WITH RECURSIVE items AS (SELECT DISTINCT l_orderkey AS g,
+      |  l_partkey AS item FROM lineitem),
+      |e0 AS (SELECT DISTINCT a.item AS src, b.item AS dst FROM items a
+      |  JOIN items b ON a.g = b.g AND a.item < b.item),
+      |peel(r, src, dst, m) AS (
+      |  SELECT 0, src, dst, count(*) OVER () FROM e0
+      |  UNION ALL
+      |  SELECT r + 1, src, dst, m FROM (
+      |    SELECT r, src, dst, pm, count(*) OVER () AS m FROM (
+      |      SELECT r, src, dst, pm, id,
+      |        min(d) OVER (PARTITION BY src, dst) AS md FROM (
+      |        SELECT r, src, dst, pm, id,
+      |          count(*) OVER (PARTITION BY id) AS d FROM (
+      |          SELECT r, src, dst, m AS pm, unnest([src, dst]) AS id
+      |          FROM peel)))
+      |    WHERE md >= 80 AND id = src)
+      |  WHERE m < pm),
+      |last AS MATERIALIZED (SELECT src, dst FROM (
+      |  SELECT src, dst, r, max(r) OVER () AS mr FROM peel) WHERE r = mr),
+      |deg AS (SELECT id, count(*) AS d FROM (
+      |  SELECT src AS id FROM last UNION ALL SELECT dst FROM last)
+      |  GROUP BY id),
+      |core AS (SELECT src, dst FROM last
+      |  WHERE src IN (SELECT id FROM deg WHERE d >= 80)
+      |    AND dst IN (SELECT id FROM deg WHERE d >= 80))
+      |SELECT id AS part, CAST(count(*) AS BIGINT) AS deg FROM (
+      |  SELECT src AS id FROM core UNION ALL SELECT dst FROM core)
+      |GROUP BY id""".stripMargin
 
   /** Degree assortativity of the co-purchase graph — exact-integer
     * sums, one double division (see [[Graph.assortativity]]). */
