@@ -48,7 +48,7 @@ object Soak {
       spark.read.parquet(s"$dir/embeddings.parquet").count()
     else docs.count()
     // construction goes INSIDE the timer: iterative ops do real work
-    // eagerly (localCheckpoint rounds, offset collects) while the frame
+    // eagerly (checkpoint rounds, offset collects) while the frame
     // is being BUILT — timing only the final action misses most of it
     // (Bench.timeOnce has the same contract)
     def run(): Double = {

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.GraftShim.materialize
 import org.apache.spark.sql.functions._
 
 /** Market-basket co-occurrence mining: which items appear TOGETHER in
@@ -56,13 +57,13 @@ object Basket {
     // exchange, a size-cap aggregate + membership join, and a
     // basket-keyed self-join before the pair aggregate ever ran.
     // Basket universe, marginals and pair counts are value-identical.
-    val sets = df
+    // feeds N, marginals, and the pair stream
+    val sets = materialize(df
       .select(col(basketCol).as("__b"), col(itemCol).as("__i"))
       .filter(col("__b").isNotNull && col("__i").isNotNull)
       .groupBy("__b")
       .agg(sort_array(collect_set(col("__i"))).as("__xs"))
-      .filter(size(col("__xs")) <= maxBasketItems)
-      .localCheckpoint(true) // feeds N, marginals, and the pair stream
+      .filter(size(col("__xs")) <= maxBasketItems)).df
     val nBaskets = sets.groupBy().agg(count(lit(1)).as("__n"))
     val marginals = sets.select(explode(col("__xs")).as("__i"))
       .groupBy(col("__i"))

@@ -16,8 +16,10 @@ import org.apache.spark.sql.functions.broadcast
   * builds the small side once and probes the stationary table map-side.
   *
   * It is a ROW count, not a byte size, because the sides are
-  * checkpointed tables with no size statistics the planner could read;
-  * the exact row count is what the materializing job measures for free
+  * checkpointed tables whose size statistics are only the planner's
+  * estimate of the plan that filled them (what Spark's own checkpoint
+  * keeps), not a measured size; the exact row count is what the
+  * materializing job measures for free
   * ([[org.apache.spark.sql.GraftShim.materialize]]).
   *
   * It lives in code, not in session config: the harnesses build their

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftShim.materialize
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -602,23 +603,23 @@ object Classify {
                         alphaPpm: Long = 100000L): DataFrame = {
     require(alphaPpm > 0 && alphaPpm < 1000000,
       "alphaPpm must be in (0, 1000000)")
-    val d = df
+    // fit pass + residual rail share it
+    val d = materialize(df
       .select(col(idCol).cast("long").as("__id"),
         col(xCol).cast("long").as("__x"), col(yCol).cast("long").as("__y"))
       .filter(col("__id").isNotNull && col("__x").isNotNull &&
         col("__y").isNotNull)
-      .withColumn("__cal", pmod(col("__id"), lit(2L)) === 0)
-      .localCheckpoint(true) // fit pass + residual rail share it
+      .withColumn("__cal", pmod(col("__id"), lit(2L)) === 0)).df
     val fit = graft.ops.Insight
       .olsByKey(d.filter(col("__cal")).withColumn("__k", lit(0)),
         "__k", "__x", "__y")
       .select(col("slope_ppm"), col("intercept_micro"))
-    val res = d.crossJoin(broadcast(fit))
+    // q̂ rail + test coverage share it
+    val res = materialize(d.crossJoin(broadcast(fit))
       .withColumn("__r", expr("abs(CAST(__y AS DECIMAL(38,0)) * 1000000" +
         " - (CAST(slope_ppm AS DECIMAL(38,0)) * __x + intercept_micro))")
         .cast("long"))
-      .select(col("__cal"), col("__r"))
-      .localCheckpoint(true) // q̂ rail + test coverage share it
+      .select(col("__cal"), col("__r"))).df
     val calCnt = res.filter(col("__cal")).groupBy("__r")
       .agg(count(lit(1)).as("__c"))
     val qhat = Rank.prefixSum(calCnt, Seq(col("__r")), "__c",
@@ -667,7 +668,8 @@ object Classify {
       .groupBy("__s")
       .agg(count(lit(1)).as("__n"),
         sum(when(col("__y"), 1L).otherwise(0L)).as("__p"))
-    val perCk = per.localCheckpoint(true) // totals + curve share it
+    // totals + curve share it
+    val perCk = materialize(per).df
     val tot = perCk.agg(sum("__p").as("__pos"),
       sum(expr("__n - __p")).as("__neg"))
     val w = Window.orderBy(col("__s").desc)

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftShim.materialize
 import org.apache.spark.sql.functions._
 
 /** Embedding-space clustering for corpus curation: spherical k-means
@@ -156,11 +157,10 @@ object Cluster {
     // corpus row (the r14 inferred-filter sweep; assignCol output is
     // never empty and its elements never null, so the outer variant +
     // null drop is row-identical)
-    val cells = df
+    val cells = materialize(df
       .select(col(idCol).as("id"),
         explode_outer(assignCol(df, vecCol, cents, nassign)).as("cid"))
-      .filter(col("cid").isNotNull)
-      .localCheckpoint(true)
+      .filter(col("cid").isNotNull)).df
     // capped in-cell self-join, the embeddingNearDupPairsLsh shape:
     // row-shaped and spillable at every stage, AQE soaks residual skew
     val sizes = cells.groupBy("cid").agg(count(lit(1)).as("__cn"))
@@ -275,7 +275,7 @@ object Cluster {
         math.max(8, math.min(4096, n / 64)).toInt
       }
     val cents = fit(df, vecCol, idCol, k, lloydIters)
-    val cells = assignedCells(df, vecCol, idCol, cents).localCheckpoint(true)
+    val cells = materialize(assignedCells(df, vecCol, idCol, cents)).df
     // per-cell angular radius + size (one k-row collect): radii drive
     // the shortlist, sizes cost it below
     val cellStats = collectCellStats(cells)
@@ -398,8 +398,8 @@ object Cluster {
     val spark = batch.sparkSession
     import spark.implicits._
     val cents = loadCentroids(spark, s"$indexPath/centroids")
-    val newCells = assignedCells(batch, vecCol, idCol, cents)
-      .withColumn("isNew", lit(true)).localCheckpoint(true)
+    val newCells = materialize(assignedCells(batch, vecCol, idCol, cents)
+      .withColumn("isNew", lit(true))).df
     val oldCells = spark.read.parquet(s"$indexPath/cells")
       .withColumn("isNew", lit(false))
     val all = newCells.unionByName(oldCells)

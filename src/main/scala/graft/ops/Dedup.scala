@@ -729,7 +729,7 @@ object Dedup {
     // suffix-array pipeline would persist anyway.
     val toks = col("__t")
     val cnt = size(toks) - (n - 1)
-    val spans = df
+    val spans = materialize(df
       .select(col(idCol).as("id"),
         TextFunctions.tokens(col(textCol)).as("__t"))
       .select(col("id"),
@@ -743,8 +743,7 @@ object Dedup {
       // nothing; empty-span docs surface one null row dropped right
       // after the generate, where the predicate costs nothing.
       .select(col("id"), explode_outer(col("sps")).as("sp"))
-      .filter(col("sp").isNotNull)
-      .localCheckpoint(true)
+      .filter(col("sp").isNotNull)).df
     val dupSpans = spans.groupBy("sp")
       .agg(count(lit(1)).as("__occ"))
       .filter(col("__occ") >= 2)
@@ -791,14 +790,13 @@ object Dedup {
     }
     // same explode_outer / materialize-once reasoning as the single-n
     // form (see duplicatedSpanStats)
-    val spans = df
+    val spans = materialize(df
       .select(col(idCol).as("id"),
         TextFunctions.tokens(col(textCol)).as("__t"))
       .select(col("id"), flatten(array(perN: _*)).as("sps"))
       .select(col("id"), explode_outer(col("sps")).as("s"))
       .filter(col("s").isNotNull)
-      .select(col("id"), col("s.n").as("n"), col("s.sp").as("sp"))
-      .localCheckpoint(true)
+      .select(col("id"), col("s.n").as("n"), col("s.sp").as("sp"))).df
     val dupSpans = spans.groupBy("n", "sp")
       .agg(count(lit(1)).as("__occ"))
       .filter(col("__occ") >= 2)
@@ -865,21 +863,19 @@ object Dedup {
           md5(concat_ws(" ", slice(toks, i + 1, lit(n)))).as("sp"))))
         .otherwise(array().cast(spanStruct))
     }
-    val tokens = df
+    val tokens = materialize(df
       .select(col(idCol).as("id"),
         posexplode(TextFunctions.tokens(col(textCol)))
-          .as(Seq("pos", "w")))
-      .localCheckpoint(true)
+          .as(Seq("pos", "w")))).df
     // explode_outer / materialize-once: see duplicatedSpanStats
-    val spans = df
+    val spans = materialize(df
       .select(col(idCol).as("id"),
         TextFunctions.tokens(col(textCol)).as("__t"))
       .select(col("id"), flatten(array(perN: _*)).as("sps"))
       .select(col("id"), explode_outer(col("sps")).as("s"))
       .filter(col("s").isNotNull)
       .select(col("id"), col("s.n").as("n"), col("s.pos").as("pos"),
-        col("s.sp").as("sp"))
-      .localCheckpoint(true)
+        col("s.sp").as("sp"))).df
     val dupStats = spans.groupBy("n", "sp")
       .agg(count(lit(1)).as("__occ"),
         min(struct(col("id"), col("pos"))).as("__keep"))
@@ -926,32 +922,32 @@ object Dedup {
                         maxPow: Int = 6): DataFrame = {
     require(maxPow >= 0 && maxPow <= 16, s"maxPow out of range: $maxPow")
     val docs = df.select(col(idCol).as("id"))
-    var cur = df
+    var cur = materialize(df
       .select(col(idCol).as("id"),
         posexplode(TextFunctions.tokens(col(textCol)))
           .as(Seq("pos", "__w")))
-      .select(col("id"), col("pos"), xxhash64(col("__w")).as("h"))
-      .localCheckpoint(true)
+      .select(col("id"), col("pos"), xxhash64(col("__w")).as("h")))
     var found: DataFrame = null
     var p = 0
-    while (p <= maxPow && !cur.isEmpty) {
+    // the emptiness check reads the row count of the round's own job
+    while (p <= maxPow && cur.rows > 0) {
       val k = 1 << p
-      val dupKeys = cur.groupBy("h").agg(count(lit(1)).as("__c"))
+      val t = cur.df
+      val dupKeys = t.groupBy("h").agg(count(lit(1)).as("__c"))
         .filter(col("__c") >= 2).select("h")
-      val hit = cur.join(dupKeys, "h")
+      val hit = t.join(dupKeys, "h")
         .select(col("id")).distinct()
         .withColumn("__k", lit(k.toLong))
       found = if (found == null) hit else found.unionAll(hit)
       if (p < maxPow) {
         // H_{2k}(pos) = hash(H_k(pos), H_k(pos+k)); rows whose second
         // half no longer fits fall out of the table
-        cur = cur.as("a")
-          .join(cur.as("b"),
+        cur = materialize(t.as("a")
+          .join(t.as("b"),
             col("a.id") === col("b.id") &&
               col("b.pos") === col("a.pos") + lit(k))
           .select(col("a.id").as("id"), col("a.pos").as("pos"),
-            xxhash64(col("a.h"), col("b.h")).as("h"))
-          .localCheckpoint(true)
+            xxhash64(col("a.h"), col("b.h")).as("h")))
       }
       p += 1
     }
@@ -1047,24 +1043,22 @@ object Dedup {
           Seq("kl", "kr"))
         .select("id", "pos", "r")
     }
-    val lens = toksM.groupBy("id")
-      .agg((max(col("pos")) + 1).as("len")).localCheckpoint(true)
+    val lens = materialize(toksM.groupBy("id")
+      .agg((max(col("pos")) + 1).as("len"))).df
     // rank tables per power; ranks(p) orders depth-2^p prefixes
     val ranks = new Array[DataFrame](maxPow + 1)
-    ranks(0) = rerank(toksM
-        .select(col("id"), col("pos"), col("w").as("kl"), lit("").as("kr")))
-      .localCheckpoint(true)
+    ranks(0) = materialize(rerank(toksM
+        .select(col("id"), col("pos"), col("w").as("kl"), lit("").as("kr")))).df
     var p = 0
     while (p < maxPow) {
       val k = 1 << p
       val cur = ranks(p)
-      ranks(p + 1) = rerank(cur.as("a")
+      ranks(p + 1) = materialize(rerank(cur.as("a")
           .join(BroadcastCap.hint(cur.as("b"), nToks),
             col("a.id") === col("b.id") &&
               col("b.pos") === col("a.pos") + lit(k), "left")
           .select(col("a.id").as("id"), col("a.pos").as("pos"),
-            col("a.r").as("kl"), coalesce(col("b.r"), lit(-1L)).as("kr")))
-        .localCheckpoint(true)
+            col("a.r").as("kl"), coalesce(col("b.r"), lit(-1L)).as("kr")))).df
       p += 1
     }
     // suffix order (exact to depth 2^maxPow; ties beyond share LCP ≥
@@ -1073,13 +1067,12 @@ object Dedup {
     // does not re-run the range shuffle
     val indexed = materialize(Order.globalIndex(ranks(maxPow),
       struct(col("r"), col("id"), col("pos")), "g")).df
-    var pairs = indexed.as("a")
+    var pairs = materialize(indexed.as("a")
       .join(BroadcastCap.hint(indexed.as("b"), nToks),
         col("b.g") === col("a.g") + 1)
       .select(col("a.id").as("ida"), col("a.pos").as("posa"),
         col("b.id").as("idb"), col("b.pos").as("posb"))
-      .withColumn("ext", lit(0L))
-      .localCheckpoint(true)
+      .withColumn("ext", lit(0L))).df
     // greedy LCE descent over the rank tables, top power first.
     // r16 (guide §2.6 — the cascade is job-count-bound, not
     // exchange-bound): each round is TWO broadcast hash probes against
@@ -1107,7 +1100,7 @@ object Dedup {
         .drop("ra", "rb")
       unchk += 1
       if (unchk == 2 || p == 0) {
-        pairs = pairs.localCheckpoint(true)
+        pairs = materialize(pairs).df
         unchk = 0
       }
       p -= 1
@@ -1263,17 +1256,16 @@ object Dedup {
         .join(labels.withColumnRenamed("id", "src"), "src")
         .groupBy(col("dst").as("id"))
         .agg(min("component").as("nmin"))
-      // localCheckpoint, not persist: each iteration references `labels`
+      // materialize, not persist: each iteration references `labels`
       // twice, and persist() caches execution but NOT the analyzer tree,
       // so the logical plan would double per iteration — a diameter-d
       // chain (d iterations) builds a 2^d-node plan and the driver dies
       // in plan stringification long before the data is big. Truncating
       // lineage keeps the plan O(1) per iteration.
-      val updated = labels.join(neighborMin, Seq("id"), "left")
+      val updated = materialize(labels.join(neighborMin, Seq("id"), "left")
         .select(col("id"),
           least(col("component"), coalesce(col("nmin"), col("component")))
-            .as("component"))
-        .localCheckpoint(true)
+            .as("component"))).df
       val changed =
         if (numericLabels) {
           val s = labelSum(updated)
@@ -1295,10 +1287,10 @@ object Dedup {
           "labels may be partially propagated — raise maxIter for deep chains")
     // Materialize the (small) result and release the loop's cache: a
     // plain return of the persisted frame would pin it for the session.
-    // localCheckpoint blocks are reclaimed by the ContextCleaner once the
+    // Checkpoint blocks are reclaimed by the ContextCleaner once the
     // result is unreferenced. (On a real cluster with executor churn,
     // swap for a reliable checkpoint directory.)
-    val result = labels.localCheckpoint(true)
+    val result = materialize(labels).df
     labels.unpersist()
     result
   }
@@ -1345,15 +1337,14 @@ object Dedup {
     // Each round references its input several times, so the LOGICAL plan
     // would grow exponentially under plain persist() (persist caches
     // execution but not the analyzer tree — the classic iterative-
-    // DataFrame trap). localCheckpoint truncates the lineage each round:
+    // DataFrame trap). materialize truncates the lineage each round:
     // plans stay O(1), blocks are reclaimed by the ContextCleaner. On a
     // cluster with executor churn, swap for reliable checkpoint().
-    var edges = pairs
+    var edges = materialize(pairs
       .select(least(col("ida"), col("idb")).as("u"),
         greatest(col("ida"), col("idb")).as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct()).df
     // Convergence: the canonical (u < v) edge set is stable. Checksum
     // compare (sum of a symmetric hash) — one cheap aggregate per round
     // instead of a set-difference self-join.
@@ -1407,7 +1398,7 @@ object Dedup {
     var converged = false
     while (iter < maxIter && !converged) {
       val next =
-        star(star(edges, large = true), large = false).localCheckpoint(true)
+        materialize(star(star(edges, large = true), large = false)).df
       val c = checksum(next)
       edges = next
       converged = c == prev
@@ -1425,7 +1416,7 @@ object Dedup {
       // double-listed; at fixpoint that cannot happen, but the anti-join
       // keeps the output well-formed even at a forced early stop
       .join(members.select(col("id")), Seq("id"), "left_anti")
-    members.unionAll(centers).localCheckpoint(true)
+    materialize(members.unionAll(centers)).df
   }
 
   /** INCREMENTAL connected components — the rolling-ingest tier of
@@ -1493,13 +1484,15 @@ object Dedup {
                        threshold: Double, n: Int = 3,
                        maxIter: Int = 20,
                        driverCCMaxPairs: Long = 1L << 20): DataFrame = {
-    val pairs = ngramJaccardPairs(df, textCol, idCol, threshold, n).persist()
+    // materialized once: the pair count rides the same job, and both
+    // the size decision and either components path read the pairs
+    val pm = materialize(ngramJaccardPairs(df, textCol, idCol, threshold, n))
+    val (pairs, nPairs) = (pm.df, pm.rows)
     val integralIds = df.schema(idCol).dataType match {
       case org.apache.spark.sql.types.LongType |
            org.apache.spark.sql.types.IntegerType => true
       case _ => false
     }
-    val nPairs = pairs.count()
     val victims: DataFrame =
       if (integralIds && nPairs <= driverCCMaxPairs) {
         val spark = df.sparkSession
@@ -1513,9 +1506,7 @@ object Dedup {
         connectedComponents(pairs, maxIter)
           .filter(col("id") =!= col("component"))
           .select(col("id").as(idCol))
-    val out = df.join(victims, Seq(idCol), "left_anti")
-    pairs.unpersist()
-    out
+    df.join(victims, Seq(idCol), "left_anti")
   }
 
   /** DUPLICATE-CLUSTER report — the audit a dedup decision ships with:
@@ -1615,9 +1606,8 @@ object Dedup {
     // graft_lsh_sig expression (tables × dim dot products) would run
     // 4× per corpus row. It is also the persistable LSH state (the
     // embedding twin of minhashIndex).
-    val banded = df.select(col(idCol).as("id"), sig.as("sigs"))
-      .select(col("id"), posexplode(col("sigs")).as(Seq("tbl", "bucket")))
-      .localCheckpoint(true)
+    val banded = materialize(df.select(col(idCol).as("id"), sig.as("sigs"))
+      .select(col("id"), posexplode(col("sigs")).as(Seq("tbl", "bucket")))).df
     // Pair generation is a bucket-count-capped SELF-JOIN, not the
     // collect_list + in-row pair flatten minhashLshPairs uses: near-dup
     // LSH buckets are ~corpus/2^nbits by construction (only 2^nbits

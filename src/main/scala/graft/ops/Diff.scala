@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftShim.materialize
 import org.apache.spark.sql.functions._
 
 /** Dataset versioning and drift: what changed between two snapshots of
@@ -47,15 +48,15 @@ object Diff {
                      opCol: String): DataFrame = {
     require(keyCols.nonEmpty, "applyChangelog: need at least one key")
     val payload = base.columns.filterNot(keyCols.contains)
-    val latest = changes
+    // referenced by the anti-join AND the union
+    val latest = materialize(changes
       .groupBy(keyCols.map(col): _*)
       .agg(max_by(
         struct((payload.map(col) :+ col(opCol).as("__op")): _*),
         col(seqCol)).as("__w"))
       .select(keyCols.map(col) ++
         payload.map(c => col(s"__w.$c").as(c)) :+
-        col("__w.__op").as("__op"): _*)
-      .localCheckpoint(true) // referenced by the anti-join AND the union
+        col("__w.__op").as("__op"): _*)).df
     val untouched = base.join(latest.select(keyCols.map(col): _*),
       keyCols, "left_anti")
     val applied = latest

@@ -110,8 +110,7 @@ object Graph {
     require(n > 0, "pagerank: empty graph")
     val bcast = BroadcastCap.fits(n)
     val e = if (bcast) e0 else materialize(e0, Hash(Seq("src"))).df
-    val outdeg = e.groupBy("src").agg(sum("__w").as("outdeg"))
-      .localCheckpoint(true)
+    val outdeg = materialize(e.groupBy("src").agg(sum("__w").as("outdeg"))).df
     val teleport = (Scale * (dampingDen - dampingNum) / dampingDen) / n
     var ranks = vertices.withColumn("rank_units", lit(Scale / n))
     for (it <- 1 to iterations) {
@@ -143,12 +142,12 @@ object Graph {
             expr(s"$dampingNum * coalesce(inflow, 0L) DIV $dampingDen"))
             .as("rank_units"))
       // per-iteration materialization is what makes the broadcast build
-      // a cheap scan; in the big-vertex branch it is the shim so the
-      // co-partitioned src join stays exchange-free on the edge side
+      // a cheap scan; in the big-vertex branch it declares hash(id) so
+      // the co-partitioned src join stays exchange-free on the edge side
       ranks =
         if (it == iterations) next
-        else if (bcast) next.localCheckpoint(true)
-        else materialize(next, Hash(Seq("id"))).df
+        else materialize(next,
+          if (bcast) GraftShim.Layout.None else Hash(Seq("id"))).df
     }
     ranks.withColumn("rank",
       round(col("rank_units").cast("double") / Scale, 6))
@@ -184,22 +183,23 @@ object Graph {
     // shuffle-wrote the edge list twice per iteration)
     val e0 = materialize(
       edges.select(col("src"), col("dst"), w.as("__w")), Hash(Seq("dst"))).df
+    // __seed is a BIGINT 0/1 flag, so the seed count is the sum the
+    // vertex table's own materializing job collects
     val v = materialize(e0.select(col("src").as("id"))
       .unionAll(e0.select(col("dst").as("id"))).distinct()
       .join(seeds.select(col(seedCol).as("id")).distinct()
-        .withColumn("__seed", lit(true)), Seq("id"), "left")
+        .withColumn("__seed", lit(1L)), Seq("id"), "left")
       .select(col("id"),
-        coalesce(col("__seed"), lit(false)).as("__seed")), Hash(Seq("id")))
-    val (vertices, nV) = (v.df, v.rows)
+        coalesce(col("__seed"), lit(0L)).as("__seed")), Hash(Seq("id")),
+      Some("__seed"))
+    val (vertices, nV, nSeeds) = (v.df, v.rows, v.sum)
     val bcast = BroadcastCap.fits(nV)
     val e = if (bcast) e0 else materialize(e0, Hash(Seq("src"))).df
-    val outdeg = e.groupBy("src").agg(sum("__w").as("outdeg"))
-      .localCheckpoint(true)
-    val nSeeds = vertices.filter(col("__seed")).count()
+    val outdeg = materialize(e.groupBy("src").agg(sum("__w").as("outdeg"))).df
     require(nSeeds > 0, "trustRank: no seed is present in the graph")
     val teleport = (Scale * (dampingDen - dampingNum) / dampingDen) / nSeeds
     var ranks = vertices.withColumn("rank_units",
-      when(col("__seed"), lit(Scale / nSeeds)).otherwise(lit(0L)))
+      when(col("__seed") === 1L, lit(Scale / nSeeds)).otherwise(lit(0L)))
     for (it <- 1 to iterations) {
       // r15: outdeg folded into the per-iteration vertex broadcast —
       // see [[pagerank]] (one edge-stream join per iteration; the
@@ -217,13 +217,13 @@ object Graph {
         .groupBy("id").agg(sum("c").as("inflow"))
       val next = vertices.join(inflow, Seq("id"), "left")
         .select(col("id"), col("__seed"),
-          (when(col("__seed"), lit(teleport)).otherwise(lit(0L)) +
+          (when(col("__seed") === 1L, lit(teleport)).otherwise(lit(0L)) +
             expr(s"$dampingNum * coalesce(inflow, 0L) DIV $dampingDen"))
             .as("rank_units"))
       ranks =
         if (it == iterations) next
-        else if (bcast) next.localCheckpoint(true)
-        else materialize(next, Hash(Seq("id"))).df
+        else materialize(next,
+          if (bcast) GraftShim.Layout.None else Hash(Seq("id"))).df
     }
     ranks
       .select(col("id"), col("rank_units").as("trust_units"),
@@ -438,10 +438,9 @@ object Graph {
     // dominant intermediate — m^1.5-ish — and never materializes).
     // Beyond the cap the hints drop away and AQE plans shuffle joins —
     // the crawl-scale path where no single edge list fits an executor.
-    val deg = e.select(col("u").as("id"))
+    val deg = materialize(e.select(col("u").as("id"))
       .unionAll(e.select(col("v").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("d"))
-      .localCheckpoint(true)
+      .groupBy("id").agg(count(lit(1)).as("d"))).df
     val ew = e
       .join(BroadcastCap.hint(
         deg.select(col("id").as("u"), col("d").as("du")), m), "u")
@@ -449,10 +448,9 @@ object Graph {
         deg.select(col("id").as("v"), col("d").as("dv")), m), "v")
     val uFirst = col("du") < col("dv") ||
       (col("du") === col("dv") && col("u") < col("v"))
-    val o = ew.select(
+    val o = materialize(ew.select(
         when(uFirst, col("u")).otherwise(col("v")).as("s"),
-        when(uFirst, col("v")).otherwise(col("u")).as("t"))
-      .localCheckpoint(true)
+        when(uFirst, col("v")).otherwise(col("u")).as("t"))).df
     // Edge-iterator closure instead of a wedge JOIN: per oriented edge
     // (s, t), the triangles through it are |N⁺(s) ∩ N⁺(t)|. The work is
     // the same Σ outdeg² comparisons, but as one set-intersection
@@ -460,8 +458,8 @@ object Graph {
     // stream through two join operators — measured ~3× faster at sf0.1
     // (the join spelling paid per-wedge row overhead on 83M rows).
     // Orientation still bounds each list at O(√m), hub-proof.
-    val nbrs = o.groupBy("s").agg(sort_array(collect_list(col("t"))).as("ns"))
-      .localCheckpoint(true)
+    val nbrs = materialize(
+      o.groupBy("s").agg(sort_array(collect_list(col("t"))).as("ns"))).df
     val tri = o
       .join(BroadcastCap.hint(nbrs, m), "s")
       .join(BroadcastCap.hint(
@@ -506,7 +504,7 @@ object Graph {
     * collect_list array — the histogram is the difference between
     * surviving a crawl hub and sorting 10M rows for it every
     * iteration. Each value frame is referenced once per iteration, so
-    * the plan grows linearly; a localCheckpoint every 8 iterations
+    * the plan grows linearly; a checkpoint every 8 iterations
     * truncates lineage like [[pagerank]].
     *
     * Convergence: bounded by the graph's degeneracy ordering depth — a
@@ -543,28 +541,28 @@ object Graph {
     val adj0 = materialize(canon.select(col("u").as("id"), col("v").as("nbr"))
       .unionAll(canon.select(col("v").as("id"), col("u").as("nbr"))),
       Hash(Seq("id"))).df
-    // A checkpointed value table carries no size stats, so without a
-    // hint every iteration's join plans sort-merge — re-SORTING the full
+    // A checkpointed value table carries only the planner's estimate,
+    // which sizes a group-by like its input, so without a hint every
+    // iteration's join plans sort-merge — re-SORTING the full
     // adjacency each round. The value table is one (id, c) row per
     // vertex; up to ~4M vertices (~64 MB) broadcast it and the whole
     // iteration runs map-side up to the histogram shuffle. The
     // materialization job itself supplies the vertex count (GraftShim —
-    // one job, not checkpoint + count). Past the cap, the adjacency is
-    // instead pre-partitioned ONCE on the join key so the
-    // per-iteration sort-merge join exchanges only the value table.
+    // one job, not checkpoint + count).
     val c0 =
       materialize(adj0.groupBy("id").agg(count(lit(1)).cast("int").as("c")))
     var c = c0.df
     val nVertices = c0.rows
     val bcast = BroadcastCap.fits(nVertices)
-    // broadcast branch: pre-partition the adjacency by id ONCE —
-    // HashPartitioning(id) satisfies ClusteredDistribution(id, nc) (a
-    // subset of the grouping keys), so BOTH per-iteration aggregates
-    // then plan with no exchange at all: the broadcast join preserves
-    // the id-partitioning and 8 iterations run shuffle-free (r14; the
-    // eager localCheckpoint preserves outputPartitioning)
-    val adj = if (bcast) adj0
-      else adj0.repartition(col("nbr")).localCheckpoint(true)
+    // broadcast branch: the adjacency keeps its declared hash(id)
+    // layout — HashPartitioning(id) satisfies ClusteredDistribution(id,
+    // nc) (a subset of the grouping keys), so BOTH per-iteration
+    // aggregates then plan with no exchange at all: the broadcast join
+    // preserves the id-partitioning and 8 iterations run shuffle-free
+    // (r14). Past the cap it is laid out ONCE by the join key with a
+    // declared hash(nbr) layout, so the per-iteration sort-merge join
+    // exchanges only the value table.
+    val adj = if (bcast) adj0 else materialize(adj0, Hash(Seq("nbr"))).df
     // H-index over the per-vertex value histogram as ONE hash aggregate
     // + an inline fold: sort the ≤max-coreness (value, cnt) pairs desc
     // and take max(min(value, cumulative count)). The previous window
@@ -597,7 +595,7 @@ object Graph {
       if (converge) {
         // must materialize to compare; the checkpoint doubles as the
         // lineage truncation
-        val nextCp = next.localCheckpoint(true)
+        val nextCp = materialize(next).df
         val changed = nextCp.join(c.withColumnRenamed("c", "c0"), "id")
           .filter(col("c") =!= col("c0")).limit(1).count()
         c = nextCp
@@ -608,7 +606,7 @@ object Graph {
         // on the nested plan grows superlinearly — measured 4.8 s at
         // 4 chained iterations but 17 s at 8 on the sf0.1 co-purchase
         // graph, vs ~1.2 s/iteration with the cadence-3 truncation
-        c = if (it % 3 == 0) next.localCheckpoint(true) else next
+        c = if (it % 3 == 0) materialize(next).df else next
         done = it >= iterations
       }
     }
@@ -732,7 +730,7 @@ object Graph {
         .agg(max(struct(col("cnt"),
           (lit(-1L) * col("lbl")).as("nl"))).as("m"))
         .select(col("id"), (lit(-1L) * col("m.nl")).as("lbl"))
-      l = if (it % 3 == 0) next.localCheckpoint(true) else next
+      l = if (it % 3 == 0) materialize(next).df else next
     }
     l.withColumnRenamed("lbl", "community")
   }
@@ -757,14 +755,13 @@ object Graph {
   def assortativity(edges: DataFrame,
                     assumeCanonical: Boolean = false): DataFrame = {
     // assumeCanonical: see [[triangleStats]] (r15, guide §2.4)
-    val e = (if (assumeCanonical)
+    val e = materialize((if (assumeCanonical)
       edges.select(col("src").as("u"), col("dst").as("v"))
     else edges
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct())
-      .localCheckpoint(true)
+      .distinct())).df
     // the vertex count rides the degree table's materializing job
     val dm = materialize(e.select(col("u").as("id"))
       .unionAll(e.select(col("v").as("id")))
@@ -830,10 +827,9 @@ object Graph {
       .filter(col("u") =!= col("v"))
       .distinct())
     val (e, m) = (em.df, em.rows)
-    val deg = e.select(col("u").as("id"))
+    val deg = materialize(e.select(col("u").as("id"))
       .unionAll(e.select(col("v").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("d"))
-      .localCheckpoint(true)
+      .groupBy("id").agg(count(lit(1)).as("d"))).df
     val ew = e
       .join(BroadcastCap.hint(
         deg.select(col("id").as("u"), col("d").as("du")), m), "u")
@@ -841,10 +837,9 @@ object Graph {
         deg.select(col("id").as("v"), col("d").as("dv")), m), "v")
     val uFirst = col("du") < col("dv") ||
       (col("du") === col("dv") && col("u") < col("v"))
-    val o = ew.select(
+    val o = materialize(ew.select(
         when(uFirst, col("u")).otherwise(col("v")).as("s"),
-        when(uFirst, col("v")).otherwise(col("u")).as("t"))
-      .localCheckpoint(true)
+        when(uFirst, col("v")).otherwise(col("u")).as("t"))).df
     // Edge-iterator closure (see [[triangleStats]]): per oriented edge
     // (s, t), ws = N⁺(s) ∩ N⁺(t) lists this edge's triangles' third
     // corners. Each found triangle increments s and t by |ws| and each
@@ -860,19 +855,18 @@ object Graph {
     // consumed by three fully-codegen aggregates: endpoint sums over
     // the edge rows and a plain explode of ws for the apex counts —
     // same corner multiset, same integer totals.
-    val nbrs = o.groupBy("s").agg(sort_array(collect_list(col("t"))).as("ns"))
-      .localCheckpoint(true)
+    val nbrs = materialize(
+      o.groupBy("s").agg(sort_array(collect_list(col("t"))).as("ns"))).df
     val empty = slice(col("ns"), 1, 0) // typed empty array
     val ws = coalesce(when(col("nt").isNotNull,
       sortedIntersectArr(col("ns"), col("nt"))), empty)
-    val withWs = o
+    val withWs = materialize(o
       .join(BroadcastCap.hint(nbrs, m), "s")
       .join(BroadcastCap.hint(
         nbrs.select(col("s").as("t"), col("ns").as("nt")), m),
         Seq("t"), "left")
       .select(col("s"), col("t"), size(ws).cast("long").as("c"),
-        ws.as("ws"))
-      .localCheckpoint(true)
+        ws.as("ws"))).df
     val endpoints = withWs.select(col("s").as("id"), col("c"))
       .unionAll(withWs.select(col("t").as("id"), col("c")))
       .groupBy("id").agg(sum("c").as("tri_st"))
@@ -983,8 +977,7 @@ object Graph {
     // are disjoint from the canonical ones (src < dst vs src > dst), so
     // the union needs no further distinct — the dedup ran on HALF the
     // pair volume the naive both-directions self-join + distinct shuffles
-    val c = coOccurrenceEdgesCanonical(df, groupCol, itemCol)
-      .localCheckpoint(true)
+    val c = materialize(coOccurrenceEdgesCanonical(df, groupCol, itemCol)).df
     c.unionAll(c.select(col("dst").as("src"), col("src").as("dst")))
   }
 
@@ -1037,7 +1030,8 @@ object Graph {
     // [[coOccurrenceEdgesCanonical]] — each unordered pair appears
     // exactly once per group, so the counting aggregate over the
     // emitted stream reproduces the shared-group count bit for bit
-    val c = df.select(col(groupCol).as("g"), col(itemCol).as("item"))
+    val c = materialize(df
+      .select(col(groupCol).as("g"), col(itemCol).as("item"))
       .groupBy("g")
       .agg(sort_array(collect_set(col("item"))).as("xs"))
       .select(posexplode(col("xs")).as(Seq("i", "src")), col("xs"))
@@ -1046,8 +1040,7 @@ object Graph {
           greatest(size(col("xs")) - col("i") - lit(1), lit(0))))
           .as("dst"))
       .groupBy(col("src"), col("dst"))
-      .agg(count(lit(1)).as("w"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("w"))).df
     c.unionAll(c.select(col("dst").as("src"), col("src").as("dst"), col("w")))
   }
 
@@ -1061,8 +1054,7 @@ object Graph {
     *
     * @return (kind 'in'|'out', degree, n_nodes) */
   def degreeReport(edges: DataFrame): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).distinct()
-      .localCheckpoint(true)
+    val e = materialize(edges.select(col("src"), col("dst")).distinct()).df
     val vertices = e.select(col("src").as("id"))
       .unionAll(e.select(col("dst").as("id"))).distinct()
     def hist(kind: String, keyCol: String): DataFrame = {
@@ -1085,9 +1077,8 @@ object Graph {
     * left-semi self-join on the canonical key: co-partitioned, no
     * row explosion. */
   def reciprocity(edges: DataFrame): DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-      .localCheckpoint(true)
+    val e = materialize(edges.select(col("src"), col("dst"))
+      .filter(col("src") =!= col("dst")).distinct()).df
     val recip = e.join(
       e.select(col("dst").as("src"), col("src").as("dst")),
       Seq("src", "dst"), "left_semi")
@@ -1168,7 +1159,7 @@ object Graph {
         // with h and each hop re-analyzes the whole union — collapse it
         // periodically so a deep walk pays O(hops) analysis, not O(hops²)
         // (labelPropagation's it%3 pattern; r14 advice)
-        if (h % 6 == 0 && h < maxHops) visited = visited.localCheckpoint(true)
+        if (h % 6 == 0 && h < maxHops) visited = materialize(visited).df
       }
       frontier = next
     }
@@ -1227,7 +1218,7 @@ object Graph {
         visited = visited.unionAll(next.withColumn("dist", lit(h)))
         nVisited += nFrontier
         // collapse the lazy union periodically — see [[bfsDistances]]
-        if (h % 6 == 0 && h < maxHops) visited = visited.localCheckpoint(true)
+        if (h % 6 == 0 && h < maxHops) visited = materialize(visited).df
       }
       frontier = next
     }
@@ -1341,7 +1332,7 @@ object Graph {
     // edge list (declared hash(dst), so never src-aligned) AND the
     // expanded rows again on (label,dst), every level (r15 job audit).
     val maxL = levels.length - 1
-    var delta = levels(maxL).withColumn("d", lit(0L)).localCheckpoint(true)
+    var delta = materialize(levels(maxL).withColumn("d", lit(0L))).df
     def accSlice(df: DataFrame) = df.select("label", "id", "d")
     var acc = if (maxL > 0) accSlice(delta) else accSlice(delta).limit(0)
     for (k <- (maxL - 1) to 0 by -1) {
@@ -1370,10 +1361,9 @@ object Graph {
           .cast("long").as("d"))
       // vertices with no level-(k+1) successor keep δ = 0 (they still
       // carry σ for the next round)
-      delta = levels(k).join(dkAgg, Seq("label", "id"), "left")
+      delta = materialize(levels(k).join(dkAgg, Seq("label", "id"), "left")
         .select(col("label"), col("id"), col("sig"),
-          coalesce(col("d"), lit(0L)).as("d"))
-        .localCheckpoint(true)
+          coalesce(col("d"), lit(0L)).as("d"))).df
       acc = if (k > 0) acc.unionAll(accSlice(delta)) else acc // pivots excluded
     }
     acc.filter(col("d") > 0)
@@ -1470,16 +1460,15 @@ object Graph {
     require(k >= 3, "ktruss needs k >= 3")
     require(iterations >= 0, "iterations must be >= 0")
     // assumeCanonical: see [[triangleStats]] (r15, guide §2.4)
-    var e = (if (assumeCanonical)
+    var e = materialize((if (assumeCanonical)
       edges.select(col("src").as("u"), col("dst").as("v"))
     else edges
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct())
-      .localCheckpoint(true)
-    def support(ec: DataFrame): DataFrame = {
-      val m = ec.count()
+      .distinct()))
+    // m: the edge count, taken from the job that materialized ec
+    def support(ec: DataFrame, m: Long): DataFrame = {
       val deg = ec.select(col("u").as("id"))
         .unionAll(ec.select(col("v").as("id")))
         .groupBy("id").agg(count(lit(1)).as("d"))
@@ -1492,13 +1481,11 @@ object Graph {
           "v")
       val uFirst = col("du") < col("dv") ||
         (col("du") === col("dv") && col("u") < col("v"))
-      val o = ew.select(
+      val o = materialize(ew.select(
           when(uFirst, col("u")).otherwise(col("v")).as("s"),
-          when(uFirst, col("v")).otherwise(col("u")).as("t"))
-        .localCheckpoint(true)
-      val nbrs = o.groupBy("s")
-        .agg(sort_array(collect_list(col("t"))).as("ns"))
-        .localCheckpoint(true)
+          when(uFirst, col("v")).otherwise(col("u")).as("t"))).df
+      val nbrs = materialize(o.groupBy("s")
+        .agg(sort_array(collect_list(col("t"))).as("ns"))).df
       val empty = slice(col("ns"), 1, 0)
       val ws = coalesce(when(col("nt").isNotNull,
         sortedIntersectArr(col("ns"), col("nt"))), empty)
@@ -1510,13 +1497,12 @@ object Graph {
       // checkpoints once and three codegen projections (edge rows +
       // one plain explode consumed twice) rebuild the identical
       // per-edge support multiset
-      val withWs = o.join(BroadcastCap.hint(nbrs, m), "s")
+      val withWs = materialize(o.join(BroadcastCap.hint(nbrs, m), "s")
         .join(BroadcastCap.hint(
           nbrs.select(col("s").as("t"), col("ns").as("nt")), m),
           Seq("t"), "left")
         .select(col("s"), col("t"), size(ws).cast("long").as("c"),
-          ws.as("ws"))
-        .localCheckpoint(true)
+          ws.as("ws"))).df
       val baseRows = withWs
         .select(ckey(col("s"), col("t")).as("e"), col("c"))
       val exploded = withWs
@@ -1530,13 +1516,12 @@ object Graph {
         .agg(sum(col("c")).as("support"))
     }
     for (_ <- 1 to iterations) {
-      val sup = support(e)
-      e = e.join(sup, Seq("u", "v"), "left")
+      val sup = support(e.df, e.rows)
+      e = materialize(e.df.join(sup, Seq("u", "v"), "left")
         .filter(coalesce(col("support"), lit(0L)) >= k - 2)
-        .select("u", "v")
-        .localCheckpoint(true)
+        .select("u", "v"))
     }
-    e.join(support(e), Seq("u", "v"), "left")
+    e.df.join(support(e.df, e.rows), Seq("u", "v"), "left")
       .select(col("u"), col("v"),
         coalesce(col("support"), lit(0L)).as("support"))
   }
@@ -1577,14 +1562,14 @@ object Graph {
       labels.select(col(idCol).as("__id"), col(labelCol).as("__c")))
     val (lab, nLab) = (lm.df, lm.rows)
     val e = edges.select(col("src").as("__u"), col("dst").as("__v"))
-    val tagged = e
+    // m count + intra count share it
+    val tagged = materialize(e
       .join(BroadcastCap.hint(
         lab.select(col("__id").as("__u"), col("__c").as("__cu")), nLab),
         "__u")
       .join(BroadcastCap.hint(
         lab.select(col("__id").as("__v"), col("__c").as("__cv")), nLab),
-        "__v")
-      .localCheckpoint(true) // m count + intra count share it
+        "__v")).df
     val m = tagged.agg(count(lit(1)).as("__m"))
     // r16: intra-edge counts and degree sums fold into ONE aggregation
     // over the endpoint stream — the u-endpoint row carries the edge's
@@ -1886,8 +1871,8 @@ object Graph {
   def incrementalScc(labels: DataFrame, condEdges: DataFrame,
                      newEdges: DataFrame,
                      driverMaxEdges: Long = 1L << 20): DataFrame = {
-    val lab = labels.select(col("id"), col("scc_id"))
-      .localCheckpoint(true) // joined on both batch endpoints + compose
+    // joined on both batch endpoints + compose
+    val lab = materialize(labels.select(col("id"), col("scc_id"))).df
     val mapped = newEdges.select(col("src"), col("dst"))
       .join(lab.select(col("id").as("src"), col("scc_id").as("__sl")),
         Seq("src"), "left")
@@ -1898,8 +1883,8 @@ object Graph {
     val overlay = condEdges
       .select(col("src_scc").as("src"), col("dst_scc").as("dst"))
       .unionAll(mapped)
-    val l2 = scc(overlay, driverMaxEdges = driverMaxEdges)
-      .localCheckpoint(true) // compose join + new-vertex anti-join
+    // compose join + new-vertex anti-join
+    val l2 = materialize(scc(overlay, driverMaxEdges = driverMaxEdges)).df
     val composed = lab
       .join(l2.select(col("id").as("scc_id"), col("scc_id").as("__nl")),
         Seq("scc_id"), "left")

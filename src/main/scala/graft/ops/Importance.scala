@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftShim.materialize
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -83,10 +84,10 @@ object Importance {
     // materialization each consumer re-runs the corpus explode. They
     // are ≤ `buckets` rows, so checkpointing costs nothing and pins
     // each corpus to exactly ONE scan.
-    def model(df: DataFrame) = explodedGrams(df, textCol, n, Seq.empty)
+    def model(df: DataFrame) = materialize(
+      explodedGrams(df, textCol, n, Seq.empty)
       .select(gramBucket(col("g"), buckets).as("b"))
-      .groupBy("b").agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
+      .groupBy("b").agg(count(lit(1)).as("c"))).df
     ratioTable(model(raw), model(target), buckets)
   }
 
@@ -117,13 +118,12 @@ object Importance {
     // the same reuse argument as TextRank's term index). Checkpointed
     // because the index feeds two consumers (the model aggregate and
     // the weight join) that would otherwise re-run the explode.
-    val docB = ngramBucketCounts(raw, textCol, idCol, n, buckets)
-      .localCheckpoint(true)
+    val docB =
+      materialize(ngramBucketCounts(raw, textCol, idCol, n, buckets)).df
     val rc = docB.groupBy("b").agg(sum("cnt").as("c"))
-    val tc = explodedGrams(target, textCol, n, Seq.empty)
+    val tc = materialize(explodedGrams(target, textCol, n, Seq.empty)
       .select(gramBucket(col("g"), buckets).as("b"))
-      .groupBy("b").agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
+      .groupBy("b").agg(count(lit(1)).as("c"))).df
     val delta = broadcast(ratioTable(rc, tc, buckets))
     val summed = docB.join(delta, "b")
       .groupBy("id")
@@ -144,12 +144,12 @@ object Importance {
     val spark = corpus.sparkSession
     // materialized once: the total, the bucket-frame join and any
     // downstream collect (modelToArray) would each re-run the corpus
-    // explode otherwise; the aggregate is ≤ `buckets` rows
-    val counts = explodedGrams(corpus, textCol, n, Seq.empty)
+    // explode otherwise; the aggregate is ≤ `buckets` rows, and its job
+    // also sums the total
+    val cm = materialize(explodedGrams(corpus, textCol, n, Seq.empty)
       .select(gramBucket(col("g"), buckets).as("b"))
-      .groupBy("b").agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
-    val tot = counts.agg(coalesce(sum("c"), lit(0L))).head.getLong(0)
+      .groupBy("b").agg(count(lit(1)).as("c")), sumCol = Some("c"))
+    val (counts, tot) = (cm.df, cm.sum)
     val den = lit(tot.toDouble + buckets)
     spark.range(buckets).select(col("id").cast("int").as("b"))
       .join(counts, Seq("b"), "left")

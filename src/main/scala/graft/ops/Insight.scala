@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, GraftShim}
+import org.apache.spark.sql.GraftShim.materialize
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{ChrfRails, NgramRails}
@@ -449,9 +450,9 @@ object Insight {
     require(bucketUs > 0, "bucketUs must be positive")
     val bucket = expr(
       s"unix_micros(cast(`$tsCol` as timestamp)) div ${bucketUs}L")
-    val counts = events.groupBy(col(keyCol).as("key"), bucket.as("bucket"))
-      .agg(count(lit(1)).as("x"))
-      .localCheckpoint(true)
+    val counts = materialize(
+      events.groupBy(col(keyCol).as("key"), bucket.as("bucket"))
+      .agg(count(lit(1)).as("x"))).df
     val s = counts.as("a")
       .join(counts.as("b"),
         col("a.key") === col("b.key") && col("a.bucket") < col("b.bucket"))
@@ -528,10 +529,10 @@ object Insight {
     * @return one row (n, nc, nd, n1, n2, tau_ppm) */
   def kendallTauB(df: DataFrame, idCol: String, xCol: String,
                   yCol: String): DataFrame = {
-    val base = df.select(col(idCol).as("id"), col(xCol).cast("long").as("x"),
+    val base = materialize(df
+      .select(col(idCol).as("id"), col(xCol).cast("long").as("x"),
         col(yCol).cast("long").as("y"))
-      .filter(col("x").isNotNull && col("y").isNotNull)
-      .localCheckpoint(true)
+      .filter(col("x").isNotNull && col("y").isNotNull)).df
     val pairs = base.as("a").join(base.as("b"), col("a.id") < col("b.id"))
       .select((signum(col("b.x") - col("a.x")) *
         signum(col("b.y") - col("a.y"))).cast("long").as("s"))
@@ -939,16 +940,16 @@ object Insight {
     * @return single row (n, do_scaled, de_num, alpha_ppm) */
   def krippendorffAlpha(df: DataFrame, unitCol: String,
                         valueCol: String): DataFrame = {
-    val uv = df
+    // feeds the unit aggregate AND the marginals
+    val uv = materialize(df
       .filter(col(unitCol).isNotNull && col(valueCol).isNotNull)
       .groupBy(col(unitCol).as("__u"), col(valueCol).as("__c"))
-      .agg(count(lit(1)).as("__nuc"))
-      .localCheckpoint(true) // feeds the unit aggregate AND the marginals
-    val perUnit = uv.groupBy("__u")
+      .agg(count(lit(1)).as("__nuc"))).df
+    // 1-row sums + the pairable-unit semi join
+    val perUnit = materialize(uv.groupBy("__u")
       .agg(sum("__nuc").as("__m"),
         sum(expr("__nuc * __nuc")).as("__s2"))
-      .filter(col("__m") >= 2)
-      .localCheckpoint(true) // 1-row sums + the pairable-unit semi join
+      .filter(col("__m") >= 2)).df
     val doRow = perUnit.agg(
       sum(expr("(__m * __m - __s2) * 1000000L div (__m - 1L)"))
         .as("do_scaled"),
@@ -1113,10 +1114,10 @@ object Insight {
         explode(array((-1 until reps).map(r => lit(r.toLong)): _*))
           .as("__rep"))
       .withColumn("__w", weightExpr)
-    val perRep = base.groupBy("__rep")
+    // tiny (reps+1 rows); split three ways below
+    val perRep = materialize(base.groupBy("__rep")
       .agg(sum("__w").as("__n"), sum(expr("__w * __vm")).as("__s"))
-      .withColumn("__mean", expr("__s div __n"))
-      .localCheckpoint(true) // tiny (reps+1 rows); split three ways below
+      .withColumn("__mean", expr("__s div __n"))).df
     val full = perRep.filter(col("__rep") === -1L)
       .select(col("__n").as("n"), col("__mean").as("mean_micro"))
     // R-row frame: the unpartitioned window is 1 task over `reps` rows
@@ -1183,12 +1184,12 @@ object Insight {
         explode(array((-1 until reps).map(r => lit(r.toLong)): _*))
           .as("__rep"))
       .withColumn("__w", weightExpr)
-    val perRep = base.groupBy("__rep")
+    // tiny (reps+1 rows); read four ways below
+    val perRep = materialize(base.groupBy("__rep")
       .agg(sum("__w").as("__n"),
         sum(expr("__w * __am")).as("__sa"),
         sum(expr("__w * __bm")).as("__sb"))
-      .withColumn("__d", expr("(__sa - __sb) div __n"))
-      .localCheckpoint(true) // tiny (reps+1 rows); read four ways below
+      .withColumn("__d", expr("(__sa - __sb) div __n"))).df
     val full = perRep.filter(col("__rep") === -1L)
       .select(col("__n").as("n"),
         expr("__sa div __n").as("mean_a_micro"),
@@ -1260,11 +1261,11 @@ object Insight {
   def chiSquare(df: DataFrame, aCol: String, bCol: String): DataFrame = {
     // null is a level: coalesce to a NUL sentinel so countDistinct
     // (which skips SQL nulls) still counts it as a category
-    val cells = df
+    // margins + terms re-read it three ways
+    val cells = materialize(df
       .select(coalesce(col(aCol).cast("string"), lit("\u0000")).as("__a"),
         coalesce(col(bCol).cast("string"), lit("\u0000")).as("__b"))
-      .groupBy("__a", "__b").agg(count(lit(1)).as("__o"))
-      .localCheckpoint(true) // margins + terms re-read it three ways
+      .groupBy("__a", "__b").agg(count(lit(1)).as("__o"))).df
     val rt = cells.groupBy("__a").agg(sum("__o").as("__rt"))
     val ct = cells.groupBy("__b").agg(sum("__o").as("__ct"))
     val tot = cells.agg(sum("__o").as("__n"),
@@ -1447,11 +1448,11 @@ object Insight {
     * @return (arm, n, mean_y_micro, adj_mean_micro, theta_ppm) */
   def cupedAdjust(df: DataFrame, armCol: String, yCol: String,
                   xCol: String): DataFrame = {
-    val base = df.select(col(armCol).as("arm"),
+    // pooled + per-arm aggregates share it
+    val base = materialize(df.select(col(armCol).as("arm"),
         col(yCol).cast("long").as("__y"), col(xCol).cast("long").as("__x"))
       .filter(col("arm").isNotNull && col("__y").isNotNull &&
-        col("__x").isNotNull)
-      .localCheckpoint(true) // pooled + per-arm aggregates share it
+        col("__x").isNotNull)).df
     val pooled = base.agg(count(lit(1)).as("__np"),
       sum("__x").as("__sxp"), sum("__y").as("__syp"),
       sum(expr("CAST(__x AS DECIMAL(38,0)) * __y")).as("__sxyp"),
@@ -1595,10 +1596,10 @@ object Insight {
   def bhSelect(df: DataFrame, pMicroCol: String, idCol: String,
                alphaMicro: Long = 50000L): DataFrame = {
     require(alphaMicro > 0, "alphaMicro must be positive")
-    val ranked = Rank.globalRank(
+    // cutoff aggregate + final filter share it
+    val ranked = materialize(Rank.globalRank(
         df.filter(col(pMicroCol).isNotNull),
-        Seq(col(pMicroCol), col(idCol)), outCol = "rank")
-      .localCheckpoint(true) // cutoff aggregate + final filter share it
+        Seq(col(pMicroCol), col(idCol)), outCol = "rank")).df
     val m = ranked.agg(count(lit(1)).as("m"))
     val withM = ranked.crossJoin(broadcast(m))
     val cutoff = withM
@@ -1915,15 +1916,16 @@ object Insight {
     * @return one row (n, k, h_micro, tie_ppm, h_adj_micro) */
   def kruskalWallis(df: DataFrame, valueCol: String,
                     groupCol: String): DataFrame = {
-    val gv = df
+    // value-vocabulary pass + per-group join
+    val gv = materialize(df
       .select(col(groupCol).as("__g"), col(valueCol).cast("long").as("__v"))
       .filter(col("__g").isNotNull && col("__v").isNotNull)
       .groupBy("__g", "__v")
-      .agg(count(lit(1)).as("__c"))
-      .localCheckpoint(true) // value-vocabulary pass + per-group join
+      .agg(count(lit(1)).as("__c"))).df
     val perV = gv.groupBy("__v").agg(sum("__c").as("__ct"))
-    val vtab = Rank.prefixSum(perV, Seq(col("__v")), "__ct", outCol = "__cum")
-      .localCheckpoint(true) // midrank join + tie aggregate
+    // midrank join + tie aggregate
+    val vtab = materialize(
+      Rank.prefixSum(perV, Seq(col("__v")), "__ct", outCol = "__cum")).df
     val ties = vtab.agg(coalesce(
       sum(expr("CAST(__ct AS DECIMAL(38,0)) * __ct * __ct - __ct")),
       expr("CAST(0 AS DECIMAL(38,0))")).as("__t"))
@@ -2034,10 +2036,10 @@ object Insight {
         col(eventCol).cast("boolean").as("__e"))
       .filter(col("__g").isNotNull && col("__t").isNotNull &&
         col("__e").isNotNull)
-    val cnt = d0.groupBy("__t", "__g")
+    // grid zero-fill + vocab both read it
+    val cnt = materialize(d0.groupBy("__t", "__g")
       .agg(count(lit(1)).as("__n"),
-        sum(when(col("__e"), 1L).otherwise(0L)).as("__d"))
-      .localCheckpoint(true) // grid zero-fill + vocab both read it
+        sum(when(col("__e"), 1L).otherwise(0L)).as("__d"))).df
     val grid = cnt.select("__t").distinct()
       .crossJoin(cnt.select("__g").distinct())
       .join(cnt, Seq("__t", "__g"), "left")
@@ -2362,11 +2364,11 @@ object Insight {
   def signFlipTest(df: DataFrame, pairCol: String, diffCol: String,
                    resamples: Int = 200): DataFrame = {
     require(resamples >= 1, "signFlipTest needs resamples >= 1")
-    val d = df
+    // observed pass + resample pass share it
+    val d = materialize(df
       .select(col(pairCol).cast("string").as("__p"),
         col(diffCol).cast("long").as("__d"))
-      .filter(col("__p").isNotNull && col("__d").isNotNull)
-      .localCheckpoint(true) // observed pass + resample pass share it
+      .filter(col("__p").isNotNull && col("__d").isNotNull)).df
     val obs = d.agg(sum("__d").as("__t0"), count(lit(1)).as("n_pairs"))
     d.select(col("__p"), col("__d"),
         explode(expr(s"sequence(1, $resamples)")).as("__b"))

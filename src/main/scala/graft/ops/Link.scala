@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.GraftShim.materialize
 import org.apache.spark.sql.functions._
 
 /** Record linkage: fuzzy (near-duplicate) JOIN between two DIFFERENT
@@ -402,9 +403,9 @@ object Link {
     // pattern because its table needs no driver-side bit array)
     val canon = cands.select(agreeCols.map(c =>
       coalesce(col(c).cast("boolean"), lit(false)).as(c)): _*)
-    val pat = canon.groupBy(agreeCols.map(col): _*)
-      .agg(count(lit(1)).as("n_pairs"))
-      .localCheckpoint(true) // collected for EM + returned enriched
+    // collected for EM + returned enriched
+    val pat = materialize(canon.groupBy(agreeCols.map(col): _*)
+      .agg(count(lit(1)).as("n_pairs"))).df
     // bounded collect: ≤ 2^k rows by construction
     val rows = pat.collect().map { r =>
       (agreeCols.indices.map(i => r.getBoolean(r.fieldIndex(agreeCols(i))))

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.GraftShim.materialize
 import org.apache.spark.sql.functions._
 
 /** Interval ("range") join: match each point row to the interval rows
@@ -169,17 +170,17 @@ object RangeJoin {
   def concurrency(df: DataFrame, startCol: String,
                   endCol: String): DataFrame = {
     def micros(c: org.apache.spark.sql.Column) = unix_micros(c.cast("timestamp"))
-    val iv = df
+    // two boundary projections read it; its job also counts the rows
+    val im = materialize(df
       .select(micros(col(startCol)).as("__s"), micros(col(endCol)).as("__e"))
       .filter(col("__s").isNotNull && col("__e").isNotNull &&
-        col("__s") <= col("__e"))
-      .localCheckpoint(true) // count + two boundary projections
-    val n = iv.count()
+        col("__s") <= col("__e")))
+    val (iv, n) = (im.df, im.rows)
     val bounds = iv.select(col("__s").as("t"), lit(1L).as("d"))
       .unionAll(iv.select(col("__e").as("t"), lit(-1L).as("d")))
-    val ranked = Rank.rankedPrefixSum(bounds, Seq(col("t"), col("d")),
-        "d", rankCol = "__r", cumCol = "depth")
-      .localCheckpoint(true) // self-join both sides
+    // self-join both sides
+    val ranked = materialize(Rank.rankedPrefixSum(bounds,
+      Seq(col("t"), col("d")), "d", rankCol = "__r", cumCol = "depth")).df
     val seg = ranked.as("a")
       .join(ranked.as("b"), col("b.__r") === col("a.__r") + 1)
       .select(col("a.depth").as("depth"),

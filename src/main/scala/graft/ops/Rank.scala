@@ -59,7 +59,7 @@ object Rank {
     *      row of range-partition p sorts before every row of p+1
     *      (RangePartitioner's deterministic sampled bounds); the
     *      partition id is MATERIALIZED as a column and the frame
-    *      localCheckpoint'd, so the id is data, not physical layout,
+    *      materialized, so the id is data, not physical layout,
     *   2. one tiny count-per-range-partition aggregate (≤ n rows to
     *      the driver — partition COUNTS, never data) folded into a
     *      prefix-offset table,
@@ -163,7 +163,7 @@ object Rank {
     * collect (≤ numShufflePartitions rows of PARTIAL aggregates, never
     * data) yields both offset tables and one window emits both
     * columns. Same rails as the parents: materialized partition ids,
-    * localCheckpoint, broadcast offsets, LONG value coalesce-0. */
+    * one materialization, broadcast offsets, LONG value coalesce-0. */
   def rankedPrefixSum(df: DataFrame, order: Seq[Column], valueCol: String,
                       rankCol: String = "rank", cumCol: String = "cum",
                       numPartitions: Int = 0): DataFrame = {
@@ -265,7 +265,7 @@ object Rank {
     * and join, the (qid,a) aggregate, the per-qid argmax window), so
     * all m−1 rounds plan with ZERO shuffle exchanges beyond the one
     * pinned exchange inside each tiny picked-set materialization; the
-    * plain-localCheckpoint spelling re-exchanged the k²-sized pair
+    * undeclared-checkpoint spelling re-exchanged the k²-sized pair
     * table every round (the erased-layout tax).
     *
     * @param cand (qidCol, idCol, rankCol) — k-bounded, rank 1 best

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.GraftShim.materialize
 import org.apache.spark.sql.functions._
 
 /** Mergeable corpus data card — the release report as a train-once /
@@ -145,11 +146,11 @@ object Report {
   def vocabGrowth(docs: DataFrame, idCol: String, toksCol: String,
                   points: Int = 10): DataFrame = {
     require(points >= 1, "vocabGrowth needs points >= 1")
-    val ranked = Rank.globalRank(
+    // first-pos pass + per-doc count pass
+    val ranked = materialize(Rank.globalRank(
         docs.select(col(idCol).as("__id"), col(toksCol).as("__t"))
           .filter(col("__id").isNotNull),
-        Seq(col("__id")), outCol = "__pos")
-      .localCheckpoint(true) // first-pos pass + per-doc count pass
+        Seq(col("__id")), outCol = "__pos")).df
     val nRow = ranked.agg(count(lit(1)).as("__n"))
     val cps = nRow
       .select(explode(expr(s"sequence(1, $points)")).as("__p"),

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftShim.materialize
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -302,13 +303,12 @@ object Sample {
     // Both tau and the kept rows derive from the top-(n+1) set; without
     // materialization the full corpus window scan would run TWICE (the
     // two consumers defeat Catalyst's exchange reuse). The set is tiny —
-    // strata × (n+1) rows — so localCheckpoint is cheap and truncates
+    // strata × (n+1) rows — so the checkpoint is cheap and truncates
     // the double-scan at it.
-    val ranked = df
+    val ranked = materialize(df
       .withColumn("pri", pri)
       .withColumn("__rk", row_number().over(w))
-      .filter(col("__rk") <= n + 1)
-      .localCheckpoint(true)
+      .filter(col("__rk") <= n + 1)).df
     val tau = ranked.groupBy(stratumCol)
       .agg(min(when(col("__rk") === n + 1, col("pri"))).as("__tau"))
     ranked.filter(col("__rk") <= n)
@@ -336,7 +336,7 @@ object Sample {
     * against ONLY the newest center (a broadcast-literal vector — no
     * join), takes the arg-max via TakeOrderedAndProject (map-side
     * top-1 per partition, driver merges partition winners), and
-    * localCheckpoints the (id, v, mind) frame so lineage stays flat.
+    * checkpoints the (id, v, mind) frame so lineage stays flat.
     * k full scans total — the textbook trade for an exact greedy
     * cover; `idCol` must be LongType.
     *
@@ -345,8 +345,8 @@ object Sample {
                k: Int): DataFrame = {
     require(k >= 1, "k must be >= 1")
     val spark = df.sparkSession
-    val base = df.select(col(idCol).cast("long").as("id"),
-      col(vecCol).as("v")).localCheckpoint(true)
+    val base = materialize(df.select(col(idCol).cast("long").as("id"),
+      col(vecCol).as("v"))).df
     val seed = base.orderBy("id").limit(1).select("id", "v").head()
     def vecOf(r: org.apache.spark.sql.Row): Array[Double] =
       r.getSeq[Any](1).map {
@@ -358,8 +358,7 @@ object Sample {
         round(Similarity.cosine(col("v"), typedlit(c)) * 1e6).cast("long")
     val seedId = seed.getLong(0)
     var selected = Vector[(Long, Long, Option[Long])]((1L, seedId, None))
-    var cur = base.withColumn("mind", distTo(vecOf(seed)))
-      .localCheckpoint(true)
+    var cur = materialize(base.withColumn("mind", distTo(vecOf(seed)))).df
     var t = 2
     var exhausted = false
     while (t <= k && !exhausted) {
@@ -370,9 +369,8 @@ object Sample {
         case None => exhausted = true
         case Some(r) =>
           selected :+= ((t.toLong, r.getLong(0), Some(r.getLong(2))))
-          cur = cur.withColumn("mind",
-              least(col("mind"), distTo(vecOf(r))))
-            .localCheckpoint(true)
+          cur = materialize(cur.withColumn("mind",
+              least(col("mind"), distTo(vecOf(r))))).df
           t += 1
       }
     }
@@ -548,10 +546,9 @@ object Sample {
         s"sequence(1, size(__t) - ${n - 1}), " +
         s"i -> array_join(slice(__t, i, $n), ' ')) " +
         "ELSE CAST(array() AS ARRAY<STRING>) END")
-    val dt = df.withColumn("__t", toks)
+    val dt = materialize(df.withColumn("__t", toks)
       .select(col(idCol).as("id"),
-        explode(array_distinct(units)).as("tok"))
-      .localCheckpoint(true)
+        explode(array_distinct(units)).as("tok"))).df
     var covered = spark.emptyDataset[String].toDF("tok")
     val picks = Seq.newBuilder[(Long, Long, Long)]
     var r = 1
@@ -564,9 +561,8 @@ object Sample {
       else {
         val id = best.head.getLong(0)
         picks += ((r.toLong, id, best.head.getLong(1)))
-        covered = covered
-          .union(dt.filter(col("id") === id).select("tok")).distinct()
-          .localCheckpoint(true)
+        covered = materialize(covered
+          .union(dt.filter(col("id") === id).select("tok")).distinct()).df
         r += 1
       }
     }

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.GraftShim.materialize
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -34,13 +35,12 @@ object TextRank {
     // filter pushed below the projection with the tokenizer re-inlined,
     // doubling the scan's regex work; the null row from empty docs is
     // dropped by the non-empty-term predicate anyway
-    val terms = docs
+    val terms = materialize(docs
       .select(col(idCol).as("id"),
         explode_outer(TextFunctions.tokens(col(textCol))).as("term"))
       .filter(col("term") =!= "")
       .groupBy("id", "term")
-      .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("tf"))).df
     val df = terms.groupBy("term")
       .agg(count(lit(1)).as("df"))
     val scored = terms.join(df, "term")
@@ -82,13 +82,12 @@ object TextRank {
     val spark = docs.sparkSession
     import spark.implicits._
     val n = docs.count()
-    val terms = docs
+    val terms = materialize(docs
       .select(col(idCol).as("id"),
         explode_outer(TextFunctions.tokens(col(textCol))).as("term"))
       .filter(col("term") =!= "")
       .groupBy("id", "term")
-      .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("tf"))).df
     // per-doc length (token count incl. duplicates) and the corpus mean;
     // totTf/n is ONE double division of two exact longs — the oracle
     // recomputes the identical value.

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftShim.materialize
 import org.apache.spark.sql.functions._
 
 /** Web-corpus curation: URL canonicalization, registered-domain
@@ -364,20 +365,18 @@ object Web {
   def resolveChains(edges: DataFrame, srcCol: String, dstCol: String,
                     rounds: Int = 4): DataFrame = {
     require(rounds >= 1 && rounds <= 20, "rounds in [1, 20]")
-    val e = edges.groupBy(col(srcCol).as("src"))
-      .agg(min(col(dstCol)).as("dst"))
-      .localCheckpoint(true)
+    val e = materialize(edges.groupBy(col(srcCol).as("src"))
+      .agg(min(col(dstCol)).as("dst"))).df
     var state = e.select(col("src"), col("dst").as("cur"),
       lit(1L).as("hops"))
     for (_ <- 1 to rounds) {
       val t = state.select(col("src").as("__t_src"),
         col("cur").as("__t_cur"), col("hops").as("__t_hops"))
-      state = state
+      state = materialize(state
         .join(t, state("cur") === t("__t_src"), "left")
         .select(col("src"),
           coalesce(col("__t_cur"), col("cur")).as("cur"),
-          (col("hops") + coalesce(col("__t_hops"), lit(0L))).as("hops"))
-        .localCheckpoint(true)
+          (col("hops") + coalesce(col("__t_hops"), lit(0L))).as("hops"))).df
     }
     state
       .join(e.select(col("src").as("cur"), lit(true).as("__out")),
@@ -389,8 +388,8 @@ object Web {
   def mirrorHosts(df: DataFrame, hostCol: String, fpCol: String,
                   minJaccard: Double = 0.5): DataFrame = {
     require(minJaccard > 0 && minJaccard <= 1, "minJaccard in (0, 1]")
-    val hf = df.select(col(hostCol).as("h"), col(fpCol).as("fp")).distinct()
-      .localCheckpoint(true)
+    val hf = materialize(
+      df.select(col(hostCol).as("h"), col(fpCol).as("fp")).distinct()).df
     val sizes = hf.groupBy("h").agg(count(lit(1)).as("n"))
     val common = hf.as("a")
       .join(hf.withColumnRenamed("h", "h2").as("b"), "fp")

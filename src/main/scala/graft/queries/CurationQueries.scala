@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.GraftShim.materialize
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops._
@@ -332,9 +333,10 @@ private[graft] object CurationQueries {
       .select(explode(TextFunctions.tokens(col("text"))).as("w"))
       .filter(col("w") =!= "" && !col("w").startsWith("##") &&
         length(col("w")) <= 64)
-    val wc = sample.groupBy("w").agg(count(lit(1)).as("c"))
-      .localCheckpoint(true) // words + chars + totals read it 3×
-    val totWords = wc.agg(sum("c")).collect().head.getLong(0)
+    // words + chars read it; its job also sums the word total
+    val wm = materialize(sample.groupBy("w").agg(count(lit(1)).as("c")),
+      sumCol = Some("c"))
+    val (wc, totWords) = (wm.df, wm.sum)
     val topWords = wc.filter(length(col("w")) >= 2)
       .orderBy(col("c").desc, col("w")).limit(16)
       .collect().map(r => (r.getString(0), r.getLong(1)))

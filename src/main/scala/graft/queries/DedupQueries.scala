@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.GraftShim.materialize
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops._
@@ -114,9 +115,9 @@ private[graft] object DedupQueries {
     // Checkpoint each once; the intersection join probes a broadcast
     // of the twin-side grams under the [[BroadcastCap]] instead of
     // exchanging both string-gram streams into an SMJ.
-    val all = base.unionByName(twin).localCheckpoint(true)
+    val all = materialize(base.unionByName(twin)).df
     val tk = toks(col("text"))
-    val gm = org.apache.spark.sql.GraftShim.materialize(
+    val gm = materialize(
       all.select(pmod(col("doc_id"), lit(off)).as("pid"),
         (col("doc_id") >= off).as("tw"),
         explode(array_distinct(when(size(tk) >= 3,
@@ -137,8 +138,7 @@ private[graft] object DedupQueries {
         expr("least(coalesce(c, 0) * 20 div (na + nb - coalesce(c, 0)), 19)")
           .as("bucket"))
     // checkpointed: both self-join sides read it (r16)
-    val idx = Dedup.minhashIndex(all, "text", "doc_id")
-      .localCheckpoint(true)
+    val idx = materialize(Dedup.minhashIndex(all, "text", "doc_id")).df
     val cap = idx.as("a").join(idx.as("b"),
         col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
           col("b.id") === col("a.id") + off)
@@ -382,9 +382,10 @@ private[graft] object DedupQueries {
   private[graft] def qDedupIncrementalComponents(s: SparkSession,
                                                  dir: String): DataFrame = {
     val d = t(s, dir, "documents")
-    val pairs = Dedup.ngramJaccardPairs(d, "text", "doc_id",
+    // base + increment read it
+    val pairs = materialize(Dedup.ngramJaccardPairs(d, "text", "doc_id",
         threshold = 0.5)
-      .select("ida", "idb").localCheckpoint(true) // base + increment read it
+      .select("ida", "idb")).df
     val base = pairs.filter(col("ida") < 250 && col("idb") < 250)
     val inc = pairs.filter(col("ida") >= 250 || col("idb") >= 250)
     val labels = Dedup.connectedComponentsStar(base)

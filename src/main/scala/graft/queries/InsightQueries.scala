@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.GraftShim.materialize
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops._
@@ -777,8 +778,9 @@ private[graft] object InsightQueries {
     * numerators summed BEFORE the single ppm division. */
   private[graft] def qGraphModularity(s: SparkSession, dir: String): DataFrame = {
     val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
-    val edges = Graph.coOccurrenceEdgesCanonical(li, "l_orderkey",
-      "l_partkey").localCheckpoint(true) // LPA + modularity share it
+    // LPA + modularity share it
+    val edges = materialize(Graph.coOccurrenceEdgesCanonical(li, "l_orderkey",
+      "l_partkey")).df
     Graph.modularity(edges,
       Graph.labelPropagation(edges, iterations = 4,
         assumeCanonical = true))

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.GraftShim.materialize
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops._
@@ -310,11 +311,10 @@ private[graft] object SimilarityQueries {
       val cb = Quantize.loadPqCodebooks(s, s"$path/codebooks")
       // upsert WRITES $path/codes; the full re-encode only reads the
       // frozen quantizers — independent legs
-      val fAppended = Future(Similarity.ivfPqIndexUpsert(s, path,
-        e.filter(col("vec_id") >= 300), "embedding", "vec_id")
-        .localCheckpoint(true))
-      val fFull = Future(Similarity.ivfPqEncode(
-        e, "embedding", "vec_id", cents, cb).localCheckpoint(true))
+      val fAppended = Future(materialize(Similarity.ivfPqIndexUpsert(s, path,
+        e.filter(col("vec_id") >= 300), "embedding", "vec_id")).df)
+      val fFull = Future(materialize(Similarity.ivfPqEncode(
+        e, "embedding", "vec_id", cents, cb)).df)
       val fN = Future(e.agg(
         sum(when(col("vec_id") < 300, 1L).otherwise(0L)).as("nb"),
         sum(when(col("vec_id") >= 300, 1L).otherwise(0L)).as("nn"),
@@ -330,12 +330,12 @@ private[graft] object SimilarityQueries {
       val fCodesA = Future(key(inc).except(key(full)).count())
       val fCodesB = Future(key(full).except(key(inc)).count())
       val qz = e.filter(col("vec_id") < 8)
-      val fSInc = Future(Similarity.ivfPqTopK(
+      val fSInc = Future(materialize(Similarity.ivfPqTopK(
         Similarity.IvfPq(inc.select("cid", "id", "codes"), cents, cb),
-        qz, "embedding", "vec_id", k = 5).localCheckpoint(true))
-      val fSFull = Future(Similarity.ivfPqTopK(
+        qz, "embedding", "vec_id", k = 5)).df)
+      val fSFull = Future(materialize(Similarity.ivfPqTopK(
         Similarity.IvfPq(full.select("cid", "id", "codes"), cents, cb),
-        qz, "embedding", "vec_id", k = 5).localCheckpoint(true))
+        qz, "embedding", "vec_id", k = 5)).df)
       val codesMatch =
         Await.result(fCodesA, Duration.Inf) +
           Await.result(fCodesB, Duration.Inf)

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.GraftShim.materialize
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops._
@@ -298,11 +299,11 @@ private[graft] object TextQueries {
     * TopKAggregator for web-scale hot tokens). The retrieval-index
     * build read: which terms dominate and where. */
   private[graft] def qTextPostings(s: SparkSession, dir: String): DataFrame = {
-    val c = t(s, dir, "documents")
+    // df/cf aggregate + top-5 window share it
+    val c = materialize(t(s, dir, "documents")
       .select(col("doc_id"),
         explode(TextFunctions.tokens(col("text"))).as("tok"))
-      .groupBy("tok", "doc_id").agg(count(lit(1)).as("c"))
-      .localCheckpoint(true) // df/cf aggregate + top-5 window share it
+      .groupBy("tok", "doc_id").agg(count(lit(1)).as("c"))).df
     val top = Rank.topNPerGroup(c, Seq(col("tok")),
         Seq(col("c").desc, col("doc_id")), 5)
       .groupBy("tok")
@@ -1007,7 +1008,7 @@ private[graft] object TextQueries {
     // two consumers (per-lang top + the per-doc aggregate): checkpoint
     // or the sentence-explode + langid + double-window pipeline runs
     // twice (r13 review)
-    val segs = qTextLangSegments(s, dir).localCheckpoint(true)
+    val segs = materialize(qTextLangSegments(s, dir)).df
     val perLang = segs.groupBy("doc_id", "lang")
       .agg(sum("n_sentences").as("ns"))
     val w = Window.partitionBy("doc_id")

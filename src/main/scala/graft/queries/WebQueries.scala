@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.GraftShim.materialize
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops._
@@ -1760,7 +1761,8 @@ private[graft] object WebQueries {
     * replays from its own converged par15. One aggregate row. */
   private[graft] def qLinkFsScoreReload(s: SparkSession,
                                         dir: String): DataFrame = {
-    val cands = fsCands(s, dir).localCheckpoint(true) // train + score
+    // train + score
+    val cands = materialize(fsCands(s, dir)).df
     val cols = Seq("a_name", "a_seg", "a_bal")
     val model = Link.fellegiSunterEmModel(cands, cols)
     val path = java.nio.file.Files

@@ -4,7 +4,8 @@ package org.apache.spark.sql
   * pattern of placing one file in the `org.apache.spark.sql` package —
   * everything used here is Spark's own public-source API surface):
   * Column/expression conversion and [[GraftShim.materialize]], the one
-  * checkpoint primitive of the iterative operators.
+  * checkpoint primitive: no other file of the library calls
+  * `localCheckpoint`.
   */
 object GraftShim {
 
@@ -22,8 +23,9 @@ object GraftShim {
   /** Where [[materialize]] declares the rows of its result to sit. */
   sealed trait Layout
   object Layout {
-    /** No declared layout: the result scans as `UnknownPartitioning`,
-      * like any checkpoint. */
+    /** No declared layout: the result reports the partitioning Spark's
+      * own checkpoint would — `UnknownPartitioning` for any plan with an
+      * exchange (adaptive execution hides the layout). */
     case object None extends Layout
 
     /** Shuffled onto `hashpartitioning(keys, N)` by [[materialize]]
@@ -80,6 +82,15 @@ object GraftShim {
     * the same plan recomputes honestly. `layout` is declared on the
     * result (see [[Layout]]).
     *
+    * The result's relation is the one Spark's own checkpoint builds
+    * (`LogicalRDD.fromDataset`): it carries the origin plan's statistics
+    * and constraints, so the planner sizes it as it sized the plan that
+    * filled it — a small checkpointed aggregate is the broadcast side of
+    * a join, exactly as after `localCheckpoint(true)`. These are the
+    * planner's estimates, not measured sizes. A bare relation would
+    * report `sizeInBytes` = 8 EiB and flip such joins to broadcast the
+    * other side. `Hash` and `PidClustered` replace only the partitioning.
+    *
     * `localCheckpoint(eager = true)` already runs a full job to fill the
     * checkpoint and then DISCARDS the row count, so an iterative operator
     * that also needs the count (termination, broadcast eligibility), a
@@ -92,10 +103,11 @@ object GraftShim {
       .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val conf = spark.sessionState.conf
     val n = conf.numShufflePartitions
-    val qe = (layout match {
+    val origin = (layout match {
       case Layout.Hash(keys) => df.repartition(n, keys.map(df(_)): _*)
       case _ => df
-    }).queryExecution
+    }).asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
+    val qe = origin.queryExecution
     val output = qe.analyzed.output
     def attr(c: String) = output.find(a => conf.resolver(a.name, c))
       .getOrElse(throw new IllegalArgumentException(
@@ -145,13 +157,13 @@ object GraftShim {
     val counts = new Array[Long](np)
     val sums = new Array[Long](np)
     stats.foreach { case (p, c, s) => counts(p) = c; sums(p) = s }
-    val frame =
-      if (declared.isEmpty) spark.internalCreateDataFrame(rdd, df.schema)
-      else org.apache.spark.sql.classic.Dataset.ofRows(spark,
-        org.apache.spark.sql.execution.LogicalRDD(output, rdd,
-          org.apache.spark.sql.catalyst.plans.physical
-            .HashPartitioning(declared, np),
-          Nil, false, scala.None)(spark, scala.None, scala.None))
+    val relation = org.apache.spark.sql.execution.LogicalRDD
+      .fromDataset(rdd, origin, isStreaming = false)
+    val frame = org.apache.spark.sql.classic.Dataset.ofRows(spark,
+      if (declared.isEmpty) relation
+      else relation.copy(outputPartitioning = org.apache.spark.sql.catalyst
+        .plans.physical.HashPartitioning(declared, np))(
+        spark, Some(relation.stats), Some(relation.constraints)))
     Materialized(frame, counts, sums)
   }
 }

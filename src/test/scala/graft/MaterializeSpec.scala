@@ -90,6 +90,58 @@ class MaterializeSpec extends SparkSpec {
     assert(shuffles(GraftShim.materialize(frame).df.groupBy("k").count()) > 0)
   }
 
+  test("Hash(k) is the non-broadcast side of a join on k with no exchange") {
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val other = spark.range(0, 500, 1, 3).select((col("id") % 10).as("k"),
+        col("id").as("y"))
+      def join(m: DataFrame) = m.join(other, "k")
+      val declared = join(GraftShim.materialize(frame, byK).df)
+      val plan = declared.queryExecution.executedPlan.toString
+      assert(plan.contains("SortMergeJoin"), plan)
+      // the other side is exchanged onto the layout; this side is not
+      assert(shuffles(declared) == 1, plan)
+      assert(shuffles(join(GraftShim.materialize(frame).df)) == 2)
+      assert(rows(declared) == rows(join(frame)))
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
+  test("the result keeps the statistics of Spark's own checkpoint") {
+    // a 97-row aggregate joined to a 200k-row frame: with the origin
+    // plan's estimate the aggregate is the broadcast side; a bare
+    // relation (sizeInBytes = 8 EiB) would broadcast the 200k rows
+    val small = spark.range(0, 10000, 1, 4)
+      .groupBy((col("id") % 97).as("k")).agg(count(lit(1)).as("c"))
+    val big = spark.range(0, 200000, 1, 4)
+      .select((col("id") % 97).as("k"), col("id"))
+    def buildSide(ck: DataFrame): String = {
+      val plan = big.join(ck, "k").queryExecution.executedPlan.toString
+      "BroadcastHashJoin.*(BuildLeft|BuildRight)".r
+        .findFirstMatchIn(plan).map(_.group(1)).getOrElse(plan)
+    }
+    def size(df: DataFrame) = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val checkpointed = small.localCheckpoint(true)
+    val materialized = GraftShim.materialize(small).df
+    assert(buildSide(checkpointed) == "BuildRight")
+    assert(buildSide(materialized) == "BuildRight")
+    assert(size(materialized) == size(checkpointed))
+    assert(size(materialized) < spark.sessionState.conf.defaultSizeInBytes)
+  }
+
+  test("no file of the library but the shim calls localCheckpoint") {
+    def files(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).toSeq.flatten.flatMap(f =>
+        if (f.isDirectory) files(f) else Seq(f))
+    val main = files(new java.io.File("src/main"))
+    assert(main.exists(_.getName == "GraftShim.scala"))
+    val callers = main.filter { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try src.mkString.contains("localCheckpoint(") finally src.close()
+    }.map(_.getName)
+    assert(callers == Seq("GraftShim.scala"), callers)
+  }
+
   test("PidClustered counts and sums are the spark_partition_id() groups") {
     val df = frame.repartitionByRange(4, col("id"))
       .withColumn("pid", spark_partition_id())
