@@ -9,7 +9,11 @@ import graft.functions.FirstByIndex
 /** Result of a pivot: the cross-tab, plus (for
   * `on-error=send-to-error-port`) the groups routed to the error port
   * (reference: src/main/java/io/cdap/plugin/aggregator/Pivot.java:241-262).
-  * `errors` is empty under other modes.
+  * `errors` is empty under other modes. In send-to-error-port mode both
+  * frames filter one routed cross-tab; [[PivotOps.pivot]] leaves it
+  * lazy, so each output re-runs the scan and the aggregation, while
+  * [[PivotOps.pivotForSinks]] materializes it once for a caller that
+  * writes both.
   */
 final case class PivotResult(main: DataFrame, errors: DataFrame)
 
@@ -113,8 +117,18 @@ object PivotOps {
   def pivotWide(df: DataFrame, spec: PivotSpec): PivotResult =
     pivotImpl(df, spec, maxPivotColumns = Int.MaxValue)
 
-  private def pivotImpl(df: DataFrame, spec: PivotSpec,
-                        maxPivotColumns: Int): PivotResult = {
+  /** [[pivot]] for a caller that writes every output of the result (the
+    * pipeline runner's sinks). A send-to-error-port pivot materializes
+    * its routed cross-tab once, in one job, and `main` and `errors`
+    * filter that, so writing both runs the input scan and the
+    * aggregation once, as the reference's single pass routes each
+    * finished group to one port (Pivot.java:199-262). The other modes
+    * have one output and return [[pivot]]'s lazy result. */
+  private[graft] def pivotForSinks(df: DataFrame, spec: PivotSpec): PivotResult =
+    pivotImpl(df, spec, maxPivotColumns = 2, materializeRouted = true)
+
+  private def pivotImpl(df: DataFrame, spec: PivotSpec, maxPivotColumns: Int,
+                        materializeRouted: Boolean = false): PivotResult = {
     spec.validate(df.schema, maxPivotColumns) match {
       case Left(errs) =>
         throw new IllegalArgumentException(
@@ -135,7 +149,7 @@ object PivotOps {
         val cells = cellColumns(spec, pre.schema)
         pre.groupBy(spec.pivotRows.map(col): _*).agg(cells.head, cells.tail: _*)
       }
-    finish(grouped, spec)
+    finish(grouped, spec, materializeRouted)
   }
 
   /** Widest (cells × aggregates) skip-error pivot planned as one
@@ -234,8 +248,14 @@ object PivotOps {
 
   /** Default fill and error routing over the grouped cross-tab: pivot
     * rows, cells, and (unless skip-error) one `__missing_<column>`
-    * off-list ledger per pivot column. */
-  private[graft] def finish(grouped: DataFrame, spec: PivotSpec): PivotResult = {
+    * off-list ledger per pivot column. Send-to-error-port splits the
+    * filled cross-tab into `main` and `errors`; with `materializeRouted`
+    * it materializes that cross-tab first ([[GraftShim.materialize]]),
+    * so both frames read one execution. They keep the lazy spelling's
+    * schema and nullability: the checkpoint keeps its origin's output.
+    * The other modes have one output and ignore the flag. */
+  private[graft] def finish(grouped: DataFrame, spec: PivotSpec,
+                            materializeRouted: Boolean = false): PivotResult = {
     val missingNames = spec.pivotColumns.map { case (c, _) => missingName(c) }
 
     // defaultValue: a single string converted per column type, applied to
@@ -281,8 +301,10 @@ object PivotOps {
       case OnError.Skip =>
         PivotResult(filled, emptyErrors(filled, spec))
       case OnError.SendToErrorPort =>
-        val main = filled.filter(!hasMissing).drop(missingNames: _*)
-        val errors = filled.filter(hasMissing)
+        val routed =
+          if (materializeRouted) GraftShim.materialize(filled).df else filled
+        val main = routed.filter(!hasMissing).drop(missingNames: _*)
+        val errors = routed.filter(hasMissing)
           .withColumn("__error", errMessage)
           .select((spec.pivotRows.map(col) :+ col("__error")): _*)
         PivotResult(main, errors)

@@ -2,10 +2,14 @@ package graft.sources
 
 import org.apache.avro.{LogicalTypes, Schema, SchemaBuilder}
 import org.apache.avro.file.DataFileWriter
-import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
+import org.apache.avro.generic.GenericRecord
+import org.apache.avro.io.{DatumWriter, Encoder}
+import org.apache.avro.util.Utf8
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
 import org.apache.spark.sql.types._
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
@@ -22,7 +26,10 @@ import scala.jdk.CollectionConverters._
   * target directory through the Hadoop FileSystem API (works on
   * file:/hdfs:/object stores; the driver's Hadoop conf ships to
   * executors via Writable serialization — no private Spark helpers) and
-  * streams its rows through one DataFileWriter. Task retries re-create
+  * streams its rows through one DataFileWriter. Rows are encoded from
+  * the plan's `InternalRow`s (`queryExecution.toRdd`), one field writer
+  * per column built once per partition, so no external `Row` or
+  * `GenericRecord` is built per row. Task retries re-create
   * (truncate) their own part file, so the write is idempotent per
   * partition. Parallelism = input partitions, same as Spark's own file
   * sinks; no driver collect.
@@ -85,26 +92,67 @@ object AvroSink {
       s"AvroSink: unsupported Spark type ${other.simpleString}")
   }
 
-  /** JVM value for one cell, matching [[baseType]]'s schema choice. */
-  private def toAvroValue(v: Any): Any = v match {
-    case null => null
-    case s: String => s
-    case b: Array[Byte] => java.nio.ByteBuffer.wrap(b)
-    case t: java.sql.Timestamp =>
-      t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-    case i: java.time.Instant =>
-      i.getEpochSecond * 1000000L + i.getNano / 1000L
-    case d: java.sql.Date => d.toLocalDate.toEpochDay.toInt
-    case d: java.time.LocalDate => d.toEpochDay.toInt
-    case d: java.math.BigDecimal =>
-      java.nio.ByteBuffer.wrap(d.unscaledValue().toByteArray)
-    case d: scala.math.BigDecimal =>
-      java.nio.ByteBuffer.wrap(d.underlying().unscaledValue().toByteArray)
-    case seq: scala.collection.Seq[_] =>
-      seq.map(toAvroValue).asJava
-    case b: Byte => b.toInt
-    case s: Short => s.toInt
-    case other => other // int/long/float/double/boolean pass through
+  /** Encodes one value of a row or array (both are `SpecializedGetters`)
+    * in Avro binary. */
+  private trait FieldWriter {
+    def write(in: SpecializedGetters, i: Int, out: Encoder): Unit
+  }
+
+  /** The writer of a value of type `dt`, in [[baseType]]'s Avro type,
+    * read from Spark's internal representation: strings are UTF-8
+    * bytes, timestamps microseconds and dates days since the epoch, and
+    * decimals go out as their unscaled two's-complement bytes. */
+  private def valueWriter(dt: DataType): FieldWriter = dt match {
+    case StringType => (in, i, out) => out.writeString(new Utf8(in.getUTF8String(i).getBytes))
+    case IntegerType | DateType => (in, i, out) => out.writeInt(in.getInt(i))
+    case ShortType => (in, i, out) => out.writeInt(in.getShort(i))
+    case ByteType => (in, i, out) => out.writeInt(in.getByte(i))
+    case LongType | TimestampType => (in, i, out) => out.writeLong(in.getLong(i))
+    case FloatType => (in, i, out) => out.writeFloat(in.getFloat(i))
+    case DoubleType => (in, i, out) => out.writeDouble(in.getDouble(i))
+    case BooleanType => (in, i, out) => out.writeBoolean(in.getBoolean(i))
+    case BinaryType => (in, i, out) => out.writeBytes(in.getBinary(i))
+    case d: DecimalType => (in, i, out) => out.writeBytes(
+      in.getDecimal(i, d.precision, d.scale).toJavaBigDecimal.unscaledValue.toByteArray)
+    case ArrayType(et, containsNull) =>
+      val elem = nullable(valueWriter(et), containsNull)
+      (in, i, out) => {
+        val a = in.getArray(i)
+        val n = a.numElements()
+        out.writeArrayStart()
+        out.setItemCount(n)
+        var j = 0
+        while (j < n) {
+          out.startItem()
+          elem.write(a, j, out)
+          j += 1
+        }
+        out.writeArrayEnd()
+      }
+    case other => throw new IllegalArgumentException(
+      s"AvroSink: unsupported Spark type ${other.simpleString}")
+  }
+
+  /** `w` behind [[toAvroSchema]]'s `["null", type]` union when nullable. */
+  private def nullable(w: FieldWriter, isNullable: Boolean): FieldWriter =
+    if (!isNullable) w
+    else (in, i, out) =>
+      if (in.isNullAt(i)) out.writeIndex(0)
+      else { out.writeIndex(1); w.write(in, i, out) }
+
+  /** Encodes whole rows of `schema`: one writer per column, built once. */
+  private def rowWriter(schema: StructType): DatumWriter[InternalRow] = {
+    val fields = schema.fields.map(f => nullable(valueWriter(f.dataType), f.nullable))
+    new DatumWriter[InternalRow] {
+      override def setSchema(s: Schema): Unit = ()
+      override def write(row: InternalRow, out: Encoder): Unit = {
+        var i = 0
+        while (i < fields.length) {
+          fields(i).write(row, i, out)
+          i += 1
+        }
+      }
+    }
   }
 
   /** Write `df` as `part-NNNNN.avro` files under `dir` (overwrite). */
@@ -124,8 +172,8 @@ object AvroSink {
     val fs = outPath.getFileSystem(hadoopConf)
     fs.delete(outPath, true)
     fs.mkdirs(outPath)
-    val fieldCount = df.schema.length
-    val counts = df.rdd.mapPartitionsWithIndex { (pid, rows) =>
+    val sparkSchema = df.schema
+    val counts = df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
       val conf = new Configuration(false)
       conf.readFields(new DataInputStream(new ByteArrayInputStream(confBytes)))
       val schema = new Schema.Parser().parse(schemaJson)
@@ -140,19 +188,12 @@ object AvroSink {
       val tmp = new Path(dir, f".part-$pid%05d-$attempt.avro.tmp")
       val pfs = part.getFileSystem(conf)
       val out = pfs.create(tmp, true)
-      val writer = new DataFileWriter[GenericRecord](
-        new GenericDatumWriter[GenericRecord](schema))
+      val writer = new DataFileWriter[InternalRow](rowWriter(sparkSchema))
       writer.create(schema, out)
       var n = 0L
       try {
-        rows.foreach { row: Row =>
-          val rec = new GenericData.Record(schema)
-          var i = 0
-          while (i < fieldCount) {
-            rec.put(i, toAvroValue(row.get(i)))
-            i += 1
-          }
-          writer.append(rec)
+        rows.foreach { row =>
+          writer.append(row)
           n += 1
         }
       } finally writer.close() // closes the stream too
@@ -168,8 +209,7 @@ object AvroSink {
     if (counts.isEmpty) {
       // no partitions, so no part file: commit one empty file so the
       // schema survives, as Spark's own file sinks do
-      val writer = new DataFileWriter[GenericRecord](
-        new GenericDatumWriter[GenericRecord](avroSchema))
+      val writer = new DataFileWriter[InternalRow](rowWriter(sparkSchema))
       writer.create(avroSchema, fs.create(new Path(outPath, "part-00000.avro"), true))
       writer.close()
     }

@@ -1,9 +1,10 @@
 package graft.sources
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.avro.{NameValidator, Schema}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
-import graft.pivot.{PivotOps, PivotResult}
+import graft.pivot.{OnError, PivotOps, PivotResult, PivotSpec}
 
 import scala.jdk.CollectionConverters._
 
@@ -33,34 +34,16 @@ object PipelineRunner {
   final case class SinkStage(path: String, format: String)
   final case class Pipeline(source: SourceStage, pivot: PivotStage, sink: SinkStage)
 
-  /** Avro-flavored record schema JSON → StructType (the subset the
-    * reference emits: primitives + ["type","null"] nullable unions;
-    * reference PivotConfig schema handling in Pivot.java:274-299). */
-  def avroSchemaToStruct(json: String): StructType = {
-    val root = new ObjectMapper().readTree(json)
-    val fields = root.get("fields").elements().asScala.map { f =>
-      val name = f.get("name").asText()
-      val t = f.get("type")
-      val (tpe, nullable) =
-        if (t.isArray) {
-          val names = t.elements().asScala.map(_.asText()).toSeq
-          (names.filterNot(_ == "null").head, names.contains("null"))
-        } else (t.asText(), false)
-      StructField(name, avroPrimitive(tpe), nullable)
-    }
-    StructType(fields.toSeq)
-  }
-
-  private def avroPrimitive(t: String): DataType = t match {
-    case "string" => StringType
-    case "int" => IntegerType
-    case "long" => LongType
-    case "float" => FloatType
-    case "double" => DoubleType
-    case "boolean" => BooleanType
-    case "bytes" => BinaryType
-    case other => throw new IllegalArgumentException(s"Unsupported avro type: $other")
-  }
+  /** Avro record schema JSON → StructType: the reference's primitives
+    * and `["type","null"]` nullable unions (Pivot.java:274-299), plus the
+    * logical and array types [[AvroSink.toAvroSchema]] writes, so a
+    * source can declare the schema of a sink's files. Parsed by avro-core
+    * without name or default validation (the reference's schemas are
+    * not held to them) and mapped as [[AvroSource.toStructType]] maps
+    * the schema of a file. */
+  def avroSchemaToStruct(json: String): StructType =
+    AvroSource.toStructType(new Schema.Parser(NameValidator.NO_VALIDATION)
+      .setValidateDefaults(false).parse(json))
 
   /** Parse the CDAP pipeline JSON (stages + connections) into the
     * supported three-stage shape, applying `${macro}` substitutions. */
@@ -163,21 +146,27 @@ object PipelineRunner {
     }
   }
 
-  /** Full run: source → pivot → sink. Returns the pivot result (main is
-    * also what was written; errors feed an `_errors` sibling directory in
-    * send-to-error-port mode). The error write is gated on the CONFIG,
-    * not on an emptiness probe — `errors.isEmpty` would re-execute the
-    * whole aggregation just to test it, a full extra pass at scale. */
+  /** Full run: source → pivot → sink. Returns the pivot result; `main`
+    * is what the sink holds. In send-to-error-port mode the routed
+    * cross-tab is materialized once ([[PivotOps.pivotForSinks]]) and
+    * both the sink and its `_errors` sibling directory are written from
+    * it, so a run reads and aggregates the source once, not once per
+    * output. The error write is gated on the CONFIG, not on an emptiness
+    * probe: an empty error port still commits its schema. */
   def run(spark: SparkSession, json: String,
           macros: Map[String, String] = Map.empty): PivotResult = {
     val p = parse(json, macros)
-    val input = readSource(spark, p.source)
-    val result = PivotOps.pivotConfig(input,
-      p.pivot.pivotRow, p.pivot.pivotColumns, p.pivot.aggregates,
-      p.pivot.fieldAliases, p.pivot.defaultValue, p.pivot.onError,
-      p.pivot.numPartitions)
+    val spec = PivotSpec.parse(p.pivot.pivotRow, p.pivot.pivotColumns,
+      p.pivot.aggregates, p.pivot.fieldAliases, p.pivot.defaultValue,
+      p.pivot.onError, p.pivot.numPartitions) match {
+      case Left(errs) =>
+        throw new IllegalArgumentException(
+          s"Invalid pivot config:\n  ${errs.mkString("\n  ")}")
+      case Right(spec) => spec
+    }
+    val result = PivotOps.pivotForSinks(readSource(spark, p.source), spec)
     writeSink(result.main, p.sink)
-    if (p.pivot.onError.contains("send-to-error-port"))
+    if (spec.onError == OnError.SendToErrorPort)
       writeSink(result.errors, p.sink.copy(path = p.sink.path + "_errors"))
     result
   }
