@@ -56,14 +56,12 @@ object Bench {
     // queries — which medians absorb — rather than all reps of a few.
     // SPARK_GRAFT_ONLY=q1,q2 restricts to named queries (local soak /
     // bisection aid, same contract as Verify; driver never sets it).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
-    val names = SparkEntry.queries.keys.toSeq
-      .filter(n => only.forall(_.contains(n)))
+    val only = SparkEntry.selectOnly(sys.env.get("SPARK_GRAFT_ONLY"))
+    val selected = only.getOrElse(SparkEntry.registry)
+    val names = selected.map(_.name)
     val samples: Map[String, Seq[Either[String, Double]]] = {
       val runs = (1 to reps).map { _ =>
-        names.map(n => n -> timeOnce(SparkEntry.queries(n))).toMap
+        selected.map(q => q.name -> timeOnce(q.build)).toMap
       }
       names.map(n => n -> runs.map(_(n))).toMap
     }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.pivot._
+import graft.QueryShared.{f32, scratchRoot, t}
 
 /** Verification queries for the pivot operator: one per aggregate function
   * and per operator facet of SURVEY.md §2, each paired with a DuckDB oracle
@@ -21,13 +22,6 @@ import graft.pivot._
   *     expressions that exist identically in Spark and DuckDB.
   */
 object PivotQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  /** Float-quantize double columns for cross-engine hash stability. */
-  private def f32(df: DataFrame, names: String*): DataFrame =
-    names.foldLeft(df)((d, n) => d.withColumn(n, col(n).cast("float")))
 
   /** orders + derived columns used across the per-function queries:
     * oyear (BIGINT, matches DuckDB year()), pr_null / tp_null (nullable
@@ -81,10 +75,8 @@ object PivotQueries {
 
   private def qPivotIncremental(s: SparkSession, dir: String): DataFrame = {
     val li = t(s, dir, "lineitem")
-    val spec = PivotSpec.parse("l_returnflag", "l_linestatus=O,F",
+    val spec = PivotSpec.parseOrThrow("l_returnflag", "l_linestatus=O,F",
       "cnt:count(*), qty:sum(l_quantity), mn:min(l_extendedprice), mx:max(l_extendedprice)")
-      .fold(errs => throw new IllegalArgumentException(errs.mkString("; ")),
-        identity)
     val parts = Seq(
       li.filter(col("l_orderkey") % 2 === 0),
       li.filter(col("l_orderkey") % 2 === 1))
@@ -115,9 +107,9 @@ object PivotQueries {
       .withColumn("hi", col("c_acctbal") > 5000)
       .withColumn("par",
         when(col("c_nationkey") % 2 === 0, "x").otherwise("y"))
-    val spec = PivotSpec.parse("c_nationkey",
+    val spec = PivotSpec.parseOrThrow("c_nationkey",
       "c_mktsegment=BUILDING,AUTOMOBILE;hi=true,false;par=x,y",
-      "cnt:count(*), sm:sum(c_acctbal)").toOption.get
+      "cnt:count(*), sm:sum(c_acctbal)")
     val out = PivotOps.pivotWide(c, spec).main
     f32(out, out.columns.filter(_.endsWith("_sm")).toSeq: _*)
   }
@@ -464,9 +456,9 @@ object PivotQueries {
 
   // -- Rollup cross-tab (graft extension: subtotal + grand-total rows) ---
   private def qPivotRollup(s: SparkSession, dir: String): DataFrame = {
-    val spec = graft.pivot.PivotSpec.parse(
+    val spec = PivotSpec.parseOrThrow(
       "l_returnflag,l_linestatus", "shipyear=1996,1997",
-      "sq:sum(l_quantity), cnt:count(*)").toOption.get
+      "sq:sum(l_quantity), cnt:count(*)")
     f32(PivotOps.pivotRollup(
         t(s, dir, "lineitem").withColumn("shipyear", year(col("l_shipdate"))),
         spec),
@@ -623,20 +615,15 @@ object PivotQueries {
   // inlined sample rows. This upgrades the last two spec-only SURVEY §2
   // rows (S1 csv source, S2 avro sink) to a CORRECTNESS-gated query.
 
-  // per-JVM scratch (AvroSink deletes-then-writes, so one path is
-  // re-run-idempotent within a session and isolated across sessions —
-  // same reasoning as OpsQueries.scratchRoot)
-  private lazy val exampleOutDir: String = new java.io.File(
-    sys.props("java.io.tmpdir"),
-    s"graft_pipeline_ex_${java.util.UUID.randomUUID().toString.take(8)}")
-    .getAbsolutePath
-
   private def qPipelineExample(s: SparkSession, dir: String): DataFrame = {
+    // per-JVM scratch: AvroSink deletes-then-writes, so one path is
+    // re-run-idempotent within a session and isolated across sessions
+    val out = new java.io.File(scratchRoot, "pipeline_example").getAbsolutePath
     val example = graft.sources.PipelineRunner.Example
     graft.sources.PipelineRunner.run(s, example.json, Map(
-      "inputFile" -> example.writeSampleCsv(exampleOutDir),
-      "outputDirectory" -> s"$exampleOutDir/pivoted"))
-    graft.sources.AvroSource.read(s, s"$exampleOutDir/pivoted")
+      "inputFile" -> example.writeSampleCsv(out),
+      "outputDirectory" -> s"$out/pivoted"))
+    graft.sources.AvroSource.read(s, s"$out/pivoted")
   }
 
   private val oPipelineExample = {
@@ -666,73 +653,38 @@ object PivotQueries {
 
   // =====================================================================
 
-  def all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pipeline_example" -> (qPipelineExample _),
-    "pivot_flagship" -> (qPivotFlagship _),
-    "fn_count" -> (qFnCount _),
-    "fn_countdistinct" -> (qFnCountDistinct _),
-    "fn_sum" -> (qFnSum _),
-    "fn_sum_int" -> (qFnSumInt _),
-    "fn_sum_decimal" -> (qFnSumDecimal _),
-    "fn_avg" -> (qFnAvg _),
-    "fn_minmax_num" -> (qFnMinMaxNum _),
-    "fn_minmax_str" -> (qFnMinMaxStr _),
-    "fn_minmax_ts" -> (qFnMinMaxTs _),
-    "fn_first_last" -> (qFnFirstLast _),
-    "fn_stddev_var" -> (qFnStddevVar _),
-    "fn_collect" -> (qFnCollect _),
-    "fn_strings" -> (qFnStrings _),
-    "fn_countnulls" -> (qFnCountNulls _),
-    "fn_concat" -> (qFnConcat _),
-    "fn_concat_distinct" -> (qFnConcatDistinct _),
-    "fn_logical" -> (qFnLogical _),
-    "fn_sumsq" -> (qFnSumSq _),
-    "pivot_tworows" -> (qPivotTwoRows _),
-    "pivot_rollup" -> (qPivotRollup _),
-    "pivot_incremental" -> (qPivotIncremental _),
-    "pivot_threecols" -> (qPivotThreeCols _),
-    "pivot_twocols" -> (qPivotTwoCols _),
-    "pivot_default" -> (qPivotDefault _),
-    "pivot_alias" -> (qPivotAlias _),
-    "pivot_errorport_main" -> (qPivotErrMain _),
-    "pivot_errorport_errors" -> (qPivotErrErrors _),
-    "pivot_failmode" -> (qPivotFailMode _),
-    "pivot_nullkey" -> (qPivotNullKey _),
-    "pivot_numpartitions" -> (qPivotNumPartitions _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "pipeline_example" -> oPipelineExample,
-    "pivot_flagship" -> oPivotFlagship,
-    "fn_count" -> oFnCount,
-    "fn_countdistinct" -> oFnCountDistinct,
-    "fn_sum" -> oFnSum,
-    "fn_sum_int" -> oFnSumInt,
-    "fn_sum_decimal" -> oFnSumDecimal,
-    "fn_avg" -> oFnAvg,
-    "fn_minmax_num" -> oFnMinMaxNum,
-    "fn_minmax_str" -> oFnMinMaxStr,
-    "fn_minmax_ts" -> oFnMinMaxTs,
-    "fn_first_last" -> oFnFirstLast,
-    "fn_stddev_var" -> oFnStddevVar,
-    "fn_collect" -> oFnCollect,
-    "fn_strings" -> oFnStrings,
-    "fn_countnulls" -> oFnCountNulls,
-    "fn_concat" -> oFnConcat,
-    "fn_concat_distinct" -> oFnConcatDistinct,
-    "fn_logical" -> oFnLogical,
-    "fn_sumsq" -> oFnSumSq,
-    "pivot_tworows" -> oPivotTwoRows,
-    "pivot_rollup" -> oPivotRollup,
-    "pivot_incremental" -> oPivotIncremental,
-    "pivot_threecols" -> oPivotThreeCols,
-    "pivot_twocols" -> oPivotTwoCols,
-    "pivot_default" -> oPivotDefault,
-    "pivot_alias" -> oPivotAlias,
-    "pivot_errorport_main" -> oPivotErrMain,
-    "pivot_errorport_errors" -> oPivotErrErrors,
-    "pivot_failmode" -> oPivotFailMode,
-    "pivot_nullkey" -> oPivotNullKey,
-    "pivot_numpartitions" -> oPivotNumPartitions
+  val registry: Seq[Query] = Seq(
+    Query("pipeline_example", qPipelineExample, oPipelineExample),
+    Query("pivot_flagship", qPivotFlagship, oPivotFlagship),
+    Query("fn_count", qFnCount, oFnCount),
+    Query("fn_countdistinct", qFnCountDistinct, oFnCountDistinct),
+    Query("fn_sum", qFnSum, oFnSum),
+    Query("fn_sum_int", qFnSumInt, oFnSumInt),
+    Query("fn_sum_decimal", qFnSumDecimal, oFnSumDecimal),
+    Query("fn_avg", qFnAvg, oFnAvg),
+    Query("fn_minmax_num", qFnMinMaxNum, oFnMinMaxNum),
+    Query("fn_minmax_str", qFnMinMaxStr, oFnMinMaxStr),
+    Query("fn_minmax_ts", qFnMinMaxTs, oFnMinMaxTs),
+    Query("fn_first_last", qFnFirstLast, oFnFirstLast),
+    Query("fn_stddev_var", qFnStddevVar, oFnStddevVar),
+    Query("fn_collect", qFnCollect, oFnCollect),
+    Query("fn_strings", qFnStrings, oFnStrings),
+    Query("fn_countnulls", qFnCountNulls, oFnCountNulls),
+    Query("fn_concat", qFnConcat, oFnConcat),
+    Query("fn_concat_distinct", qFnConcatDistinct, oFnConcatDistinct),
+    Query("fn_logical", qFnLogical, oFnLogical),
+    Query("fn_sumsq", qFnSumSq, oFnSumSq),
+    Query("pivot_tworows", qPivotTwoRows, oPivotTwoRows),
+    Query("pivot_rollup", qPivotRollup, oPivotRollup),
+    Query("pivot_incremental", qPivotIncremental, oPivotIncremental),
+    Query("pivot_threecols", qPivotThreeCols, oPivotThreeCols),
+    Query("pivot_twocols", qPivotTwoCols, oPivotTwoCols),
+    Query("pivot_default", qPivotDefault, oPivotDefault),
+    Query("pivot_alias", qPivotAlias, oPivotAlias),
+    Query("pivot_errorport_main", qPivotErrMain, oPivotErrMain),
+    Query("pivot_errorport_errors", qPivotErrErrors, oPivotErrErrors),
+    Query("pivot_failmode", qPivotFailMode, oPivotFailMode),
+    Query("pivot_nullkey", qPivotNullKey, oPivotNullKey),
+    Query("pivot_numpartitions", qPivotNumPartitions, oPivotNumPartitions)
   )
 }

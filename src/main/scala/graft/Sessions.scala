@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
   *     accumulation wraps on overflow (ANSI mode would throw on the SUM
   *     downcast, see AggFunctions.Sum);
   *   - `parquet.nanosAsLong`: events.parquet carries INT64
-  *     TIMESTAMP(NANOS), read as long (OpsQueries.readEvents converts
+  *     TIMESTAMP(NANOS), read as long (QueryShared.readEvents converts
   *     it back);
   *   - [[GraftExtensions]], for the `graft_*` SQL names;
   *   - UI off.

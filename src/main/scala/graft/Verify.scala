@@ -11,29 +11,17 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // Local-iteration aid: SPARK_GRAFT_ONLY=q1,q2 restricts the dump to
     // the named queries (the driver never sets it → full run).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty) // blank/empty value = no filter, not filter-all
-    only.foreach { o =>
-      val unknown = o -- SparkEntry.queries.keySet
-      // A fully-unknown name set would dump nothing and look like success.
-      require((o -- unknown).nonEmpty,
-        s"SPARK_GRAFT_ONLY matched zero queries: ${unknown.mkString(", ")}")
-      if (unknown.nonEmpty) System.err.println(
-        s"[verify] WARNING: unknown query names ignored: ${unknown.mkString(", ")}")
-    }
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    val selected = SparkEntry.selectOnly(sys.env.get("SPARK_GRAFT_ONLY"))
+      .getOrElse(SparkEntry.registry)
+    selected.foreach { q =>
+      try q.build(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${q.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
       }
     }
-    val json = SparkEntry.oracleSql
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
+    val json = selected
+      .map(q => s"${jsonString(q.name)}: ${jsonString(q.oracle)}")
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

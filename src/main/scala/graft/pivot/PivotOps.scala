@@ -129,12 +129,7 @@ object PivotOps {
 
   private def pivotImpl(df: DataFrame, spec: PivotSpec, maxPivotColumns: Int,
                         materializeRouted: Boolean = false): PivotResult = {
-    spec.validate(df.schema, maxPivotColumns) match {
-      case Left(errs) =>
-        throw new IllegalArgumentException(
-          s"Invalid pivot spec:\n  ${errs.mkString("\n  ")}")
-      case Right(_) => ()
-    }
+    spec.validateOrThrow(df.schema, maxPivotColumns)
 
     // observability parity with the reference's recordLineage (O8)
     org.slf4j.LoggerFactory.getLogger(getClass).info(lineage(spec)._2)
@@ -332,12 +327,7 @@ object PivotOps {
     * Skip-error semantics only (subtotal rows make per-group error
     * routing ill-defined). */
   def pivotRollup(df: DataFrame, spec: PivotSpec): DataFrame = {
-    spec.validate(df.schema) match {
-      case Left(errs) =>
-        throw new IllegalArgumentException(
-          s"Invalid pivot spec:\n  ${errs.mkString("\n  ")}")
-      case Right(_) => ()
-    }
+    spec.validateOrThrow(df.schema)
     val cellCols = cellColumns(spec, df.schema)
     df.rollup(spec.pivotRows.map(col): _*)
       .agg(grouping_id().as("grouping_id"), cellCols: _*)
@@ -437,11 +427,6 @@ object PivotOps {
       defaultValue: Option[String] = None,
       onError: Option[String] = None,
       numPartitions: Option[Int] = None): PivotResult =
-    PivotSpec.parse(pivotRow, pivotColumns, aggregates, fieldAliases,
-      defaultValue, onError, numPartitions) match {
-      case Left(errs) =>
-        throw new IllegalArgumentException(
-          s"Invalid pivot config:\n  ${errs.mkString("\n  ")}")
-      case Right(spec) => pivot(df, spec)
-    }
+    pivot(df, PivotSpec.parseOrThrow(pivotRow, pivotColumns, aggregates,
+      fieldAliases, defaultValue, onError, numPartitions))
 }

@@ -213,6 +213,11 @@ final case class PivotSpec(
     val es = errs.result()
     if (es.isEmpty) Right(this) else Left(es)
   }
+
+  /** [[validate]], throwing its failures as one IllegalArgumentException
+    * ("Invalid pivot spec: ..."). */
+  def validateOrThrow(schema: StructType, maxPivotColumns: Int = 2): PivotSpec =
+    validate(schema, maxPivotColumns).fold(PivotSpec.invalid("spec"), identity)
 }
 
 object PivotSpec {
@@ -353,4 +358,21 @@ object PivotSpec {
     else Right(PivotSpec(rows, cols.result(), aggs.result(), aliases.toMap,
       defaultValue, onErr, numPartitions))
   }
+
+  /** [[parse]], throwing its failures as one IllegalArgumentException
+    * ("Invalid pivot config: ..."). */
+  def parseOrThrow(
+      pivotRow: String,
+      pivotColumns: String,
+      aggregates: String,
+      fieldAliases: Option[String] = None,
+      defaultValue: Option[String] = None,
+      onError: Option[String] = None,
+      numPartitions: Option[Int] = None): PivotSpec =
+    parse(pivotRow, pivotColumns, aggregates, fieldAliases, defaultValue,
+      onError, numPartitions).fold(invalid("config"), identity)
+
+  private def invalid(what: String)(errs: List[ValidationFailure]): Nothing =
+    throw new IllegalArgumentException(
+      s"Invalid pivot $what:\n  ${errs.mkString("\n  ")}")
 }

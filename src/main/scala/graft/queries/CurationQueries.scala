@@ -8,9 +8,9 @@ import graft.ops._
 import graft.pivot.PivotOps
 import graft.QueryShared._
 
-/** Curation: top-N, as-of, PII, C4 cleaning, decontamination verification queries — split from the former monolithic
-  * OpsQueries.scala (round 12); see [[graft.OpsQueries]] for the
-  * oracle conventions and the aggregate registry. */
+/** Curation: top-N, as-of, PII, C4 cleaning, decontamination verification queries — one family of
+  * [[graft.SparkEntry.registry]]; see [[graft.SparkEntry]] for the
+  * oracle conventions. */
 private[graft] object CurationQueries {
   // =====================================================================
   // Ranking / curation: top-N per group
@@ -1312,73 +1312,38 @@ private[graft] object CurationQueries {
       |  UNION ALL SELECT 3, 'purchase', n3,
       |    CASE WHEN n2 > 0 THEN CAST(n3 AS DOUBLE) / n2 END FROM n)""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_mtld" -> (qTextMtld _),
-    "text_ngram_diversity" -> (qTextNgramDiversity _),
-    "events_funnel" -> (qEventsFunnel _),
-    "events_attribution" -> (qEventsAttribution _),
-    "events_rollup" -> (qEventsRollup _),
-    "events_attribution_channel" -> (qEventsAttributionChannel _),
-    "events_attribution_markov" -> (qEventsAttributionMarkov _),
-    "events_funnel_summary" -> (qEventsFunnelSummary _),
-    "events_funnel_timing" -> (qEventsFunnelTiming _),
-    "events_retention" -> (qEventsRetention _),
-    "doc_vocab_coverage" -> (qDocVocabCoverage _),
-    "events_asof" -> (qEventsAsof _),
-    "events_asof_forward" -> (qEventsAsofForward _),
-    "doc_topn" -> (qDocTopN _),
-    "curation_pipeline" -> (qCurationPipeline _),
-    "pretrain_pipeline" -> (qPretrainPipeline _),
-    "doc_tokens" -> (qDocTokens _),
-    "doc_tokens_bpe" -> (qDocTokensBpe _),
-    "doc_tokens_bytebpe" -> (qDocTokensByteBpe _),
-    "doc_tokens_bytebpe_exact" -> (qDocTokensByteBpeExact _),
-    "doc_tokens_unigram" -> (qDocTokensUnigram _),
-    "doc_tokens_unigram_exact" -> (qDocTokensUnigramExact _),
-    "doc_chunks_sentences" -> (qDocChunksSentences _),
-    "text_scrub" -> (qTextScrub _),
-    "text_card_scrub" -> (qTextCardScrub _),
-    "text_dedup_lines" -> (qTextDedupLines _),
-    "text_c4_clean" -> (qTextC4Clean _),
-    "text_repetition" -> (qTextRepetition _),
-    "text_sentences" -> (qTextSentences _),
-    "text_boilerplate" -> (qTextBoilerplate _),
-    "text_boilerplate_removed" -> (qTextBoilerplateRemoved _),
-    "contamination" -> (qContamination _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "text_mtld" -> oTextMtld,
-    "text_ngram_diversity" -> oTextNgramDiversity,
-    "events_funnel" -> oEventsFunnel,
-    "events_attribution" -> oEventsAttribution,
-    "events_rollup" -> oEventsRollup,
-    "events_attribution_channel" -> oEventsAttributionChannel,
-    "events_attribution_markov" -> oEventsAttributionMarkov,
-    "events_funnel_summary" -> oEventsFunnelSummary,
-    "events_funnel_timing" -> oEventsFunnelTiming,
-    "events_retention" -> oEventsRetention,
-    "doc_vocab_coverage" -> oDocVocabCoverage,
-    "events_asof" -> oEventsAsof,
-    "events_asof_forward" -> oEventsAsofForward,
-    "doc_topn" -> oDocTopN,
-    "curation_pipeline" -> oCurationPipeline,
-    "pretrain_pipeline" -> oPretrainPipeline,
-    "doc_tokens" -> oDocTokens,
-    "doc_tokens_bpe" -> oDocTokensBpe,
-    "doc_tokens_bytebpe" -> oDocTokensByteBpe,
-    "doc_tokens_bytebpe_exact" -> oDocTokensByteBpeExact,
-    "doc_tokens_unigram" -> oDocTokensUnigram,
-    "doc_tokens_unigram_exact" -> oDocTokensUnigramExact,
-    "doc_chunks_sentences" -> oDocChunksSentences,
-    "text_scrub" -> oTextScrub,
-    "text_card_scrub" -> oTextCardScrub,
-    "text_dedup_lines" -> oTextDedupLines,
-    "text_c4_clean" -> oTextC4Clean,
-    "text_repetition" -> oTextRepetition,
-    "text_sentences" -> oTextSentences,
-    "text_boilerplate" -> oTextBoilerplate,
-    "text_boilerplate_removed" -> oTextBoilerplateRemoved,
-    "contamination" -> oContamination
+  val registry: Seq[Query] = Seq(
+    Query("text_mtld", qTextMtld, oTextMtld),
+    Query("text_ngram_diversity", qTextNgramDiversity, oTextNgramDiversity),
+    Query("events_funnel", qEventsFunnel, oEventsFunnel),
+    Query("events_attribution", qEventsAttribution, oEventsAttribution),
+    Query("events_rollup", qEventsRollup, oEventsRollup),
+    Query("events_attribution_channel", qEventsAttributionChannel, oEventsAttributionChannel),
+    Query("events_attribution_markov", qEventsAttributionMarkov, oEventsAttributionMarkov),
+    Query("events_funnel_summary", qEventsFunnelSummary, oEventsFunnelSummary),
+    Query("events_funnel_timing", qEventsFunnelTiming, oEventsFunnelTiming),
+    Query("events_retention", qEventsRetention, oEventsRetention),
+    Query("doc_vocab_coverage", qDocVocabCoverage, oDocVocabCoverage),
+    Query("events_asof", qEventsAsof, oEventsAsof),
+    Query("events_asof_forward", qEventsAsofForward, oEventsAsofForward),
+    Query("doc_topn", qDocTopN, oDocTopN),
+    Query("curation_pipeline", qCurationPipeline, oCurationPipeline),
+    Query("pretrain_pipeline", qPretrainPipeline, oPretrainPipeline),
+    Query("doc_tokens", qDocTokens, oDocTokens),
+    Query("doc_tokens_bpe", qDocTokensBpe, oDocTokensBpe),
+    Query("doc_tokens_bytebpe", qDocTokensByteBpe, oDocTokensByteBpe),
+    Query("doc_tokens_bytebpe_exact", qDocTokensByteBpeExact, oDocTokensByteBpeExact),
+    Query("doc_tokens_unigram", qDocTokensUnigram, oDocTokensUnigram),
+    Query("doc_tokens_unigram_exact", qDocTokensUnigramExact, oDocTokensUnigramExact),
+    Query("doc_chunks_sentences", qDocChunksSentences, oDocChunksSentences),
+    Query("text_scrub", qTextScrub, oTextScrub),
+    Query("text_card_scrub", qTextCardScrub, oTextCardScrub),
+    Query("text_dedup_lines", qTextDedupLines, oTextDedupLines),
+    Query("text_c4_clean", qTextC4Clean, oTextC4Clean),
+    Query("text_repetition", qTextRepetition, oTextRepetition),
+    Query("text_sentences", qTextSentences, oTextSentences),
+    Query("text_boilerplate", qTextBoilerplate, oTextBoilerplate),
+    Query("text_boilerplate_removed", qTextBoilerplateRemoved, oTextBoilerplateRemoved),
+    Query("contamination", qContamination, oContamination)
   )
 }

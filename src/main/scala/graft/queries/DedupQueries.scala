@@ -8,9 +8,9 @@ import graft.ops._
 import graft.pivot.PivotOps
 import graft.QueryShared._
 
-/** Deduplication verification queries — split from the former monolithic
-  * OpsQueries.scala (round 12); see [[graft.OpsQueries]] for the
-  * oracle conventions and the aggregate registry. */
+/** Deduplication verification queries — one family of
+  * [[graft.SparkEntry.registry]]; see [[graft.SparkEntry]] for the
+  * oracle conventions. */
 private[graft] object DedupQueries {
   // =====================================================================
   // Deduplication
@@ -882,63 +882,34 @@ private[graft] object DedupQueries {
       |SELECT vec_id FROM embeddings
       |WHERE vec_id NOT IN (SELECT DISTINCT dst FROM reach WHERE src < dst)""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_exact_best" -> (qDedupExactBest _),
-    "dedup_exact" -> (qDedupExact _),
-    "dedup_ngram_jaccard" -> (qDedupNgramJaccard _),
-    "dedup_containment" -> (qDedupContainment _),
-    "dedup_survivors" -> (qDedupSurvivors _),
-    "dedup_lsh_scurve" -> (qDedupLshScurve _),
-    "dedup_survivors_star" -> (qDedupSurvivorsStar _),
-    "dedup_incremental_components" -> (qDedupIncrementalComponents _),
-    "dedup_minhash" -> (qDedupMinhash _),
-    "dedup_minhash_oph" -> (qDedupMinhashOph _),
-    "dedup_simhash" -> (qDedupSimhash _),
-    "dedup_embedding" -> (qDedupEmbedding _),
-    "dedup_semantic" -> (qDedupSemantic _),
-    "dedup_semantic_pruned" -> (qDedupSemanticPruned _),
-    "dedup_semantic_survivors" -> (qDedupSemanticSurvivors _),
-    "dedup_incremental_exact" -> (qDedupIncrementalExact _),
-    "dedup_incremental_bloom" -> (qDedupIncrementalBloom _),
-    "dedup_incremental_minhash" -> (qDedupIncrementalMinhash _),
-    "dedup_incremental_semantic" -> (qDedupIncrementalSemantic _),
-    "text_normalize" -> (qTextNormalize _),
-    "text_fix_encoding" -> (qTextFixEncoding _),
-    "text_dup_spans" -> (qTextDupSpans _),
-    "text_dup_spans_multi" -> (qTextDupSpansMulti _),
-    "text_dup_span_longest" -> (qTextDupSpanLongest _),
-    "text_dup_span_exact" -> (qTextDupSpanExact _),
-    "text_dup_spans_removed" -> (qTextDupSpansRemoved _),
-    "text_dup_spans_removed_exact" -> (qTextDupSpansRemovedExact _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "dedup_exact_best" -> oDedupExactBest,
-    "dedup_exact" -> oDedupExact,
-    "dedup_ngram_jaccard" -> oJaccardPairs(0.5),
-    "dedup_containment" -> oDedupContainment,
-    "dedup_survivors" -> oDedupSurvivors,
-    "dedup_lsh_scurve" -> oDedupLshScurve,
-    "dedup_survivors_star" -> oDedupSurvivors,
-    "dedup_incremental_components" -> oDedupIncrementalComponents,
-    "dedup_minhash" -> oJaccardPairs(0.5),
-    "dedup_minhash_oph" -> oJaccardPairs(0.5),
-    "dedup_simhash" -> oDedupSimhash,
-    "dedup_embedding" -> oDedupEmbedding,
-    "dedup_semantic" -> oDedupSemantic,
-    "dedup_semantic_pruned" -> oDedupSemanticPruned,
-    "dedup_semantic_survivors" -> oDedupSemanticSurvivors,
-    "dedup_incremental_exact" -> oDedupIncrementalExact,
-    "dedup_incremental_bloom" -> oDedupIncrementalExact,
-    "dedup_incremental_minhash" -> oDedupIncrementalMinhash,
-    "dedup_incremental_semantic" -> oDedupIncrementalSemantic,
-    "text_normalize" -> oTextNormalize,
-    "text_fix_encoding" -> oTextFixEncoding,
-    "text_dup_spans" -> oTextDupSpans,
-    "text_dup_spans_multi" -> oTextDupSpansMulti,
-    "text_dup_span_longest" -> oTextDupSpanLongest,
-    "text_dup_span_exact" -> oTextDupSpanExact,
-    "text_dup_spans_removed" -> oTextDupSpansRemoved,
-    "text_dup_spans_removed_exact" -> oTextDupSpansRemovedExact
+  val registry: Seq[Query] = Seq(
+    Query("dedup_exact_best", qDedupExactBest, oDedupExactBest),
+    Query("dedup_exact", qDedupExact, oDedupExact),
+    Query("dedup_ngram_jaccard", qDedupNgramJaccard, oJaccardPairs(0.5)),
+    Query("dedup_containment", qDedupContainment, oDedupContainment),
+    Query("dedup_survivors", qDedupSurvivors, oDedupSurvivors),
+    Query("dedup_lsh_scurve", qDedupLshScurve, oDedupLshScurve),
+    Query("dedup_survivors_star", qDedupSurvivorsStar, oDedupSurvivors),
+    Query("dedup_incremental_components",
+      qDedupIncrementalComponents, oDedupIncrementalComponents),
+    Query("dedup_minhash", qDedupMinhash, oJaccardPairs(0.5)),
+    Query("dedup_minhash_oph", qDedupMinhashOph, oJaccardPairs(0.5)),
+    Query("dedup_simhash", qDedupSimhash, oDedupSimhash),
+    Query("dedup_embedding", qDedupEmbedding, oDedupEmbedding),
+    Query("dedup_semantic", qDedupSemantic, oDedupSemantic),
+    Query("dedup_semantic_pruned", qDedupSemanticPruned, oDedupSemanticPruned),
+    Query("dedup_semantic_survivors", qDedupSemanticSurvivors, oDedupSemanticSurvivors),
+    Query("dedup_incremental_exact", qDedupIncrementalExact, oDedupIncrementalExact),
+    Query("dedup_incremental_bloom", qDedupIncrementalBloom, oDedupIncrementalExact),
+    Query("dedup_incremental_minhash", qDedupIncrementalMinhash, oDedupIncrementalMinhash),
+    Query("dedup_incremental_semantic", qDedupIncrementalSemantic, oDedupIncrementalSemantic),
+    Query("text_normalize", qTextNormalize, oTextNormalize),
+    Query("text_fix_encoding", qTextFixEncoding, oTextFixEncoding),
+    Query("text_dup_spans", qTextDupSpans, oTextDupSpans),
+    Query("text_dup_spans_multi", qTextDupSpansMulti, oTextDupSpansMulti),
+    Query("text_dup_span_longest", qTextDupSpanLongest, oTextDupSpanLongest),
+    Query("text_dup_span_exact", qTextDupSpanExact, oTextDupSpanExact),
+    Query("text_dup_spans_removed", qTextDupSpansRemoved, oTextDupSpansRemoved),
+    Query("text_dup_spans_removed_exact", qTextDupSpansRemovedExact, oTextDupSpansRemovedExact)
   )
 }

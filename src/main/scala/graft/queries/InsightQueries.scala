@@ -9,9 +9,9 @@ import graft.pivot.PivotOps
 import graft.QueryShared._
 import graft.TrainQueries.{qEventsTopPaths}
 
-/** Corpus insight and reporting verification queries — split from the former monolithic
-  * OpsQueries.scala (round 12); see [[graft.OpsQueries]] for the
-  * oracle conventions and the aggregate registry. */
+/** Corpus insight and reporting verification queries — one family of
+  * [[graft.SparkEntry.registry]]; see [[graft.SparkEntry]] for the
+  * oracle conventions. */
 private[graft] object InsightQueries {
   // =====================================================================
   // Corpus insight: readability, collocations, outliers, transitions
@@ -2570,147 +2570,75 @@ private[graft] object InsightQueries {
       |    AS avg_depth_ppm
       |FROM seg""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_readability" -> (qTextReadability _),
-    "text_compress_ratio" -> (qTextCompressRatio _),
-    "text_pmi" -> (qTextPmi _),
-    "events_anomaly" -> (qEventsAnomaly _),
-    "events_winsorize" -> (qEventsWinsorize _),
-    "events_mad" -> (qEventsMad _),
-    "events_percent_rank" -> (qEventsPercentRank _),
-    "events_markov" -> (qEventsMarkov _),
-    "events_changepoint" -> (qEventsChangepoint _),
-    "events_cusum" -> (qEventsCusum _),
-    "events_pareto" -> (qEventsPareto _),
-    "events_decompose" -> (qEventsDecompose _),
-    "events_ewma" -> (qEventsEwma _),
-    "events_trend_mk" -> (qEventsTrendMk _),
-    "events_autocorr" -> (qEventsAutocorr _),
-    "events_seasonality" -> (qEventsSeasonality _),
-    "source_orc_roundtrip" -> (qSourceOrcRoundtrip _),
-    "graph_pagerank" -> (qGraphPagerank _),
-    "graph_ppr" -> (qGraphPpr _),
-    "graph_triangles" -> (qGraphTriangles _),
-    "graph_coreness" -> (qGraphCoreness _),
-    "graph_kcore" -> (qGraphKcore _),
-    "graph_assortativity" -> (qGraphAssortativity _),
-    "graph_clustering" -> (qGraphClustering _),
-    "graph_communities" -> (qGraphCommunities _),
-    "graph_modularity" -> (qGraphModularity _),
-    "graph_ktruss" -> (qGraphKtruss _),
-    "graph_walks" -> (qGraphWalks _),
-    "graph_pagerank_weighted" -> (qGraphPagerankWeighted _),
-    "graph_linkpred" -> (qGraphLinkpred _),
-    "graph_bfs" -> (qGraphBfs _),
-    "graph_scc" -> (qGraphScc _),
-    "graph_condensation" -> (qGraphCondensation _),
-    "graph_scc_incremental" -> (qGraphSccIncremental _),
-    "insight_bootstrap_ci" -> (qInsightBootstrap _),
-    "eval_paired_bootstrap" -> (qEvalPairedBootstrap _),
-    "events_twap" -> (qEventsTwap _),
-    "text_skipgrams" -> (qTextSkipgrams _),
-    "text_ngram_precision" -> (qTextNgramPrecision _),
-    "text_bleu" -> (qTextBleu _),
-    "text_chrf" -> (qTextChrf _),
-    "text_rouge" -> (qTextRouge _),
-    "train_negative_table" -> (qTrainNegativeTable _),
-    "join_fanout_audit" -> (qJoinFanout _),
-    "graph_harmonic" -> (qGraphHarmonic _),
-    "graph_betweenness" -> (qGraphBetweenness _),
-    "eval_ranking" -> (qEvalRanking _),
-    "quality_wilson" -> (qQualityWilson _),
-    "events_chi2" -> (qEventsChi2 _),
-    "quality_bh_select" -> (qQualityBh _),
-    "events_mannwhitney" -> (qEventsMannWhitney _),
-    "web_cidr_block" -> (qWebCidr _),
-    "events_sprt" -> (qEventsSprt _),
-    "events_coverage" -> (qEventsCoverage _),
-    "events_quantile_band" -> (qEventsQuantileBand _),
-    "events_ols" -> (qEventsOls _),
-    "events_cuped" -> (qEventsCuped _),
-    "events_did" -> (qEventsDid _),
-    "events_burstiness" -> (qEventsBurstiness _),
-    "events_skipgrams" -> (qEventsSkipgrams _),
-    "events_welch" -> (qEventsWelch _),
-    "events_anova" -> (qEventsAnova _),
-    "events_kruskal" -> (qEventsKruskal _),
-    "events_brown_forsythe" -> (qEventsBrownForsythe _),
-    "events_survival_km" -> (qEventsSurvivalKm _),
-    "events_signflip" -> (qEventsSignflip _),
-    "events_logrank" -> (qEventsLogrank _),
-    "events_cmh" -> (qEventsCmh _),
-    "events_concurrency" -> (qEventsConcurrency _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "text_readability" -> oTextReadability,
-    "text_compress_ratio" -> oTextCompressRatio,
-    "text_pmi" -> oTextPmi,
-    "events_anomaly" -> oEventsAnomaly,
-    "events_winsorize" -> oEventsWinsorize,
-    "events_mad" -> oEventsMad,
-    "events_percent_rank" -> oEventsPercentRank,
-    "events_markov" -> oEventsMarkov,
-    "events_changepoint" -> oEventsChangepoint,
-    "events_cusum" -> oEventsCusum,
-    "events_pareto" -> oEventsPareto,
-    "events_decompose" -> oEventsDecompose,
-    "events_ewma" -> oEventsEwma,
-    "events_trend_mk" -> oEventsTrendMk,
-    "events_autocorr" -> oEventsAutocorr,
-    "events_seasonality" -> oEventsSeasonality,
-    "source_orc_roundtrip" -> oSourceOrcRoundtrip,
-    "graph_pagerank" -> oGraphPagerank,
-    "graph_ppr" -> oGraphPpr,
-    "graph_triangles" -> oGraphTriangles,
-    "graph_coreness" -> oGraphCoreness,
-    "graph_kcore" -> oGraphKcore,
-    "graph_assortativity" -> oGraphAssortativity,
-    "graph_clustering" -> oGraphClustering,
-    "graph_communities" -> oGraphCommunities,
-    "graph_modularity" -> oGraphModularity,
-    "graph_ktruss" -> oGraphKtruss,
-    "graph_walks" -> oGraphWalks,
-    "graph_pagerank_weighted" -> oGraphPagerankWeighted,
-    "graph_linkpred" -> oGraphLinkpred,
-    "graph_bfs" -> oGraphBfs,
-    "graph_scc" -> oGraphScc,
-    "graph_condensation" -> oGraphCondensation,
-    "graph_scc_incremental" -> oGraphSccIncremental,
-    "insight_bootstrap_ci" -> oInsightBootstrap,
-    "eval_paired_bootstrap" -> oEvalPairedBootstrap,
-    "events_twap" -> oEventsTwap,
-    "text_skipgrams" -> oTextSkipgrams,
-    "text_ngram_precision" -> oTextNgramPrecision,
-    "text_bleu" -> oTextBleu,
-    "text_chrf" -> oTextChrf,
-    "text_rouge" -> oTextRouge,
-    "train_negative_table" -> oTrainNegativeTable,
-    "join_fanout_audit" -> oJoinFanout,
-    "graph_harmonic" -> oGraphHarmonic,
-    "graph_betweenness" -> oGraphBetweenness,
-    "eval_ranking" -> oEvalRanking,
-    "quality_wilson" -> oQualityWilson,
-    "events_chi2" -> oEventsChi2,
-    "quality_bh_select" -> oQualityBh,
-    "events_mannwhitney" -> oEventsMannWhitney,
-    "web_cidr_block" -> oWebCidr,
-    "events_sprt" -> oEventsSprt,
-    "events_coverage" -> oEventsCoverage,
-    "events_quantile_band" -> oEventsQuantileBand,
-    "events_ols" -> oEventsOls,
-    "events_cuped" -> oEventsCuped,
-    "events_did" -> oEventsDid,
-    "events_burstiness" -> oEventsBurstiness,
-    "events_skipgrams" -> oEventsSkipgrams,
-    "events_welch" -> oEventsWelch,
-    "events_anova" -> oEventsAnova,
-    "events_kruskal" -> oEventsKruskal,
-    "events_brown_forsythe" -> oEventsBrownForsythe,
-    "events_survival_km" -> oEventsSurvivalKm,
-    "events_signflip" -> oEventsSignflip,
-    "events_logrank" -> oEventsLogrank,
-    "events_cmh" -> oEventsCmh,
-    "events_concurrency" -> oEventsConcurrency
+  val registry: Seq[Query] = Seq(
+    Query("text_readability", qTextReadability, oTextReadability),
+    Query("text_compress_ratio", qTextCompressRatio, oTextCompressRatio),
+    Query("text_pmi", qTextPmi, oTextPmi),
+    Query("events_anomaly", qEventsAnomaly, oEventsAnomaly),
+    Query("events_winsorize", qEventsWinsorize, oEventsWinsorize),
+    Query("events_mad", qEventsMad, oEventsMad),
+    Query("events_percent_rank", qEventsPercentRank, oEventsPercentRank),
+    Query("events_markov", qEventsMarkov, oEventsMarkov),
+    Query("events_changepoint", qEventsChangepoint, oEventsChangepoint),
+    Query("events_cusum", qEventsCusum, oEventsCusum),
+    Query("events_pareto", qEventsPareto, oEventsPareto),
+    Query("events_decompose", qEventsDecompose, oEventsDecompose),
+    Query("events_ewma", qEventsEwma, oEventsEwma),
+    Query("events_trend_mk", qEventsTrendMk, oEventsTrendMk),
+    Query("events_autocorr", qEventsAutocorr, oEventsAutocorr),
+    Query("events_seasonality", qEventsSeasonality, oEventsSeasonality),
+    Query("source_orc_roundtrip", qSourceOrcRoundtrip, oSourceOrcRoundtrip),
+    Query("graph_pagerank", qGraphPagerank, oGraphPagerank),
+    Query("graph_ppr", qGraphPpr, oGraphPpr),
+    Query("graph_triangles", qGraphTriangles, oGraphTriangles),
+    Query("graph_coreness", qGraphCoreness, oGraphCoreness),
+    Query("graph_kcore", qGraphKcore, oGraphKcore),
+    Query("graph_assortativity", qGraphAssortativity, oGraphAssortativity),
+    Query("graph_clustering", qGraphClustering, oGraphClustering),
+    Query("graph_communities", qGraphCommunities, oGraphCommunities),
+    Query("graph_modularity", qGraphModularity, oGraphModularity),
+    Query("graph_ktruss", qGraphKtruss, oGraphKtruss),
+    Query("graph_walks", qGraphWalks, oGraphWalks),
+    Query("graph_pagerank_weighted", qGraphPagerankWeighted, oGraphPagerankWeighted),
+    Query("graph_linkpred", qGraphLinkpred, oGraphLinkpred),
+    Query("graph_bfs", qGraphBfs, oGraphBfs),
+    Query("graph_scc", qGraphScc, oGraphScc),
+    Query("graph_condensation", qGraphCondensation, oGraphCondensation),
+    Query("graph_scc_incremental", qGraphSccIncremental, oGraphSccIncremental),
+    Query("insight_bootstrap_ci", qInsightBootstrap, oInsightBootstrap),
+    Query("eval_paired_bootstrap", qEvalPairedBootstrap, oEvalPairedBootstrap),
+    Query("events_twap", qEventsTwap, oEventsTwap),
+    Query("text_skipgrams", qTextSkipgrams, oTextSkipgrams),
+    Query("text_ngram_precision", qTextNgramPrecision, oTextNgramPrecision),
+    Query("text_bleu", qTextBleu, oTextBleu),
+    Query("text_chrf", qTextChrf, oTextChrf),
+    Query("text_rouge", qTextRouge, oTextRouge),
+    Query("train_negative_table", qTrainNegativeTable, oTrainNegativeTable),
+    Query("join_fanout_audit", qJoinFanout, oJoinFanout),
+    Query("graph_harmonic", qGraphHarmonic, oGraphHarmonic),
+    Query("graph_betweenness", qGraphBetweenness, oGraphBetweenness),
+    Query("eval_ranking", qEvalRanking, oEvalRanking),
+    Query("quality_wilson", qQualityWilson, oQualityWilson),
+    Query("events_chi2", qEventsChi2, oEventsChi2),
+    Query("quality_bh_select", qQualityBh, oQualityBh),
+    Query("events_mannwhitney", qEventsMannWhitney, oEventsMannWhitney),
+    Query("web_cidr_block", qWebCidr, oWebCidr),
+    Query("events_sprt", qEventsSprt, oEventsSprt),
+    Query("events_coverage", qEventsCoverage, oEventsCoverage),
+    Query("events_quantile_band", qEventsQuantileBand, oEventsQuantileBand),
+    Query("events_ols", qEventsOls, oEventsOls),
+    Query("events_cuped", qEventsCuped, oEventsCuped),
+    Query("events_did", qEventsDid, oEventsDid),
+    Query("events_burstiness", qEventsBurstiness, oEventsBurstiness),
+    Query("events_skipgrams", qEventsSkipgrams, oEventsSkipgrams),
+    Query("events_welch", qEventsWelch, oEventsWelch),
+    Query("events_anova", qEventsAnova, oEventsAnova),
+    Query("events_kruskal", qEventsKruskal, oEventsKruskal),
+    Query("events_brown_forsythe", qEventsBrownForsythe, oEventsBrownForsythe),
+    Query("events_survival_km", qEventsSurvivalKm, oEventsSurvivalKm),
+    Query("events_signflip", qEventsSignflip, oEventsSignflip),
+    Query("events_logrank", qEventsLogrank, oEventsLogrank),
+    Query("events_cmh", qEventsCmh, oEventsCmh),
+    Query("events_concurrency", qEventsConcurrency, oEventsConcurrency)
   )
 }

@@ -7,9 +7,9 @@ import graft.ops._
 import graft.pivot.PivotOps
 import graft.QueryShared._
 
-/** Multimodal verification queries — split from the former monolithic
-  * OpsQueries.scala (round 12); see [[graft.OpsQueries]] for the
-  * oracle conventions and the aggregate registry. */
+/** Multimodal verification queries — one family of
+  * [[graft.SparkEntry.registry]]; see [[graft.SparkEntry]] for the
+  * oracle conventions. */
 private[graft] object MultimodalQueries {
   // =====================================================================
   // Multimodal
@@ -383,33 +383,18 @@ private[graft] object MultimodalQueries {
       |  GROUP BY 1, 2)
       |SELECT ida, idb, hamming FROM pairs WHERE hamming <= 4""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "multimodal_meta" -> (qMultimodalMeta _),
-    "multimodal_sniff" -> (qMultimodalSniff _),
-    "multimodal_frames" -> (qMultimodalFrames _),
-    "multimodal_decode" -> (qMultimodalDecode _),
-    "multimodal_quality" -> (qMultimodalQuality _),
-    "multimodal_decode_png" -> (qMultimodalDecodePng _),
-    "multimodal_decode_gif" -> (qMultimodalDecodeGif _),
-    "multimodal_mp4_meta" -> (qMultimodalMp4Meta _),
-    "multimodal_decode_jpeg" -> (qMultimodalDecodeJpeg _),
-    "multimodal_decode_wav" -> (qMultimodalDecodeWav _),
-    "multimodal_audio_fp" -> (qMultimodalAudioFp _),
-    "multimodal_resize" -> (qMultimodalResize _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "multimodal_meta" -> oMultimodalMeta,
-    "multimodal_sniff" -> oMultimodalSniff,
-    "multimodal_frames" -> oMultimodalFrames,
-    "multimodal_decode" -> oMultimodalDecode,
-    "multimodal_quality" -> oMultimodalQuality,
-    "multimodal_decode_png" -> oMultimodalDecodePng,
-    "multimodal_decode_gif" -> oMultimodalDecodeGif,
-    "multimodal_mp4_meta" -> oMultimodalMp4Meta,
-    "multimodal_decode_jpeg" -> oMultimodalDecodeJpeg,
-    "multimodal_decode_wav" -> oMultimodalDecodeWav,
-    "multimodal_audio_fp" -> oMultimodalAudioFp,
-    "multimodal_resize" -> oMultimodalResize
+  val registry: Seq[Query] = Seq(
+    Query("multimodal_meta", qMultimodalMeta, oMultimodalMeta),
+    Query("multimodal_sniff", qMultimodalSniff, oMultimodalSniff),
+    Query("multimodal_frames", qMultimodalFrames, oMultimodalFrames),
+    Query("multimodal_decode", qMultimodalDecode, oMultimodalDecode),
+    Query("multimodal_quality", qMultimodalQuality, oMultimodalQuality),
+    Query("multimodal_decode_png", qMultimodalDecodePng, oMultimodalDecodePng),
+    Query("multimodal_decode_gif", qMultimodalDecodeGif, oMultimodalDecodeGif),
+    Query("multimodal_mp4_meta", qMultimodalMp4Meta, oMultimodalMp4Meta),
+    Query("multimodal_decode_jpeg", qMultimodalDecodeJpeg, oMultimodalDecodeJpeg),
+    Query("multimodal_decode_wav", qMultimodalDecodeWav, oMultimodalDecodeWav),
+    Query("multimodal_audio_fp", qMultimodalAudioFp, oMultimodalAudioFp),
+    Query("multimodal_resize", qMultimodalResize, oMultimodalResize)
   )
 }

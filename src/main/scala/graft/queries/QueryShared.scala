@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Helpers shared by every per-family query file (split from the
-  * former monolithic OpsQueries.scala): table readers, the canonical
-  * DuckDB tokenizer twin, float quantization, per-JVM scratch. */
+/** Helpers shared by every query family of [[SparkEntry.registry]]:
+  * table readers, the canonical DuckDB tokenizer twin, float
+  * quantization, per-JVM scratch. */
 private[graft] object QueryShared {
 
   private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame =

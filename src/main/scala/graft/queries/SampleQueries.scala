@@ -7,9 +7,9 @@ import graft.ops._
 import graft.pivot.PivotOps
 import graft.QueryShared._
 
-/** Sampling, joins, profiling, windowing, sketches verification queries — split from the former monolithic
-  * OpsQueries.scala (round 12); see [[graft.OpsQueries]] for the
-  * oracle conventions and the aggregate registry. */
+/** Sampling, joins, profiling, windowing, sketches verification queries — one family of
+  * [[graft.SparkEntry.registry]]; see [[graft.SparkEntry]] for the
+  * oracle conventions. */
 private[graft] object SampleQueries {
   // =====================================================================
   // Reproducible sampling
@@ -962,9 +962,8 @@ private[graft] object SampleQueries {
     * (the backfill path of the kappa setup; the streaming path is
     * spec-checked against the batch pivot in StreamingSpec). */
   private[graft] def qEventsPivotWindow(s: SparkSession, dir: String): DataFrame = {
-    val spec = graft.pivot.PivotSpec.parse("user_id",
+    val spec = graft.pivot.PivotSpec.parseOrThrow("user_id",
       "event_type=click,view,purchase", "n:count(*), v:sum(value)")
-      .toOption.get
     val ev = readEvents(s, dir)
     val cells = PivotOps.cellColumns(spec, ev.schema)
     val out = ev
@@ -1486,97 +1485,50 @@ private[graft] object SampleQueries {
       |LEFT JOIN inter i
       |  ON i.seg_a = ca.event_type AND i.seg_b = cb.event_type""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sample_split" -> (qSampleSplit _),
-    "sample_repeat_schedule" -> (qSampleRepeatSchedule _),
-    "quality_classifier" -> (qQualityClassifier _),
-    "quality_classifier_reload" -> (qQualityClassifierReload _),
-    "sample_max_coverage" -> (qSampleMaxCoverage _),
-    "profile_entropy" -> (qProfileEntropy _),
-    "sample_neyman" -> (qSampleNeyman _),
-    "profile_chao" -> (qProfileChao _),
-    "profile_fd" -> (qProfileFd _),
-    "profile_ind" -> (qProfileInd _),
-    "profile_numeric" -> (qProfileNumeric _),
-    "profile_sketch" -> (qProfileSketch _),
-    "skew_agg" -> (qSkewAgg _),
-    "profile_moments" -> (qProfileMoments _),
-    "fn_selection" -> (qFnSelection _),
-    "events_window" -> (qEventsWindow _),
-    "events_pivot_window" -> (qEventsPivotWindow _),
-    "events_sessionize" -> (qEventsSessionize _),
-    "events_json" -> (qEventsJson _),
-    "events_range_join" -> (qEventsRangeJoin _),
-    "events_interval_overlap" -> (qEventsIntervalOverlap _),
-    "events_resample" -> (qEventsResample _),
-    "sample_stratified" -> (qSampleStratified _),
-    "sample_priority" -> (qSamplePriority _),
-    "sample_dsir" -> (qSampleDsir _),
-    "text_perplexity" -> (qTextPerplexity _),
-    "text_perplexity_kn" -> (qTextPerplexityKn _),
-    "text_perplexity_kn3" -> (qTextPerplexityKn3 _),
-    "text_perplexity_kn5" -> (qTextPerplexityKn5 _),
-    "text_kn_divergence" -> (qTextKnDivergence _),
-    "join_pivot" -> (qJoinPivot _),
-    "join_bloom" -> (qJoinBloom _),
-    "sample_mixture" -> (qSampleMixture _),
-    "sample_mixture_tokens" -> (qSampleMixtureTokens _),
-    "sample_temperature" -> (qSampleTemperature _),
-    "profile_hll_rollup" -> (qProfileHllRollup _),
-    "events_hll_window" -> (qEventsHllWindow _),
-    "events_kll_window" -> (qEventsKllWindow _),
-    "events_topk_window" -> (qEventsTopKWindow _),
-    "profile_theta_overlap" -> (qProfileThetaOverlap _),
-    "profile_hist_quantile" -> (qProfileHistQuantile _),
-    "profile_kll_quantile" -> (qProfileKllQuantile _),
-    "profile_freq_items" -> (qProfileFreqItems _),
-    "profile_winsorize" -> (qProfileWinsorize _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "sample_split" -> oSampleSplit,
-    "sample_repeat_schedule" -> oSampleRepeatSchedule,
-    "quality_classifier" -> oQualityClassifier,
-    "quality_classifier_reload" -> oQualityClassifierReload,
-    "sample_max_coverage" -> oSampleMaxCoverage,
-    "profile_entropy" -> oProfileEntropy,
-    "sample_neyman" -> oSampleNeyman,
-    "profile_chao" -> oProfileChao,
-    "profile_fd" -> oProfileFd,
-    "profile_ind" -> oProfileInd,
-    "profile_numeric" -> oProfileNumeric,
-    "profile_sketch" -> oProfileSketch,
-    "skew_agg" -> oSkewAgg,
-    "profile_moments" -> oProfileMoments,
-    "fn_selection" -> oFnSelection,
-    "events_window" -> oEventsWindow,
-    "events_pivot_window" -> oEventsPivotWindow,
-    "events_sessionize" -> oEventsSessionize,
-    "events_json" -> oEventsJson,
-    "events_range_join" -> oEventsRangeJoin,
-    "events_interval_overlap" -> oEventsIntervalOverlap,
-    "events_resample" -> oEventsResample,
-    "sample_stratified" -> oSampleStratified,
-    "sample_priority" -> oSamplePriority,
-    "sample_dsir" -> oSampleDsir,
-    "text_perplexity" -> oTextPerplexity,
-    "text_perplexity_kn" -> oTextPerplexityKn,
-    "text_perplexity_kn3" -> oTextPerplexityKn3,
-    "text_perplexity_kn5" -> oTextPerplexityKn5,
-    "text_kn_divergence" -> oTextKnDivergence,
-    "join_pivot" -> oJoinPivot,
-    "join_bloom" -> oJoinBloom,
-    "sample_mixture" -> oSampleMixture,
-    "sample_mixture_tokens" -> oSampleMixtureTokens,
-    "sample_temperature" -> oSampleTemperature,
-    "profile_hll_rollup" -> oProfileHllRollup,
-    "events_hll_window" -> oEventsHllWindow,
-    "events_kll_window" -> oEventsKllWindow,
-    "events_topk_window" -> oEventsTopKWindow,
-    "profile_theta_overlap" -> oProfileThetaOverlap,
-    "profile_hist_quantile" -> oProfileHistQuantile,
-    "profile_kll_quantile" -> oProfileKllQuantile,
-    "profile_freq_items" -> oProfileFreqItems,
-    "profile_winsorize" -> oProfileWinsorize
+  val registry: Seq[Query] = Seq(
+    Query("sample_split", qSampleSplit, oSampleSplit),
+    Query("sample_repeat_schedule", qSampleRepeatSchedule, oSampleRepeatSchedule),
+    Query("quality_classifier", qQualityClassifier, oQualityClassifier),
+    Query("quality_classifier_reload", qQualityClassifierReload, oQualityClassifierReload),
+    Query("sample_max_coverage", qSampleMaxCoverage, oSampleMaxCoverage),
+    Query("profile_entropy", qProfileEntropy, oProfileEntropy),
+    Query("sample_neyman", qSampleNeyman, oSampleNeyman),
+    Query("profile_chao", qProfileChao, oProfileChao),
+    Query("profile_fd", qProfileFd, oProfileFd),
+    Query("profile_ind", qProfileInd, oProfileInd),
+    Query("profile_numeric", qProfileNumeric, oProfileNumeric),
+    Query("profile_sketch", qProfileSketch, oProfileSketch),
+    Query("skew_agg", qSkewAgg, oSkewAgg),
+    Query("profile_moments", qProfileMoments, oProfileMoments),
+    Query("fn_selection", qFnSelection, oFnSelection),
+    Query("events_window", qEventsWindow, oEventsWindow),
+    Query("events_pivot_window", qEventsPivotWindow, oEventsPivotWindow),
+    Query("events_sessionize", qEventsSessionize, oEventsSessionize),
+    Query("events_json", qEventsJson, oEventsJson),
+    Query("events_range_join", qEventsRangeJoin, oEventsRangeJoin),
+    Query("events_interval_overlap", qEventsIntervalOverlap, oEventsIntervalOverlap),
+    Query("events_resample", qEventsResample, oEventsResample),
+    Query("sample_stratified", qSampleStratified, oSampleStratified),
+    Query("sample_priority", qSamplePriority, oSamplePriority),
+    Query("sample_dsir", qSampleDsir, oSampleDsir),
+    Query("text_perplexity", qTextPerplexity, oTextPerplexity),
+    Query("text_perplexity_kn", qTextPerplexityKn, oTextPerplexityKn),
+    Query("text_perplexity_kn3", qTextPerplexityKn3, oTextPerplexityKn3),
+    Query("text_perplexity_kn5", qTextPerplexityKn5, oTextPerplexityKn5),
+    Query("text_kn_divergence", qTextKnDivergence, oTextKnDivergence),
+    Query("join_pivot", qJoinPivot, oJoinPivot),
+    Query("join_bloom", qJoinBloom, oJoinBloom),
+    Query("sample_mixture", qSampleMixture, oSampleMixture),
+    Query("sample_mixture_tokens", qSampleMixtureTokens, oSampleMixtureTokens),
+    Query("sample_temperature", qSampleTemperature, oSampleTemperature),
+    Query("profile_hll_rollup", qProfileHllRollup, oProfileHllRollup),
+    Query("events_hll_window", qEventsHllWindow, oEventsHllWindow),
+    Query("events_kll_window", qEventsKllWindow, oEventsKllWindow),
+    Query("events_topk_window", qEventsTopKWindow, oEventsTopKWindow),
+    Query("profile_theta_overlap", qProfileThetaOverlap, oProfileThetaOverlap),
+    Query("profile_hist_quantile", qProfileHistQuantile, oProfileHistQuantile),
+    Query("profile_kll_quantile", qProfileKllQuantile, oProfileKllQuantile),
+    Query("profile_freq_items", qProfileFreqItems, oProfileFreqItems),
+    Query("profile_winsorize", qProfileWinsorize, oProfileWinsorize)
   )
 }

@@ -9,9 +9,9 @@ import graft.pivot.PivotOps
 import graft.QueryShared._
 import graft.TextQueries.{bm25Queries, oTextBm25, oTextBm25From}
 
-/** Similarity search + embedding quantization verification queries — split from the former monolithic
-  * OpsQueries.scala (round 12); see [[graft.OpsQueries]] for the
-  * oracle conventions and the aggregate registry. */
+/** Similarity search + embedding quantization verification queries — one family of
+  * [[graft.SparkEntry.registry]]; see [[graft.SparkEntry]] for the
+  * oracle conventions. */
 private[graft] object SimilarityQueries {
   // =====================================================================
   // Similarity search
@@ -695,45 +695,24 @@ private[graft] object SimilarityQueries {
       |    p -> pow(CAST(p[1] AS DOUBLE) - p[2] * sc, 2)))) AS REAL) AS err
       |FROM c""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sim_hybrid_rrf" -> (qSimHybridRrf _),
-    "sim_topk" -> (qSimTopK _),
-    "emb_knn_outlier" -> (qEmbKnnOutlier _),
-    "sim_matryoshka" -> (qSimMatryoshka _),
-    "sim_topk_filtered" -> (qSimTopKFiltered _),
-    "sim_ivf_incremental" -> (qSimIvfIncremental _),
-    "sim_ivfpq_incremental" -> (qSimIvfPqIncremental _),
-    "sim_bitext" -> (qSimBitext _),
-    "sim_mmr" -> (qSimMmr _),
-    "sim_topk_agg" -> (qSimTopKAgg _),
-    "sim_topk_lsh" -> (qSimTopKLsh _),
-    "sim_topk_ivf" -> (qSimTopKIvf _),
-    "emb_quantize" -> (qEmbQuantize _),
-    "emb_pca_pq_recall" -> (qEmbPcaPqRecall _),
-    "sim_lsh_recall" -> (qSimLshRecall _),
-    "sim_ivf_recall" -> (qSimIvfRecall _),
-    "sim_ivfpq_recall" -> (qSimIvfPqRecall _),
-    "emb_pq_recall" -> (qEmbPqRecall _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "sim_hybrid_rrf" -> oSimHybridRrf,
-    "sim_topk" -> oSimTopK,
-    "emb_knn_outlier" -> oEmbKnnOutlier,
-    "sim_matryoshka" -> oSimMatryoshka,
-    "sim_topk_filtered" -> oSimTopKFiltered,
-    "sim_ivf_incremental" -> oSimIvfIncremental,
-    "sim_ivfpq_incremental" -> oSimIvfPqIncremental,
-    "sim_bitext" -> oSimBitext,
-    "sim_mmr" -> oSimMmr,
-    "sim_topk_agg" -> oSimTopK,
-    "sim_topk_lsh" -> oAnnWellFormed,
-    "sim_topk_ivf" -> oAnnWellFormed,
-    "emb_quantize" -> oEmbQuantize,
-    "emb_pca_pq_recall" -> oAnnRecall,
-    "sim_lsh_recall" -> oAnnRecall,
-    "sim_ivf_recall" -> oAnnRecall,
-    "sim_ivfpq_recall" -> oAnnRecall,
-    "emb_pq_recall" -> oAnnRecall
+  val registry: Seq[Query] = Seq(
+    Query("sim_hybrid_rrf", qSimHybridRrf, oSimHybridRrf),
+    Query("sim_topk", qSimTopK, oSimTopK),
+    Query("emb_knn_outlier", qEmbKnnOutlier, oEmbKnnOutlier),
+    Query("sim_matryoshka", qSimMatryoshka, oSimMatryoshka),
+    Query("sim_topk_filtered", qSimTopKFiltered, oSimTopKFiltered),
+    Query("sim_ivf_incremental", qSimIvfIncremental, oSimIvfIncremental),
+    Query("sim_ivfpq_incremental", qSimIvfPqIncremental, oSimIvfPqIncremental),
+    Query("sim_bitext", qSimBitext, oSimBitext),
+    Query("sim_mmr", qSimMmr, oSimMmr),
+    Query("sim_topk_agg", qSimTopKAgg, oSimTopK),
+    Query("sim_topk_lsh", qSimTopKLsh, oAnnWellFormed),
+    Query("sim_topk_ivf", qSimTopKIvf, oAnnWellFormed),
+    Query("emb_quantize", qEmbQuantize, oEmbQuantize),
+    Query("emb_pca_pq_recall", qEmbPcaPqRecall, oAnnRecall),
+    Query("sim_lsh_recall", qSimLshRecall, oAnnRecall),
+    Query("sim_ivf_recall", qSimIvfRecall, oAnnRecall),
+    Query("sim_ivfpq_recall", qSimIvfPqRecall, oAnnRecall),
+    Query("emb_pq_recall", qEmbPqRecall, oAnnRecall)
   )
 }

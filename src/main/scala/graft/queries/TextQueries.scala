@@ -8,9 +8,9 @@ import graft.ops._
 import graft.pivot.PivotOps
 import graft.QueryShared._
 
-/** Text analysis verification queries — split from the former monolithic
-  * OpsQueries.scala (round 12); see [[graft.OpsQueries]] for the
-  * oracle conventions and the aggregate registry. */
+/** Text analysis verification queries — one family of
+  * [[graft.SparkEntry.registry]]; see [[graft.SparkEntry]] for the
+  * oracle conventions. */
 private[graft] object TextQueries {
   // =====================================================================
   // Text analysis
@@ -1591,85 +1591,45 @@ private[graft] object TextQueries {
        |FROM l""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_stats" -> (qTextStats _),
-    "text_langid" -> (qTextLangId _),
-    "text_lang_segments" -> (qTextLangSegments _),
-    "text_code_switching" -> (qTextCodeSwitching _),
-    "text_script" -> (qTextScript _),
-    "text_fingerprint" -> (qTextFingerprint _),
-    "text_nfc_audit" -> (qTextNfcAudit _),
-    "dataset_ldiversity" -> (qDatasetLdiversity _),
-    "corpus_vocab_growth" -> (qCorpusVocabGrowth _),
-    "corpus_heaps" -> (qCorpusHeaps _),
-    "quality_rank_corr" -> (qQualityRankCorr _),
-    "corpus_zipf" -> (qCorpusZipf _),
-    "text_postings" -> (qTextPostings _),
-    "quality_auc" -> (qQualityAuc _),
-    "quality_calibration" -> (qQualityCalibration _),
-    "quality_brier" -> (qQualityBrier _),
-    "quality_mcnemar" -> (qQualityMcnemar _),
-    "quality_roc" -> (qQualityRoc _),
-    "quality_conformal" -> (qQualityConformal _),
-    "text_tfidf" -> (qTextTfidf _),
-    "text_bm25" -> (qTextBm25 _),
-    "text_hard_negatives" -> (qTextHardNegatives _),
-    "text_gopher" -> (qTextGopher _),
-    "quality_calibration_isotonic" -> (qQualityCalibrationIsotonic _),
-    "quality_pr_ap" -> (qQualityPrAp _),
-    "events_holt" -> (qEventsHolt _),
-    "events_mde" -> (qEventsMde _),
-    "events_ccf" -> (qEventsCcf _),
-    "profile_benford" -> (qProfileBenford _),
-    "profile_corr" -> (qProfileCorr _),
-    "events_mi" -> (qEventsMi _),
-    "events_decay" -> (qEventsDecay _),
-    "events_theilsen" -> (qEventsTheilsen _),
-    "doc_token_fertility" -> (qDocTokenFertility _),
-    "text_entropy" -> (qTextEntropy _),
-    "text_secret_scan" -> (qTextSecretScan _),
-    "text_license_scan" -> (qTextLicenseScan _),
-    "events_holt_winters" -> (qEventsHoltWinters _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "text_stats" -> oTextStats,
-    "text_langid" -> oTextLangId,
-    "text_lang_segments" -> oTextLangSegments,
-    "text_code_switching" -> oTextCodeSwitching,
-    "text_script" -> oTextScript,
-    "text_fingerprint" -> oTextFingerprint,
-    "text_nfc_audit" -> oTextNfcAudit,
-    "dataset_ldiversity" -> oDatasetLdiversity,
-    "corpus_vocab_growth" -> oCorpusVocabGrowth,
-    "corpus_heaps" -> oCorpusHeaps,
-    "quality_rank_corr" -> oQualityRankCorr,
-    "corpus_zipf" -> oCorpusZipf,
-    "text_postings" -> oTextPostings,
-    "quality_auc" -> oQualityAuc,
-    "quality_calibration" -> oQualityCalibration,
-    "quality_brier" -> oQualityBrier,
-    "quality_mcnemar" -> oQualityMcnemar,
-    "quality_roc" -> oQualityRoc,
-    "quality_conformal" -> oQualityConformal,
-    "text_tfidf" -> oTextTfidf,
-    "text_bm25" -> oTextBm25,
-    "text_hard_negatives" -> oTextHardNegatives,
-    "text_gopher" -> oTextGopher,
-    "quality_calibration_isotonic" -> oQualityCalibrationIsotonic,
-    "quality_pr_ap" -> oQualityPrAp,
-    "events_holt" -> oEventsHolt,
-    "events_mde" -> oEventsMde,
-    "events_ccf" -> oEventsCcf,
-    "profile_benford" -> oProfileBenford,
-    "profile_corr" -> oProfileCorr,
-    "events_mi" -> oEventsMi,
-    "events_decay" -> oEventsDecay,
-    "events_theilsen" -> oEventsTheilsen,
-    "doc_token_fertility" -> oDocTokenFertility,
-    "text_entropy" -> oTextEntropy,
-    "text_secret_scan" -> oTextSecretScan,
-    "text_license_scan" -> oTextLicenseScan,
-    "events_holt_winters" -> oEventsHoltWinters
+  val registry: Seq[Query] = Seq(
+    Query("text_stats", qTextStats, oTextStats),
+    Query("text_langid", qTextLangId, oTextLangId),
+    Query("text_lang_segments", qTextLangSegments, oTextLangSegments),
+    Query("text_code_switching", qTextCodeSwitching, oTextCodeSwitching),
+    Query("text_script", qTextScript, oTextScript),
+    Query("text_fingerprint", qTextFingerprint, oTextFingerprint),
+    Query("text_nfc_audit", qTextNfcAudit, oTextNfcAudit),
+    Query("dataset_ldiversity", qDatasetLdiversity, oDatasetLdiversity),
+    Query("corpus_vocab_growth", qCorpusVocabGrowth, oCorpusVocabGrowth),
+    Query("corpus_heaps", qCorpusHeaps, oCorpusHeaps),
+    Query("quality_rank_corr", qQualityRankCorr, oQualityRankCorr),
+    Query("corpus_zipf", qCorpusZipf, oCorpusZipf),
+    Query("text_postings", qTextPostings, oTextPostings),
+    Query("quality_auc", qQualityAuc, oQualityAuc),
+    Query("quality_calibration", qQualityCalibration, oQualityCalibration),
+    Query("quality_brier", qQualityBrier, oQualityBrier),
+    Query("quality_mcnemar", qQualityMcnemar, oQualityMcnemar),
+    Query("quality_roc", qQualityRoc, oQualityRoc),
+    Query("quality_conformal", qQualityConformal, oQualityConformal),
+    Query("text_tfidf", qTextTfidf, oTextTfidf),
+    Query("text_bm25", qTextBm25, oTextBm25),
+    Query("text_hard_negatives", qTextHardNegatives, oTextHardNegatives),
+    Query("text_gopher", qTextGopher, oTextGopher),
+    Query("quality_calibration_isotonic",
+      qQualityCalibrationIsotonic, oQualityCalibrationIsotonic),
+    Query("quality_pr_ap", qQualityPrAp, oQualityPrAp),
+    Query("events_holt", qEventsHolt, oEventsHolt),
+    Query("events_mde", qEventsMde, oEventsMde),
+    Query("events_ccf", qEventsCcf, oEventsCcf),
+    Query("profile_benford", qProfileBenford, oProfileBenford),
+    Query("profile_corr", qProfileCorr, oProfileCorr),
+    Query("events_mi", qEventsMi, oEventsMi),
+    Query("events_decay", qEventsDecay, oEventsDecay),
+    Query("events_theilsen", qEventsTheilsen, oEventsTheilsen),
+    Query("doc_token_fertility", qDocTokenFertility, oDocTokenFertility),
+    Query("text_entropy", qTextEntropy, oTextEntropy),
+    Query("text_secret_scan", qTextSecretScan, oTextSecretScan),
+    Query("text_license_scan", qTextLicenseScan, oTextLicenseScan),
+    Query("events_holt_winters", qEventsHoltWinters, oEventsHoltWinters)
   )
 }

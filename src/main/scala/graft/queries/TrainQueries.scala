@@ -9,9 +9,9 @@ import graft.QueryShared._
 import graft.TextQueries.{oQualityExpr, oTextLangId, qTextLangId}
 import graft.WebQueries.{oPlantedUrls, oRegisteredDomain, plantedUrls}
 
-/** Training-data construction: chunking, ranking, drift, pairs/splits verification queries — split from the former monolithic
-  * OpsQueries.scala (round 12); see [[graft.OpsQueries]] for the
-  * oracle conventions and the aggregate registry. */
+/** Training-data construction: chunking, ranking, drift, pairs/splits verification queries — one family of
+  * [[graft.SparkEntry.registry]]; see [[graft.SparkEntry]] for the
+  * oracle conventions. */
 private[graft] object TrainQueries {
   // =====================================================================
   // Document chunking
@@ -1922,115 +1922,59 @@ private[graft] object TrainQueries {
       |FROM lbl l JOIN documents doc USING (doc_id) GROUP BY 1"""
       .stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_cluster_report" -> (qDedupClusterReport _),
-    "train_contrastive_pairs" -> (qTrainContrastivePairs _),
-    "train_contrastive_ann" -> (qTrainContrastiveAnn _),
-    "events_rfm" -> (qEventsRfm _),
-    "basket_rules" -> (qBasketRules _),
-    "profile_countmin" -> (qProfileCountMin _),
-    "quality_quantile_norm" -> (qQualityQuantileNorm _),
-    "split_leak_audit" -> (qSplitLeakAudit _),
-    "contamination_matrix" -> (qContaminationMatrix _),
-    "multimodal_phash" -> (qMultimodalPhash _),
-    "multimodal_audio_features" -> (qMultimodalAudio _),
-    "dataset_ks_drift" -> (qDatasetKsDrift _),
-    "profile_gini" -> (qProfileGini _),
-    "text_winnow" -> (qTextWinnow _),
-    "sample_budget_greedy" -> (qSampleBudgetGreedy _),
-    "events_abtest" -> (qEventsAbtest _),
-    "quality_kappa" -> (qQualityKappa _),
-    "quality_weighted_kappa" -> (qQualityWeightedKappa _),
-    "quality_krippendorff" -> (qQualityKrippendorff _),
-    "text_vocab_coverage" -> (qTextVocabCoverage _),
-    "layout_rendezvous" -> (qLayoutRendezvous _),
-    "dedup_winnow_pairs" -> (qDedupWinnowPairs _),
-    "dedup_incremental_winnow" -> (qDedupIncrementalWinnow _),
-    "quality_lift_curve" -> (qQualityLiftCurve _),
-    "events_markov_entropy" -> (qEventsMarkovEntropy _),
-    "web_redirects" -> (qWebRedirects _),
-    "profile_median" -> (qProfileMedian _),
-    "profile_cramers" -> (qProfileCramers _),
-    "dataset_jsd" -> (qDatasetJsd _),
-    "chat_audit" -> (qChatAudit _),
-    "chat_tool_audit" -> (qChatToolAudit _),
-    "chat_sft_pairs" -> (qChatSftPairs _),
-    "chat_pii_audit" -> (qChatPii _),
-    "chat_dpo_pairs" -> (qChatDpoPairs _),
-    "chat_bt_ranking" -> (qChatBtRanking _),
-    "sample_split_safe" -> (qSampleSplitSafe _),
-    "doc_fim" -> (qDocFim _),
-    "emb_rp" -> (qEmbRp _),
-    "emb_rp_audit" -> (qEmbRpAudit _),
-    "text_textrank" -> (qTextTextrank _),
-    "chat_injection_screen" -> (qChatInjection _),
-    "sample_curriculum" -> (qSampleCurriculum _),
-    "events_uplift_qini" -> (qEventsUpliftQini _),
-    "text_ngram_novelty" -> (qTextNgramNovelty _),
-    "emb_centroid_drift" -> (qEmbCentroidDrift _),
-    "text_langid_confusion" -> (qTextLangConfusion _),
-    "sample_kfold_safe" -> (qSampleKfoldSafe _),
-    "text_keyphrases" -> (qTextKeyphrases _),
-    "multimodal_vad" -> (qMultimodalVad _),
-    "events_srm" -> (qEventsSrm _),
-    "events_top_paths" -> (qEventsTopPaths _),
-    "doc_chunks" -> (qDocChunks _),
-    "doc_packing" -> (qDocPacking _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "dedup_cluster_report" -> oDedupClusterReport,
-    "train_contrastive_pairs" -> oTrainContrastivePairs,
-    "train_contrastive_ann" -> oTrainContrastiveAnn,
-    "events_rfm" -> oEventsRfm,
-    "basket_rules" -> oBasketRules,
-    "profile_countmin" -> oProfileCountMin,
-    "quality_quantile_norm" -> oQualityQuantileNorm,
-    "split_leak_audit" -> oSplitLeakAudit,
-    "contamination_matrix" -> oContaminationMatrix,
-    "multimodal_phash" -> oMultimodalPhash,
-    "multimodal_audio_features" -> oMultimodalAudio,
-    "dataset_ks_drift" -> oDatasetKsDrift,
-    "profile_gini" -> oProfileGini,
-    "text_winnow" -> oTextWinnow,
-    "sample_budget_greedy" -> oSampleBudgetGreedy,
-    "events_abtest" -> oEventsAbtest,
-    "quality_kappa" -> oQualityKappa,
-    "quality_weighted_kappa" -> oQualityWeightedKappa,
-    "quality_krippendorff" -> oQualityKrippendorff,
-    "text_vocab_coverage" -> oTextVocabCoverage,
-    "layout_rendezvous" -> oLayoutRendezvous,
-    "dedup_winnow_pairs" -> oDedupWinnowPairs,
-    "dedup_incremental_winnow" -> oDedupIncrementalWinnow,
-    "quality_lift_curve" -> oQualityLiftCurve,
-    "events_markov_entropy" -> oEventsMarkovEntropy,
-    "web_redirects" -> oWebRedirects,
-    "profile_median" -> oProfileMedian,
-    "profile_cramers" -> oProfileCramers,
-    "dataset_jsd" -> oDatasetJsd,
-    "chat_audit" -> oChatAudit,
-    "chat_tool_audit" -> oChatToolAudit,
-    "chat_sft_pairs" -> oChatSftPairs,
-    "chat_pii_audit" -> oChatPii,
-    "chat_dpo_pairs" -> oChatDpoPairs,
-    "chat_bt_ranking" -> oChatBtRanking,
-    "sample_split_safe" -> oSampleSplitSafe,
-    "doc_fim" -> oDocFim,
-    "emb_rp" -> oEmbRp,
-    "emb_rp_audit" -> oEmbRpAudit,
-    "text_textrank" -> oTextTextrank,
-    "chat_injection_screen" -> oChatInjection,
-    "sample_curriculum" -> oSampleCurriculum,
-    "events_uplift_qini" -> oEventsUpliftQini,
-    "text_ngram_novelty" -> oTextNgramNovelty,
-    "emb_centroid_drift" -> oEmbCentroidDrift,
-    "text_langid_confusion" -> oTextLangConfusion,
-    "sample_kfold_safe" -> oSampleKfoldSafe,
-    "text_keyphrases" -> oTextKeyphrases,
-    "multimodal_vad" -> oMultimodalVad,
-    "events_srm" -> oEventsSrm,
-    "events_top_paths" -> oEventsTopPaths,
-    "doc_chunks" -> oDocChunks,
-    "doc_packing" -> oDocPacking
+  val registry: Seq[Query] = Seq(
+    Query("dedup_cluster_report", qDedupClusterReport, oDedupClusterReport),
+    Query("train_contrastive_pairs", qTrainContrastivePairs, oTrainContrastivePairs),
+    Query("train_contrastive_ann", qTrainContrastiveAnn, oTrainContrastiveAnn),
+    Query("events_rfm", qEventsRfm, oEventsRfm),
+    Query("basket_rules", qBasketRules, oBasketRules),
+    Query("profile_countmin", qProfileCountMin, oProfileCountMin),
+    Query("quality_quantile_norm", qQualityQuantileNorm, oQualityQuantileNorm),
+    Query("split_leak_audit", qSplitLeakAudit, oSplitLeakAudit),
+    Query("contamination_matrix", qContaminationMatrix, oContaminationMatrix),
+    Query("multimodal_phash", qMultimodalPhash, oMultimodalPhash),
+    Query("multimodal_audio_features", qMultimodalAudio, oMultimodalAudio),
+    Query("dataset_ks_drift", qDatasetKsDrift, oDatasetKsDrift),
+    Query("profile_gini", qProfileGini, oProfileGini),
+    Query("text_winnow", qTextWinnow, oTextWinnow),
+    Query("sample_budget_greedy", qSampleBudgetGreedy, oSampleBudgetGreedy),
+    Query("events_abtest", qEventsAbtest, oEventsAbtest),
+    Query("quality_kappa", qQualityKappa, oQualityKappa),
+    Query("quality_weighted_kappa", qQualityWeightedKappa, oQualityWeightedKappa),
+    Query("quality_krippendorff", qQualityKrippendorff, oQualityKrippendorff),
+    Query("text_vocab_coverage", qTextVocabCoverage, oTextVocabCoverage),
+    Query("layout_rendezvous", qLayoutRendezvous, oLayoutRendezvous),
+    Query("dedup_winnow_pairs", qDedupWinnowPairs, oDedupWinnowPairs),
+    Query("dedup_incremental_winnow", qDedupIncrementalWinnow, oDedupIncrementalWinnow),
+    Query("quality_lift_curve", qQualityLiftCurve, oQualityLiftCurve),
+    Query("events_markov_entropy", qEventsMarkovEntropy, oEventsMarkovEntropy),
+    Query("web_redirects", qWebRedirects, oWebRedirects),
+    Query("profile_median", qProfileMedian, oProfileMedian),
+    Query("profile_cramers", qProfileCramers, oProfileCramers),
+    Query("dataset_jsd", qDatasetJsd, oDatasetJsd),
+    Query("chat_audit", qChatAudit, oChatAudit),
+    Query("chat_tool_audit", qChatToolAudit, oChatToolAudit),
+    Query("chat_sft_pairs", qChatSftPairs, oChatSftPairs),
+    Query("chat_pii_audit", qChatPii, oChatPii),
+    Query("chat_dpo_pairs", qChatDpoPairs, oChatDpoPairs),
+    Query("chat_bt_ranking", qChatBtRanking, oChatBtRanking),
+    Query("sample_split_safe", qSampleSplitSafe, oSampleSplitSafe),
+    Query("doc_fim", qDocFim, oDocFim),
+    Query("emb_rp", qEmbRp, oEmbRp),
+    Query("emb_rp_audit", qEmbRpAudit, oEmbRpAudit),
+    Query("text_textrank", qTextTextrank, oTextTextrank),
+    Query("chat_injection_screen", qChatInjection, oChatInjection),
+    Query("sample_curriculum", qSampleCurriculum, oSampleCurriculum),
+    Query("events_uplift_qini", qEventsUpliftQini, oEventsUpliftQini),
+    Query("text_ngram_novelty", qTextNgramNovelty, oTextNgramNovelty),
+    Query("emb_centroid_drift", qEmbCentroidDrift, oEmbCentroidDrift),
+    Query("text_langid_confusion", qTextLangConfusion, oTextLangConfusion),
+    Query("sample_kfold_safe", qSampleKfoldSafe, oSampleKfoldSafe),
+    Query("text_keyphrases", qTextKeyphrases, oTextKeyphrases),
+    Query("multimodal_vad", qMultimodalVad, oMultimodalVad),
+    Query("events_srm", qEventsSrm, oEventsSrm),
+    Query("events_top_paths", qEventsTopPaths, oEventsTopPaths),
+    Query("doc_chunks", qDocChunks, oDocChunks),
+    Query("doc_packing", qDocPacking, oDocPacking)
   )
 }

@@ -8,9 +8,9 @@ import graft.ops._
 import graft.pivot.PivotOps
 import graft.QueryShared._
 
-/** Web-corpus curation verification queries — split from the former monolithic
-  * OpsQueries.scala (round 12); see [[graft.OpsQueries]] for the
-  * oracle conventions and the aggregate registry. */
+/** Web-corpus curation verification queries — one family of
+  * [[graft.SparkEntry.registry]]; see [[graft.SparkEntry]] for the
+  * oracle conventions. */
 private[graft] object WebQueries {
   // =====================================================================
   // Web-corpus curation: URL canonicalization, registered domains,
@@ -2383,119 +2383,61 @@ private[graft] object WebQueries {
       |  round((pb - pa) * ln(pb / pa), 6) AS term
       |FROM p""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "web_canonical" -> (qWebCanonical _),
-    "web_domain_cap" -> (qWebDomainCap _),
-    "web_token_cap" -> (qWebTokenCap _),
-    "web_blocklist" -> (qWebBlocklist _),
-    "web_robots" -> (qWebRobots _),
-    "text_badwords" -> (qTextBadwords _),
-    "web_url_dedup" -> (qWebUrlDedup _),
-    "web_outlinks" -> (qWebOutlinks _),
-    "web_authority" -> (qWebAuthority _),
-    "web_trustrank" -> (qWebTrustrank _),
-    "web_hits" -> (qWebHits _),
-    "web_anchor_text" -> (qWebAnchorText _),
-    "web_meta" -> (qWebMeta _),
-    "web_url_templates" -> (qWebUrlTemplates _),
-    "web_mirrors" -> (qWebMirrors _),
-    "cdc_apply" -> (qCdcApply _),
-    "cdc_scd2" -> (qCdcScd2 _),
-    "cdc_pit_lookup" -> (qCdcPitLookup _),
-    "dataset_ri_audit" -> (qDatasetRiAudit _),
-    "dataset_kanonymity" -> (qDatasetKanonymity _),
-    "dataset_knn_shapley" -> (qDatasetKnnShapley _),
-    "dataset_dp_counts" -> (qDatasetDpCounts _),
-    "dataset_dp_counts_gauss" -> (qDatasetDpCountsGauss _),
-    "dataset_tcloseness" -> (qDatasetTcloseness _),
-    "corpus_report" -> (qCorpusReport _),
-    "export_jsonl" -> (qExportJsonl _),
-    "corpus_report_incremental" -> (qCorpusReportIncremental _),
-    "graph_degrees" -> (qGraphDegrees _),
-    "graph_reciprocity" -> (qGraphReciprocity _),
-    "sample_epoch_order" -> (qSampleEpochOrder _),
-    "text_dedup_lines_global" -> (qTextDedupLinesGlobal _),
-    "warc_roundtrip" -> (qWarcRoundtrip _),
-    "multimodal_cdc" -> (qMultimodalCdc _),
-    "multimodal_cdc_restore" -> (qMultimodalCdcRestore _),
-    "link_fuzzy_join" -> (qLinkFuzzyJoin _),
-    "link_edit_join" -> (qLinkEditJoin _),
-    "link_fellegi_sunter" -> (qLinkFellegiSunter _),
-    "link_fs_em" -> (qLinkFsEm _),
-    "link_fs_score_reload" -> (qLinkFsScoreReload _),
-    "link_jw_join" -> (qLinkJwJoin _),
-    "quality_expect" -> (qQualityExpect _),
-    "quality_expect_slice" -> (qQualityExpectSlice _),
-    "dataset_diff" -> (qDatasetDiff _),
-    "dataset_psi" -> (qDatasetPsi _),
-    "layout_manifest" -> (qLayoutManifest _),
-    "layout_zorder" -> (qLayoutZorder _),
-    "layout_hilbert" -> (qLayoutHilbert _),
-    "layout_compact" -> (qLayoutCompact _),
-    "layout_token_shards" -> (qLayoutTokenShards _),
-    "web_curation_pipeline" -> (qWebCurationPipeline _),
-    "web_html_text" -> (qWebHtmlText _),
-    "emb_pca" -> (qEmbPca _),
-    "emb_group_centroid" -> (qEmbGroupCentroid _),
-    "emb_pca_incremental" -> (qEmbPcaIncremental _),
-    "sample_kcenters" -> (qSampleKcenters _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "web_canonical" -> oWebCanonical,
-    "web_domain_cap" -> oWebDomainCap,
-    "web_token_cap" -> oWebTokenCap,
-    "web_blocklist" -> oWebBlocklist,
-    "web_robots" -> oWebRobots,
-    "text_badwords" -> oTextBadwords,
-    "web_url_dedup" -> oWebUrlDedup,
-    "web_outlinks" -> oWebOutlinks,
-    "web_authority" -> oWebAuthority,
-    "web_trustrank" -> oWebTrustrank,
-    "web_hits" -> oWebHits,
-    "web_anchor_text" -> oWebAnchorText,
-    "web_meta" -> oWebMeta,
-    "web_url_templates" -> oWebUrlTemplates,
-    "web_mirrors" -> oWebMirrors,
-    "cdc_apply" -> oCdcApply,
-    "cdc_scd2" -> oCdcScd2,
-    "cdc_pit_lookup" -> oCdcPitLookup,
-    "dataset_ri_audit" -> oDatasetRiAudit,
-    "dataset_kanonymity" -> oDatasetKanonymity,
-    "dataset_knn_shapley" -> oDatasetKnnShapley,
-    "dataset_dp_counts" -> oDatasetDpCounts,
-    "dataset_dp_counts_gauss" -> oDatasetDpCountsGauss,
-    "dataset_tcloseness" -> oDatasetTcloseness,
-    "corpus_report" -> oCorpusReport,
-    "export_jsonl" -> oExportJsonl,
-    "corpus_report_incremental" -> oCorpusReportIncremental,
-    "graph_degrees" -> oGraphDegrees,
-    "graph_reciprocity" -> oGraphReciprocity,
-    "sample_epoch_order" -> oSampleEpochOrder,
-    "text_dedup_lines_global" -> oTextDedupLinesGlobal,
-    "warc_roundtrip" -> oWarcRoundtrip,
-    "multimodal_cdc" -> oMultimodalCdc,
-    "multimodal_cdc_restore" -> oMultimodalCdcRestore,
-    "link_fuzzy_join" -> oLinkFuzzyJoin,
-    "link_edit_join" -> oLinkEditJoin,
-    "link_fellegi_sunter" -> oLinkFellegiSunter,
-    "link_fs_em" -> oLinkFsEm,
-    "link_fs_score_reload" -> oLinkFsScoreReload,
-    "link_jw_join" -> oLinkJwJoin,
-    "quality_expect" -> oQualityExpect,
-    "quality_expect_slice" -> oQualityExpectSlice,
-    "dataset_diff" -> oDatasetDiff,
-    "dataset_psi" -> oDatasetPsi,
-    "layout_manifest" -> oLayoutManifest,
-    "layout_zorder" -> oLayoutZorder,
-    "layout_hilbert" -> oLayoutHilbert,
-    "layout_compact" -> oLayoutCompact,
-    "layout_token_shards" -> oLayoutTokenShards,
-    "web_curation_pipeline" -> oWebCurationPipeline,
-    "web_html_text" -> oWebHtmlText,
-    "emb_pca" -> oEmbPca,
-    "emb_group_centroid" -> oEmbGroupCentroid,
-    "emb_pca_incremental" -> oEmbPcaIncremental,
-    "sample_kcenters" -> oSampleKcenters
+  val registry: Seq[Query] = Seq(
+    Query("web_canonical", qWebCanonical, oWebCanonical),
+    Query("web_domain_cap", qWebDomainCap, oWebDomainCap),
+    Query("web_token_cap", qWebTokenCap, oWebTokenCap),
+    Query("web_blocklist", qWebBlocklist, oWebBlocklist),
+    Query("web_robots", qWebRobots, oWebRobots),
+    Query("text_badwords", qTextBadwords, oTextBadwords),
+    Query("web_url_dedup", qWebUrlDedup, oWebUrlDedup),
+    Query("web_outlinks", qWebOutlinks, oWebOutlinks),
+    Query("web_authority", qWebAuthority, oWebAuthority),
+    Query("web_trustrank", qWebTrustrank, oWebTrustrank),
+    Query("web_hits", qWebHits, oWebHits),
+    Query("web_anchor_text", qWebAnchorText, oWebAnchorText),
+    Query("web_meta", qWebMeta, oWebMeta),
+    Query("web_url_templates", qWebUrlTemplates, oWebUrlTemplates),
+    Query("web_mirrors", qWebMirrors, oWebMirrors),
+    Query("cdc_apply", qCdcApply, oCdcApply),
+    Query("cdc_scd2", qCdcScd2, oCdcScd2),
+    Query("cdc_pit_lookup", qCdcPitLookup, oCdcPitLookup),
+    Query("dataset_ri_audit", qDatasetRiAudit, oDatasetRiAudit),
+    Query("dataset_kanonymity", qDatasetKanonymity, oDatasetKanonymity),
+    Query("dataset_knn_shapley", qDatasetKnnShapley, oDatasetKnnShapley),
+    Query("dataset_dp_counts", qDatasetDpCounts, oDatasetDpCounts),
+    Query("dataset_dp_counts_gauss", qDatasetDpCountsGauss, oDatasetDpCountsGauss),
+    Query("dataset_tcloseness", qDatasetTcloseness, oDatasetTcloseness),
+    Query("corpus_report", qCorpusReport, oCorpusReport),
+    Query("export_jsonl", qExportJsonl, oExportJsonl),
+    Query("corpus_report_incremental", qCorpusReportIncremental, oCorpusReportIncremental),
+    Query("graph_degrees", qGraphDegrees, oGraphDegrees),
+    Query("graph_reciprocity", qGraphReciprocity, oGraphReciprocity),
+    Query("sample_epoch_order", qSampleEpochOrder, oSampleEpochOrder),
+    Query("text_dedup_lines_global", qTextDedupLinesGlobal, oTextDedupLinesGlobal),
+    Query("warc_roundtrip", qWarcRoundtrip, oWarcRoundtrip),
+    Query("multimodal_cdc", qMultimodalCdc, oMultimodalCdc),
+    Query("multimodal_cdc_restore", qMultimodalCdcRestore, oMultimodalCdcRestore),
+    Query("link_fuzzy_join", qLinkFuzzyJoin, oLinkFuzzyJoin),
+    Query("link_edit_join", qLinkEditJoin, oLinkEditJoin),
+    Query("link_fellegi_sunter", qLinkFellegiSunter, oLinkFellegiSunter),
+    Query("link_fs_em", qLinkFsEm, oLinkFsEm),
+    Query("link_fs_score_reload", qLinkFsScoreReload, oLinkFsScoreReload),
+    Query("link_jw_join", qLinkJwJoin, oLinkJwJoin),
+    Query("quality_expect", qQualityExpect, oQualityExpect),
+    Query("quality_expect_slice", qQualityExpectSlice, oQualityExpectSlice),
+    Query("dataset_diff", qDatasetDiff, oDatasetDiff),
+    Query("dataset_psi", qDatasetPsi, oDatasetPsi),
+    Query("layout_manifest", qLayoutManifest, oLayoutManifest),
+    Query("layout_zorder", qLayoutZorder, oLayoutZorder),
+    Query("layout_hilbert", qLayoutHilbert, oLayoutHilbert),
+    Query("layout_compact", qLayoutCompact, oLayoutCompact),
+    Query("layout_token_shards", qLayoutTokenShards, oLayoutTokenShards),
+    Query("web_curation_pipeline", qWebCurationPipeline, oWebCurationPipeline),
+    Query("web_html_text", qWebHtmlText, oWebHtmlText),
+    Query("emb_pca", qEmbPca, oEmbPca),
+    Query("emb_group_centroid", qEmbGroupCentroid, oEmbGroupCentroid),
+    Query("emb_pca_incremental", qEmbPcaIncremental, oEmbPcaIncremental),
+    Query("sample_kcenters", qSampleKcenters, oSampleKcenters)
   )
 }

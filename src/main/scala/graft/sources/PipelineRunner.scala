@@ -156,14 +156,9 @@ object PipelineRunner {
   def run(spark: SparkSession, json: String,
           macros: Map[String, String] = Map.empty): PivotResult = {
     val p = parse(json, macros)
-    val spec = PivotSpec.parse(p.pivot.pivotRow, p.pivot.pivotColumns,
+    val spec = PivotSpec.parseOrThrow(p.pivot.pivotRow, p.pivot.pivotColumns,
       p.pivot.aggregates, p.pivot.fieldAliases, p.pivot.defaultValue,
-      p.pivot.onError, p.pivot.numPartitions) match {
-      case Left(errs) =>
-        throw new IllegalArgumentException(
-          s"Invalid pivot config:\n  ${errs.mkString("\n  ")}")
-      case Right(spec) => spec
-    }
+      p.pivot.onError, p.pivot.numPartitions)
     val result = PivotOps.pivotForSinks(readSource(spark, p.source), spec)
     writeSink(result.main, p.sink)
     if (spec.onError == OnError.SendToErrorPort)

@@ -135,11 +135,7 @@ object StreamingOps {
   def pivotStream(events: DataFrame, spec: graft.pivot.PivotSpec,
                   tsCol: String = "ts", window_ : String = "1 hour",
                   lateness: String = "15 minutes"): DataFrame = {
-    spec.validate(events.schema) match {
-      case Left(errs) => throw new IllegalArgumentException(
-        s"Invalid pivot spec:\n  ${errs.mkString("\n  ")}")
-      case Right(_) => ()
-    }
+    spec.validateOrThrow(events.schema)
     val cells = graft.pivot.PivotOps.cellColumns(spec, events.schema)
     events
       .withWatermark(tsCol, lateness)

@@ -186,6 +186,16 @@ class PivotEdgeSpec extends SparkSpec {
       "the fields Product,Brand,Q1_s,Q2_s,Q1_c,Q2_c.")
   }
 
+  test("pivotRollup rejects an invalid spec") {
+    val bad = graft.pivot.PivotSpec.parse("Product", "Quarter=Q1,Q2",
+      "s:sum(Tag)").toOption.get
+    val e = intercept[IllegalArgumentException] {
+      PivotOps.pivotRollup(df, bad)
+    }
+    assert(e.getMessage.startsWith("Invalid pivot spec:\n  "))
+    assert(e.getMessage.contains("Field Tag of type string is not numeric"))
+  }
+
   test("pivotWide lifts the 2-column cap; pivot keeps reference parity") {
     val spec3 = graft.pivot.PivotSpec.parse("Product",
       "Quarter=Q1,Q2;Tag=alpha,b;Flag=true,false", "c:count(*)").toOption.get

@@ -10,15 +10,14 @@ import org.scalatest.funsuite.AnyFunSuite
 class RegistrySpec extends AnyFunSuite {
 
   private lazy val queries = SparkEntry.queries.keySet
-  private lazy val oracles = SparkEntry.oracleSql.keySet
 
+  // A Query record carries its oracle, so a query without one cannot be
+  // registered; what is left to check is that the SQL is not blank (or
+  // null: an oracle val declared below its family's registry).
   test("every registered query has an oracle") {
-    val missing = queries -- oracles
-    assert(missing.isEmpty,
-      s"queries without oracleSql entries: ${missing.toSeq.sorted}")
-    val orphans = oracles -- queries
-    assert(orphans.isEmpty,
-      s"oracleSql entries without queries: ${orphans.toSeq.sorted}")
+    val blank = SparkEntry.registry
+      .filter(q => q.oracle == null || q.oracle.trim.isEmpty).map(_.name)
+    assert(blank.isEmpty, s"queries with a blank oracle: ${blank.sorted}")
   }
 
   test("every registered query has a recorded performance floor") {
@@ -37,16 +36,23 @@ class RegistrySpec extends AnyFunSuite {
       s"floors for queries that no longer exist: ${stale.toSeq.sorted}")
   }
 
+  // The derived maps keep the last of two equal names, so duplicates are
+  // counted on the registry itself: within one family and across them.
   test("no duplicate query names across family files") {
-    val perFamily = Seq(
-      TextQueries.queries, DedupQueries.queries,
-      SimilarityQueries.queries, MultimodalQueries.queries,
-      CurationQueries.queries, TrainQueries.queries,
-      SampleQueries.queries, WebQueries.queries,
-      InsightQueries.queries, PivotQueries.all)
-    val all = perFamily.flatMap(_.keys)
-    val dups = all.groupBy(identity).filter(_._2.size > 1).keys
+    val dups = SparkEntry.registry.map(_.name)
+      .groupBy(identity).filter(_._2.size > 1).keys
     assert(dups.isEmpty,
-      s"query names registered in more than one family: ${dups.toSeq.sorted}")
+      s"query names registered more than once: ${dups.toSeq.sorted}")
+  }
+
+  test("SPARK_GRAFT_ONLY selects registered queries in registry order") {
+    assert(SparkEntry.selectOnly(None).isEmpty)
+    assert(SparkEntry.selectOnly(Some(" , ")).isEmpty)
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.selectOnly(Some("nosuch"))
+    }
+    assert(e.getMessage.contains("SPARK_GRAFT_ONLY matched zero queries: nosuch"))
+    val picked = SparkEntry.selectOnly(Some("fn_sum, nosuch,pivot_flagship"))
+    assert(picked.map(_.map(_.name)) == Some(Seq("pivot_flagship", "fn_sum")))
   }
 }

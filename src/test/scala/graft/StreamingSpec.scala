@@ -264,6 +264,18 @@ class StreamingSpec extends SparkSpec {
     assert(topk(streamedNow) == topk(batchTwin))
   }
 
+  test("streaming pivot rejects an invalid spec before it starts") {
+    implicit val ctx = spark.sqlContext
+    val bad = graft.pivot.PivotSpec.parse("user_id", "event_type=click,view",
+      "n:count(*), v:sum(missing)").toOption.get
+    val e = intercept[IllegalArgumentException] {
+      StreamingOps.pivotStream(MemoryStream[UserEvent].toDF(), bad)
+    }
+    assert(e.getMessage.startsWith("Invalid pivot spec:\n  "))
+    assert(e.getMessage.contains(
+      "Field name missing for function v does not exist in input schema."))
+  }
+
   test("streaming pivot emits the batch cross-tab per closed window") {
     implicit val ctx = spark.sqlContext
     val spec = graft.pivot.PivotSpec.parse("user_id", "event_type=click,view",
