@@ -89,6 +89,7 @@ object Bench {
     // can never survive in BENCH_r{N}.json (r09/r10 both arrived with
     // parsed:null and a mid-map tail). BENCH_full.json at the repo root is
     // the durable copy the next round's regression diff reads.
+    var fullArtifact: Option[String] = None
     try {
       val bytes = (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)
       val out = java.nio.file.Paths.get("target/bench.json")
@@ -112,22 +113,24 @@ object Bench {
       // Failed queries are absent from `med`, so a run with any failure
       // writes neither artifact.
       if (only.isEmpty && med.size == SparkEntry.queries.size) {
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"BENCH_full_c$cpus.json"), bytes)
-        val mainCpus =
-          sys.env.getOrElse("SPARK_GRAFT_BENCH_MAIN_CPUS", "32")
-        if (cpus == mainCpus)
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get("BENCH_full.json"), bytes)
+        def write(name: String): Unit = {
+          java.nio.file.Files.write(java.nio.file.Paths.get(name), bytes)
+          fullArtifact = Some(name)
+        }
+        write(s"BENCH_full_c$cpus.json")
+        if (cpus == sys.env.getOrElse("SPARK_GRAFT_BENCH_MAIN_CPUS", "32"))
+          write("BENCH_full.json")
       }
     } catch { case _: Throwable => () } // file write is best-effort
     println(json)
     // FINAL stdout line: a compact summary that FITS the driver's 2000-char
     // tail (so `parsed` is non-null), carrying the headline numbers plus
     // the slowest-15 per-query medians — the part of the regression signal
-    // that matters most — and a pointer to the full artifact.
+    // that matters most — and the full artifact this run wrote (null when
+    // it wrote none).
     val slow = med.sortBy(-_._2).take(15)
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${med.size},"sec_per_query":$perQ,"reps":$reps,"total_min":$totalMin,"queries":${fmt(slow)},"failed":$failedJson,"queries_full":"BENCH_full.json","sf":"$sfDir"}""")
+    val full = fullArtifact.fold("null")("\"" + _ + "\"")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${med.size},"sec_per_query":$perQ,"reps":$reps,"total_min":$totalMin,"queries":${fmt(slow)},"failed":$failedJson,"queries_full":$full,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

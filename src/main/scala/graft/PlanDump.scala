@@ -123,26 +123,8 @@ object PlanDump {
     val spark = Sessions.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(outDir)
-    // pseudo-queries for cross-cutting building blocks: the r15 co-
-    // occurrence edge build (new generator spelling vs the old
-    // distinct + self-join spelling, kept here as plan-diff evidence)
-    import org.apache.spark.sql.functions._
-    def li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .select(col("l_orderkey").as("g"), col("l_partkey").as("item"))
-    val pseudo: Map[String, () => org.apache.spark.sql.DataFrame] = Map(
-      "_edges_build_generator" -> (() =>
-        graft.ops.Graph.coOccurrenceEdgesCanonical(
-          li.toDF("l_orderkey", "l_partkey"), "l_orderkey", "l_partkey")),
-      "_edges_build_join" -> (() => {
-        val g = li.distinct()
-        g.join(g.withColumnRenamed("item", "item2"), "g")
-          .filter(col("item") < col("item2"))
-          .select(col("item").as("src"), col("item2").as("dst"))
-          .distinct()
-      }))
     names.foreach { name =>
-      val df = pseudo.get(name).map(_.apply())
-        .getOrElse(SparkEntry.queries(name)(spark, sfDir))
+      val df = SparkEntry.queries(name)(spark, sfDir)
       // Iterative ops materialize intermediates while the DataFrame is
       // CONSTRUCTED, so building `df` above already ran the loop jobs;
       // the formatted plan below is the final composed query over the

@@ -12,9 +12,15 @@ import org.apache.spark.sql.functions._
   * line per run.
   *
   * Usage: runMain graft.Soak <op> <tableDir> [reps]
-  *   op ∈ dup_spans_exact | dup_span_longest | winnow | keyphrases
-  *      | pagerank | kcore | bfs | harmonic   (graph ops read
-  *        <tableDir>/lineitem.parquet, doc ops documents.parquet)
+  *   op ∈ graph ops, over <tableDir>/lineitem.parquet:
+  *          pagerank | hits | kcore | bfs | betweenness | harmonic | scc
+  *      | matryoshka, over embeddings.parquet
+  *      | doc ops, over documents.parquet: dup_spans_exact
+  *          | dup_span_longest | winnow | winnow_fast | winnow_pairs
+  *          | winnow_pairs_fast | novelty | novelty_fast
+  *          | paired_bootstrap | keyphrases | secret_scan | license_scan
+  *          | minhash_sig | minhash_sig_oph | minhash_lsh
+  *          | minhash_lsh_oph | bytebpe | lang_segments | audio_fp
   */
 object Soak {
   def main(args: Array[String]): Unit = {
@@ -104,19 +110,22 @@ object Soak {
             .groupBy("id").agg(count(lit(1)).as("deg"))
         case "bfs" => // graph_bfs's exact shape
           ops.Graph.bfsDistances(
-            ops.Graph.coOccurrenceEdges(li, "l_orderkey", "l_partkey"),
+            ops.Graph.coOccurrenceEdgesCanonical(
+              li, "l_orderkey", "l_partkey").directed,
             li.filter(col("l_partkey") % 101 === 0)
               .select(col("l_partkey").as("id")),
             maxHops = 3)
         case "betweenness" => // graph_betweenness's exact shape
           ops.Graph.betweennessPivots(
-            ops.Graph.coOccurrenceEdges(li, "l_orderkey", "l_partkey"),
+            ops.Graph.coOccurrenceEdgesCanonical(
+              li, "l_orderkey", "l_partkey").directed,
             li.select(col("l_partkey").as("id")).distinct()
               .orderBy("id").limit(8),
             maxHops = 3)
         case "harmonic" => // graph_harmonic's exact shape
           ops.Graph.harmonicCentrality(
-            ops.Graph.coOccurrenceEdges(li, "l_orderkey", "l_partkey"),
+            ops.Graph.coOccurrenceEdgesCanonical(
+              li, "l_orderkey", "l_partkey").directed,
             li.select(col("l_partkey").as("id")).distinct()
               .orderBy("id").limit(8),
             maxHops = 3)

@@ -17,6 +17,46 @@ object Graph {
   /** Rank mass scale: ranks are integers in units of 1e-12. */
   val Scale: Long = 1000000000000L
 
+  /** An undirected edge set: distinct (src, dst) rows with src < dst, so
+    * no self-loops and each edge once. Only [[Graph]] builds one:
+    * [[undirected]] canonicalizes any (src, dst) frame and
+    * [[coOccurrenceEdgesCanonical]] is canonical by construction. The
+    * operators that read an undirected graph take this type, so none of
+    * them re-canonicalizes (an edge-sized exchange) and none can be
+    * handed rows that break the guarantee (they would miscount). */
+  final class Undirected private[Graph] (val df: DataFrame) {
+    /** Both directions of every edge, a distinct directed edge list.
+      * The edge set is materialized once (the union reads it twice); the
+      * mirrored rows (src > dst) are disjoint from the canonical ones,
+      * so the union needs no distinct. */
+    def directed: Directed = {
+      val c = materialize(df).df
+      new Directed(
+        c.unionAll(c.select(col("dst").as("src"), col("src").as("dst"))))
+    }
+
+    /** The same edge set checkpointed once, for a caller that reads it
+      * twice. */
+    def materialized: Undirected = new Undirected(materialize(df).df)
+  }
+
+  /** A directed edge list: distinct (src, dst) rows. Built by [[directed]]
+    * or [[Undirected.directed]]; the traversal operators take it, so a
+    * duplicate edge never inflates a frontier or double-counts a path. */
+  final class Directed private[Graph] (val df: DataFrame)
+
+  /** The undirected edge set of `edges` (src, dst): either or both
+    * directions, duplicates and self-loops are all accepted. */
+  def undirected(edges: DataFrame): Undirected = new Undirected(edges
+    .select(least(col("src"), col("dst")).as("src"),
+      greatest(col("src"), col("dst")).as("dst"))
+    .filter(col("src") =!= col("dst"))
+    .distinct())
+
+  /** The distinct directed edges of `edges` (src, dst). */
+  def directed(edges: DataFrame): Directed =
+    new Directed(edges.select(col("src"), col("dst")).distinct())
+
   /** |a ∩ b| for two SORTED long arrays: the codegen merge-walk
     * [[SortedIntersectCount]] (r16 — array_intersect builds a per-row
     * hash set although the triangle-census neighbour lists are
@@ -410,26 +450,15 @@ object Graph {
     * One-row output of exact integers — (n_nodes, n_edges,
     * n_triangles, n_wedges = Σ C(deg,2)) — plus the global transitivity
     * 3·T/W as a double of exact integers (6 dp): bit-stable
-    * cross-engine. Accepts a DIRECTED edge list (both orientations, the
-    * [[coOccurrenceEdges]] shape) or an undirected one; self-loops and
-    * duplicates are dropped by the canonicalization. */
-  def triangleStats(edges: DataFrame,
-                    assumeCanonical: Boolean = false): DataFrame = {
-    // assumeCanonical: skip the least/greatest + distinct pre-shuffle
-    // when the caller guarantees (src < dst, deduplicated) input — the
-    // labelPropagation opt-in (r14), adopted family-wide in the r15
-    // optimization round (guide §2.4: a distinct on already-unique
-    // rows is a removable edge-sized exchange). Wrong input silently
-    // miscounts, so it stays opt-in.
+    * cross-engine.
+    *
+    * @param edges the undirected edge set, from [[undirected]] or
+    *              [[coOccurrenceEdgesCanonical]] */
+  def triangleStats(edges: Undirected): DataFrame = {
     // The materializing job also counts the edges; the count picks the
     // join strategy below.
-    val em = materialize(if (assumeCanonical)
-      edges.select(col("src").as("u"), col("dst").as("v"))
-    else edges
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct())
+    val em =
+      materialize(edges.df.select(col("src").as("u"), col("dst").as("v")))
     val (e, m) = (em.df, em.rows)
     // The oriented edge list is two longs per edge — up to the
     // [[BroadcastCap]] (~64 MB) it broadcasts, turning BOTH triangle
@@ -513,24 +542,14 @@ object Graph {
     * action per iteration and stops early once no value changed (use
     * for production; keep the fixed count for cross-engine oracles).
     *
-    * @param edges undirected edge list (either one or both directions;
-    *              self-loops and duplicates are dropped)
+    * @param edges the undirected edge set, from [[undirected]] or
+    *              [[coOccurrenceEdgesCanonical]]
     * @return (id, coreness INT) for every non-isolated vertex */
-  def coreness(edges: DataFrame, iterations: Int = 8,
-               converge: Boolean = false,
-               assumeCanonical: Boolean = false): DataFrame = {
+  def coreness(edges: Undirected, iterations: Int = 8,
+               converge: Boolean = false): DataFrame = {
     require(iterations >= 0, "iterations must be >= 0")
-    // symmetric adjacency: each undirected edge contributes both rows.
-    // assumeCanonical skips the re-canonicalization distinct when the
-    // input is already (src < dst, distinct) — the labelPropagation
-    // opt-in (r14), adopted family-wide r15 (guide §2.4)
-    val canon = if (assumeCanonical)
-      edges.select(col("src").as("u"), col("dst").as("v"))
-    else edges
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
+    // symmetric adjacency: each undirected edge contributes both rows
+    val canon = edges.df.select(col("src").as("u"), col("dst").as("v"))
     // materialized ONCE with a DECLARED hash(id) layout (GraftShim):
     // HashPartitioning(id) satisfies the ClusteredDistribution of the
     // degree aggregate AND both per-iteration aggregates (id is a
@@ -622,17 +641,16 @@ object Graph {
     * peeling reaches the FIXPOINT directly and also returns the
     * surviving EDGES, which the coreness table alone doesn't.
     *
+    * @param edges the undirected edge set, from [[undirected]] or
+    *              [[coOccurrenceEdgesCanonical]]
     * @return surviving canonical edges (src < dst) */
-  def kCore(edges: DataFrame, k: Int, maxIter: Int = 100,
-            assumeCanonical: Boolean = false): DataFrame = {
+  def kCore(edges: Undirected, k: Int, maxIter: Int = 100): DataFrame = {
     require(k >= 1, "k must be >= 1")
     // every materialization folds its row count into the checkpoint
     // job (GraftShim) — the peel loop needs BOTH per round (broadcast
     // eligibility + termination), and the eager-checkpoint +
     // separate-count spelling paid 4 jobs/round where 2 suffice (the
     // r13 betweenness action-economy contract, adopted family-wide r14).
-    // assumeCanonical: skip the re-canonicalization distinct on
-    // guaranteed (src < dst, distinct) input (r15 opt; guide §2.4)
     // r15 audit note: a declared-hash(id) adjacency peel (zero
     // per-round exchange via a layout-preserving re-materialization)
     // was prototyped and MEASURED SLOWER (4.10 → 4.84 s min on the
@@ -641,12 +659,7 @@ object Graph {
     // map-side combine, while the adjacency spelling doubles the
     // per-round checkpoint copy volume (2m vs m rows). Reverted —
     // kept the r14 canonical-edge loop below.
-    var e = materialize(if (assumeCanonical) edges.select("src", "dst")
-    else edges
-      .select(least(col("src"), col("dst")).as("src"),
-        greatest(col("src"), col("dst")).as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct())
+    var e = materialize(edges.df)
     var done = e.rows == 0
     var it = 0
     while (!done && it < maxIter) {
@@ -691,23 +704,12 @@ object Graph {
     * tie-break); vertex ids themselves are the initial labels.
     * Cadence-3 lineage truncation like [[coreness]].
     *
-    * @param edges undirected edge list (either or both directions)
+    * @param edges the undirected edge set, from [[undirected]] or
+    *              [[coOccurrenceEdgesCanonical]]
     * @return (id, community) — community = converged label */
-  def labelPropagation(edges: DataFrame, iterations: Int = 4,
-                       assumeCanonical: Boolean = false): DataFrame = {
+  def labelPropagation(edges: Undirected, iterations: Int = 4): DataFrame = {
     require(iterations >= 0, "iterations must be >= 0")
-    // assumeCanonical skips the least/greatest + distinct pre-shuffle
-    // when the caller guarantees (src < dst, deduplicated) input —
-    // e.g. coOccurrenceEdgesCanonical output reused across LPA AND a
-    // downstream modularity read; wrong input silently double-counts
-    // neighbor votes, so it is opt-in
-    val canon = if (assumeCanonical)
-      edges.select(col("src").as("u"), col("dst").as("v"))
-    else edges
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
+    val canon = edges.df.select(col("src").as("u"), col("dst").as("v"))
     // pre-partitioned by id ONCE: HashPartitioning(id) satisfies the
     // ClusteredDistribution of BOTH per-iteration aggregates
     // (groupBy(id, lbl) then groupBy(id) — id is a subset of each key
@@ -751,17 +753,13 @@ object Graph {
     * past the cap the hints drop and AQE shuffles), one global
     * aggregate. Disassortative graphs (hubs link to leaves — most
     * crawl/co-purchase graphs) give r < 0; r is null for degree-regular
-    * graphs (zero variance). */
-  def assortativity(edges: DataFrame,
-                    assumeCanonical: Boolean = false): DataFrame = {
-    // assumeCanonical: see [[triangleStats]] (r15, guide §2.4)
-    val e = materialize((if (assumeCanonical)
-      edges.select(col("src").as("u"), col("dst").as("v"))
-    else edges
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct())).df
+    * graphs (zero variance).
+    *
+    * @param edges the undirected edge set, from [[undirected]] or
+    *              [[coOccurrenceEdgesCanonical]] */
+  def assortativity(edges: Undirected): DataFrame = {
+    val e = materialize(
+      edges.df.select(col("src").as("u"), col("dst").as("v"))).df
     // the vertex count rides the degree table's materializing job
     val dm = materialize(e.select(col("u").as("id"))
       .unionAll(e.select(col("v").as("id")))
@@ -811,21 +809,14 @@ object Graph {
     * precision (e.g. 1/128). Vertices of degree < 2 report null (no
     * neighbour pair to close).
     *
-    * @param edges undirected edge list (either or both directions;
-    *              self-loops and duplicates dropped)
+    * @param edges the undirected edge set, from [[undirected]] or
+    *              [[coOccurrenceEdgesCanonical]]
     * @return (id, deg BIGINT, triangles BIGINT, lcc_micro BIGINT,
     *         lcc DOUBLE) */
-  def localClustering(edges: DataFrame,
-                      assumeCanonical: Boolean = false): DataFrame = {
-    // assumeCanonical: see [[triangleStats]] (r15, guide §2.4); the
-    // edge count rides the materializing job, as there
-    val em = materialize(if (assumeCanonical)
-      edges.select(col("src").as("u"), col("dst").as("v"))
-    else edges
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct())
+  def localClustering(edges: Undirected): DataFrame = {
+    // the edge count rides the materializing job, as in [[triangleStats]]
+    val em =
+      materialize(edges.df.select(col("src").as("u"), col("dst").as("v")))
     val (e, m) = (em.df, em.rows)
     val deg = materialize(e.select(col("u").as("id"))
       .unionAll(e.select(col("v").as("id")))
@@ -911,20 +902,14 @@ object Graph {
     * from dominating every ranking, and the graph-side analogue of the
     * shingle Jaccard the dedup family uses.
     *
-    * @param edges undirected edge list (either or both directions)
+    * @param edges the undirected edge set, from [[undirected]] or
+    *              [[coOccurrenceEdgesCanonical]]
     * @return (u, v, common BIGINT, du, dv BIGINT, jaccard_micro BIGINT)
     *         with u < v, non-adjacent pairs only */
-  def commonNeighbors(edges: DataFrame,
-                      maxCenterDeg: Option[Long] = None,
-                      assumeCanonical: Boolean = false): DataFrame = {
-    // assumeCanonical: see [[triangleStats]] (r15, guide §2.4)
-    val em = materialize(if (assumeCanonical)
-      edges.select(col("src").as("u"), col("dst").as("v"))
-    else edges
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct())
+  def commonNeighbors(edges: Undirected,
+                      maxCenterDeg: Option[Long] = None): DataFrame = {
+    val em =
+      materialize(edges.df.select(col("src").as("u"), col("dst").as("v")))
     val e = em.df
     val adj = e.select(col("u").as("id"), col("v").as("nbr"))
       .unionAll(e.select(col("v").as("id"), col("u").as("nbr")))
@@ -971,19 +956,11 @@ object Graph {
     * by the largest basket, not the corpus — and the group key never
     * shuffles more than the two aggregate passes need. */
   def coOccurrenceEdges(df: DataFrame, groupCol: String,
-                        itemCol: String): DataFrame = {
-    // materialized once (the union references it twice — unmaterialized,
-    // the join + distinct would run per branch); the mirrored directions
-    // are disjoint from the canonical ones (src < dst vs src > dst), so
-    // the union needs no further distinct — the dedup ran on HALF the
-    // pair volume the naive both-directions self-join + distinct shuffles
-    val c = materialize(coOccurrenceEdgesCanonical(df, groupCol, itemCol)).df
-    c.unionAll(c.select(col("dst").as("src"), col("src").as("dst")))
-  }
+                        itemCol: String): DataFrame =
+    coOccurrenceEdgesCanonical(df, groupCol, itemCol).directed.df
 
-  /** Canonical (src < dst, distinct) co-occurrence pairs — the
-    * undirected half of [[coOccurrenceEdges]] and the natural input for
-    * [[triangleStats]].
+  /** Every unordered pair of distinct `itemCol` values sharing a
+    * `groupCol` value, once per group, as (src, dst) with src < dst.
     *
     * r15 optimization (guide §2.3/§2.4): ONE exchange builds the
     * per-group sorted item set (collect_set dedups (g, item) inside
@@ -994,14 +971,13 @@ object Graph {
     * BOTH join sides (the rename blocks exchange reuse) and paid two
     * sorts — disappears. Plan went 4 exchanges + SMJ → 2 exchanges,
     * measured 1.75 s → ~1.0 s on the sf0.1 co-purchase build (3-rep
-    * mins, same window). Pair volume and the final cross-group dedup
-    * are unchanged — still quadratic in GROUP size only, bounded by
-    * the largest basket. sort_array pins ascending order, so src < dst
-    * by the item type's natural ordering, exactly as the old
-    * item < item2 filter; collect_set drops null items like the old
-    * null-rejecting < predicate. */
-  def coOccurrenceEdgesCanonical(df: DataFrame, groupCol: String,
-                                 itemCol: String): DataFrame = {
+    * mins, same window). Pair volume is still quadratic in GROUP size
+    * only, bounded by the largest basket. sort_array pins ascending
+    * order, so src < dst by the item type's natural ordering, exactly
+    * as the old item < item2 filter; collect_set drops null items like
+    * the old null-rejecting < predicate. */
+  private def coOccurrencePairs(df: DataFrame, groupCol: String,
+                                itemCol: String): DataFrame =
     df.select(col(groupCol).as("g"), col(itemCol).as("item"))
       .groupBy("g")
       .agg(sort_array(collect_set(col("item"))).as("xs"))
@@ -1010,8 +986,13 @@ object Graph {
         explode(slice(col("xs"), col("i") + lit(2),
           greatest(size(col("xs")) - col("i") - lit(1), lit(0))))
           .as("dst"))
-      .distinct()
-  }
+
+  /** Canonical (src < dst, distinct) co-occurrence pairs — the
+    * undirected half of [[coOccurrenceEdges]]: the cross-group dedup of
+    * the pair stream, canonical by construction. */
+  def coOccurrenceEdgesCanonical(df: DataFrame, groupCol: String,
+                                 itemCol: String): Undirected =
+    new Undirected(coOccurrencePairs(df, groupCol, itemCol).distinct())
 
   /** WEIGHTED co-occurrence edges: [[coOccurrenceEdges]] with
     * w = the number of groups the pair shares (both directions).
@@ -1026,19 +1007,9 @@ object Graph {
     * shuffle. */
   def coOccurrenceEdgesWeighted(df: DataFrame, groupCol: String,
                                 itemCol: String): DataFrame = {
-    // r15: same join-free generator emission as
-    // [[coOccurrenceEdgesCanonical]] — each unordered pair appears
-    // exactly once per group, so the counting aggregate over the
-    // emitted stream reproduces the shared-group count bit for bit
-    val c = materialize(df
-      .select(col(groupCol).as("g"), col(itemCol).as("item"))
-      .groupBy("g")
-      .agg(sort_array(collect_set(col("item"))).as("xs"))
-      .select(posexplode(col("xs")).as(Seq("i", "src")), col("xs"))
-      .select(col("src"),
-        explode(slice(col("xs"), col("i") + lit(2),
-          greatest(size(col("xs")) - col("i") - lit(1), lit(0))))
-          .as("dst"))
+    // each unordered pair appears exactly once per group, so counting
+    // the pair stream gives the shared-group count
+    val c = materialize(coOccurrencePairs(df, groupCol, itemCol)
       .groupBy(col("src"), col("dst"))
       .agg(count(lit(1)).as("w"))).df
     c.unionAll(c.select(col("dst").as("src"), col("src").as("dst"), col("w")))
@@ -1112,12 +1083,12 @@ object Graph {
     * discipline; AQE handles them beyond). Distances are exact
     * integers — same result on any engine, any partitioning.
     *
-    * @param edges directed edges (src, dst); pass both directions for
-    *              an undirected read
+    * @param edges the directed edge list, from [[directed]], or
+    *              [[Undirected.directed]] for an undirected read
     * @param seeds one-column frame of seed vertex ids (column `id`)
     * @return (id, dist) — dist 0 for seeds, ≤ maxHops elsewhere */
-  def bfsDistances(edges: DataFrame, seeds: DataFrame, maxHops: Int = 6,
-                   assumeDistinct: Boolean = false): DataFrame = {
+  def bfsDistances(edges: Directed, seeds: DataFrame,
+                   maxHops: Int = 6): DataFrame = {
     require(maxHops >= 0, "maxHops must be >= 0")
     // r14 action economy (the betweenness r13 contract): each hop's
     // frontier materializes through GraftShim — the checkpoint job IS
@@ -1127,14 +1098,8 @@ object Graph {
     // hop instead of three.
     // dst-partitioned ONCE: the per-hop frontier distinct keys on
     // dst and the broadcast probes preserve this partitioning — no
-    // per-hop exchange (r14 co-partitioning trick). assumeDistinct:
-    // skip the dedup when the caller guarantees a deduplicated edge
-    // list (duplicate edges don't change BFS REACHABILITY, but they
-    // would inflate the per-hop frontier expansion, so the dedup is
-    // kept by default; r15 opt, guide §2.4)
-    val e = materialize(
-      if (assumeDistinct) edges.select(col("src"), col("dst"))
-      else edges.select(col("src"), col("dst")).distinct(), Hash(Seq("dst"))).df
+    // per-hop exchange (r14 co-partitioning trick)
+    val e = materialize(edges.df, Hash(Seq("dst"))).df
     val seed0 = materialize(seeds.select(col("id")).distinct())
     var visited = seed0.df.withColumn("dist", lit(0L))
     var frontier = seed0.df
@@ -1183,21 +1148,19 @@ object Graph {
     * |seeds| × reached — keep the pivot set small (tens), which is
     * exactly the sampled-centrality regime.
     *
+    * @param edges the directed edge list, from [[directed]], or
+    *              [[Undirected.directed]] for an undirected read
     * @param seeds (id, label) — one BFS wave per distinct label;
     *              typically label = the pivot's own id
     * @return (label, id, dist) with dist ≤ maxHops, dist 0 = the seed */
-  def bfsDistancesLabeled(edges: DataFrame, seeds: DataFrame,
-                          maxHops: Int = 6,
-                          assumeDistinct: Boolean = false): DataFrame = {
+  def bfsDistancesLabeled(edges: Directed, seeds: DataFrame,
+                          maxHops: Int = 6): DataFrame = {
     require(maxHops >= 0, "maxHops must be >= 0")
     // same one-job-per-hop shape as [[bfsDistances]] (r14)
     // dst-partitioned ONCE: the per-hop frontier distinct keys on
     // dst and the broadcast probes preserve this partitioning — no
-    // per-hop exchange (r14 co-partitioning trick). assumeDistinct:
-    // see [[bfsDistances]] (r15, guide §2.4)
-    val e = materialize(
-      if (assumeDistinct) edges.select(col("src"), col("dst"))
-      else edges.select(col("src"), col("dst")).distinct(), Hash(Seq("dst"))).df
+    // per-hop exchange (r14 co-partitioning trick)
+    val e = materialize(edges.df, Hash(Seq("dst"))).df
     val seed0 = materialize(seeds.select(col("label"), col("id")).distinct())
     var visited = seed0.df.withColumn("dist", lit(0L))
     var frontier = seed0.df
@@ -1232,13 +1195,14 @@ object Graph {
     * contribute 0 rather than poisoning the mean (Boldi–Vigna 2014's
     * argument for harmonic as THE centrality on disconnected graphs).
     * Pivots themselves are excluded from their own sum (dist 0).
-    * Cost: [[bfsDistancesLabeled]] + one hash aggregate. */
-  def harmonicCentrality(edges: DataFrame, pivots: DataFrame,
-                         maxHops: Int = 4,
-                         assumeDistinct: Boolean = false): DataFrame =
+    * Cost: [[bfsDistancesLabeled]] + one hash aggregate.
+    *
+    * @param edges the directed edge list, from [[directed]], or
+    *              [[Undirected.directed]] for an undirected read */
+  def harmonicCentrality(edges: Directed, pivots: DataFrame,
+                         maxHops: Int = 4): DataFrame =
     bfsDistancesLabeled(edges,
-        pivots.select(col("id"), col("id").as("label")), maxHops,
-        assumeDistinct = assumeDistinct)
+        pivots.select(col("id"), col("id").as("label")), maxHops)
       .filter(col("dist") > 0)
       .groupBy("id")
       .agg(count(lit(1)).as("n_pivots"),
@@ -1281,20 +1245,17 @@ object Graph {
     * storage, same plans, ~half the scheduler round-trips: this was
     * the most contention-sensitive query in the bench suite (r12).
     *
+    * @param edges the directed edge list, from [[directed]], or
+    *              [[Undirected.directed]] for an undirected read
     * @return (id, bc_micro) for non-pivot vertices with bc_micro > 0 */
-  def betweennessPivots(edges: DataFrame, pivots: DataFrame,
-                        maxHops: Int = 3,
-                        assumeDistinct: Boolean = false): DataFrame = {
+  def betweennessPivots(edges: Directed, pivots: DataFrame,
+                        maxHops: Int = 3): DataFrame = {
     require(maxHops >= 1, "maxHops must be >= 1")
     // dst-partitioned ONCE: each forward level's grouped frontier
     // aggregate keys on (label, dst) and the broadcast frontier join
     // preserves this partitioning, so the per-level exchange vanishes
-    // (the r14 coreness co-partitioning trick). assumeDistinct: skip
-    // the dedup on guaranteed-deduplicated input — a duplicate edge
-    // would double-count σ paths, so it stays opt-in (r15, guide §2.4)
-    val e = materialize(
-      if (assumeDistinct) edges.select(col("src"), col("dst"))
-      else edges.select(col("src"), col("dst")).distinct(), Hash(Seq("dst"))).df
+    // (the r14 coreness co-partitioning trick)
+    val e = materialize(edges.df, Hash(Seq("dst"))).df
     // forward: levels(h) = (label, id, sig); per-level counts retained
     // for the backward phase's broadcast decisions
     val l0 = materialize(pivots.select(col("id").as("label"), col("id"))
@@ -1391,20 +1352,15 @@ object Graph {
     * maxCenterDeg precedent). Isolated vertices never seed (no
     * neighbors to step to — they are absent from the edge list).
     *
+    * @param edges the undirected edge set, from [[undirected]] or
+    *              [[coOccurrenceEdgesCanonical]]
     * @return (start, walk_id, path) — path = space-joined node ids,
     *         steps+1 entries */
-  def walkCorpus(edges: DataFrame, steps: Int = 3, walksPerNode: Int = 1,
-                 assumeCanonical: Boolean = false): DataFrame = {
+  def walkCorpus(edges: Undirected, steps: Int = 3,
+                 walksPerNode: Int = 1): DataFrame = {
     require(steps >= 1, "walkCorpus needs steps >= 1")
     require(walksPerNode >= 1, "walkCorpus needs walksPerNode >= 1")
-    // assumeCanonical: see [[triangleStats]] (r15, guide §2.4)
-    val canon = if (assumeCanonical)
-      edges.select(col("src").as("u"), col("dst").as("v"))
-    else edges
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
+    val canon = edges.df.select(col("src").as("u"), col("dst").as("v"))
     // materialized: seeds + one probe per step; the vertex count rides
     // the same job
     val am = materialize(canon.select(col("u").as("id"), col("v").as("nbr"))
@@ -1452,21 +1408,15 @@ object Graph {
     * settle typical co-occurrence graphs; each round is one join +
     * one aggregate over the (shrinking) edge set.
     *
-    * @param edges undirected edge list (either or both directions)
+    * @param edges the undirected edge set, from [[undirected]] or
+    *              [[coOccurrenceEdgesCanonical]]
     * @param k     truss order (k ≥ 3; support threshold = k − 2)
     * @return surviving (u, v, support) — support within the survivors */
-  def ktruss(edges: DataFrame, k: Int, iterations: Int = 2,
-             assumeCanonical: Boolean = false): DataFrame = {
+  def ktruss(edges: Undirected, k: Int, iterations: Int = 2): DataFrame = {
     require(k >= 3, "ktruss needs k >= 3")
     require(iterations >= 0, "iterations must be >= 0")
-    // assumeCanonical: see [[triangleStats]] (r15, guide §2.4)
-    var e = materialize((if (assumeCanonical)
-      edges.select(col("src").as("u"), col("dst").as("v"))
-    else edges
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()))
+    var e =
+      materialize(edges.df.select(col("src").as("u"), col("dst").as("v")))
     // m: the edge count, taken from the job that materialized ec
     def support(ec: DataFrame, m: Long): DataFrame = {
       val deg = ec.select(col("u").as("id"))

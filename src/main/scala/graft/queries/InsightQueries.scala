@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.GraftShim.materialize
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops._
@@ -474,12 +473,8 @@ private[graft] object InsightQueries {
     * plus transitivity as a double of exact integers. */
   private[graft] def qGraphTriangles(s: SparkSession, dir: String): DataFrame = {
     val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
-    // assumeCanonical: the canonical edge build already guarantees
-    // (src < dst, distinct) — skips a redundant edge-sized exchange
-    // (r15 optimization; identical output, oracle unchanged)
     Graph.triangleStats(
-      Graph.coOccurrenceEdgesCanonical(li, "l_orderkey", "l_partkey"),
-      assumeCanonical = true)
+      Graph.coOccurrenceEdgesCanonical(li, "l_orderkey", "l_partkey"))
   }
 
   private[graft] val oGraphTriangles =
@@ -587,9 +582,7 @@ private[graft] object InsightQueries {
   private[graft] def qGraphCoreness(s: SparkSession, dir: String): DataFrame = {
     val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
     val edges = Graph.coOccurrenceEdgesCanonical(li, "l_orderkey", "l_partkey")
-    // assumeCanonical: input is (src < dst, distinct) by construction
-    // (r15 optimization; identical output, oracle unchanged)
-    Graph.coreness(edges, iterations = 8, assumeCanonical = true)
+    Graph.coreness(edges, iterations = 8)
       .select(col("id").as("part"), col("coreness"))
   }
 
@@ -617,8 +610,7 @@ private[graft] object InsightQueries {
   private[graft] def qGraphKcore(s: SparkSession, dir: String): DataFrame = {
     val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
     val edges = Graph.coOccurrenceEdgesCanonical(li, "l_orderkey", "l_partkey")
-    // assumeCanonical: input is (src < dst, distinct) by construction
-    val core = Graph.kCore(edges, k = 80, assumeCanonical = true)
+    val core = Graph.kCore(edges, k = 80)
     core.select(col("src").as("id"))
       .unionAll(core.select(col("dst").as("id")))
       .groupBy("id").agg(count(lit(1)).as("deg"))
@@ -666,10 +658,8 @@ private[graft] object InsightQueries {
     * sums, one double division (see [[Graph.assortativity]]). */
   private[graft] def qGraphAssortativity(s: SparkSession, dir: String): DataFrame = {
     val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
-    // assumeCanonical: input is (src < dst, distinct) by construction
     Graph.assortativity(
-      Graph.coOccurrenceEdgesCanonical(li, "l_orderkey", "l_partkey"),
-      assumeCanonical = true)
+      Graph.coOccurrenceEdgesCanonical(li, "l_orderkey", "l_partkey"))
   }
 
   private[graft] val oGraphAssortativity =
@@ -742,14 +732,9 @@ private[graft] object InsightQueries {
     * contract, like coreness — see [[Graph.labelPropagation]]). */
   private[graft] def qGraphCommunities(s: SparkSession, dir: String): DataFrame = {
     val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
-    // assumeCanonical: coOccurrenceEdgesCanonical already guarantees
-    // (src < dst, distinct) — the r12-r13 2x-floor readings turned out
-    // to include a redundant re-canonicalization distinct over the full
-    // co-occurrence edge set that graph_modularity had already opted
-    // out of (r14 investigation; output is identical either way)
     Graph.labelPropagation(
       Graph.coOccurrenceEdgesCanonical(li, "l_orderkey", "l_partkey"),
-      iterations = 4, assumeCanonical = true)
+      iterations = 4)
       .select(col("id").as("part"), col("community"))
   }
 
@@ -779,11 +764,9 @@ private[graft] object InsightQueries {
   private[graft] def qGraphModularity(s: SparkSession, dir: String): DataFrame = {
     val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
     // LPA + modularity share it
-    val edges = materialize(Graph.coOccurrenceEdgesCanonical(li, "l_orderkey",
-      "l_partkey")).df
-    Graph.modularity(edges,
-      Graph.labelPropagation(edges, iterations = 4,
-        assumeCanonical = true))
+    val edges = Graph.coOccurrenceEdgesCanonical(li, "l_orderkey",
+      "l_partkey").materialized
+    Graph.modularity(edges.df, Graph.labelPropagation(edges, iterations = 4))
   }
 
   private[graft] val oGraphModularity = {
@@ -831,10 +814,8 @@ private[graft] object InsightQueries {
     * [[Graph.localClustering]]). */
   private[graft] def qGraphClustering(s: SparkSession, dir: String): DataFrame = {
     val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
-    // assumeCanonical: input is (src < dst, distinct) by construction
     Graph.localClustering(
-      Graph.coOccurrenceEdgesCanonical(li, "l_orderkey", "l_partkey"),
-      assumeCanonical = true)
+      Graph.coOccurrenceEdgesCanonical(li, "l_orderkey", "l_partkey"))
       .select(col("id").as("part"), col("deg"), col("triangles"),
         col("lcc_micro"), col("lcc"))
   }
@@ -878,10 +859,9 @@ private[graft] object InsightQueries {
     val li = t(s, dir, "lineitem")
       .filter(col("l_partkey") % 4 === 0)
       .select(col("l_orderkey"), col("l_partkey"))
-    // assumeCanonical: input is (src < dst, distinct) by construction
     Graph.ktruss(
       Graph.coOccurrenceEdgesCanonical(li, "l_orderkey", "l_partkey"),
-      k = 4, iterations = 2, assumeCanonical = true)
+      k = 4, iterations = 2)
   }
 
   private[graft] val oGraphKtruss = {
@@ -921,10 +901,9 @@ private[graft] object InsightQueries {
     val li = t(s, dir, "lineitem")
       .filter(col("l_partkey") % 4 === 0)
       .select(col("l_orderkey"), col("l_partkey"))
-    // assumeCanonical: input is (src < dst, distinct) by construction
     Graph.walkCorpus(
       Graph.coOccurrenceEdgesCanonical(li, "l_orderkey", "l_partkey"),
-      steps = 3, walksPerNode = 1, assumeCanonical = true)
+      steps = 3, walksPerNode = 1)
   }
 
   private[graft] val oGraphWalks = {
@@ -960,10 +939,8 @@ private[graft] object InsightQueries {
     val li = t(s, dir, "lineitem")
       .filter(col("l_partkey") % 4 === 0)
       .select(col("l_orderkey"), col("l_partkey"))
-    // assumeCanonical: input is (src < dst, distinct) by construction
     Graph.commonNeighbors(
-      Graph.coOccurrenceEdgesCanonical(li, "l_orderkey", "l_partkey"),
-      assumeCanonical = true)
+      Graph.coOccurrenceEdgesCanonical(li, "l_orderkey", "l_partkey"))
       .orderBy(col("common").desc, col("u"), col("v"))
       .limit(50)
   }
@@ -993,13 +970,11 @@ private[graft] object InsightQueries {
     * recursive CTE bounded by the same hop cap, min-dist per vertex. */
   private[graft] def qGraphBfs(s: SparkSession, dir: String): DataFrame = {
     val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
-    val edges = Graph.coOccurrenceEdges(li, "l_orderkey", "l_partkey")
+    val edges = Graph.coOccurrenceEdgesCanonical(li, "l_orderkey",
+      "l_partkey").directed
     val seeds = li.filter(col("l_partkey") % 101 === 0)
       .select(col("l_partkey").as("id"))
-    // assumeDistinct: coOccurrenceEdges output is distinct by
-    // construction (canonical distinct + its disjoint mirror) —
-    // skips a redundant 2m-row exchange (r15; identical output)
-    Graph.bfsDistances(edges, seeds, maxHops = 3, assumeDistinct = true)
+    Graph.bfsDistances(edges, seeds, maxHops = 3)
   }
 
   private[graft] val oGraphBfs =
@@ -1576,13 +1551,11 @@ private[graft] object InsightQueries {
     * exact BFS distances — the labeled-BFS recursive-CTE twin. */
   private[graft] def qGraphHarmonic(s: SparkSession, dir: String): DataFrame = {
     val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
-    val edges = Graph.coOccurrenceEdges(li, "l_orderkey", "l_partkey")
+    val edges = Graph.coOccurrenceEdgesCanonical(li, "l_orderkey",
+      "l_partkey").directed
     val pivots = li.select(col("l_partkey").as("id")).distinct()
       .orderBy("id").limit(8)
-    // assumeDistinct: coOccurrenceEdges output is distinct (see
-    // graph_bfs note)
-    Graph.harmonicCentrality(edges, pivots, maxHops = 3,
-      assumeDistinct = true)
+    Graph.harmonicCentrality(edges, pivots, maxHops = 3)
   }
 
   /** Pivot-sampled bounded-distance betweenness over the co-purchase
@@ -1595,13 +1568,11 @@ private[graft] object InsightQueries {
   private[graft] def qGraphBetweenness(s: SparkSession,
                                        dir: String): DataFrame = {
     val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
-    val edges = Graph.coOccurrenceEdges(li, "l_orderkey", "l_partkey")
+    val edges = Graph.coOccurrenceEdgesCanonical(li, "l_orderkey",
+      "l_partkey").directed
     val pivots = li.select(col("l_partkey").as("id")).distinct()
       .orderBy("id").limit(8)
-    // assumeDistinct: coOccurrenceEdges output is distinct (see
-    // graph_bfs note)
-    Graph.betweennessPivots(edges, pivots, maxHops = 3,
-      assumeDistinct = true)
+    Graph.betweennessPivots(edges, pivots, maxHops = 3)
   }
 
   private[graft] val oGraphBetweenness =

@@ -251,12 +251,12 @@ class InsightSpec extends SparkSpec {
       yield (u.toLong, v.toLong)).toSeq ++
       Seq((5L, 1L), (5L, 2L), (6L, 5L))
     val df = edges.toDF("src", "dst")
-    val c = Graph.coreness(df, iterations = 50, converge = true)
+    val c = Graph.coreness(Graph.undirected(df), iterations = 50, converge = true)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(c == Map(1L -> 3, 2L -> 3, 3L -> 3, 4L -> 3, 5L -> 2, 6L -> 1))
     // k-core peel = induced subgraph on coreness >= k, for every k
     for (k <- 1 to 4) {
-      val core = Graph.kCore(df, k)
+      val core = Graph.kCore(Graph.undirected(df), k)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val keep = c.filter(_._2 >= k).keySet
       val expected = edges.map { case (u, v) =>
@@ -267,7 +267,7 @@ class InsightSpec extends SparkSpec {
     // a pure path is all coreness 1 and needs several h-index rounds
     val path = (1L to 5L).sliding(2).map(s => (s.head, s.last)).toSeq
       .toDF("src", "dst")
-    val cp = Graph.coreness(path, iterations = 50, converge = true)
+    val cp = Graph.coreness(Graph.undirected(path), iterations = 50, converge = true)
       .collect().map(r => r.getInt(1)).toSet
     assert(cp == Set(1))
   }
@@ -275,34 +275,34 @@ class InsightSpec extends SparkSpec {
   test("assortativity: star is -1, regular graphs are null, path-3 is -1") {
     // K1,3 star: hub degree 3, leaves 1 — perfectly disassortative
     val star = (1 to 3).map(i => (0L, i.toLong)).toDF("src", "dst")
-    val r1 = Graph.assortativity(star).head
+    val r1 = Graph.assortativity(Graph.undirected(star)).head
     assert(r1.getLong(0) == 3L && r1.getDouble(1) == -1.0)
     // 4-cycle: degree-regular, zero variance -> null (not NaN)
     val cyc = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L)).toDF("src", "dst")
-    val r2 = Graph.assortativity(cyc).head
+    val r2 = Graph.assortativity(Graph.undirected(cyc)).head
     assert(r2.getLong(0) == 4L && r2.isNullAt(1))
     // path 1-2-3: hand-computed r = -1 (ends meet only the middle)
     val path = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
-    assert(Graph.assortativity(path).head.getDouble(1) == -1.0)
+    assert(Graph.assortativity(Graph.undirected(path)).head.getDouble(1) == -1.0)
   }
 
   test("triangleStats: K4, star, and directed-input canonicalization") {
     // K4: 4 triangles, 6 edges, wedges = 4*C(3,2) = 12, transitivity 1
     val k4 = (for { u <- 0 to 3; v <- 0 to 3 if u != v }
       yield (u.toLong, v.toLong)).toDF("src", "dst")
-    val r1 = Graph.triangleStats(k4).head
+    val r1 = Graph.triangleStats(Graph.undirected(k4)).head
     assert((r1.getLong(0), r1.getLong(1), r1.getLong(2), r1.getLong(3),
       r1.getDouble(4)) == ((4L, 6L, 4L, 12L, 1.0)))
     // star K1,4: no triangles, 4 edges, wedges = C(4,2) = 6
     val star = (1 to 4).flatMap(i => Seq((0L, i.toLong), (i.toLong, 0L)))
       .toDF("src", "dst")
-    val r2 = Graph.triangleStats(star).head
+    val r2 = Graph.triangleStats(Graph.undirected(star)).head
     assert((r2.getLong(0), r2.getLong(1), r2.getLong(2), r2.getLong(3),
       r2.getDouble(4)) == ((5L, 4L, 0L, 6L, 0.0)))
     // one-directional input with dup edges and a self-loop canonicalizes
     val messy = Seq((1L, 2L), (2L, 3L), (1L, 3L), (1L, 3L), (2L, 2L))
       .toDF("src", "dst")
-    val r3 = Graph.triangleStats(messy).head
+    val r3 = Graph.triangleStats(Graph.undirected(messy)).head
     assert((r3.getLong(1), r3.getLong(2)) == ((3L, 1L)))
   }
 
@@ -339,7 +339,7 @@ class InsightSpec extends SparkSpec {
     // K4 on 1..4 plus vertex 5 hanging off vertex 1
     val edges = ((for { u <- 1 to 4; v <- 1 to 4 if u < v }
       yield (u.toLong, v.toLong)) :+ (1L, 5L)).toDF("src", "dst")
-    val out = Graph.localClustering(edges).collect()
+    val out = Graph.localClustering(Graph.undirected(edges)).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2),
         if (r.isNullAt(3)) -1L else r.getLong(3),
         if (r.isNullAt(4)) -1.0 else r.getDouble(4)))).toMap
@@ -351,7 +351,8 @@ class InsightSpec extends SparkSpec {
     assert(out(5L) == ((1L, 0L, -1L, -1.0)))
     // star hub: wedges but no triangles — lcc 0, not null
     val star = (1 to 4).map(i => (0L, i.toLong)).toDF("src", "dst")
-    val hub = Graph.localClustering(star).filter(col("id") === 0L).head
+    val hub = Graph.localClustering(Graph.undirected(star))
+      .filter(col("id") === 0L).head
     assert((hub.getLong(1), hub.getLong(2), hub.getLong(3),
       hub.getDouble(4)) == ((4L, 0L, 0L, 0.0)))
   }
@@ -412,13 +413,14 @@ class InsightSpec extends SparkSpec {
     // min-tie iterations land {1,2,3}->1 and {4,5,6}->3
     val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (4L, 5L), (4L, 6L),
       (5L, 6L), (3L, 4L)).toDF("src", "dst")
-    val out = Graph.labelPropagation(edges, iterations = 4).collect()
+    val out = Graph.labelPropagation(Graph.undirected(edges), iterations = 4)
+      .collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
       4L -> 3L, 5L -> 3L, 6L -> 3L))
     // a clique alone collapses to its min label in one step
     val k3 = Seq((7L, 8L), (7L, 9L), (8L, 9L)).toDF("src", "dst")
-    val c = Graph.labelPropagation(k3, iterations = 2).collect()
+    val c = Graph.labelPropagation(Graph.undirected(k3), iterations = 2).collect()
       .map(_.getLong(1)).toSet
     assert(c == Set(7L))
   }
@@ -427,16 +429,16 @@ class InsightSpec extends SparkSpec {
     val edges = (for { u <- 1 to 30; v <- 1 to 30 if u < v && (u + v) % 3 == 0 }
       yield (u.toLong, v.toLong)).toDF("src", "dst")
     for ((tag, df) <- Seq(
-        "triangleStats" -> Graph.triangleStats(edges),
-        "localClustering" -> Graph.localClustering(edges),
-        "commonNeighbors" -> Graph.commonNeighbors(edges),
-        "coreness" -> Graph.coreness(edges, iterations = 2))) {
+        "triangleStats" -> Graph.triangleStats(Graph.undirected(edges)),
+        "localClustering" -> Graph.localClustering(Graph.undirected(edges)),
+        "commonNeighbors" -> Graph.commonNeighbors(Graph.undirected(edges)),
+        "coreness" -> Graph.coreness(Graph.undirected(edges), iterations = 2))) {
       val plan = df.queryExecution.executedPlan.toString
       assert(!plan.contains("CartesianProduct"), s"$tag: cartesian in plan")
       assert(!plan.contains("WindowExec"), s"$tag: window in plan")
     }
     // below the caps the triangle/clustering joins are broadcast probes
-    val triPlan = Graph.triangleStats(edges)
+    val triPlan = Graph.triangleStats(Graph.undirected(edges))
       .queryExecution.executedPlan.toString
     assert(triPlan.contains("BroadcastHashJoin"),
       "triangleStats small-graph path must broadcast the array tables")
@@ -453,8 +455,9 @@ class InsightSpec extends SparkSpec {
       yield (u.toLong, v.toLong)).toDF("src", "dst")
     val weighted = edges.withColumn("w", (col("src") + col("dst")) % 3 + 1)
     for ((tag, df) <- Seq(
-        "coreness" -> Graph.coreness(edges, iterations = 1),
-        "labelPropagation" -> Graph.labelPropagation(edges, iterations = 1),
+        "coreness" -> Graph.coreness(Graph.undirected(edges), iterations = 1),
+        "labelPropagation" ->
+          Graph.labelPropagation(Graph.undirected(edges), iterations = 1),
         // the weighted iteration must ride the SAME declared hash(dst)
         // layout as the unweighted one — the r14 weak flag was the
         // suspicion that the weight projection erases it
@@ -489,7 +492,7 @@ class InsightSpec extends SparkSpec {
         .select(col("item").as("src"), col("item2").as("dst"))
         .distinct()
     }
-    val got = Graph.coOccurrenceEdgesCanonical(rows, "g", "item")
+    val got = Graph.coOccurrenceEdgesCanonical(rows, "g", "item").df
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val want = oldCanonical(rows)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -503,48 +506,74 @@ class InsightSpec extends SparkSpec {
     assert(w.size === 8) // 4 unordered pairs, both directions
   }
 
-  test("assumeCanonical/assumeDistinct: identical results on guaranteed input (r15)") {
-    // the r15 optimization-round opt-ins skip the internal
-    // re-canonicalization distinct; on input that IS canonical
-    // (src < dst, distinct) every op must return byte-identical rows
-    val canon = (for { u <- 1 to 30; v <- 1 to 30
-      if u < v && (u + v) % 3 == 0 } yield (u.toLong, v.toLong))
-      .toDF("src", "dst")
+  test("typed edge builders: raw input gives the canonical builder's results") {
+    // each operator reads the same graph twice: once built by
+    // Graph.undirected / Graph.directed from a raw edge list that mixes
+    // both orientations, duplicates and self-loops, once straight from
+    // the co-occurrence builder; the rows must be identical
+    val pairs = for { u <- 1 to 30; v <- 1 to 30
+      if u < v && (u + v) % 3 == 0 } yield (u.toLong, v.toLong)
+    val raw = (pairs.flatMap { case (u, v) =>
+      if ((u + v) % 2 == 0) Seq((u, v), (v, u)) else Seq((v, u), (v, u))
+    } ++ Seq((5L, 5L), (9L, 9L))).toDF("src", "dst")
+    // one group per pair: the builder emits exactly those pairs
+    val groups = pairs.zipWithIndex.flatMap { case ((u, v), g) =>
+      Seq((g.toLong, u), (g.toLong, v)) }.toDF("g", "item")
+    val canon = Graph.coOccurrenceEdgesCanonical(groups, "g", "item")
+    val und = Graph.undirected(raw)
     def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
       df.collect().map(_.toString).toSet
-    assert(rows(Graph.coreness(canon, iterations = 3,
-        assumeCanonical = true)) ===
+    assert(rows(Graph.coreness(und, iterations = 3)) ===
       rows(Graph.coreness(canon, iterations = 3)))
-    assert(rows(Graph.kCore(canon, k = 3, assumeCanonical = true)) ===
-      rows(Graph.kCore(canon, k = 3)))
-    assert(rows(Graph.localClustering(canon, assumeCanonical = true)) ===
+    assert(rows(Graph.kCore(und, k = 3)) === rows(Graph.kCore(canon, k = 3)))
+    assert(rows(Graph.localClustering(und)) ===
       rows(Graph.localClustering(canon)))
-    assert(rows(Graph.triangleStats(canon, assumeCanonical = true)) ===
-      rows(Graph.triangleStats(canon)))
-    assert(rows(Graph.assortativity(canon, assumeCanonical = true)) ===
-      rows(Graph.assortativity(canon)))
-    assert(rows(Graph.commonNeighbors(canon, assumeCanonical = true)) ===
+    assert(rows(Graph.triangleStats(und)) === rows(Graph.triangleStats(canon)))
+    assert(rows(Graph.assortativity(und)) === rows(Graph.assortativity(canon)))
+    assert(rows(Graph.commonNeighbors(und)) ===
       rows(Graph.commonNeighbors(canon)))
-    assert(rows(Graph.ktruss(canon, k = 4, iterations = 2,
-        assumeCanonical = true)) ===
+    assert(rows(Graph.ktruss(und, k = 4, iterations = 2)) ===
       rows(Graph.ktruss(canon, k = 4, iterations = 2)))
-    assert(rows(Graph.walkCorpus(canon, steps = 2,
-        assumeCanonical = true)) ===
+    assert(rows(Graph.walkCorpus(und, steps = 2)) ===
       rows(Graph.walkCorpus(canon, steps = 2)))
-    // directed ops: both directions of the canonical set is a DISTINCT
-    // directed edge list — assumeDistinct must be identical
-    val both = canon.unionAll(canon.select(col("dst").as("src"),
-      col("src").as("dst")))
+    // directed ops: the raw list in both directions, some edges once
+    // more (uneven multiplicity changes betweenness path counts),
+    // against both directions of the canonical set
+    val dir = Graph.directed(raw.unionAll(raw.select(col("dst").as("src"),
+      col("src").as("dst"))).unionAll(raw.filter(col("src") % 4 === 0)))
+    val both = canon.directed
     val seeds = Seq(1L, 2L).toDF("id")
-    assert(rows(Graph.bfsDistances(both, seeds, maxHops = 3,
-        assumeDistinct = true)) ===
+    assert(rows(Graph.bfsDistances(dir, seeds, maxHops = 3)) ===
       rows(Graph.bfsDistances(both, seeds, maxHops = 3)))
-    assert(rows(Graph.harmonicCentrality(both, seeds, maxHops = 3,
-        assumeDistinct = true)) ===
+    assert(rows(Graph.harmonicCentrality(dir, seeds, maxHops = 3)) ===
       rows(Graph.harmonicCentrality(both, seeds, maxHops = 3)))
-    assert(rows(Graph.betweennessPivots(both, seeds, maxHops = 3,
-        assumeDistinct = true)) ===
+    assert(rows(Graph.betweennessPivots(dir, seeds, maxHops = 3)) ===
       rows(Graph.betweennessPivots(both, seeds, maxHops = 3)))
+  }
+
+  test("Graph.undirected / Graph.directed: exact rows on mixed input") {
+    val raw = Seq((2L, 1L), (1L, 2L), (1L, 2L), (3L, 3L), (4L, 2L),
+      (2L, 4L), (5L, 1L)).toDF("src", "dst")
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    val und = Graph.undirected(raw).df
+    assert(und.columns.toSeq === Seq("src", "dst"))
+    assert(pairs(und) === Seq((1L, 2L), (1L, 5L), (2L, 4L)))
+    val dir = Graph.directed(raw).df
+    assert(dir.columns.toSeq === Seq("src", "dst"))
+    assert(pairs(dir) ===
+      Seq((1L, 2L), (2L, 1L), (2L, 4L), (3L, 3L), (4L, 2L), (5L, 1L)))
+    assert(pairs(Graph.undirected(raw).directed.df) ===
+      Seq((1L, 2L), (1L, 5L), (2L, 1L), (2L, 4L), (4L, 2L), (5L, 1L)))
+  }
+
+  test("graph operators take typed edges; only Graph builds them") {
+    val df = Seq((1L, 2L)).toDF("src", "dst")
+    assertDoesNotCompile("Graph.triangleStats(df)")
+    assertDoesNotCompile("Graph.bfsDistances(df, df)")
+    assertDoesNotCompile("Graph.bfsDistances(Graph.undirected(df), df)")
+    assertDoesNotCompile("new graft.ops.Graph.Undirected(df)")
+    assertDoesNotCompile("new graft.ops.Graph.Directed(df)")
   }
 
   test("r11 batch plan pins: no cartesian, no data-wide window, co-keyed shapes") {
@@ -595,19 +624,20 @@ class InsightSpec extends SparkSpec {
     // 4-cycle: the two diagonals each share both their neighbours —
     // jaccard = 2/(2+2-2) = 1 exactly
     val cyc = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L)).toDF("src", "dst")
-    val r1 = Graph.commonNeighbors(cyc).collect()
+    val r1 = Graph.commonNeighbors(Graph.undirected(cyc)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(5))).toSet
     assert(r1 == Set((1L, 3L, 2L, 1000000L), (2L, 4L, 2L, 1000000L)))
     // triangle: every pair adjacent — nothing to predict
     val tri = Seq((1L, 2L), (2L, 3L), (1L, 3L)).toDF("src", "dst")
-    assert(Graph.commonNeighbors(tri).isEmpty)
+    assert(Graph.commonNeighbors(Graph.undirected(tri)).isEmpty)
     // star: all leaf pairs share exactly the hub; capping the hub's
     // degree out of the center set removes every wedge
     val star = (1 to 4).map(i => (0L, i.toLong)).toDF("src", "dst")
-    val r2 = Graph.commonNeighbors(star).collect()
+    val r2 = Graph.commonNeighbors(Graph.undirected(star)).collect()
     assert(r2.length == 6 && r2.forall(_.getLong(2) == 1L))
-    assert(Graph.commonNeighbors(star, maxCenterDeg = Some(3L)).isEmpty)
+    assert(Graph.commonNeighbors(Graph.undirected(star),
+      maxCenterDeg = Some(3L)).isEmpty)
   }
 
   test("bfsDistances: exact hop depths, hop cap, cycle safety, multi-seed min") {
@@ -616,7 +646,7 @@ class InsightSpec extends SparkSpec {
     val seeds = Seq(Tuple1(1L)).toDF("id")
     def run(e: org.apache.spark.sql.DataFrame,
             s: org.apache.spark.sql.DataFrame, h: Int) =
-      Graph.bfsDistances(e, s, maxHops = h).collect()
+      Graph.bfsDistances(Graph.directed(e), s, maxHops = h).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(run(chain, seeds, 3) == Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 3L))
     assert(run(chain, seeds, 0) == Map(1L -> 0L)) // seeds only

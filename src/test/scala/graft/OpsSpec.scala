@@ -4274,13 +4274,15 @@ class OpsSpec extends SparkSpec {
     val e = Seq((1L, 2L), (2L, 3L), (3L, 4L))
       .flatMap { case (a, b) => Seq((a, b), (b, a)) }.toDF("src", "dst")
     val seeds = Seq((1L, 1L), (4L, 4L)).toDF("id", "label")
-    val d = Graph.bfsDistancesLabeled(e, seeds, maxHops = 3).collect()
+    val d = Graph.bfsDistancesLabeled(Graph.directed(e), seeds, maxHops = 3)
+      .collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(d == Map(
       (1L, 1L) -> 0L, (1L, 2L) -> 1L, (1L, 3L) -> 2L, (1L, 4L) -> 3L,
       (4L, 4L) -> 0L, (4L, 3L) -> 1L, (4L, 2L) -> 2L, (4L, 1L) -> 3L))
     // harmonic: vertex 2 sees pivots at dist 1 and 2 -> 1.5e6 micro
-    val h = Graph.harmonicCentrality(e, Seq(1L, 4L).toDF("id"), maxHops = 3)
+    val h = Graph.harmonicCentrality(Graph.directed(e), Seq(1L, 4L).toDF("id"),
+        maxHops = 3)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
       .toMap
     assert(h(2L) == (2L, 1500000L) && h(3L) == (2L, 1500000L))
@@ -4293,7 +4295,7 @@ class OpsSpec extends SparkSpec {
     // path 1-2-3-4-5, pivot 1: δ(v) = #endpoints beyond v
     val path = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L))
       .flatMap { case (a, b) => Seq((a, b), (b, a)) }.toDF("src", "dst")
-    val bc = Graph.betweennessPivots(path, Seq(1L).toDF("id"),
+    val bc = Graph.betweennessPivots(Graph.directed(path), Seq(1L).toDF("id"),
         maxHops = 4)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(bc == Map(2L -> 3000000L, 3L -> 2000000L, 4L -> 1000000L))
@@ -4301,7 +4303,7 @@ class OpsSpec extends SparkSpec {
     // vertex carries HALF the dependency (σ division engages)
     val diamond = Seq((1L, 2L), (1L, 3L), (2L, 4L), (3L, 4L))
       .flatMap { case (a, b) => Seq((a, b), (b, a)) }.toDF("src", "dst")
-    val bd = Graph.betweennessPivots(diamond, Seq(1L).toDF("id"),
+    val bd = Graph.betweennessPivots(Graph.directed(diamond), Seq(1L).toDF("id"),
         maxHops = 2)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(bd == Map(2L -> 500000L, 3L -> 500000L))

@@ -69,7 +69,8 @@ class PairBuildSpec extends SparkSpec {
     val edges = (1 to 300).map { _ =>
       (rnd.nextInt(30).toLong, rnd.nextInt(30).toLong)
     }.toDF("src", "dst")
-    val fast = graft.ops.Graph.commonNeighbors(edges)
+    val fast = graft.ops.Graph.commonNeighbors(
+      graft.ops.Graph.undirected(edges))
     // the pre-r16 spelling, inlined as the reference
     val e = edges
       .select(least(col("src"), col("dst")).as("u"),

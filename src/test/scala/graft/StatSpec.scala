@@ -124,7 +124,7 @@ class StatSpec extends SparkSpec {
       (4L, 5L),                                                   // pendant
       (6L, 7L), (7L, 8L), (6L, 8L)                                // triangle
     ).toDF("src", "dst")
-    val out = Graph.ktruss(edges, k = 4, iterations = 2).collect()
+    val out = Graph.ktruss(Graph.undirected(edges), k = 4, iterations = 2).collect()
       .map(r => ((r.getAs[Long]("u"), r.getAs[Long]("v")),
         r.getAs[Long]("support"))).toMap
     assert(out.keySet == Set((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L),
@@ -165,7 +165,8 @@ class StatSpec extends SparkSpec {
       .toDF("src", "dst")
     val adj = Set((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L))
       .flatMap { case (a, b) => Seq((a, b), (b, a)) }
-    val out = Graph.walkCorpus(edges, steps = 3, walksPerNode = 2)
+    val out = Graph.walkCorpus(Graph.undirected(edges), steps = 3,
+        walksPerNode = 2)
       .collect().map(r => (r.getAs[Long]("start"),
         r.getAs[Long]("walk_id"), r.getAs[String]("path")))
     assert(out.length == 8) // 4 nodes x 2 walks
@@ -176,7 +177,8 @@ class StatSpec extends SparkSpec {
         assert(adj.contains((p(0), p(1))), s"non-edge hop in $path")
       }
     }
-    val again = Graph.walkCorpus(edges, steps = 3, walksPerNode = 2)
+    val again = Graph.walkCorpus(Graph.undirected(edges), steps = 3,
+        walksPerNode = 2)
       .collect().map(r => (r.getAs[Long]("start"),
         r.getAs[Long]("walk_id"), r.getAs[String]("path")))
     assert(out.toSet == again.toSet) // md5 steps, not RNG

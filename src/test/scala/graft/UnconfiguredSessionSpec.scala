@@ -75,7 +75,7 @@ class UnconfiguredSessionSpec extends SparkSpec {
       import s.implicits._
       val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L),
         (5L, 3L), (1L, 4L), (2L, 2L), (6L, 7L)).toDF("src", "dst")
-      Graph.triangleStats(edges)
+      Graph.triangleStats(Graph.undirected(edges))
     }
     val got = rows(run(bare))
     assert(got.size == 1)
