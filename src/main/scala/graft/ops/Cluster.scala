@@ -304,8 +304,7 @@ object Cluster {
     val pairsDf0 = spark.sparkContext
       .parallelize(sym, math.max(1, sym.size / (1 << 17)))
       .toDF("pa", "pb")
-    val pairsDf =
-      if (sym.size <= (1 << 20)) broadcast(pairsDf0) else pairsDf0
+    val pairsDf = BroadcastCap.hint(pairsDf0, sym.size)
     cells.select(col("id").as("ida"), col("v").as("va"), col("cid").as("pa"))
       .join(pairsDf, "pa")
       .join(cells.select(col("id").as("idb"), col("v").as("vb"),
@@ -439,8 +438,7 @@ object Cluster {
         val pairsDf0 = spark.sparkContext
           .parallelize(sym, math.max(1, sym.size / (1 << 17)))
           .toDF("pa", "pb")
-        val pairsDf =
-          if (sym.size <= (1 << 20)) broadcast(pairsDf0) else pairsDf0
+        val pairsDf = BroadcastCap.hint(pairsDf0, sym.size)
         newCells
           .select(col("id").as("aid"), col("v").as("va"), col("cid").as("pa"))
           .join(pairsDf, "pa")

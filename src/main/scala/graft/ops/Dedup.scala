@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, GraftShim}
-import org.apache.spark.sql.GraftShim.Layout.Hash
 import org.apache.spark.sql.GraftShim.materialize
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1212,128 +1211,30 @@ object Dedup {
   }
 
   /** Connected components over an undirected pair list (ida, idb) by
-    * iterative min-label propagation: each vertex repeatedly adopts the
-    * smallest label among itself and its neighbors until fixpoint.
-    * Iterations ~ component diameter (near-dup graphs are shallow);
-    * hard-capped to keep a pathological chain from looping forever. For
-    * web-scale graphs with huge components, swap the propagation step for
-    * the large-star/small-star rewrite — the driver loop shape is the
-    * same. Returns (id, component) with component = min id of the group.
-    */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    // materialized with a DECLARED hash(dst) layout (GraftShim, r14):
-    // each iteration's neighbor-min groupBy(dst) then plans with no
-    // exchange once the label table broadcasts (dup-graph vertex sets
-    // are candidate-sized); executor-local checkpoint blocks free via
-    // the ContextCleaner, replacing the old persist/unpersist pair
-    val edges = materialize(
-      pairs.select(col("ida").as("src"), col("idb").as("dst"))
-        .unionAll(pairs.select(col("idb").as("src"), col("ida").as("dst")))
-        .distinct(), Hash(Seq("dst"))).df
-    // Seed with one propagation step folded into the init — component =
-    // min(self, direct neighbors). Near-dup graphs are mostly isolated
-    // pairs/stars (diameter 1), which converge at iteration 1 this way
-    // instead of needing a propagate + a no-change confirmation round.
-    var labels = edges.groupBy(col("src").as("id"))
-      .agg(min(col("dst")).as("nmin"))
-      .select(col("id"), least(col("id"), col("nmin")).as("component"))
-      .persist()
-    // Convergence detection: labels only ever decrease (least of self and
-    // neighbor min), so for numeric ids the label sum is strictly
-    // monotone — "sum unchanged" == "no label changed", one cheap
-    // aggregate per iteration instead of a self-join diff. Non-numeric
-    // ids (string/uuid) fall back to the join-diff.
-    val numericLabels =
-      labels.schema("component").dataType.isInstanceOf[org.apache.spark.sql.types.NumericType]
-    def labelSum(l: DataFrame): Option[java.math.BigDecimal] =
-      if (!numericLabels) None
-      else Option(l.agg(sum(col("component").cast("decimal(38,0)"))).head().getDecimal(0))
-    var prevSum = labelSum(labels)
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
-      val neighborMin = edges
-        .join(labels.withColumnRenamed("id", "src"), "src")
-        .groupBy(col("dst").as("id"))
-        .agg(min("component").as("nmin"))
-      // materialize, not persist: each iteration references `labels`
-      // twice, and persist() caches execution but NOT the analyzer tree,
-      // so the logical plan would double per iteration — a diameter-d
-      // chain (d iterations) builds a 2^d-node plan and the driver dies
-      // in plan stringification long before the data is big. Truncating
-      // lineage keeps the plan O(1) per iteration.
-      val updated = materialize(labels.join(neighborMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("component"), coalesce(col("nmin"), col("component")))
-            .as("component"))).df
-      val changed =
-        if (numericLabels) {
-          val s = labelSum(updated)
-          val c = s != prevSum
-          prevSum = s
-          c
-        } else updated.as("u")
-          .join(labels.as("l"), col("u.id") === col("l.id"))
-          .filter(!(col("u.component") <=> col("l.component")))
-          .limit(1).count() > 0
-      labels.unpersist()
-      labels = updated
-      converged = !changed
-      iter += 1
-    }
-    if (!converged)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"connectedComponents stopped at maxIter=$maxIter before convergence; " +
-          "labels may be partially propagated — raise maxIter for deep chains")
-    // Materialize the (small) result and release the loop's cache: a
-    // plain return of the persisted frame would pin it for the session.
-    // Checkpoint blocks are reclaimed by the ContextCleaner once the
-    // result is unreferenced. (On a real cluster with executor churn,
-    // swap for a reliable checkpoint directory.)
-    val result = materialize(labels).df
-    labels.unpersist()
-    result
-  }
-
-  /** Connected components by alternating large-star/small-star
-    * contraction (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond") — the web-scale alternative to [[connectedComponents]]'s
-    * min-label propagation: propagation needs ~diameter iterations and
-    * keeps the full edge list live, while star contraction converges in
+    * alternating large-star/small-star contraction (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond"). It converges in
     * O(log n) rounds on any topology and SHRINKS the edge set every
     * round (each round is two groupBy-min aggregations + joins, all
-    * spillable).
+    * spillable), where min-label propagation needs one materializing
+    * round per unit of component diameter.
     *
     *   - large-star: every neighbor v > u re-attaches to
     *     m(u) = min(N(u) ∪ u)
     *   - small-star: every neighbor v ≤ u (and u itself) attaches to m(u)
     *
     * At fixpoint the edges form stars whose centers are the component
-    * minima. Same output contract as [[connectedComponents]]:
-    * (id, component = min id of the group), one row per vertex that
-    * appears in `pairs` (spec-pinned equal). Requires numeric ids (the
-    * star order is the id order).
+    * minima. Returns (id, component = min id of the group), one row per
+    * vertex that appears in `pairs`. Ids may be of any orderable type
+    * (integral or string): the rounds use only `least`, `greatest`,
+    * `min`, ordered comparison and `xxhash64`.
     *
     * Skew: a mega-component (boilerplate-heavy crawl) makes one star
-    * center carry millions of attach rows; the m-lookup join would land
-    * them all on ONE reducer. Centers with degree >= `hotKeyThreshold`
-    * can be split onto a broadcast-hash path: `m` holds exactly one row
-    * per center, so the hot slice of `m` has at most 2|E|/threshold
-    * rows — broadcastable by construction — and the hot attach rows
-    * join map-side without ever shuffling on the hot key. Cold keys
-    * keep the plain shuffled join, whose per-key input is < threshold
-    * by definition. The min-aggregation itself is always skew-immune
-    * (algebraic min => map-side partial aggregation).
-    *
-    * The split is OFF by default (`hotKeyThreshold = 0`): it adds two
-    * broadcast exchanges per star step, which benchmarked at ~2× the
-    * whole query below crawl scale, while AQE's skew-join handling
-    * (`spark.sql.adaptive.skewJoin`, on by default) already splits an
-    * oversized sort-merge partition at runtime. Set a threshold (e.g.
-    * 1 << 20) for adversarial graphs whose hot side exceeds what AQE
-    * can rebalance — output is spec-pinned identical either way. */
-  def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 50,
-                              hotKeyThreshold: Long = 0L): DataFrame = {
+    * center carry millions of attach rows in the m-lookup join; AQE's
+    * skew-join handling (`spark.sql.adaptive.skewJoin`, on by default)
+    * splits that oversized sort-merge partition at runtime. The
+    * min-aggregation itself is skew-immune (algebraic min => map-side
+    * partial aggregation). */
+  def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
     // Each round references its input several times, so the LOGICAL plan
     // would grow exponentially under plain persist() (persist caches
     // execution but not the analyzer tree — the classic iterative-
@@ -1356,38 +1257,20 @@ object Dedup {
     // tried and REVERTED — same-window A/B at sf0.1 read
     // dedup_incremental_components min 4.61 → 6.35 s (+38%) and
     // cluster_report/survivors_star flat-to-worse. Near-dup pair lists
-    // are tiny relative to the corpus, so scheduler job count dominates
-    // and ReuseExchange already serves every magg consumer from one
-    // shuffle; the declared-layout variant only pays once the pair
+    // are tiny relative to the corpus, so scheduler job count
+    // dominates; the declared-layout variant only pays once the pair
     // volume itself is shuffle-bound (crawl-scale mega-components) —
     // if that regime materializes, gate the shim on the pair count.
     def star(e: DataFrame, large: Boolean): DataFrame = {
       val nbrs = e.select(col("u"), col("v"))
         .unionAll(e.select(col("v").as("u"), col("u").as("v")))
-      // degree rides the SAME aggregate as the star minimum (count is
-      // partial-agg safe too) — the hot-key census costs no extra pass
-      val magg = nbrs.groupBy("u")
-        .agg(least(min(col("v")), first(col("u"))).as("m"),
-          count(lit(1)).as("__deg"))
-      val m = magg.select(col("u"), col("m"))
+      val m = nbrs.groupBy("u")
+        .agg(least(min(col("v")), first(col("u"))).as("m"))
       val attach =
         if (large) nbrs.filter(col("v") > col("u"))
         else nbrs.filter(col("v") <= col("u"))
           .unionAll(nbrs.select(col("u"), col("u").as("v")).distinct())
-      val joined =
-        if (hotKeyThreshold <= 0) attach.join(m, "u")
-        else {
-          // The hot-key list is bounded by 2|E|/threshold rows, so both
-          // it and the matching m slice broadcast. Exchange reuse serves
-          // every magg consumer from the one shuffle.
-          val hot = magg.filter(col("__deg") >= hotKeyThreshold).select("u")
-          val hotJoined = attach.join(broadcast(hot), Seq("u"), "left_semi")
-            .join(broadcast(m.join(hot, Seq("u"), "left_semi")), "u")
-          val coldJoined = attach.join(broadcast(hot), Seq("u"), "left_anti")
-            .join(m, "u")
-          hotJoined.unionAll(coldJoined)
-        }
-      joined
+      attach.join(m, "u")
         .select(least(col("v"), col("m")).as("u"),
           greatest(col("v"), col("m")).as("v"))
         .filter(col("u") =!= col("v"))
@@ -1445,13 +1328,11 @@ object Dedup {
     * @return updated (id, component) covering every id in `labels` or
     *         in a `newPairs` edge */
   def incrementalComponents(labels: DataFrame, newPairs: DataFrame,
-                            maxIter: Int = 50,
-                            hotKeyThreshold: Long = 0L): DataFrame = {
+                            maxIter: Int = 50): DataFrame = {
     val star = labels.filter(col("id") =!= col("component"))
       .select(col("id").as("ida"), col("component").as("idb"))
     val updated = connectedComponentsStar(
-      star.unionAll(newPairs.select(col("ida"), col("idb"))),
-      maxIter, hotKeyThreshold)
+      star.unionAll(newPairs.select(col("ida"), col("idb"))), maxIter)
     val untouched = labels
       .join(updated.select("id"), Seq("id"), "left_anti")
     // a brand-new id whose only batch pair is a SELF-pair is dropped by
@@ -1466,6 +1347,11 @@ object Dedup {
       .unionAll(selfOnly)
   }
 
+  /** Pair count up to which [[nearDupSurvivors]] collects the pairs and
+    * runs a driver union-find instead of [[connectedComponentsStar]]:
+    * 1M (long, long) pairs is ~16 MB on the driver. */
+  private[graft] val driverCCMaxPairs: Long = 1L << 20
+
   /** Near-duplicate SURVIVORS: the corpus minus all but the min-id member
     * of each transitive near-dup group (pairs from
     * [[ngramJaccardPairs]]). This is the operator a training pipeline
@@ -1474,16 +1360,14 @@ object Dedup {
     *
     * Adaptive connected components: the pair list is usually TINY
     * relative to the corpus (near-dup rate of a few percent), so when it
-    * fits comfortably on the driver (`driverCCMaxPairs`, long/int ids) a
-    * driver-side union-find replaces the iterative label-propagation
-    * loop — one collect instead of 4+ distributed jobs, and the victim
-    * set broadcasts into the anti-join. Above the threshold (or for
-    * non-integral ids) the distributed [[connectedComponents]] path runs
-    * — same result, spec-pinned. */
+    * fits comfortably on the driver ([[driverCCMaxPairs]], long/int ids)
+    * a driver-side union-find replaces the distributed loop — one
+    * collect instead of a job per star round, and the victim set
+    * broadcasts into the anti-join. Above the cap, or for non-integral
+    * ids such as string doc ids, [[connectedComponentsStar]] runs — same
+    * result, spec-pinned. */
   def nearDupSurvivors(df: DataFrame, textCol: String, idCol: String,
-                       threshold: Double, n: Int = 3,
-                       maxIter: Int = 20,
-                       driverCCMaxPairs: Long = 1L << 20): DataFrame = {
+                       threshold: Double, n: Int = 3): DataFrame = {
     // materialized once: the pair count rides the same job, and both
     // the size decision and either components path read the pairs
     val pm = materialize(ngramJaccardPairs(df, textCol, idCol, threshold, n))
@@ -1503,7 +1387,7 @@ object Dedup {
           .select(col(idCol).cast(df.schema(idCol).dataType)))
       } else
         // victim set may be corpus-sized here — let AQE pick the join
-        connectedComponents(pairs, maxIter)
+        connectedComponentsStar(pairs)
           .filter(col("id") =!= col("component"))
           .select(col("id").as(idCol))
     df.join(victims, Seq(idCol), "left_anti")

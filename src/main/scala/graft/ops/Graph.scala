@@ -6,8 +6,8 @@ import org.apache.spark.sql.GraftShim.materialize
 import org.apache.spark.sql.functions._
 import graft.functions.{SortedIntersectArr, SortedIntersectCount}
 
-/** Iterative graph analytics on edge DataFrames. Companion to the
-  * connected-components family in [[Dedup]]: where CC labels groups,
+/** Iterative graph analytics on edge DataFrames. Companion to
+  * [[Dedup.connectedComponentsStar]]: where CC labels groups,
   * PageRank ranks within them — the centrality a crawl-curation
   * pipeline uses to weight hosts/documents by link authority (the
   * original use) or parts by co-purchase affinity.
@@ -538,15 +538,13 @@ object Graph {
     *
     * Convergence: bounded by the graph's degeneracy ordering depth — a
     * handful of iterations on real (power-law) graphs; long induced
-    * paths are the slow case. `converge = true` adds one cheap count
-    * action per iteration and stops early once no value changed (use
-    * for production; keep the fixed count for cross-engine oracles).
+    * paths are the slow case. The fixed `iterations` count is also the
+    * cross-engine contract: an oracle replays exactly that many rounds.
     *
     * @param edges the undirected edge set, from [[undirected]] or
     *              [[coOccurrenceEdgesCanonical]]
     * @return (id, coreness INT) for every non-isolated vertex */
-  def coreness(edges: Undirected, iterations: Int = 8,
-               converge: Boolean = false): DataFrame = {
+  def coreness(edges: Undirected, iterations: Int = 8): DataFrame = {
     require(iterations >= 0, "iterations must be >= 0")
     // symmetric adjacency: each undirected edge contributes both rows
     val canon = edges.df.select(col("src").as("u"), col("dst").as("v"))
@@ -602,8 +600,7 @@ object Graph {
         },
         acc => acc("h").cast("int"))
     var it = 0
-    var done = iterations == 0
-    while (!done) {
+    while (it < iterations) {
       it += 1
       val next = adj
         .join(BroadcastCap.hint(
@@ -611,23 +608,12 @@ object Graph {
         .groupBy("id", "nc").agg(count(lit(1)).as("cnt"))
         .groupBy("id").agg(histAgg.as("hist"))
         .select(col("id"), hIndex(col("hist")).as("c"))
-      if (converge) {
-        // must materialize to compare; the checkpoint doubles as the
-        // lineage truncation
-        val nextCp = materialize(next).df
-        val changed = nextCp.join(c.withColumnRenamed("c", "c0"), "id")
-          .filter(col("c") =!= col("c0")).limit(1).count()
-        c = nextCp
-        done = changed == 0 || it >= iterations
-      } else {
-        // cadence 3, not [[pagerank]]'s 8: an iteration here chains a
-        // join + two aggregations + a window, and the optimizer's cost
-        // on the nested plan grows superlinearly — measured 4.8 s at
-        // 4 chained iterations but 17 s at 8 on the sf0.1 co-purchase
-        // graph, vs ~1.2 s/iteration with the cadence-3 truncation
-        c = if (it % 3 == 0) materialize(next).df else next
-        done = it >= iterations
-      }
+      // cadence 3, not [[pagerank]]'s 8: an iteration here chains a
+      // join + two aggregations + a window, and the optimizer's cost
+      // on the nested plan grows superlinearly — measured 4.8 s at
+      // 4 chained iterations but 17 s at 8 on the sf0.1 co-purchase
+      // graph, vs ~1.2 s/iteration with the cadence-3 truncation
+      c = if (it % 3 == 0) materialize(next).df else next
     }
     c.withColumnRenamed("c", "coreness")
   }

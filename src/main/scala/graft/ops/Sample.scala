@@ -226,9 +226,8 @@ object Sample {
     * paths return the map's exact stored doubles, so the selection
     * predicate is bit-identical across the crossover (spec-pinned). */
   private[graft] def rateLookup(df: DataFrame, stratumCol: String,
-                                rates: Map[String, Double],
-                                forceBroadcast: Boolean = false): Column =
-    if (!forceBroadcast && rates.size <= RateLiteralBudget)
+                                rates: Map[String, Double]): Column =
+    if (rates.size <= RateLiteralBudget)
       rates.foldLeft(lit(0.0)) { case (acc, (s, r)) =>
         when(col(stratumCol) === s, lit(r)).otherwise(acc)
       }

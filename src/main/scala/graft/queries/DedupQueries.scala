@@ -333,12 +333,12 @@ private[graft] object DedupQueries {
     Dedup.nearDupSurvivors(t(s, dir, "documents"), "text", "doc_id",
       threshold = 0.5).select("doc_id")
 
-  /** Same survivors contract, but the transitive grouping runs the
-    * large-star/small-star contraction — the O(log n)-round CC that
-    * replaces min-label propagation when components are deep or the
-    * pair list is too big for the driver union-find. Hash-matching the
-    * same recursive-CTE oracle as `dedup_survivors` pins the two CC
-    * engines equal on real data end-to-end. */
+  /** Same survivors contract, but the transitive grouping always runs
+    * [[Dedup.connectedComponentsStar]] — the path
+    * [[Dedup.nearDupSurvivors]] takes when the pair list is too big for
+    * its driver union-find or the ids are not integral. Hash-matching
+    * the same recursive-CTE oracle as `dedup_survivors` pins the union-
+    * find and star contraction equal on real data end-to-end. */
   private[graft] def qDedupSurvivorsStar(s: SparkSession, dir: String): DataFrame = {
     val d = t(s, dir, "documents")
     val pairs = Dedup.ngramJaccardPairs(d, "text", "doc_id", threshold = 0.5)

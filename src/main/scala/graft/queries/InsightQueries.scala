@@ -576,9 +576,9 @@ private[graft] object InsightQueries {
   }
 
   /** Coreness of every part in the co-purchase graph after a FIXED 8
-    * h-index iterations (not converged — the fixed count is the
-    * cross-engine contract; production uses `converge = true`). Exact
-    * integers, full vertex table. */
+    * h-index iterations (the fixed count is the cross-engine contract:
+    * the oracle replays the same 8 rounds). Exact integers, full vertex
+    * table. */
   private[graft] def qGraphCoreness(s: SparkSession, dir: String): DataFrame = {
     val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
     val edges = Graph.coOccurrenceEdgesCanonical(li, "l_orderkey", "l_partkey")

@@ -251,7 +251,7 @@ class InsightSpec extends SparkSpec {
       yield (u.toLong, v.toLong)).toSeq ++
       Seq((5L, 1L), (5L, 2L), (6L, 5L))
     val df = edges.toDF("src", "dst")
-    val c = Graph.coreness(Graph.undirected(df), iterations = 50, converge = true)
+    val c = Graph.coreness(Graph.undirected(df), iterations = 8)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(c == Map(1L -> 3, 2L -> 3, 3L -> 3, 4L -> 3, 5L -> 2, 6L -> 1))
     // k-core peel = induced subgraph on coreness >= k, for every k
@@ -267,7 +267,7 @@ class InsightSpec extends SparkSpec {
     // a pure path is all coreness 1 and needs several h-index rounds
     val path = (1L to 5L).sliding(2).map(s => (s.head, s.last)).toSeq
       .toDF("src", "dst")
-    val cp = Graph.coreness(Graph.undirected(path), iterations = 50, converge = true)
+    val cp = Graph.coreness(Graph.undirected(path), iterations = 8)
       .collect().map(r => r.getInt(1)).toSet
     assert(cp == Set(1))
   }

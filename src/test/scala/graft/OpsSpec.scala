@@ -292,7 +292,7 @@ class OpsSpec extends SparkSpec {
 
   test("connected components merge transitive chains; survivors keep min id") {
     val pairs = Seq((1L, 2L), (2L, 3L), (7L, 9L)).toDF("ida", "idb")
-    val comps = Dedup.connectedComponents(pairs)
+    val comps = Dedup.connectedComponentsStar(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(comps == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 9L -> 7L))
 
@@ -306,12 +306,15 @@ class OpsSpec extends SparkSpec {
     val surv = Dedup.nearDupSurvivors(d, "text", "doc_id", threshold = 0.3, n = 2)
       .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
     assert(surv == Seq(10L, 20L))
-    // distributed label-propagation path (driver union-find disabled)
-    // must produce the identical survivor set
-    val survDist = Dedup.nearDupSurvivors(d, "text", "doc_id", threshold = 0.3,
-        n = 2, driverCCMaxPairs = -1L)
+    // the dedup_survivors_star spelling (star CC, then the victim
+    // anti-join) must produce the identical survivor set
+    val victims = Dedup.connectedComponentsStar(
+        Dedup.ngramJaccardPairs(d, "text", "doc_id", threshold = 0.3, n = 2))
+      .filter(col("id") =!= col("component"))
+      .select(col("id").as("doc_id"))
+    val survStar = d.join(victims, Seq("doc_id"), "left_anti")
       .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-    assert(survDist == surv)
+    assert(survStar == surv)
   }
 
   test("survivors and top-k are invariant under input repartitioning") {
@@ -593,28 +596,42 @@ class OpsSpec extends SparkSpec {
     }
   }
 
-  test("star-contraction CC equals min-label propagation CC") {
-    def cc(pairs: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
-      Dedup.connectedComponents(pairs).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
+  test("star-contraction CC: hand labels; victims equal the driver union-find's") {
     def ccStar(pairs: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       Dedup.connectedComponentsStar(pairs).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-    // real near-dup pairs from the testdata
-    val real = Dedup.ngramJaccardPairs(docs, "text", "doc_id", 0.5)
-      .select(col("ida"), col("idb"))
-    assert(real.count() > 0)
-    assert(ccStar(real) == cc(real))
     // adversarial topologies: a deep chain (diameter 19), a star with a
-    // non-minimal hub, two separate components, and an isolated pair
+    // non-minimal hub, and two separate pairs
     val synth = ((1L to 19L).map(i => (i, i + 1)) ++
       Seq((50L, 40L), (50L, 41L), (50L, 42L), (60L, 61L), (62L, 63L)))
       .toDF("ida", "idb")
-    val got = ccStar(synth)
-    assert(got == cc(synth))
-    assert(got.filter(_._1 <= 20).forall(_._2 == 1L)) // chain collapses to min
-    val byId = got.toMap
-    assert(byId(50L) == 40L && byId(41L) == 40L)
+    val expected = (1L to 20L).map(_ -> 1L) ++
+      Seq(40L, 41L, 42L, 50L).map(_ -> 40L) ++
+      Seq(60L -> 60L, 61L -> 60L, 62L -> 62L, 63L -> 62L)
+    assert(ccStar(synth) == expected.toSet)
+    // real near-dup pairs from the testdata: one row per pair vertex,
+    // and the non-minimal members are exactly the ids nearDupSurvivors'
+    // driver union-find drops from the same corpus
+    val real = Dedup.ngramJaccardPairs(docs, "text", "doc_id", 0.5)
+      .select(col("ida"), col("idb"))
+    val got = ccStar(real)
+    val vertices = real.collect()
+      .flatMap(r => Seq(r.getLong(0), r.getLong(1))).toSet
+    assert(got.size == vertices.size && got.map(_._1) == vertices)
+    val victims = got.collect { case (id, c) if id != c => id }
+    assert(victims.nonEmpty)
+    val all = docs.select("doc_id").collect().map(_.getLong(0)).toSet
+    val surv = Dedup.nearDupSurvivors(docs, "text", "doc_id", threshold = 0.5)
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(all -- surv == victims)
+    // string ids (zero-padded, so string order is id order) take the
+    // star path and must keep the same survivors
+    val strDocs = docs.withColumn("doc_id",
+      lpad(col("doc_id").cast("string"), 8, "0"))
+    val survStr = Dedup.nearDupSurvivors(strDocs, "text", "doc_id",
+        threshold = 0.5)
+      .select("doc_id").collect().map(_.getString(0)).toSet
+    assert(survStr == surv.map(id => f"$id%08d"))
   }
 
   test("incrementalComponents == from-scratch CC; untouched labels pass through") {
@@ -640,23 +657,19 @@ class OpsSpec extends SparkSpec {
     assert(inc2 == inc + ((99L, 99L)))
   }
 
-  test("star CC hot-key broadcast split matches the plain path on a mega-star") {
+  test("star CC on a mega-star: hub, grafted chain and a separate component") {
     // Adversarial skew: one non-minimal hub (id 5000) wired to 4999 spokes
     // incl. the true minimum 1, a chain grafted onto a spoke, and an
-    // unrelated small component. threshold=100 forces every hub row onto
-    // the broadcast path; threshold=0 is the plain shuffled join.
+    // unrelated small component.
     val edges = ((1L to 4999L).map(i => (5000L, i)) ++
       (6000L to 6009L).map(i => (i, i + 1)) ++ Seq((2500L, 6000L)) ++
       Seq((9000L, 9001L)))
       .toDF("ida", "idb")
-    def run(thr: Long): Set[(Long, Long)] =
-      Dedup.connectedComponentsStar(edges, hotKeyThreshold = thr)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val hot = run(100L)
-    assert(hot == run(0L))
-    val byId = hot.toMap
+    val got = Dedup.connectedComponentsStar(edges)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val byId = got.toMap
     assert(byId(5000L) == 1L && byId(6010L) == 1L && byId(9001L) == 9000L)
-    assert(hot.count(_._2 == 1L) == 5011) // 4999 spokes + hub + 11-vertex chain
+    assert(got.count(_._2 == 1L) == 5011) // 4999 spokes + hub + 11-vertex chain
   }
 
   test("duplicatedSpanStats counts positioned spans, within- and cross-doc") {
@@ -2626,19 +2639,24 @@ class OpsSpec extends SparkSpec {
   }
 
   test("mixture rate lookup: broadcast path bit-equal to the literal chain") {
-    // 3x the literal budget: auto-select must take the broadcast path,
-    // and it must agree with the when-chain to the last bit (both
-    // return the map's exact stored doubles)
+    // 3x the literal budget: the lookup takes the broadcast path, and it
+    // must agree with the when-chain to the last bit (both return the
+    // map's exact stored doubles). The literal reference is three
+    // budget-sized slices of the map, each its own when-chain rating
+    // 0.0 off-slice, so their sum is each row's exact rate.
     val nStrata = Sample.RateLiteralBudget * 3
     val rates = (0 until nStrata)
       .map(i => s"s$i" -> (1.0 / (i + 3) + 1e-9 * i)).toMap
     val d = (0L until 2000L).map(i => (i, s"s${i % (nStrata + 5)}"))
       .toDF("doc_id", "lang") // +5 strata absent from the map -> 0.0
+    val slices = (0 until nStrata).grouped(Sample.RateLiteralBudget)
+      .map(is => is.map(i => s"s$i" -> rates(s"s$i")).toMap).toSeq
+    assert(slices.size == 3)
     val litPath = d.select(col("doc_id"),
-        Sample.rateLookup(d, "lang", rates).as("r"))
+        slices.map(Sample.rateLookup(d, "lang", _)).reduce(_ + _).as("r"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val bcast = d.select(col("doc_id"),
-        Sample.rateLookup(d, "lang", rates, forceBroadcast = true).as("r"))
+        Sample.rateLookup(d, "lang", rates).as("r"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(litPath == bcast,
       "rate columns must be bit-equal across the crossover")
