@@ -24,9 +24,20 @@ import org.apache.spark.sql.functions.broadcast
   *
   * It lives in code, not in session config: the harnesses build their
   * own sessions (Bench, Verify, the benchmark's runner), so a session
-  * setting would split one policy across them. */
+  * setting would split one policy across them.
+  *
+  * [[DriverRows]] is the companion cap of the driver paths: an
+  * operator whose measured edge or pair list has at most that many
+  * integral-id rows collects it once ([[Graph.collectPairs]]) and
+  * solves it on the driver instead of running a loop of Spark jobs —
+  * [[Graph.kCore]] (queue peel), [[Graph.scc]] (Tarjan) and
+  * [[Dedup.nearDupSurvivors]] (union-find). 1M rows is two 8 MB long
+  * arrays; above it the distributed loop runs, with the same result. */
 private[graft] object BroadcastCap {
   val Rows: Long = 4L << 20
+
+  /** Integral-id edge rows up to which the driver paths run. */
+  val DriverRows: Long = 1L << 20
 
   /** True when a side of `rows` rows broadcasts — for layout choices
     * made once per operator. */

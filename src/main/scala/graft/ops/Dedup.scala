@@ -1233,8 +1233,12 @@ object Dedup {
     * skew-join handling (`spark.sql.adaptive.skewJoin`, on by default)
     * splits that oversized sort-merge partition at runtime. The
     * min-aggregation itself is skew-immune (algebraic min => map-side
-    * partial aggregation). */
-  def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
+    * partial aggregation).
+    *
+    * Rounds are capped at [[StarMaxRounds]]: star contraction needs
+    * O(log n) of them, so the cap is reached only by a defect, and it
+    * throws rather than return partly contracted labels. */
+  def connectedComponentsStar(pairs: DataFrame): DataFrame = {
     // Each round references its input several times, so the LOGICAL plan
     // would grow exponentially under plain persist() (persist caches
     // execution but not the analyzer tree — the classic iterative-
@@ -1279,7 +1283,10 @@ object Dedup {
     var prev = checksum(edges)
     var iter = 0
     var converged = false
-    while (iter < maxIter && !converged) {
+    while (!converged) {
+      if (iter == StarMaxRounds)
+        throw new IllegalStateException(
+          s"connectedComponentsStar unconverged after $StarMaxRounds rounds")
       val next =
         materialize(star(star(edges, large = true), large = false)).df
       val c = checksum(next)
@@ -1288,16 +1295,14 @@ object Dedup {
       prev = c
       iter += 1
     }
-    if (!converged)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"connectedComponentsStar stopped at maxIter=$maxIter before fixpoint")
     // Stars: (center u) — every v maps to u; centers map to themselves.
     val members = edges.select(col("v").as("id"), col("u").as("component"))
     val centers = edges.select(col("u").as("id")).distinct()
       .select(col("id"), col("id").as("component"))
       // a center that is itself a member of a larger star would be
-      // double-listed; at fixpoint that cannot happen, but the anti-join
-      // keeps the output well-formed even at a forced early stop
+      // double-listed; at fixpoint that cannot happen, but convergence is
+      // read from a checksum and the anti-join keeps the output
+      // well-formed even if a collision stopped the loop early
       .join(members.select(col("id")), Seq("id"), "left_anti")
     materialize(members.unionAll(centers)).df
   }
@@ -1327,12 +1332,12 @@ object Dedup {
     *
     * @return updated (id, component) covering every id in `labels` or
     *         in a `newPairs` edge */
-  def incrementalComponents(labels: DataFrame, newPairs: DataFrame,
-                            maxIter: Int = 50): DataFrame = {
+  def incrementalComponents(labels: DataFrame,
+                            newPairs: DataFrame): DataFrame = {
     val star = labels.filter(col("id") =!= col("component"))
       .select(col("id").as("ida"), col("component").as("idb"))
     val updated = connectedComponentsStar(
-      star.unionAll(newPairs.select(col("ida"), col("idb"))), maxIter)
+      star.unionAll(newPairs.select(col("ida"), col("idb"))))
     val untouched = labels
       .join(updated.select("id"), Seq("id"), "left_anti")
     // a brand-new id whose only batch pair is a SELF-pair is dropped by
@@ -1347,10 +1352,9 @@ object Dedup {
       .unionAll(selfOnly)
   }
 
-  /** Pair count up to which [[nearDupSurvivors]] collects the pairs and
-    * runs a driver union-find instead of [[connectedComponentsStar]]:
-    * 1M (long, long) pairs is ~16 MB on the driver. */
-  private[graft] val driverCCMaxPairs: Long = 1L << 20
+  /** Round cap of [[connectedComponentsStar]] (a round is one
+    * large-star + small-star step). */
+  private val StarMaxRounds = 50
 
   /** Near-duplicate SURVIVORS: the corpus minus all but the min-id member
     * of each transitive near-dup group (pairs from
@@ -1360,7 +1364,8 @@ object Dedup {
     *
     * Adaptive connected components: the pair list is usually TINY
     * relative to the corpus (near-dup rate of a few percent), so when it
-    * fits comfortably on the driver ([[driverCCMaxPairs]], long/int ids)
+    * fits comfortably on the driver ([[BroadcastCap.DriverRows]],
+    * long/int ids)
     * a driver-side union-find replaces the distributed loop — one
     * collect instead of a job per star round, and the victim set
     * broadcasts into the anti-join. Above the cap, or for non-integral
@@ -1372,18 +1377,12 @@ object Dedup {
     // the size decision and either components path read the pairs
     val pm = materialize(ngramJaccardPairs(df, textCol, idCol, threshold, n))
     val (pairs, nPairs) = (pm.df, pm.rows)
-    val integralIds = df.schema(idCol).dataType match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType => true
-      case _ => false
-    }
     val victims: DataFrame =
-      if (integralIds && nPairs <= driverCCMaxPairs) {
+      if (Graph.integralIds(df, idCol) && nPairs <= BroadcastCap.DriverRows) {
         val spark = df.sparkSession
-        val edges = pairs.select(col("ida").cast("long"), col("idb").cast("long"))
-          .collect().map(r => (r.getLong(0), r.getLong(1)))
+        val (a, b) = Graph.collectPairs(pairs, "ida", "idb")
         import spark.implicits._
-        broadcast(driverVictims(edges).toSeq.toDF(idCol)
+        broadcast(driverVictims(a, b).toSeq.toDF(idCol)
           .select(col(idCol).cast(df.schema(idCol).dataType)))
       } else
         // victim set may be corpus-sized here — let AQE pick the join
@@ -1416,7 +1415,7 @@ object Dedup {
 
   /** Union-find over collected edges; returns every member that is NOT
     * the minimum id of its component. */
-  private def driverVictims(edges: Array[(Long, Long)]): Array[Long] = {
+  private def driverVictims(a: Array[Long], b: Array[Long]): Array[Long] = {
     val parent = scala.collection.mutable.LongMap.empty[Long]
     def find(x: Long): Long = {
       var r = x
@@ -1425,13 +1424,13 @@ object Dedup {
       while (parent.getOrElse(c, c) != c) { val nxt = parent(c); parent(c) = r; c = nxt }
       r
     }
-    edges.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
+    for (i <- a.indices) {
+      val (ra, rb) = (find(a(i)), find(b(i)))
       if (ra != rb) { // union by min root so the root IS the survivor
         if (ra < rb) parent(rb) = ra else parent(ra) = rb
       }
     }
-    val members = edges.iterator.flatMap(e => Iterator(e._1, e._2)).toArray.distinct
+    val members = Array.concat(a, b).distinct
     members.filter(m => find(m) != m)
   }
 

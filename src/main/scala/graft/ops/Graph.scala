@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, GraftShim}
 import org.apache.spark.sql.GraftShim.Layout.Hash
-import org.apache.spark.sql.GraftShim.materialize
+import org.apache.spark.sql.GraftShim.{Materialized, materialize}
 import org.apache.spark.sql.functions._
 import graft.functions.{SortedIntersectArr, SortedIntersectCount}
 
@@ -618,20 +618,98 @@ object Graph {
     c.withColumnRenamed("c", "coreness")
   }
 
-  /** The k-CORE SUBGRAPH by iterative peeling: drop vertices of degree
-    * < k, recompute degrees on the surviving edges, repeat to fixpoint.
-    * Each round is one degree aggregation + two semi-joins; rounds are
-    * bounded by the peel depth (a handful on real graphs). The result
-    * is the maximal subgraph of minimum degree ≥ k — exactly the
-    * vertices with [[coreness]] ≥ k (spec-pinned equivalence), but
-    * peeling reaches the FIXPOINT directly and also returns the
-    * surviving EDGES, which the coreness table alone doesn't.
+  /** The k-CORE SUBGRAPH: the maximal subgraph of minimum degree ≥ k,
+    * which is the subgraph induced on the vertices with [[coreness]] ≥ k
+    * (spec-pinned equivalence). Unlike the coreness table it reaches the
+    * fixpoint directly and also returns the surviving EDGES.
+    *
+    * The edge set is materialized once and its row count picks one of
+    * two paths with the same result (spec-pinned):
+    *   - up to [[BroadcastCap.DriverRows]] edges with integral ids,
+    *     [[kCoreDriver]] collects the edges once and peels them on the
+    *     driver with the O(V+E) queue peel of Batagelj & Zaversnik
+    *     ("An O(m) Algorithm for Cores Decomposition of Networks",
+    *     2003). A distributed round costs four Spark jobs, mostly
+    *     scheduling at this size: on the 113k-edge benchmark graph (8
+    *     rounds) the query runs 8 jobs instead of 38. It is the same
+    *     two-path contract as [[scc]] and [[Dedup.nearDupSurvivors]];
+    *   - above the cap, or for non-integral ids, [[kCorePeel]] runs the
+    *     distributed round loop. It has no round cap: a round that does
+    *     not end the loop removes at least one edge, so the loop ends
+    *     within |E| rounds.
     *
     * @param edges the undirected edge set, from [[undirected]] or
     *              [[coOccurrenceEdgesCanonical]]
     * @return surviving canonical edges (src < dst) */
-  def kCore(edges: Undirected, k: Int, maxIter: Int = 100): DataFrame = {
+  def kCore(edges: Undirected, k: Int): DataFrame = {
     require(k >= 1, "k must be >= 1")
+    val e = materialize(edges.df)
+    if (integralIds(e.df, "src") && e.rows <= BroadcastCap.DriverRows)
+      kCoreDriver(e, k)
+    else kCorePeel(e, k)
+  }
+
+  /** [[kCore]] on the driver: one collect of the materialized edges `e`
+    * (integral ids), the queue peel on a CSR adjacency, and the edges of
+    * `e` whose endpoints both survive — two semi-joins with the
+    * broadcast survivor set, since a k-core is the subgraph induced on
+    * its vertices. */
+  private[graft] def kCoreDriver(e: Materialized, k: Int): DataFrame = {
+    val (src, dst) = collectPairs(e.df, "src", "dst")
+    val m = src.length
+    // dense vertex numbers: positions in the sorted distinct ids
+    val ids = Array.concat(src, dst)
+    java.util.Arrays.sort(ids)
+    var n = 0
+    for (i <- ids.indices if n == 0 || ids(i) != ids(n - 1)) {
+      ids(n) = ids(i); n += 1
+    }
+    val u = src.map(java.util.Arrays.binarySearch(ids, 0, n, _))
+    val v = dst.map(java.util.Arrays.binarySearch(ids, 0, n, _))
+    // CSR adjacency: x's neighbours are nbr(off(x) until off(x + 1))
+    val deg = new Array[Int](n)
+    for (i <- 0 until m) { deg(u(i)) += 1; deg(v(i)) += 1 }
+    val off = new Array[Int](n + 1)
+    for (x <- 0 until n) off(x + 1) = off(x) + deg(x)
+    val fill = java.util.Arrays.copyOf(off, n)
+    val nbr = new Array[Int](2 * m)
+    for (i <- 0 until m) {
+      nbr(fill(u(i))) = v(i); fill(u(i)) += 1
+      nbr(fill(v(i))) = u(i); fill(v(i)) += 1
+    }
+    // a vertex is queued (removed) once, when its degree among the
+    // vertices not yet removed drops below k; each edge is read twice
+    val removed = new Array[Boolean](n)
+    val queue = new Array[Int](n)
+    var tail = 0
+    for (x <- 0 until n if deg(x) < k) {
+      removed(x) = true; queue(tail) = x; tail += 1
+    }
+    var head = 0
+    while (head < tail) {
+      val x = queue(head); head += 1
+      for (j <- off(x) until off(x + 1)) {
+        val y = nbr(j)
+        if (!removed(y)) {
+          deg(y) -= 1
+          if (deg(y) < k) { removed(y) = true; queue(tail) = y; tail += 1 }
+        }
+      }
+    }
+    val spark = e.df.sparkSession
+    import spark.implicits._
+    val core = broadcast((0 until n).filterNot(removed).map(ids).toDF("id"))
+    def side(c: String) =
+      core.select(col("id").cast(e.df.schema(c).dataType).as(c))
+    e.df.join(side("src"), Seq("src"), "left_semi")
+      .join(side("dst"), Seq("dst"), "left_semi")
+      .select("src", "dst")
+  }
+
+  /** [[kCore]] as a distributed loop over the materialized edges `e0`:
+    * each round is one degree aggregation + two semi-joins, and the
+    * rounds are the peel depth. */
+  private[graft] def kCorePeel(e0: Materialized, k: Int): DataFrame = {
     // every materialization folds its row count into the checkpoint
     // job (GraftShim) — the peel loop needs BOTH per round (broadcast
     // eligibility + termination), and the eager-checkpoint +
@@ -645,11 +723,9 @@ object Graph {
     // map-side combine, while the adjacency spelling doubles the
     // per-round checkpoint copy volume (2m vs m rows). Reverted —
     // kept the r14 canonical-edge loop below.
-    var e = materialize(edges.df)
+    var e = e0
     var done = e.rows == 0
-    var it = 0
-    while (!done && it < maxIter) {
-      it += 1
+    while (!done) {
       val deg = e.df.select(col("src").as("id"))
         .unionAll(e.df.select(col("dst").as("id")))
         .groupBy("id").agg(count(lit(1)).as("d"))
@@ -1595,9 +1671,10 @@ object Graph {
     * into the materialization job); label/frontier tables broadcast
     * below the [[BroadcastCap]] with the shuffled fallback beyond.
     *
-    * Below `driverMaxEdges` (integral ids) the edge list collects and
-    * an iterative Tarjan answers in ONE job — the
-    * [[Dedup.nearDupSurvivors]] `driverCCMaxPairs` contract: SCC
+    * Below `driverMaxEdges` (integral ids; default
+    * [[BroadcastCap.DriverRows]]) the edge list collects and an
+    * iterative Tarjan answers in ONE job — the [[kCore]] and
+    * [[Dedup.nearDupSurvivors]] driver-path contract: SCC
     * worklists are usually subgraphs (a filtered host graph, a
     * candidate cluster) tiny next to the corpus, and the distributed
     * loop's ~2 scheduler round-trips per materialization dominate at
@@ -1618,18 +1695,12 @@ object Graph {
     *         vertex incident to at least one non-loop edge */
   def scc(edges: DataFrame, maxRounds: Int = 50, trimIters: Int = 50,
           maxFixpointIters: Int = 100,
-          driverMaxEdges: Long = 1L << 20): DataFrame = {
-    val idType = edges.schema("src").dataType
-    val integralIds = idType match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType => true
-      case _ => false
-    }
+          driverMaxEdges: Long = BroadcastCap.DriverRows): DataFrame = {
     val e0 = materialize(edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")).distinct())
     var (e, ne) = (e0.df, e0.rows)
-    if (integralIds && ne <= driverMaxEdges)
-      return sccDriver(e, ne, idType)
+    if (integralIds(edges, "src") && ne <= driverMaxEdges)
+      return sccDriver(e)
     val parts = scala.collection.mutable.ListBuffer.empty[DataFrame]
     // every vertex the SWEEP never claims is a singleton SCC (trim
     // removes exactly the provably-cycle-free: no bookkeeping per pass,
@@ -1806,7 +1877,8 @@ object Graph {
     *         and every batch endpoint */
   def incrementalScc(labels: DataFrame, condEdges: DataFrame,
                      newEdges: DataFrame,
-                     driverMaxEdges: Long = 1L << 20): DataFrame = {
+                     driverMaxEdges: Long = BroadcastCap.DriverRows)
+      : DataFrame = {
     // joined on both batch endpoints + compose
     val lab = materialize(labels.select(col("id"), col("scc_id"))).df
     val mapped = newEdges.select(col("src"), col("dst"))
@@ -1844,14 +1916,13 @@ object Graph {
   /** Driver fast path: iterative Tarjan over the collected (deduped,
     * loop-free) edge list; scc_id normalized to the component minimum
     * to match the distributed contract. */
-  private def sccDriver(e: DataFrame, ne: Long,
-                        idType: org.apache.spark.sql.types.DataType)
-      : DataFrame = {
+  private def sccDriver(e: DataFrame): DataFrame = {
     val spark = e.sparkSession
-    val pairs = e.select(col("src").cast("long"), col("dst").cast("long"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val adj = pairs.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
-    val verts = pairs.flatMap(p => Seq(p._1, p._2)).distinct
+    val idType = e.schema("src").dataType
+    val (src, dst) = collectPairs(e, "src", "dst")
+    val adj = src.indices.groupBy(src(_))
+      .map { case (k, is) => k -> is.map(dst(_)).toArray }
+    val verts = Array.concat(src, dst).distinct
     val index = scala.collection.mutable.LongMap.empty[Int]
     val low = scala.collection.mutable.LongMap.empty[Int]
     val onStack = scala.collection.mutable.Set.empty[Long]
@@ -1905,5 +1976,33 @@ object Graph {
     comp.toSeq.toDF("id", "scc_id")
       .select(col("id").cast(idType).as("id"),
         col("scc_id").cast(idType).as("scc_id"))
+  }
+
+  /** True when column `c` of `df` holds integral ids (LONG or INT), the
+    * ids the driver paths collect as longs. */
+  private[graft] def integralIds(df: DataFrame, c: String): Boolean =
+    df.schema(c).dataType match {
+      case org.apache.spark.sql.types.LongType |
+           org.apache.spark.sql.types.IntegerType => true
+      case _ => false
+    }
+
+  /** The integral (a, b) rows of `df` collected as two long arrays
+    * (same order): one job over the plan's internal rows, one pair of
+    * primitive arrays per partition, no `Row` per edge. The driver paths
+    * call it on edge lists of at most [[BroadcastCap.DriverRows]] rows.
+    * Null ids throw. */
+  private[graft] def collectPairs(df: DataFrame, a: String, b: String)
+      : (Array[Long], Array[Long]) = {
+    val parts = df.select(col(a).cast("long"), col(b).cast("long"))
+      .queryExecution.toRdd.mapPartitions { rows =>
+        val (as, bs) = (Array.newBuilder[Long], Array.newBuilder[Long])
+        rows.foreach { r =>
+          require(!r.isNullAt(0) && !r.isNullAt(1), s"null id in ($a, $b)")
+          as += r.getLong(0); bs += r.getLong(1)
+        }
+        Iterator.single((as.result(), bs.result()))
+      }.collect()
+    (Array.concat(parts.map(_._1): _*), Array.concat(parts.map(_._2): _*))
   }
 }

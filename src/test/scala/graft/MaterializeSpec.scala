@@ -186,4 +186,8 @@ class MaterializeSpec extends SparkSpec {
       .contains("broadcast"))
     assert(hinted(BroadcastCap.hint(frame, BroadcastCap.Rows + 1)).isEmpty)
   }
+
+  test("the driver cap: 1M integral-id edge rows run the driver paths") {
+    assert(BroadcastCap.DriverRows == 1048576L)
+  }
 }
