@@ -80,42 +80,6 @@ object Cdc {
     out.toArray
   }
 
-  /** Canonical identifier of a chunking scheme: every parameter that
-    * moves a boundary or a hash. Two chunk tables are comparable iff
-    * their scheme strings are EQUAL — persist this next to any chunk
-    * store (see [[schemeTable]]/[[requireScheme]]) so a reader can
-    * refuse to mix stores chunked under different rules instead of
-    * silently finding zero sharing. normBits = 0 is the legacy
-    * single-mask gear scheme; > 0 is normalized FastCDC. */
-  def scheme(minSize: Int = 2048, avgSize: Int = 8192,
-             maxSize: Int = 65536, normBits: Int = 2): String = {
-    val family = if (normBits == 0) "gear64/v1" else "fastcdc64/v2"
-    s"$family min=$minSize avg=$avgSize max=$maxSize norm=$normBits md5"
-  }
-
-  /** One-row (cdc_scheme) table to write alongside a persisted chunk
-    * table / store — the versioning record that makes the scheme an
-    * explicit artifact instead of a scaladoc footnote. */
-  def schemeTable(spark: org.apache.spark.sql.SparkSession,
-                  minSize: Int = 2048, avgSize: Int = 8192,
-                  maxSize: Int = 65536, normBits: Int = 2): DataFrame = {
-    import spark.implicits._
-    Seq(scheme(minSize, avgSize, maxSize, normBits)).toDF("cdc_scheme")
-  }
-
-  /** Guard for readers of a persisted chunk store: fails fast when the
-    * store's recorded scheme differs from the one the caller is about
-    * to chunk with (mixed schemes don't error on their own — they just
-    * produce disjoint hashes and 1.0 dedup ratios). */
-  def requireScheme(persistedScheme: DataFrame, expected: String): Unit = {
-    val rows = persistedScheme.select(col("cdc_scheme")).collect()
-    require(rows.nonEmpty, "persisted scheme table is empty")
-    val found = rows.head.getString(0)
-    require(found == expected,
-      s"chunk store scheme mismatch: store='$found' caller='$expected' — " +
-        "re-chunk or pass the store's parameters (normBits et al.)")
-  }
-
   /** Chunk table for a binary column: one row per chunk,
     * (idCol, chunk_idx, offset, length, chunk_md5). Defaults give
     * ~8 KiB average chunks — tune avgSize to the media granularity
@@ -125,8 +89,7 @@ object Cdc {
     * comparable across runs that used the SAME value: a store chunked
     * under the pre-normalization single-mask scheme needs normBits = 0
     * to keep matching; new stores want the default (2, normalized
-    * FastCDC). Persist [[schemeTable]] beside any long-lived store and
-    * check it with [[requireScheme]] before probing. */
+    * FastCDC). */
   def chunks(media: DataFrame, idCol: String, payloadCol: String,
              minSize: Int = 2048, avgSize: Int = 8192,
              maxSize: Int = 65536, normBits: Int = 2): DataFrame = {
@@ -170,8 +133,8 @@ object Cdc {
   }
 
   /** The content-addressed STORE: each distinct chunk's bytes exactly
-    * once, keyed by hash (what actually sits on disk — unique_bytes of
-    * [[dedupStats]]). One hash aggregation; min_by makes the pick
+    * once, keyed by hash (what actually sits on disk). One hash
+    * aggregation; min_by makes the pick
     * deterministic (all candidates are byte-identical anyway, md5
     * collisions aside). */
   def store(chunkBytes: DataFrame): DataFrame =
@@ -205,22 +168,4 @@ object Cdc {
       .agg(collect_list(struct(col("chunk_idx"), col("chunk"))).as("cs"))
       .select(col(idCol), glue(col("cs")).as("payload"))
   }
-
-  /** Corpus-level dedup accounting from a [[chunks]] table: logical
-    * bytes (every reference), unique bytes (each distinct chunk once),
-    * and the dedup ratio a chunk store would achieve. One aggregation
-    * on the chunk hash. */
-  def dedupStats(chunkTable: DataFrame): DataFrame =
-    chunkTable.agg(
-        sum(col("length")).as("logical_bytes"),
-        count(lit(1)).as("n_chunks"))
-      .crossJoin(
-        chunkTable.groupBy("chunk_md5")
-          .agg(first(col("length")).as("l"))
-          .agg(sum(col("l")).as("unique_bytes"),
-            count(lit(1)).as("n_unique_chunks")))
-      .select(col("logical_bytes"), col("n_chunks"),
-        col("unique_bytes"), col("n_unique_chunks"),
-        (col("logical_bytes").cast("double") / col("unique_bytes"))
-          .as("dedup_ratio"))
 }

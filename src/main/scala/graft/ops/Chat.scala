@@ -266,27 +266,12 @@ object Chat {
     * @return (system, s_micro, rank, wins, losses, games) —
     *         rank by (s_micro desc, system) */
   def btRanking(pairs: DataFrame, winCol: String, loseCol: String,
-                iters: Int = 8): DataFrame =
-    btRankingFromCounts(
-      pairs.filter(col(winCol).isNotNull && col(loseCol).isNotNull)
-        .groupBy(col(winCol).cast("string").as("__w"),
-          col(loseCol).cast("string").as("__l"))
-        .agg(count(lit(1)).as("__n")),
-      iters)
-
-  /** [[btRanking]] over an ALREADY-AGGREGATED (winner, loser, n) count
-    * matrix — the entry point a STREAMING arena uses: the live side
-    * maintains the matrix incrementally (bounded systems² state) and
-    * the fit is a pure function of the snapshot, so stream and batch
-    * leaderboards agree exactly (StreamingSpec). Expects columns
-    * (__w, __l, __n) or any 3-column (winner, loser, count) frame. */
-  def btRankingFromCounts(countDf: DataFrame, iters: Int = 8): DataFrame = {
+                iters: Int = 8): DataFrame = {
     require(iters >= 1, "need iters >= 1")
-    val spark = countDf.sparkSession
-    val Seq(wc, lc, nc) = countDf.columns.toSeq.take(3)
-    val counts = countDf
-      .select(col(wc).cast("string"), col(lc).cast("string"),
-        col(nc).cast("long"))
+    val spark = pairs.sparkSession
+    val counts = pairs.filter(col(winCol).isNotNull && col(loseCol).isNotNull)
+      .groupBy(col(winCol).cast("string"), col(loseCol).cast("string"))
+      .agg(count(lit(1)))
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
     require(counts.nonEmpty, "btRanking needs at least one outcome")
     val systems = counts.flatMap(c => Seq(c._1, c._2)).distinct.sorted

@@ -135,8 +135,8 @@ object Classify {
   /** Persist a trained model as a one-row (weights, bias, buckets)
     * parquet table — the train-once/score-many artifact of the
     * classifier tier: CCNet-style pipelines fit the gate on one
-    * curated sample and score every later corpus drop (and the
-    * streaming twin) under the SAME weights; retraining would shift
+    * curated sample and score every later corpus drop under the SAME
+    * weights; retraining would shift
     * the score distribution and silently move the quality threshold.
     * Doubles round-trip parquet bit-exactly, so a reloaded model
     * scores bit-identically (oracle `quality_classifier_reload`). */

@@ -453,25 +453,4 @@ object Cluster {
           .as("cos"))
       .filter(col("cos") >= threshold)
   }
-
-  /** Cluster-balanced deterministic sample: up to `perCluster` rows per
-    * primary cell, chosen by the stable md5 order (Sample.bucket32) —
-    * the "diverse subset" complement of [[semdedupPairs]]: instead of
-    * removing redundancy pairwise, keep a bounded number of
-    * representatives per semantic region. WindowGroupLimit prunes
-    * map-side; no driver state. */
-  def balancedSample(df: DataFrame, vecCol: String, idCol: String,
-                     cents: Array[(Array[Double], Double)],
-                     perCluster: Int): DataFrame = {
-    require(perCluster > 0, "perCluster must be positive")
-    val cid = element_at(assignCol(df, vecCol, cents, 1), 1)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__cid"))
-      .orderBy(Sample.bucket32(col(idCol)), col(idCol))
-    df.withColumn("__cid", cid)
-      .withColumn("__rk", row_number().over(w))
-      .filter(col("__rk") <= perCluster)
-      .drop("__rk")
-      .withColumnRenamed("__cid", "cid")
-  }
 }

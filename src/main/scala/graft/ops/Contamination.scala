@@ -41,28 +41,6 @@ object Contamination {
     corpus.join(bad, Seq(idCol), "left_anti")
   }
 
-  /** STATELESS contamination gate — works on a streaming corpus (and on
-    * batch identically): the benchmark's distinct shingle hashes collect
-    * to a driver set (the benchmark side is small by definition — that is
-    * the asymmetry [[flag]] exploits) and broadcast; each arriving doc is
-    * scored by how many of its shingles hit the set. Per-row map, no
-    * join, no state store — the right shape for an ingest-time filter,
-    * where [[flag]]'s per-(corpus, bench)-pair attribution is overkill.
-    * Returns the input plus a `shared` hit count, filtered to
-    * `shared >= minShared`. */
-  def flagStream(docs: DataFrame, bench: DataFrame, textCol: String,
-                 n: Int = 8, minShared: Int = 1): DataFrame = {
-    val shingleHashes = Dedup.hashedShingles(col(textCol), n)
-    val benchSet: Set[Long] = bench
-      .select(explode(shingleHashes).as("h")).distinct()
-      .collect().map(_.getLong(0)).toSet
-    val bc = docs.sparkSession.sparkContext.broadcast(benchSet)
-    val hits = udf((sh: Seq[Long]) =>
-      if (sh == null) 0 else sh.count(bc.value.contains))
-    docs.withColumn("shared", hits(shingleHashes))
-      .filter(col("shared") >= minShared)
-  }
-
   /** CROSS-SOURCE overlap matrix: for every pair of sources, how many
     * distinct LINE fingerprints ([[TextFunctions.fingerprint]] per
     * non-blank line) they share, plus each side's distinct-line count —

@@ -579,7 +579,6 @@ object Dedup {
     * never pair. */
   def minhashSignatures(df: DataFrame, textCol: String, idCol: String,
                         numHashes: Int = 128, n: Int = 3,
-                        keep: Seq[String] = Nil,
                         oph: Boolean = false): DataFrame = {
     val sh = GraftShim.expression(hashedShingles(col(textCol), n))
     // One-permutation tier: ONE avalanche per shingle instead of
@@ -587,7 +586,7 @@ object Dedup {
     // documents (see MinHashOph's scaladoc for the recall trade).
     val sigCol = GraftShim.column(
       if (oph) MinHashOph(sh, numHashes) else MinHashSig(sh, numHashes))
-    df.select(col(idCol).as("id") +: sigCol.as("sig") +: keep.map(col): _*)
+    df.select(col(idCol).as("id"), sigCol.as("sig"))
       .filter(col("sig").isNotNull)
   }
 
@@ -814,41 +813,27 @@ object Dedup {
   /** ExactSubstr REMOVAL (the action half of [[duplicatedSpanStats]],
     * following Lee et al., "Deduplicating Training Data Makes Language
     * Models Better": cut duplicated spans out of the corpus, keeping
-    * one canonical occurrence): every token covered by an `n`-token
-    * span whose text occurs ≥ 2 times corpus-wide is DROPPED unless it
-    * belongs to the span's corpus-FIRST occurrence (first = smallest
-    * (id, pos) — the same deterministic keeper rule as
-    * [[Scrub.dedupLinesGlobal]]). Documents come back with their
-    * surviving tokens rejoined in order; a fully-duplicated document
-    * returns empty text.
-    *
-    * Shape at 100 TB: one positioned-span explode, one count + one
-    * min(struct) aggregation on uniform md5 keys (map-side partial
-    * collapses hot boilerplate), one join back, then a per-token
-    * coverage explode bounded by n × (duplicated spans only) — the
-    * clean corpus never fans out more than the dup mass itself. No
-    * driver state, no window over the corpus.
-    *
-    * Returns (id, text) with `text` rebuilt from canonical tokens. */
-  def removeDupSpans(df: DataFrame, textCol: String, idCol: String,
-                     n: Int = 20): DataFrame =
-    removeDupSpansMulti(df, textCol, idCol, Seq(n))
-
-  /** [[removeDupSpans]] over a LENGTH LADDER in one pass: a token is
-    * cut when any rung's duplicated span covers it at a non-keeper
-    * occurrence — so a single sweep removes both the 12-token repeat
-    * the n=20 form cannot see (no 20-span exists) and the long-form
-    * mass the n=10 rung under-trims, exactly the brackets
-    * [[duplicatedSpanStatsMulti]] detects. Each rung keeps its own
-    * corpus-first occurrence (min (id, pos) per (n, span) — the same
-    * deterministic keeper rule as the single-n form, which is the
-    * `ns = Seq(n)` special case).
+    * one canonical occurrence) over a LENGTH LADDER in one pass: a token
+    * is cut when any rung's `n`-token span whose text occurs ≥ 2 times
+    * corpus-wide covers it at a non-keeper occurrence — so a single
+    * sweep removes both the 12-token repeat the n=20 rung cannot see (no
+    * 20-span exists) and the long-form mass the n=10 rung under-trims,
+    * exactly the brackets [[duplicatedSpanStatsMulti]] detects. Each
+    * rung keeps its own corpus-first occurrence (min (id, pos) per
+    * (n, span) — the same deterministic keeper rule as
+    * [[Scrub.dedupLinesGlobal]]); `ns = Seq(n)` is the single-length
+    * form. Documents come back with their surviving tokens rejoined in
+    * order; a fully-duplicated document returns empty text.
     *
     * Shape at 100 TB: one tokenize feeds all rungs (the span structs
     * carry (n, pos, hash) through ONE explode ~|ns|× the corpus — not
-    * a pass per rung), aggregations key on uniform (n, md5) pairs,
-    * and the coverage explode stays bounded by n × dup-occurrences
-    * summed over rungs — still the dup mass, never the corpus. */
+    * a pass per rung), aggregations key on uniform (n, md5) pairs
+    * (map-side partials collapse hot boilerplate), and the coverage
+    * explode stays bounded by n × dup-occurrences summed over rungs —
+    * the dup mass, never the corpus. No driver state, no window over
+    * the corpus.
+    *
+    * Returns (id, text) with `text` rebuilt from canonical tokens. */
   def removeDupSpansMulti(df: DataFrame, textCol: String, idCol: String,
                           ns: Seq[Int] = Seq(10, 20, 40)): DataFrame = {
     require(ns.nonEmpty && ns.forall(_ >= 2) && ns.distinct.size == ns.size,

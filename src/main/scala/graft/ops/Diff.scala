@@ -262,11 +262,6 @@ object Diff {
           .otherwise("changed").as("status"))
   }
 
-  /** Summary counts of a [[snapshot]] diff — the promotion-gate
-    * metrics (alert when churn exceeds the expected crawl delta). */
-  def snapshotSummary(diff: DataFrame): DataFrame =
-    diff.groupBy("status").agg(count(lit(1)).as("n"))
-
   /** Population Stability Index between a reference snapshot `a` and a
     * candidate `b` for a numeric column, over `bins` equal-width
     * buckets on the DECLARED [lo, hi] (out-of-range values clamp into
@@ -536,17 +531,15 @@ object Diff {
     * ("a:b","c") vs ("a","b:c"), or the string "null" vs NULL — and
     * colliding groups would receive IDENTICAL noise, breaking the
     * per-group independence the release documents (r13 advice).
-    * Shared by the batch release, the streaming twin, and their
-    * equivalence spec so the key format cannot drift. */
+    * Shared by both releases so the key format cannot drift. */
   private[graft] def dpNoiseKey(salt: String, fields: Seq[Column]): Column =
     concat_ws(":", lit(salt) +: fields.map(f =>
       coalesce(md5(f.cast("string")), lit("NULL"))): _*)
 
   /** The inverse-CDF noise lookup as a SQL CASE over a hash-key
     * column: md5(keyCol)'s top 32 bits through the
-    * [[geometricThresholds]] integer table. Shared by the batch
-    * release above and the streaming twin. */
-  private[graft] def geometricNoiseSql(keyCol: String,
+    * [[geometricThresholds]] integer table. */
+  private def geometricNoiseSql(keyCol: String,
                                        eps: Double): String = {
     val (kMax, ts) = geometricThresholds(eps)
     thresholdNoiseSql(keyCol, kMax, ts)

@@ -112,15 +112,4 @@ object Expect {
     one.select(sliceCols.map(col) :+ explode(array(rows: _*)).as("r"): _*)
       .select(sliceCols.map(col) :+ col("r.*"): _*)
   }
-
-  /** Throw unless every check passes — the hard pipeline gate. */
-  def enforce(df: DataFrame, checks: Seq[Check]): Unit = {
-    val failed = run(df, checks).filter(!col("pass"))
-      .collect()
-      .map(r => s"${r.getAs[String]("check")}(${r.getAs[String]("column")}): " +
-        f"metric ${r.getAs[Double]("metric")}%.6f < ${r.getAs[Double]("threshold")}")
-    if (failed.nonEmpty)
-      throw new IllegalStateException(
-        s"Expectations failed:\n  ${failed.mkString("\n  ")}")
-  }
 }

@@ -72,28 +72,8 @@ object Importance {
       .select(col("__gid").as("id"), gramBucket(col("g"), buckets).as("b"))
       .groupBy("id", "b").agg(count(lit(1)).as("cnt"))
 
-  /** Per-bucket importance log-ratio table: (b, delta) with
-    * delta = round(ln p_b − ln q_b, 6) as DECIMAL(18,6), p from the
-    * add-1-smoothed target model and q from the raw model. Buckets are
-    * those observed in the RAW corpus (a document's buckets are a
-    * subset). `buckets` rows — broadcast-sized. */
-  def bucketLogRatios(raw: DataFrame, target: DataFrame, textCol: String,
-                      n: Int, buckets: Int): DataFrame = {
-    // The bucket tables are consumed several times (totals via head(),
-    // the ratio join, and a broadcast downstream) — without
-    // materialization each consumer re-runs the corpus explode. They
-    // are ≤ `buckets` rows, so checkpointing costs nothing and pins
-    // each corpus to exactly ONE scan.
-    def model(df: DataFrame) = materialize(
-      explodedGrams(df, textCol, n, Seq.empty)
-      .select(gramBucket(col("g"), buckets).as("b"))
-      .groupBy("b").agg(count(lit(1)).as("c"))).df
-    ratioTable(model(raw), model(target), buckets)
-  }
-
   /** delta = round(ln p − ln q, 6) from materialized (b, c) bucket
-    * tables — the shared tail of [[bucketLogRatios]] and the fused
-    * [[dsirWeights]] path. */
+    * tables — the tail of the fused [[dsirWeights]] path. */
   private def ratioTable(rc: DataFrame, tc: DataFrame,
                          buckets: Int): DataFrame = {
     val tTot = tc.agg(coalesce(sum("c"), lit(0L))).head.getLong(0)
@@ -326,43 +306,6 @@ object Importance {
     }
     KnBigramModel(uni.toMap, big.toMap, n1fwd.toMap, n1back.toMap,
       big.size.toLong, uni.size.toLong)
-  }
-
-  /** Persist a [[KnBigramModel]] as one long-format parquet — the
-    * train-once/score-many artifact, joining the tokenizer vocab, PCA
-    * model, PQ codebooks, centroids and classifier weights in the
-    * persisted-model family. Counts are integers, so reload is exact:
-    * load(save(m)) == m. Rows: (kind, key, n) with kinds uni/big/n1f/
-    * n1b plus one "tot" row packing (bigramTypes, vocab) — `key` holds
-    * the word (or "w1 w2" for bigrams), `n` the count. */
-  def saveKnBigram(spark: org.apache.spark.sql.SparkSession,
-                   model: KnBigramModel, path: String): Unit = {
-    import spark.implicits._
-    val rows =
-      model.uni.iterator.map { case (k, v) => ("uni", k, v) } ++
-      model.big.iterator.map { case (k, v) => ("big", k, v) } ++
-      model.n1fwd.iterator.map { case (k, v) => ("n1f", k, v.toLong) } ++
-      model.n1back.iterator.map { case (k, v) => ("n1b", k, v.toLong) } ++
-      Iterator(("tot", model.bigramTypes.toString, model.vocab))
-    rows.toSeq.toDF("kind", "key", "n").coalesce(1)
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** Load a persisted [[KnBigramModel]] (model-sized collect). */
-  def loadKnBigram(spark: org.apache.spark.sql.SparkSession,
-                   path: String): KnBigramModel = {
-    val rows = spark.read.parquet(path)
-      .select("kind", "key", "n").collect()
-    def kind(k: String) = rows.iterator.filter(_.getString(0) == k)
-    val tot = kind("tot").toSeq.headOption
-      .getOrElse(sys.error(s"no tot row in KN model at $path"))
-    KnBigramModel(
-      uni = kind("uni").map(r => r.getString(1) -> r.getLong(2)).toMap,
-      big = kind("big").map(r => r.getString(1) -> r.getLong(2)).toMap,
-      n1fwd = kind("n1f").map(r => r.getString(1) -> r.getLong(2).toInt).toMap,
-      n1back = kind("n1b").map(r => r.getString(1) -> r.getLong(2).toInt).toMap,
-      bigramTypes = tot.getString(1).toLong,
-      vocab = tot.getLong(2))
   }
 
   /** SHUFFLE-FREE per-row KN perplexity — the [[perplexityCol]] shape

@@ -251,9 +251,7 @@ object Insight {
     * counts — the sequential drift detector next to
     * [[rateChangepoint]]'s single best split: where did the event rate
     * leave its warm-up baseline, and by how much, bucket by bucket?
-    * (The streaming twin [[graft.streaming.StreamingOps.cusumStream]]
-    * keeps the same recursion as incremental state; this is the batch
-    * audit that backfills a whole history in one pass.)
+    * One pass over the whole history.
     *
     * Exact integer end to end. Buckets are `epoch_us div bucketUs`;
     * missing buckets inside a key's [min, max] span count as x = 0 (a

@@ -4,20 +4,14 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Storage-layout operators: how a 100 TB corpus should land on disk so
-  * that downstream reads prune and downstream joins don't shuffle.
+  * that downstream reads prune.
   *
   *   - **Hive-style partitioning** (`partitionBy`): one directory per
   *     partition value; equality/IN filters on the partition column
   *     prune entire directories at planning time (PartitionFilters in
   *     the scan — asserted in LayoutSpec). Right for low-cardinality
   *     routing columns (language, date, source). High-cardinality
-  *     columns produce a small-file explosion — bucket those instead.
-  *   - **Bucketing** (`bucketBy` + `sortBy`): rows hash into a fixed
-  *     number of per-partition buckets; two tables bucketed the same
-  *     way join WITHOUT an exchange on either side (the join key's
-  *     partitioning is baked into the layout). This is how repeated
-  *     joins against a big dimension amortize their shuffle to write
-  *     time. Requires a table catalog (`saveAsTable`).
+  *     columns produce a small-file explosion.
   */
 object Layout {
 
@@ -174,24 +168,6 @@ object Layout {
             org.apache.spark.sql.types.StringType))))
     spark.createDataFrame(rows, schema)
   }
-
-  /** Write `df` as a bucketed+sorted table registered as `table`.
-    * `numBuckets` should target HDFS-block-sized buckets at full scale
-    * (buckets = tableBytes / 256 MB, rounded to a power of two so
-    * bucket counts of co-joined tables divide each other). */
-  def writeBucketed(df: DataFrame, table: String, bucketCol: String,
-                    numBuckets: Int): Unit =
-    df.write.mode("overwrite")
-      .bucketBy(numBuckets, bucketCol)
-      .sortBy(bucketCol)
-      .format("parquet")
-      .saveAsTable(table)
-
-  /** Join two same-bucketed tables on their bucket column — plans with
-    * no shuffle on either side (asserted in LayoutSpec). */
-  def bucketedJoin(spark: SparkSession, leftTable: String,
-                   rightTable: String, key: String): DataFrame =
-    spark.table(leftTable).join(spark.table(rightTable), key)
 
   /** Compact a small-file parquet dataset to ~`targetFileMB` files.
     * Streaming sinks and fine-grained partitioned writes accumulate

@@ -274,11 +274,10 @@ object Link {
     * @return one row per observed agreement pattern: the agreement
     *         booleans, n_pairs, n_truth, per-field odds_<col>, total
     *         `odds` (truncated integer likelihood ratio) and the
-    *         three-way `decision` (match / review / nonmatch) */
+    *         three-way `decision` (match at odds >= 1000, review at
+    *         odds >= 1, else nonmatch) */
   def fellegiSunterTable(cands: DataFrame, agreeCols: Seq[String],
-                         truthCol: String,
-                         matchOdds: Long = 1000L,
-                         reviewOdds: Long = 1L): DataFrame = {
+                         truthCol: String): DataFrame = {
     require(agreeCols.nonEmpty, "need at least one agreement column")
     val truth = col(truthCol).cast("boolean")
     val statAggs = Seq(
@@ -314,8 +313,8 @@ object Link {
       .select(agreeCols.map(col) ++ Seq(col("n_pairs"), col("n_truth")) ++
         perField ++ Seq(col("odds"),
           when(col("odds").isNull, "overflow")
-            .when(col("odds") >= matchOdds, "match")
-            .when(col("odds") >= reviewOdds, "review")
+            .when(col("odds") >= 1000L, "match")
+            .when(col("odds") >= 1L, "review")
             .otherwise("nonmatch").as("decision")): _*)
   }
 
@@ -373,8 +372,7 @@ object Link {
     * units — the PERSISTABLE train-once artifact ([[saveFsModel]] /
     * [[loadFsModel]], integer-exact round trip) that turns linkage
     * into a stateless per-row score for rolling ingest
-    * ([[fsScoreRows]]; streaming gate in
-    * [[graft.streaming.StreamingOps.fsGateStream]]). */
+    * ([[fsScoreRows]]). */
   final case class FsModel(agreeCols: Seq[String], pMicro: Long,
                            mMicro: Seq[Long], uMicro: Seq[Long])
 
@@ -399,8 +397,8 @@ object Link {
     // below already reads NULL as its ELSE branch, so this keeps the
     // collected EM bits and the returned frame on one convention
     // instead of NPE-ing on Row.getBoolean (r13 advice; the
-    // supervised [[fellegiSunterScore]] path keeps NULL as its own
-    // pattern because its table needs no driver-side bit array)
+    // supervised [[fellegiSunterTable]] keeps NULL as its own pattern
+    // because it needs no driver-side bit array)
     val canon = cands.select(agreeCols.map(c =>
       coalesce(col(c).cast("boolean"), lit(false)).as(c)): _*)
     // collected for EM + returned enriched
@@ -510,26 +508,5 @@ object Link {
       pMicro = rows.head.getLong(2),
       mMicro = rows.map(_.getLong(3)).toSeq,
       uMicro = rows.map(_.getLong(4)).toSeq)
-  }
-
-  /** Per-pair Fellegi–Sunter scores: the pattern table above broadcast
-    * back onto the candidates — a map-side hash join on the 2^k
-    * agreement booleans, so scoring N pairs costs one pass whatever N
-    * is. Adds odds + decision to every candidate row. */
-  def fellegiSunterScore(cands: DataFrame, agreeCols: Seq[String],
-                         truthCol: String,
-                         matchOdds: Long = 1000L,
-                         reviewOdds: Long = 1L): DataFrame = {
-    // null-safe <=> keys: a NULL agreement (NULL field compared) is a
-    // real pattern group — a null-rejecting equi-join would silently
-    // DROP those candidates from the scored output (r13 review)
-    val table = fellegiSunterTable(cands, agreeCols, truthCol, matchOdds,
-      reviewOdds)
-      .select(agreeCols.map(c => col(c).as(s"__t_$c")) ++
-        Seq(col("odds"), col("decision")): _*)
-    val cond = agreeCols.map(c => col(c) <=> col(s"__t_$c"))
-      .reduce(_ && _)
-    cands.join(broadcast(table), cond)
-      .drop(agreeCols.map(c => s"__t_$c"): _*)
   }
 }

@@ -83,18 +83,6 @@ object Multimodal {
     media.as[MediaRecord].mapPartitions(_.map(fakeDecode))
   }
 
-  /** "Resize" stage (stub): recompute features at a target resolution —
-    * models the second CPU stage of an image pipeline. */
-  def resizeStub(decoded: Dataset[DecodedMedia], maxSide: Int): Dataset[DecodedMedia] = {
-    val spark = decoded.sparkSession
-    import spark.implicits._
-    decoded.map { d =>
-      val scale = math.min(1.0, maxSide.toDouble / math.max(d.width, d.height))
-      d.copy(width = math.max(1, (d.width * scale).toInt),
-        height = math.max(1, (d.height * scale).toInt))
-    }
-  }
-
   /** Frame sampling for "video" payloads: every `stride`-th byte window
     * becomes a frame row (media_id, frame_idx, frame_bytes). Pure
     * DataFrame explode — at scale this is the row-multiplying stage you

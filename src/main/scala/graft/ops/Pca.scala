@@ -100,114 +100,6 @@ object Pca {
     CovState(n, sum, tri)
   }
 
-  /** ORTHOGONAL PROCRUSTES alignment of two paired embedding spaces —
-    * the rotation (+reflection) W minimizing ‖XW − Y‖_F over
-    * orthogonal W: the standard bridge when an embedding model is
-    * retrained/upgraded and the old index must keep serving (align
-    * old→new on the overlap, re-use the index), or when two
-    * monolingual spaces are mapped via a seed dictionary (the
-    * Artetxe/MUSE recipe — the same margin-mining pipeline upstream).
-    *
-    * Distributed part: ONE shuffle-free treeAggregate of the d×d
-    * cross-gram M = XᵀY over the paired rows (the [[fitState]]
-    * pattern — d² doubles per partition, never row-cardinality).
-    * Driver part (d×d only): W = M(MᵀM)^(−1/2) via the
-    * [[jacobiEigen]] symmetric solver — algebraically UVᵀ of M's SVD,
-    * the closed-form optimum. Near-zero singular values (rank-
-    * deficient overlap) clamp to the pseudo-inverse.
-    *
-    * @param pairs rows carrying BOTH vectors (join the spaces first)
-    * @return d×d transform W, row-vector convention: aligned = x·W */
-  def procrustesAlign(pairs: DataFrame, xCol: String,
-                      yCol: String): Array[Array[Double]] = {
-    val first = pairs.select(col(xCol), col(yCol)).head()
-    val d = first.getSeq[Float](0).length
-    require(first.getSeq[Float](1).length == d,
-      "procrustes: spaces must share the dimension")
-    val data = pairs.select(col(xCol), col(yCol)).rdd
-      .map(r => (r.getSeq[Float](0), r.getSeq[Float](1)))
-    val m = data.treeAggregate(Array.ofDim[Double](d * d))(
-      seqOp = { case (acc, (x, y)) =>
-        var i = 0
-        while (i < d) {
-          val xi = x(i).toDouble
-          var j = 0
-          while (j < d) { acc(i * d + j) += xi * y(j).toDouble; j += 1 }
-          i += 1
-        }
-        acc
-      },
-      combOp = { (a, b) =>
-        var t = 0
-        while (t < d * d) { a(t) += b(t); t += 1 }
-        a
-      })
-    // S = MᵀM (symmetric PSD), eigen S = V diag(vals) Vᵀ
-    val s = Array.ofDim[Double](d, d)
-    var i = 0
-    while (i < d) {
-      var j = i
-      while (j < d) {
-        var acc = 0.0
-        var r = 0
-        while (r < d) { acc += m(r * d + i) * m(r * d + j); r += 1 }
-        s(i)(j) = acc; s(j)(i) = acc
-        j += 1
-      }
-      i += 1
-    }
-    val (vals, vecs) = jacobiEigen(s)
-    val maxVal = vals.map(math.abs).max
-    val floor = 1e-12 * math.max(1.0, maxVal)
-    // W = M · V · diag(vals^(-1/2)) · Vᵀ  (pseudo-inverse under floor)
-    val w = Array.ofDim[Double](d, d)
-    i = 0
-    while (i < d) {
-      var j = 0
-      while (j < d) {
-        var acc = 0.0
-        var k = 0
-        while (k < d) {
-          if (vals(k) > floor) {
-            val invSqrt = 1.0 / math.sqrt(vals(k))
-            // (M V)_{i,k} computed inline
-            var mv = 0.0
-            var r = 0
-            while (r < d) { mv += m(i * d + r) * vecs(r)(k); r += 1 }
-            acc += mv * invSqrt * vecs(j)(k)
-          }
-          k += 1
-        }
-        w(i)(j) = acc
-        j += 1
-      }
-      i += 1
-    }
-    w
-  }
-
-  /** aligned = x·W as a per-row expression over the broadcast-literal
-    * transform — the corpus is scanned once, never shuffled. */
-  def applyTransform(spark: org.apache.spark.sql.SparkSession,
-                     vec: Column, w: Array[Array[Double]]): Column = {
-    val bc = spark.sparkContext.broadcast(w)
-    val f = udf { (x: Seq[Float]) =>
-      val ww = bc.value
-      val d = ww.length
-      val out = new Array[Double](d)
-      var j = 0
-      while (j < d) {
-        var acc = 0.0
-        var i = 0
-        while (i < d) { acc += x(i).toDouble * ww(i)(j); i += 1 }
-        out(j) = acc
-        j += 1
-      }
-      out
-    }
-    f(vec)
-  }
-
   /** The eigen half of [[fit]]: mean/covariance from a [[CovState]],
     * then the driver-side Jacobi decomposition. Deterministic given
     * the state. */
@@ -334,87 +226,31 @@ object Pca {
     projectUdf(vec)
   }
 
-  /** Persist a fitted model as a parquet table — the train-once/
-    * project-many artifact (a production pipeline fits PCA on one
-    * corpus drop and projects every later drop through the SAME
-    * rotation; refitting would silently change the output space).
-    * Rows are (part, idx, vec, scalar): one "mean" row, k "component"
-    * rows carrying their eigenvalue in `scalar`, one "totalvar" row.
-    * Doubles round-trip parquet bit-exactly, so load === save. */
-  def save(spark: org.apache.spark.sql.SparkSession, model: PcaModel,
-           path: String): Unit = {
-    import spark.implicits._
-    val rows =
-      ("mean", 0, model.mean.toSeq, 0.0) +:
-      ("totalvar", 0, Seq.empty[Double], model.totalVar) +:
-      model.components.toSeq.zipWithIndex.map { case (c, i) =>
-        ("component", i, c.toSeq, model.eigvals(i))
-      }
-    rows.toDF("part", "idx", "vec", "scalar").coalesce(1)
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** Load a persisted [[PcaModel]] (model-sized collect: k+2 rows). */
-  def load(spark: org.apache.spark.sql.SparkSession,
-           path: String): PcaModel = {
-    val rows = spark.read.parquet(path)
-      .select("part", "idx", "vec", "scalar").collect()
-    val comps = rows.filter(_.getString(0) == "component").sortBy(_.getInt(1))
-    require(comps.nonEmpty, s"no component rows in PCA model at $path")
-    PcaModel(
-      mean = rows.find(_.getString(0) == "mean")
-        .getOrElse(sys.error(s"no mean row in PCA model at $path"))
-        .getSeq[Double](2).toArray,
-      components = comps.map(_.getSeq[Double](2).toArray),
-      eigvals = comps.map(_.getDouble(3)),
-      totalVar = rows.find(_.getString(0) == "totalvar")
-        .getOrElse(sys.error(s"no totalvar row in PCA model at $path"))
-        .getDouble(3))
-  }
-
-  /** Persist the SUFFICIENT STATISTICS beside (or instead of) the
-    * finished model: reload, [[CovState.merge]] a new corpus drop's
+  /** Persist the SUFFICIENT STATISTICS of a fit, not the finished
+    * model: reload, [[CovState.merge]] a new corpus drop's
     * [[fitState]], and [[finish]] — the rotation tracks a rolling
     * corpus without re-reading history. Two rows ("sum", "tri"), each
     * carrying `n` as a BIGINT (no double round-trip — exact past
     * 2^53 rows). Doubles round-trip parquet bit-exactly, so
-    * load(save(s)) === s. */
+    * loadState(saveState(s)) === s. */
   def saveState(spark: org.apache.spark.sql.SparkSession,
-                state: CovState, path: String): Unit =
-    saveState(spark, state, path, lastBatch = -1L)
-
-  /** [[saveState]] carrying a high-water batch id — the exactly-once
-    * marker for [[graft.streaming.StreamingOps.pcaStateSink]]: a
-    * foreachBatch retry re-delivers a batch id the state has already
-    * absorbed, and the sink must skip it or double-count. -1 = none. */
-  def saveState(spark: org.apache.spark.sql.SparkSession,
-                state: CovState, path: String, lastBatch: Long): Unit = {
+                state: CovState, path: String): Unit = {
     import spark.implicits._
-    Seq(("sum", state.sum.toSeq, state.n),
-        ("tri", state.tri.toSeq, state.n),
-        ("batch", Seq.empty[Double], lastBatch))
+    Seq(("sum", state.sum.toSeq, state.n), ("tri", state.tri.toSeq, state.n))
       .toDF("part", "vec", "n").coalesce(1)
       .write.mode("overwrite").parquet(path)
   }
 
   /** Load a persisted [[CovState]] (model-sized collect). */
   def loadState(spark: org.apache.spark.sql.SparkSession,
-                path: String): CovState = loadStateWithBatch(spark, path)._1
-
-  /** [[loadState]] plus the high-water batch id (-1 when the state was
-    * written without one, or by a pre-marker writer). */
-  def loadStateWithBatch(spark: org.apache.spark.sql.SparkSession,
-                         path: String): (CovState, Long) = {
+                path: String): CovState = {
     val rows = spark.read.parquet(path)
       .select("part", "vec", "n").collect()
     def part(name: String) = rows.find(_.getString(0) == name)
       .getOrElse(sys.error(s"no $name row in PCA state at $path"))
-    val state = CovState(part("sum").getLong(2),
+    CovState(part("sum").getLong(2),
       part("sum").getSeq[Double](1).toArray,
       part("tri").getSeq[Double](1).toArray)
-    val batch = rows.find(_.getString(0) == "batch")
-      .map(_.getLong(2)).getOrElse(-1L)
-    (state, batch)
   }
 
   /** Reconstruct from a projection: mean + z · comp (the rank-k

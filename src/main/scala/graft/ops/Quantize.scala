@@ -28,10 +28,6 @@ object Quantize {
         .otherwise(round(x.cast("double") / scale))
         .cast("tinyint"))
 
-  /** Reconstruction: codes * scale. */
-  def dequantize(codes: Column, scale: Column): Column =
-    transform(codes, q => q.cast("double") * scale)
-
   /** Quantize an embedding table: returns idCol, `scale`, `codes`
     * (array<tinyint>) and the L2 reconstruction `err`. */
   def int8Table(df: DataFrame, vecCol: String, idCol: String): DataFrame = {

@@ -85,34 +85,6 @@ object Report {
       .agg(grouping_id().cast("long").as("gid"), aggs: _*)
   }
 
-  /** Row-level EMULATION of Catalyst's rollup Expand: each input row
-    * explodes into |dims|+1 copies — level L nulls the TRAILING L
-    * dimensions and tags `gid = 2^L − 1` (bit-identical to
-    * `grouping_id()`: first dim = most significant bit, bit set =
-    * rolled up). Feeding the result to ONE `groupBy(dims :+ gid)` is
-    * semantically identical to [[rollupReport]] (spec-pinned) — the
-    * batch path should keep using the native rollup (Catalyst plans
-    * the Expand internally, no materialized copies before the partial
-    * aggregate), but this form is the streaming-legal spelling:
-    * Structured Streaming rejects rollup/cube/grouping-sets outright,
-    * while explode + a single watermarked aggregation it accepts (see
-    * [[graft.streaming.StreamingOps.rollupStream]]). */
-  private[graft] def rollupExpand(df: DataFrame,
-                                  dims: Seq[String]): DataFrame = {
-    require(dims.nonEmpty, "rollupExpand needs at least one dimension")
-    val n = dims.length
-    val levels = (0 to n).map { l =>
-      struct((dims.take(n - l).map(col) ++
-        dims.drop(n - l).map(d =>
-          lit(null).cast(df.schema(d).dataType).as(d))) :+
-        lit((1L << l) - 1).as("gid"): _*)
-    }
-    val others = df.columns.filterNot(dims.contains).toSeq
-    df.withColumn("__lvl", explode(array(levels: _*)))
-      .select(others.map(col) ++
-        dims.map(d => col(s"__lvl.$d").as(d)) :+ col("__lvl.gid").as("gid"): _*)
-  }
-
   /** True iff the serialized theta sketch left exact mode (theta < 1 —
     * it started sampling). Reads the DataSketches binary Spark's
     * theta_union_agg emits; driver-free, one tiny call per card row. */

@@ -23,12 +23,6 @@ object Sample {
     pmod(conv(substring(md5(id.cast("string")), 1, 8), 16, 10).cast("long"),
       lit(100))
 
-  /** Keep ~pct% of rows, deterministically by id. */
-  def deterministic(df: DataFrame, idCol: String, pct: Int): DataFrame = {
-    require(pct >= 0 && pct <= 100, "pct in [0, 100]")
-    df.filter(bucket(col(idCol)) < pct)
-  }
-
   /** Deterministic train/validation/test split: every row gets exactly
     * one split label by its fine-grained md5(seed:id) bucket against
     * the cumulative fraction thresholds — stable across runs, engines,

@@ -745,10 +745,9 @@ object Similarity {
     * train-once artifact): coarse centroids + PQ codebooks + the
     * m-byte code table partitioned by cell id (probes prune at the
     * directory level; float vectors appear nowhere), PLUS the
-    * train-time reconstruction error in `recon/` — the reference a
-    * rolling ingest ([[graft.streaming.StreamingOps.ivfPqUpsertSink]])
-    * compares each batch against to decide when the frozen codebooks
-    * have drifted off the live distribution and need re-training. */
+    * train-time reconstruction error in `recon/` — the reference an
+    * appended batch's error is read against to tell when the frozen
+    * codebooks have drifted and need re-training. */
   def ivfPqIndexSave(corpus: DataFrame, vecCol: String, idCol: String,
                      path: String, ncentroids: Int = 16, m: Int = 16,
                      kCent: Int = 256, lloydIters: Int = 0): Unit = {
@@ -768,17 +767,6 @@ object Similarity {
     Seq((n, ppm)).toDF("n", "recon_ppm").coalesce(1)
       .write.mode("overwrite").parquet(s"$path/recon")
   }
-
-  /** Load a persisted IVF-PQ index (quantizers are vocab-sized
-    * collects; doubles round-trip parquet bit-exactly, so reloaded
-    * encodes are IDENTICAL to train-time encodes). The codes table is
-    * the BASE index only — a live ingest's committed batches are read
-    * by [[graft.streaming.StreamingOps.ivfPqStreamCodes]]. */
-  def ivfPqIndexLoad(spark: org.apache.spark.sql.SparkSession,
-                     path: String): IvfPq =
-    IvfPq(spark.read.parquet(s"$path/codes").select("cid", "id", "codes"),
-      ivfCentroidsLoad(spark, path),
-      Quantize.loadPqCodebooks(spark, s"$path/codebooks"))
 
   /** INCREMENTAL IVF-PQ ingest — the [[ivfIndexUpsert]] shape on the
     * code tier: encode ONLY the new batch under the persisted frozen

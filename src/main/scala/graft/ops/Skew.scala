@@ -60,20 +60,4 @@ object Skew {
       .agg(count_distinct(col(valueCol)).as("__part"))
       .groupBy(keys.map(col): _*)
       .agg(sum("__part").as(s"${valueCol}_distinct"))
-
-  /** Broadcast-salted join for a skewed fact side: replicates each build-
-    * side row `salt` times (one per salt value) and salts the probe side
-    * deterministically, so one hot probe key spreads over `salt` tasks.
-    * Only sensible when the build side is small enough to replicate;
-    * for two large skewed sides prefer AQE's skew-join handling. */
-  def saltedBroadcastJoin(probe: DataFrame, build: DataFrame,
-                          key: String, salt: Int): DataFrame = {
-    // position-derived salt: identical probe rows of a hot key must still
-    // spread across tasks (see saltedAgg doc)
-    val saltedProbe = probe.withColumn("__salt",
-      pmod(monotonically_increasing_id(), lit(salt)))
-    val saltedBuild = build.withColumn("__salt",
-      explode(array((0 until salt).map(lit): _*)))
-    saltedProbe.join(broadcast(saltedBuild), Seq(key, "__salt")).drop("__salt")
-  }
 }

@@ -231,15 +231,6 @@ object TextFunctions {
   private def expr_intdiv(a: Column, b: Column): Column =
     call_function("div", a, b)
 
-  /** 64-bit rolling polynomial hash (base-31 Horner over UTF-8 code
-    * points) — the classic shingling hash, as a pure fold expression.
-    * Java-long overflow semantics (wraps), deterministic everywhere. */
-  def rollingHash(text: Column): Column =
-    aggregate(
-      transform(split(text, ""), ch => ascii(ch).cast("long")),
-      lit(0L),
-      (acc, c) => acc * lit(31L) + c)
-
   /** MTLD lexical diversity, forward pass (see
     * [[graft.functions.MtldRails]] for the walk semantics): per doc,
     * the factor state plus the derived ppm rails — remainder-TTR,
@@ -265,17 +256,6 @@ object TextFunctions {
         when(expr("factors * 1000000 + partial_ppm") > 0,
           expr("n_tokens * 1000000 * 1000000 " +
             "div (factors * 1000000 + partial_ppm)")))
-  }
-
-  /** DEFLATE compression ratio (compressed bytes / raw UTF-8 bytes) —
-    * the crawl-curation quality signal: template/boilerplate spam
-    * compresses far below prose, binary-ish garbage sits near (or
-    * above) 1. DEFLATE is not expressible in relational primitives,
-    * which is also why this signal has no SQL oracle and is
-    * contract-checked instead. Null/empty text yields null. */
-  def compressionRatio(text: Column): Column = {
-    val raw = octet_length(text)
-    when(raw > 0, deflateSize(text).cast("double") / raw)
   }
 
   /** DEFLATE-compressed byte count of the UTF-8 text: the codegen

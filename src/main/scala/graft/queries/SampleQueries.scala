@@ -955,21 +955,17 @@ private[graft] object SampleQueries {
   // =====================================================================
 
 
-  /** Windowed PIVOT, batch twin of StreamingOps.pivotStream: daily
-    * cross-tab of event counts/values by event type per user — the
-    * one-pass cell expressions (PivotOps.cellColumns) that the streaming
-    * pivot hosts, under a time window
-    * (the backfill path of the kappa setup; the streaming path is
-    * spec-checked against the batch pivot in StreamingSpec). */
+  /** Windowed PIVOT: [[graft.streaming.StreamingOps.pivotStream]] on the
+    * batch events table — a daily cross-tab of event counts/values by
+    * event type per user (the optimizer drops the watermark on batch
+    * input; StreamingSpec pins the micro-batched run to the batch
+    * pivot). */
   private[graft] def qEventsPivotWindow(s: SparkSession, dir: String): DataFrame = {
     val spec = graft.pivot.PivotSpec.parseOrThrow("user_id",
       "event_type=click,view,purchase", "n:count(*), v:sum(value)")
-    val ev = readEvents(s, dir)
-    val cells = PivotOps.cellColumns(spec, ev.schema)
-    val out = ev
-      .groupBy(window(col("ts"), "1 day").as("w"), col("user_id"))
-      .agg(cells.head, cells.tail: _*)
-      .withColumn("day", col("w.start")).drop("w")
+    val out = graft.streaming.StreamingOps
+      .pivotStream(readEvents(s, dir), spec, "ts", "1 day")
+      .withColumnRenamed("window_start", "day")
     Seq("click_v", "view_v", "purchase_v").foldLeft(out)((d, n) =>
       d.withColumn(n, col(n).cast("float")))
   }

@@ -282,10 +282,8 @@ private[graft] object SimilarityQueries {
     * is deliberately NOT oracle-checked here: at sf0.001 the base
     * slice is 300 vectors against kCent=256 codebooks, which memorize
     * the training slice, so even a same-distribution held-out batch
-    * legitimately reconstructs >25% worse — fire/no-fire semantics are
-    * spec-pinned in the streaming twin where the distributions are
-    * controlled. Counts replay in SQL; the parity booleans ride the
-    * engine (the check is the plumbing). */
+    * legitimately reconstructs >25% worse. Counts replay in SQL; the
+    * parity booleans ride the engine (the check is the plumbing). */
   private[graft] def qSimIvfPqIncremental(s: SparkSession,
                                           dir: String): DataFrame = {
     // r16 (guide §2.6 "overlap independent jobs"): this lifecycle query

@@ -461,12 +461,8 @@ private[graft] object TextQueries {
   private[graft] def qCorpusHeaps(s: SparkSession, dir: String): DataFrame =
     heapsCore(t(s, dir, "documents"))
 
-  /** Spec entry point: the same fit over an arbitrary (doc_id, text)
-    * frame (OpsSpec drives hand-built growth shapes through it). */
-  private[graft] def heapsForSpec(docs: DataFrame): DataFrame =
-    heapsCore(docs)
-
-  private def heapsCore(docs: DataFrame): DataFrame = {
+  /** The fit over any (doc_id, text) frame. */
+  private[graft] def heapsCore(docs: DataFrame): DataFrame = {
     val g = Report.vocabGrowth(
       docs.select(col("doc_id"),
         TextFunctions.tokens(col("text")).as("toks")),

@@ -189,31 +189,6 @@ class InsightSpec extends SparkSpec {
       r.getLong(2) == 666666L)
   }
 
-  test("compressionRatio orders repetitive < prose < random; null/empty guarded") {
-    import graft.ops.TextFunctions
-    val rep = "spam spam spam spam " * 50
-    val prose = "The quick brown fox jumps over the lazy dog and then " +
-      "wanders off toward the river where several other animals have " +
-      "gathered to discuss the unusually warm weather this autumn season."
-    // printable-range noise (~6.5 bits/char) — hex noise (4 bits/char)
-    // would compress BELOW prose and invert the ordering
-    val rnd = (1 to 60).flatMap(i =>
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$i".getBytes).map(b => (33 + ((b & 0xff) % 94)).toChar))
-      .mkString
-    val df = Seq((1L, rep), (2L, prose), (3L, rnd), (4L, ""),
-      (5L, null.asInstanceOf[String])).toDF("id", "text")
-    val out = df.select(col("id"),
-        TextFunctions.compressionRatio(col("text")).as("r"))
-      .collect().map(r => r.getLong(0) ->
-        (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
-    assert(out(4L).isEmpty && out(5L).isEmpty)
-    val (r1, r2, r3) = (out(1L).get, out(2L).get, out(3L).get)
-    assert(r1 < r2 && r2 < r3, s"rep=$r1 prose=$r2 rnd=$r3")
-    assert(r1 < 0.1, s"heavy repetition must compress hard, got $r1")
-    assert(r3 > 0.4, s"hex noise must resist compression, got $r3")
-  }
-
   test("coOccurrenceEdges: within-group pairs only, symmetric, no self-loops") {
     val df = Seq((1L, "a"), (1L, "b"), (1L, "c"), (2L, "c"), (2L, "d"),
       (3L, "e")).toDF("g", "item")

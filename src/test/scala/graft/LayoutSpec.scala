@@ -184,34 +184,6 @@ class LayoutSpec extends SparkSpec {
     assert(spark.read.parquet(hPath).count() == n)
   }
 
-  test("same-bucketing join plans with no shuffle on either side") {
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-      .select("doc_id", "lang", "n_chars")
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-      .select(col("vec_id").as("doc_id"), col("label"))
-    Layout.writeBucketed(docs, "b_docs", "doc_id", 8)
-    Layout.writeBucketed(emb, "b_emb", "doc_id", 8)
-    // disable auto-broadcast: at real scale neither side broadcasts —
-    // the point of bucketing is the SMJ with no shuffle
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val joined = Layout.bucketedJoin(spark, "b_docs", "b_emb", "doc_id")
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"),
-        s"bucketed join must not shuffle:\n$plan")
-      assert(plan.contains("Bucketed: true"),
-        s"scan must use the bucketed layout:\n$plan")
-      // and it returns the same rows as the plain join
-      val plain = docs.join(emb, "doc_id").count()
-      assert(joined.count() == plain)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.sql("DROP TABLE IF EXISTS b_docs")
-      spark.sql("DROP TABLE IF EXISTS b_emb")
-    }
-  }
-
   test("manifest: footer stats match the data; pruning replay touches only qualifying files") {
     import org.apache.spark.sql.functions._
     val path = s"${java.nio.file.Files.createTempDirectory("graft_manifest")}/docs"

@@ -25,14 +25,6 @@ class OpsSpec extends SparkSpec {
     assert(sh(2) == Seq())
   }
 
-  test("rollingHash matches a JVM reference implementation") {
-    val texts = Seq("hello world", "a", "", "the quick brown fox")
-    def ref(s: String): Long = s.foldLeft(0L)((acc, c) => acc * 31 + c.toLong)
-    val got = texts.toDF("text")
-      .select(TextFunctions.rollingHash(col("text"))).collect().map(_.getLong(0))
-    assert(got.toSeq == texts.map(ref))
-  }
-
   test("fingerprint is whitespace/case-canonical") {
     val d = Seq(Tuple1("Hello  World"), Tuple1("hello world"), Tuple1("other")).toDF("text")
     val fps = d.select(TextFunctions.fingerprint(col("text"))).collect().map(_.getString(0))
@@ -383,23 +375,6 @@ class OpsSpec extends SparkSpec {
     val plan = graft.ops.Report.rollupReport(d, Seq("g1", "g2"),
       Seq(sum("v").as("s"))).queryExecution.executedPlan.toString
     assert(plan.contains("Expand"))
-  }
-
-  test("rollupExpand + one groupBy reproduces native rollup exactly") {
-    // the streaming-legal spelling (explode per level + single
-    // aggregate) must be row-identical to Catalyst's rollup — gid
-    // bitmask, NULL-vs-subtotal separation, prefix levels only
-    val d = Seq(("a", "x", 1L), ("a", null, 2L), ("b", "x", 4L),
-      ("b", "y", 8L)).toDF("g1", "g2", "v")
-    def toMap(rows: Array[org.apache.spark.sql.Row]) = rows.map(r =>
-      (Option(r.getString(0)), Option(r.getString(1)), r.getLong(2)) ->
-        r.getLong(3)).toMap
-    val native = toMap(graft.ops.Report.rollupReport(d, Seq("g1", "g2"),
-      Seq(sum("v").as("s"))).collect())
-    val emulated = toMap(graft.ops.Report.rollupExpand(d, Seq("g1", "g2"))
-      .groupBy("g1", "g2", "gid").agg(sum("v").as("s")).collect())
-    assert(emulated == native)
-    assert(native.size == 4 + 2 + 1) // detail, per-g1, grand total
   }
 
   test("markovAttribution: hand-exact removal effects on a small graph") {
@@ -881,7 +856,7 @@ class OpsSpec extends SparkSpec {
       s"covered-cluster increment must use the blocked path:\n$plan")
   }
 
-  test("cluster assignment, sizes and balancedSample budgets") {
+  test("cluster assignment and sizes") {
     val cents = Cluster.fit(emb, "embedding", "vec_id", k = 8)
     val n = emb.count()
     // every row lands in exactly one primary cell; sizes sum to n
@@ -890,13 +865,6 @@ class OpsSpec extends SparkSpec {
     // multi-assign emits nassign distinct cells per row
     val multi = emb.select(Cluster.assignCol(emb, "embedding", cents, 3).as("c"))
     assert(multi.filter(size(array_distinct(col("c"))) =!= 3).count() == 0)
-    // balanced sample: at most perCluster rows per cell, deterministic
-    val bs = Cluster.balancedSample(emb, "embedding", "vec_id", cents, 5)
-    val over = bs.groupBy("cid").count().filter(col("count") > 5).count()
-    assert(over == 0)
-    val again = Cluster.balancedSample(emb, "embedding", "vec_id", cents, 5)
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    assert(again == bs.select("vec_id").collect().map(_.getLong(0)).toSet)
   }
 
   test("dsirWeights: target-like docs outweigh off-target; gram-less docs get 0") {
@@ -1081,19 +1049,6 @@ class OpsSpec extends SparkSpec {
     // retraining is bit-deterministic (lowest-id sample, no RNG)
     val m2 = Importance.trainKnBigram(train, "text", "doc_id", sampleN = 64)
     assert(m2 == m)
-    // persisted model reloads EXACTLY (integer counts) and scores
-    // bit-identically — train-once/score-many
-    val path = java.nio.file.Files
-      .createTempDirectory("kn_model").toString + "/kn"
-    Importance.saveKnBigram(spark, m, path)
-    val mr = Importance.loadKnBigram(spark, path)
-    assert(mr == m)
-    val diff = corpus.select(
-        (Importance.knPerplexityCol(corpus, "text", m).getField("ppl") <=>
-         Importance.knPerplexityCol(corpus, "text", mr).getField("ppl"))
-          .as("eq"))
-      .filter(!col("eq")).count()
-    assert(diff == 0L, "reloaded KN model must score bit-identically")
   }
 
   test("kn trigram model: hand counts, backoff chain, planted-fit ordering") {
@@ -1385,7 +1340,7 @@ class OpsSpec extends SparkSpec {
       (2L, "completely unrelated content words"),
       // doc that is NOTHING BUT the duplicated span
       (3L, quote)).toDF("doc_id", "text")
-    val out = Dedup.removeDupSpans(d, "text", "doc_id", n = 6)
+    val out = Dedup.removeDupSpansMulti(d, "text", "doc_id", Seq(6))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     // doc 0 holds the corpus-first occurrence -> untouched
     assert(out(0L) == s"intro words here $quote outro words")
@@ -1407,7 +1362,7 @@ class OpsSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     // fixed n=20 sees NEITHER side of the 12-token repeat (no 20-span
     // in a 15-token doc pair shares text) — the miss the ladder closes
-    val single = Dedup.removeDupSpans(d, "text", "doc_id", n = 20)
+    val single = Dedup.removeDupSpansMulti(d, "text", "doc_id", Seq(20))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(single(1L).contains("q5"), "n=20 alone cannot catch a 12-repeat")
     val out = Dedup.removeDupSpansMulti(d, "text", "doc_id", Seq(10, 20, 40))
@@ -1419,10 +1374,6 @@ class OpsSpec extends SparkSpec {
     assert(out(2L) == rep45, "corpus-first 45-repeat kept")
     assert(out(3L) == "extra", s"45-repeat cut: got ${out(3L)}")
     assert(out(4L) == "nothing duplicated in this document at all")
-    // ns = Seq(n) is exactly the single-n form
-    val viaMulti = Dedup.removeDupSpansMulti(d, "text", "doc_id", Seq(20))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(viaMulti == single)
   }
 
   test("longestDupSpanPow: doubling finds the largest duplicated power rung") {
@@ -1937,55 +1888,6 @@ class OpsSpec extends SparkSpec {
       " der die das und ist ein hier.")
   }
 
-  test("procrustesAlign recovers a planted rotation+reflection exactly") {
-    import spark.implicits._
-    val d = 8
-    // deterministic full-rank X: per-dimension distinct frequencies
-    // (a single shared frequency makes the sum-of-sines rank 3 and
-    // the rotation unrecoverable on the null space)
-    val xs = (0 until 60).map { r =>
-      (r.toLong, Array.tabulate(d)(j =>
-        math.sin(r * (0.7 + 0.13 * j) + j).toFloat))
-    }
-    // planted orthogonal R: three Givens rotations + one reflection
-    val rot = {
-      val m = Array.tabulate(d, d)((i, j) => if (i == j) 1.0 else 0.0)
-      def givens(p: Int, q: Int, th: Double): Unit = {
-        val (c, s) = (math.cos(th), math.sin(th))
-        for (i <- 0 until d) {
-          val a = m(i)(p); val b = m(i)(q)
-          m(i)(p) = c * a - s * b; m(i)(q) = s * a + c * b
-        }
-      }
-      givens(0, 1, 0.3); givens(2, 3, 1.1); givens(4, 5, -0.7)
-      for (i <- 0 until d) m(i)(6) = -m(i)(6) // reflection
-      m
-    }
-    val pairs = xs.map { case (id, x) =>
-      val y = Array.tabulate(d)(j =>
-        (0 until d).map(i => x(i) * rot(i)(j)).sum.toFloat)
-      (id, x, y)
-    }.toDF("id", "x", "y")
-    val w = graft.ops.Pca.procrustesAlign(pairs, "x", "y")
-    val maxDiff = (for (i <- 0 until d; j <- 0 until d)
-      yield math.abs(w(i)(j) - rot(i)(j))).max
-    assert(maxDiff < 1e-5, s"recovered transform off by $maxDiff")
-    // orthogonality: WᵀW = I
-    val ortho = (for (i <- 0 until d; j <- 0 until d) yield {
-      val dot = (0 until d).map(k => w(k)(i) * w(k)(j)).sum
-      math.abs(dot - (if (i == j) 1.0 else 0.0))
-    }).max
-    assert(ortho < 1e-9, s"transform not orthogonal: $ortho")
-    // aligned rows land on Y
-    val err = graft.ops.Pca.applyTransform(spark, col("x"), w)
-    val worst = pairs.select(col("y"), err.as("a"))
-      .collect().map { r =>
-        val y = r.getSeq[Float](0); val a = r.getSeq[Double](1)
-        y.indices.map(i => math.abs(y(i) - a(i))).max
-      }.max
-    assert(worst < 1e-4, s"alignment residual $worst")
-  }
-
   test("jaroWinklerJvm matches the canonical values and edge conventions") {
     import graft.ops.Link.jaroWinklerJvm
     def r6(x: Double) = math.rint(x * 1e6) / 1e6
@@ -2418,12 +2320,12 @@ class OpsSpec extends SparkSpec {
   // ---------------------------------------------------------- sampling
 
   test("deterministic sample: stable, nested, roughly sized") {
-    val a = Sample.deterministic(docs, "doc_id", 10)
+    val a = Sample.stratified(docs, "doc_id", "lang", Map.empty, 10)
       .select("doc_id").collect().map(_.getLong(0)).toSet
-    val b = Sample.deterministic(docs, "doc_id", 10)
+    val b = Sample.stratified(docs, "doc_id", "lang", Map.empty, 10)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(a == b) // identical selection across runs
-    val a20 = Sample.deterministic(docs, "doc_id", 20)
+    val a20 = Sample.stratified(docs, "doc_id", "lang", Map.empty, 20)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(a.subsetOf(a20)) // scaling up keeps the old subset
     val n = docs.count().toDouble
@@ -2497,14 +2399,6 @@ class OpsSpec extends SparkSpec {
     assert(salted == plain)
   }
 
-  test("salted broadcast join equals plain join") {
-    val orders = spark.read.parquet(s"$sf/orders.parquet")
-    val dim = Seq(("1-URGENT", 1), ("5-LOW", 5)).toDF("o_orderpriority", "rank_")
-    val plain = orders.join(dim, "o_orderpriority").count()
-    val salted = Skew.saltedBroadcastJoin(orders, dim, "o_orderpriority", 8).count()
-    assert(salted == plain)
-  }
-
   // ---------------------------------------------------------- multimodal
 
   test("multimodal composition: decode -> feature vectors -> ANN top-k") {
@@ -2542,12 +2436,6 @@ class OpsSpec extends SparkSpec {
     val once = canon(Multimodal.decodeStub(media))
     val again = canon(Multimodal.decodeStub(media.repartition(7)))
     assert(once == again && once.size == 20)
-  }
-
-  test("resize stub caps the longer side") {
-    val media = Multimodal.asMediaTable(docs.limit(20), "doc_id", "text")
-    val resized = Multimodal.resizeStub(Multimodal.decodeStub(media), 100).collect()
-    resized.foreach(d => assert(math.max(d.width, d.height) <= 100))
   }
 
   test("frame sampling: windows of 64 bytes at stride 128") {
@@ -3226,7 +3114,7 @@ class OpsSpec extends SparkSpec {
       s"CDC should re-align after an inserted prefix; only $shared shared")
   }
 
-  test("cdc chunks + dedupStats find planted cross-payload sharing") {
+  test("cdc chunks find planted cross-payload sharing") {
     val shared = pseudoBytes("cdc-shared", 8000)
     val rows = (1 to 6).map { i =>
       (i.toLong, pseudoBytes(s"cdc-uniq-$i", 4000) ++ shared)
@@ -3242,9 +3130,11 @@ class OpsSpec extends SparkSpec {
       d.update(p, r.getAs[Int]("offset"), r.getAs[Int]("length"))
       assert(d.digest().map("%02x".format(_)).mkString == r.getAs[String]("chunk_md5"))
     }
-    val stats = Cdc.dedupStats(ch).head()
-    val ratio = stats.getAs[Double]("dedup_ratio")
-    assert(stats.getAs[Long]("logical_bytes") == rows.map(_._2.length.toLong).sum)
+    val logical = ch.agg(sum("length")).head().getLong(0)
+    val unique = ch.groupBy("chunk_md5").agg(first("length").as("l"))
+      .agg(sum("l")).head().getLong(0)
+    assert(logical == rows.map(_._2.length.toLong).sum)
+    val ratio = logical.toDouble / unique
     assert(ratio > 1.5, s"6 payloads sharing a 8KB suffix must dedup; got $ratio")
   }
 
@@ -3268,27 +3158,6 @@ class OpsSpec extends SparkSpec {
     rows.foreach { case (id, payload) =>
       assert(restored(id).toSeq == payload.toSeq, s"media $id not byte-exact")
     }
-  }
-
-  test("cdc scheme tag versions a persisted store; mismatch fails fast") {
-    // the scheme string captures every boundary-moving parameter, so
-    // the r8 single-mask -> FastCDC default flip is VISIBLE to readers
-    // of a persisted store instead of silently producing disjoint hashes
-    val legacy = Cdc.scheme(64, 256, 1024, normBits = 0)
-    val current = Cdc.scheme(64, 256, 1024, normBits = 2)
-    assert(legacy != current)
-    assert(legacy.startsWith("gear64/v1") && current.startsWith("fastcdc64/v2"))
-    assert(Cdc.scheme() == Cdc.scheme(2048, 8192, 65536, 2),
-      "default scheme must match default chunking parameters")
-    val dir = java.nio.file.Files.createTempDirectory("cdc_scheme").toString
-    Cdc.schemeTable(spark, 64, 256, 1024, 2).write
-      .mode("overwrite").parquet(dir + "/scheme")
-    val persisted = spark.read.parquet(dir + "/scheme")
-    Cdc.requireScheme(persisted, current) // same scheme: fine
-    val err = intercept[IllegalArgumentException] {
-      Cdc.requireScheme(persisted, legacy)
-    }
-    assert(err.getMessage.contains("scheme mismatch"))
   }
 
   // --------------------------------------------------------------- pca
@@ -3339,15 +3208,14 @@ class OpsSpec extends SparkSpec {
 
   test("trained artifacts persist and reload bit-exactly (pca/pq/centroids/classifier)") {
     val dir = java.nio.file.Files.createTempDirectory("models").toString
-    // PCA: every field identical (parquet doubles are exact)
-    val pca = Pca.fit(emb, "embedding", k = 4)
-    Pca.save(spark, pca, dir + "/pca")
-    val pca2 = Pca.load(spark, dir + "/pca")
-    assert(pca2.mean.toSeq == pca.mean.toSeq)
-    assert(pca2.components.map(_.toSeq).toSeq ==
-      pca.components.map(_.toSeq).toSeq)
-    assert(pca2.eigvals.toSeq == pca.eigvals.toSeq)
-    assert(pca2.totalVar == pca.totalVar)
+    // PCA sufficient statistics: every field identical (parquet
+    // doubles are exact)
+    val pca = Pca.fitState(emb, "embedding")
+    Pca.saveState(spark, pca, dir + "/pca")
+    val pca2 = Pca.loadState(spark, dir + "/pca")
+    assert(pca2.n == pca.n)
+    assert(pca2.sum.toSeq == pca.sum.toSeq)
+    assert(pca2.tri.toSeq == pca.tri.toSeq)
     // PQ codebooks: (sub, cid) order preserved exactly
     val cb = Quantize.pqTrain(emb, "embedding", "vec_id", m = 8, k = 16)
     Quantize.savePqCodebooks(spark, cb, dir + "/pq")
@@ -3419,10 +3287,6 @@ class OpsSpec extends SparkSpec {
       .collect().map(r => r.getAs[Long]("id") -> r.getAs[String]("status")).toMap
     assert(got == Map(1L -> "removed", 2L -> "unchanged",
       3L -> "changed", 4L -> "added"))
-    val summary = Diff.snapshotSummary(Diff.snapshot(a, b, "id", "text"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(summary == Map("removed" -> 1L, "unchanged" -> 1L,
-      "changed" -> 1L, "added" -> 1L))
   }
 
   test("psi: ~0 on identical distributions, large on a shifted one, grid total") {
@@ -3495,18 +3359,6 @@ class OpsSpec extends SparkSpec {
         -> r.getAs[Boolean]("pass")).toMap
     assert(out(("en", "unique")) && out(("en", "not_null")))
     assert(!out(("de", "unique")) && !out(("de", "not_null")))
-  }
-
-  test("Expect.enforce throws with every failing check named") {
-    val d = Seq((1L, "en"), (1L, "zz")).toDF("id", "lang")
-    val e = intercept[IllegalStateException] {
-      Expect.enforce(d, Seq(Expect.Unique("id"),
-        Expect.IsIn("lang", Seq("en"), minRate = 1.0),
-        Expect.NotNull("lang")))
-    }
-    assert(e.getMessage.contains("unique(id)"))
-    assert(e.getMessage.contains("is_in(lang)"))
-    assert(!e.getMessage.contains("not_null"))
   }
 
   // -------------------------------------------------- record linkage
@@ -4502,19 +4354,6 @@ class OpsSpec extends SparkSpec {
     assert(cc == Map(1L -> 1L, 2L -> 1L, 42L -> 42L))
   }
 
-  test("fellegiSunterScore keeps NULL-agreement candidates") {
-    import spark.implicits._
-    val cands = Seq(
-      (Some(true), true, true), (Some(false), false, false),
-      (None, true, false) // NULL agreement on the first field
-    ).toDF("a1", "a2", "a3")
-      .withColumn("truth", col("a2"))
-    val scored = Link.fellegiSunterScore(cands, Seq("a1", "a2", "a3"),
-      "truth")
-    assert(scored.count() == 3) // no silent row drop
-    assert(scored.filter(col("a1").isNull).count() == 1)
-  }
-
   test("diffInDiff: hand cells, planted effect, empty-cell null") {
     import spark.implicits._
     // control: 10 → 12 (+2); treated: 20 → 25 (+5); DiD = +3
@@ -4742,13 +4581,13 @@ class OpsSpec extends SparkSpec {
     import spark.implicits._
     // every token globally unique -> V = n exactly -> beta 1, K 1
     val uniq = (1L to 10L).map(i => (i, s"u${i}a u${i}b")).toDF("doc_id", "text")
-    val q1 = TextQueries.heapsForSpec(uniq)
+    val q1 = TextQueries.heapsCore(uniq)
     val r1 = q1.head()
     assert(r1.getLong(0) == 10L && r1.getLong(1) == 1000000L &&
       r1.getLong(2) == 0L && r1.getLong(3) == 1000000L)
     // identical docs -> V = 1 at every point -> beta 0, K 1
     val flat = (1L to 10L).map(i => (i, "w w w")).toDF("doc_id", "text")
-    val r2 = TextQueries.heapsForSpec(flat).head()
+    val r2 = TextQueries.heapsCore(flat).head()
     assert(r2.getLong(1) == 0L && r2.getLong(3) == 1000000L)
   }
 

@@ -30,13 +30,13 @@ class SamplePropertySpec extends SparkSpec {
       val df = rows.toDF("id", "st", "w")
       val lo = (seed % 50 + 10).toInt
       val hi = math.min(lo + 20, 100)
-      val a = Sample.deterministic(df, "id", lo)
+      val a = Sample.stratified(df, "id", "st", Map.empty, lo)
         .select("id").collect().map(_.getLong(0)).toSet
-      val b = Sample.deterministic(df.repartition(7), "id", hi)
+      val b = Sample.stratified(df.repartition(7), "id", "st", Map.empty, hi)
         .select("id").collect().map(_.getLong(0)).toSet
       assert(a.subsetOf(b), s"seed=$seed: $lo% must nest in $hi%")
       // and the selection is layout-independent
-      val a2 = Sample.deterministic(df.repartition(3, col("st")), "id", lo)
+      val a2 = Sample.stratified(df.repartition(3, col("st")), "id", "st", Map.empty, lo)
         .select("id").collect().map(_.getLong(0)).toSet
       assert(a == a2, s"seed=$seed: layout changed the sample")
     }

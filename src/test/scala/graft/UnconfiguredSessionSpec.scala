@@ -31,10 +31,10 @@ class UnconfiguredSessionSpec extends SparkSpec {
       .foreach(f => assert(!bare.catalog.functionExists(f), f))
   }
 
-  test("compressionRatio: same rows on the bare session") {
+  test("deflateSize: same rows on the bare session") {
     def run(s: SparkSession) = s.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(col("doc_id"), TextFunctions.compressionRatio(col("text")).as("r"))
+      .select(col("doc_id"), TextFunctions.deflateSize(col("text")).as("r"))
     val got = rows(run(bare))
     assert(got.nonEmpty)
     assert(got == rows(run(spark)))
